@@ -63,8 +63,9 @@ import org.apache.spark.sql.SparkSession
   * repeats (a real regression). A driver-side record can no longer
   * carry an unadjudicated env artifact like BENCH_r15's 24x flag.
   *
-  * Control arm + drift normalization (r17): the StressR16 interleaved
-  * control-arm protocol moved into the MAIN loop — never-flagged
+  * Control arm + drift normalization (r17): the r16 interleaved
+  * control-arm protocol (a dev harness since deleted; see the git
+  * history and SURVEY.md) moved into the MAIN loop — never-flagged
   * control queries timed at fixed stations through the run, each
   * station's drift index (median control ratio vs baseline) on the
   * run's own timeline. Flags AND sub-floor >2x queries adjudicate
@@ -160,8 +161,7 @@ object Bench {
     * files): resolving them against the process CWD writes stray
     * files when a main is launched from anywhere else (r14 ADVICE).
     * SPARK_GRAFT_REPO_ROOT wins; else the nearest ancestor carrying
-    * build.sbt; else CWD (unchanged behavior for in-repo launches).
-    * Shared by Bench and the Stress* gate harnesses. */
+    * build.sbt; else CWD (unchanged behavior for in-repo launches). */
   private[graft] def repoRootPath: java.nio.file.Path =
     sys.env.get("SPARK_GRAFT_REPO_ROOT")
       .map(java.nio.file.Paths.get(_).toAbsolutePath)
@@ -215,11 +215,12 @@ object Bench {
 
   // -------------------------------------------------------------------
   // Control arm + window drift (r17, the r16 verdict's #2/#3/#6):
-  // StressR16 proved flags adjudicate cleanly against interleaved
-  // never-flagged controls (the flagged set moved WITH the controls,
-  // 1.98x vs 1.55x median inflation) — but the arm lived only in the
-  // one-off stress harness, so every degraded driver window still
-  // produced flags a judging round had to adjudicate by hand. The arm
+  // the r16 dev harness (see the git history) proved flags adjudicate
+  // cleanly against interleaved never-flagged controls (the flagged
+  // set moved WITH the controls, 1.98x vs 1.55x median inflation) —
+  // but the arm lived only in the one-off stress harness, so every
+  // degraded driver window still produced flags a judging round had
+  // to adjudicate by hand. The arm
   // now lives in the MAIN loop:
   //   - CONTROLS: cheap, historically never-flagged queries with
   //     diverse plan shapes, timed once each at fixed STATIONS (bench
@@ -238,8 +239,8 @@ object Bench {
 
   /** The in-run control arm: never-flagged through r16, sub-second,
     * diverse shapes (agg scan / session window / ngram explode /
-    * event pivot). q132 was in StressR16's arm but carried an r16
-    * sub-floor qualifier — dropped. */
+    * event pivot). q132 was in the r16 harness's arm but carried an
+    * r16 sub-floor qualifier — dropped. */
   private[graft] val ControlQueries = Seq(
     "q10_pricing_summary", "q20_sessionize", "q48_ngram_freq",
     "q121_transition_matrix")
@@ -499,14 +500,7 @@ object Bench {
       System.setProperty("java.io.tmpdir", p.toString)
       p.toString
     }
-    val sparkBuilder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val sparkBuilder = graft.plans.GraftExtensions.builder(cpus.toInt)
     val spark = scratchBase
       .fold(sparkBuilder)(p => sparkBuilder.config("spark.local.dir", p))
       .getOrCreate()
@@ -522,7 +516,7 @@ object Bench {
       // "every registered query has a perf record" is the gate's own
       // contract) — sub-second ETL/analytics shapes, plus q78 whose
       // registered buckets=1 oracle form is still worth a record even
-      // though StressR8 times the real bucketed path
+      // though it is not the real bucketed path
       "q01_name_parse", "q02_party_state_district", "q03_normalize",
       "q05_election_candidates", "q06_incumbents_by_term",
       "q07_reference_lists", "q09_unpivot_scores", "q12_topk_per_group",
@@ -555,7 +549,7 @@ object Bench {
       // corpus data-card profile + NFC + chunking (added r8).
       // q78_pack_greedy is deliberately NOT headline: its registered
       // form runs buckets=1 for the recursive-CTE oracle — a
-      // single-task shape; the real bucketed path is timed in StressR8
+      // single-task shape; CorpusSpec pins the real bucketed path
       "q77_corpus_profile", "q79_unicode_normalize",
       "q80_chunk_overlap", "q81_snapshot_diff",
       // URL profile, stratified sampling, trained quality gate (late r8)

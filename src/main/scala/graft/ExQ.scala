@@ -1,13 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.plans.GraftExtensions
 object ExQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftExtensions
+      .builder(Runtime.getRuntime.availableProcessors).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(args(0))(spark, "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan.toString

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.GraftExtensions
 
 /** Plan-audit main: prints the formatted physical plan for each (or one
   * named) query so pushdown/broadcast/shuffle structure can be reviewed.
@@ -10,15 +10,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions
+      .builder(Runtime.getRuntime.availableProcessors).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val targets = name match {
       case Some(n) => Seq(n -> SparkEntry.queries(n))

@@ -1,18 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.plans.GraftExtensions
 
 /** Dev utility: time single registered queries at sf0.1 with one warm
   * pass (`runMain graft.OneQ q43_fuzzy_link_full ...`) — for plan
   * iteration without the full Bench sweep. */
 object OneQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftExtensions
+      .builder(Runtime.getRuntime.availableProcessors).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (name <- args) {
       val fn = SparkEntry.queries(name)

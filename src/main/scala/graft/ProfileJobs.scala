@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.plans.GraftExtensions
 
 /** Dev scratch: per-JOB wall-clock breakdown of one registered query —
   * `runMain graft.ProfileJobs <query> [sfDir]`. Runs one warm pass,
@@ -14,13 +14,8 @@ object ProfileJobs {
     // queries in one JVM (one warm + one instrumented pass each)
     val names = args(0).split(',').toSeq
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftExtensions
+      .builder(Runtime.getRuntime.availableProcessors).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.plans.GraftExtensions
+
 /** Column wrappers for Spark's built-in Bloom-filter expressions (the
   * same kernels AQE's runtime row-level filtering injects — constant-
   * size, mergeable, map-side combined), resolved through the
@@ -18,13 +20,6 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object BloomFunctions {
 
-  private def requireNative(name: String): Unit =
-    require(
-      SparkSession.getActiveSession
-        .exists(_.catalog.functionExists(name)),
-      s"$name needs graft.plans.GraftExtensions installed " +
-        "(spark.sql.extensions=graft.plans.GraftExtensions)")
-
   /** Bits for a target false-positive rate: -n·ln(p)/ln²2. At 10⁹ items
     * and 3% fpp this is ~0.9 GB — a broadcastable sketch standing in for
     * an arbitrarily large corpus. */
@@ -36,17 +31,19 @@ object BloomFunctions {
     * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` /
     * `.maxNumBits` (defaults 4M items / 8 MB) — raise those confs when
     * building corpus-scale sketches, or the filter silently degrades to
-    * a higher false-positive rate (never to false negatives). */
+    * a higher false-positive rate (never to false negatives).
+    *
+    * A Column carries no session, so the extension check reads the
+    * active one; a DataFrame whose own session lacks the extension
+    * still fails at analysis, naming `bloom_agg`. */
   def bloomAgg(hash: Column, expectedItems: Long, numBits: Long): Column = {
-    requireNative("bloom_agg")
+    GraftExtensions.require(SparkSession.active)
     call_function("bloom_agg", hash, lit(expectedItems), lit(numBits))
   }
 
   /** Membership probe of a LONG hash column against a driver-held
     * serialized sketch. The sketch ships as a foldable literal — the
     * probe is a pure projection, usable under whole-stage codegen. */
-  def bloomMightContain(bloom: Array[Byte], hash: Column): Column = {
-    requireNative("bloom_might_contain")
+  def bloomMightContain(bloom: Array[Byte], hash: Column): Column =
     call_function("bloom_might_contain", lit(bloom), hash)
-  }
 }

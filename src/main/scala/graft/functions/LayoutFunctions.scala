@@ -43,15 +43,17 @@ object LayoutFunctions {
     * 63 bounds where this runs at scan speed (the cost every
     * prefixSum/globalRank/Z-order caller was paying per pass). */
   def quantileBucket(value: Column, bounds: Array[Double]): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(_.catalog.functionExists("bucket_search")))
-      coalesce(
-        call_function("bucket_search", value.cast("double"),
-          typedlit(bounds.toSeq)),
-        lit(0L))
-    else // portable fallback for sessions without GraftExtensions
-      size(filter(typedlit(bounds.toSeq),
-        b => value.cast("double") >= b)).cast("long")
+    coalesce(
+      call_function("bucket_search", value.cast("double"),
+        typedlit(bounds.toSeq)),
+      lit(0L))
+
+  /** The array-filter-count form of [[quantileBucket]] — the reference
+    * CorpusSpec pins the native kernel to. */
+  private[graft] def quantileBucketHof(
+      value: Column, bounds: Array[Double]): Column =
+    size(filter(typedlit(bounds.toSeq),
+      b => value.cast("double") >= b)).cast("long")
 
   /** Morton interleave: bit b of bucket i becomes output bit
     * b·n + i, so all columns' low-order bucket bits are adjacent and
@@ -113,8 +115,11 @@ case class BucketSearch(left: Expression, right: Expression)
 }
 
 object BucketSearchImpl {
-  /** First index whose bound exceeds v == count of bounds ≤ v. */
+  /** First index whose bound exceeds v == count of bounds ≤ v, under
+    * Spark's ordering: NaN is greater than every number, so a NaN value
+    * counts every bound (as `v >= b` does in the filter-count form). */
   def search(arr: Array[Double], v: Double): Long = {
+    if (v.isNaN) return arr.length.toLong
     var lo = 0
     var hi = arr.length
     while (lo < hi) {

@@ -65,7 +65,7 @@ private object VectorExprCheck {
 
 /** Static kernel for the random-hyperplane LSH bucket. The
   * pseudo-random weight matrix (derived from xxhash of the flat index,
-  * exactly like VectorFunctions.hyperplaneBucket's Column form) is
+  * exactly like VectorFunctions.hyperplaneBucketHof) is
   * memoized per (dim, planes) — the Column form re-derives it per row,
   * which dominated profile at 100k vectors. */
 object HyperplaneImpl {
@@ -164,8 +164,8 @@ object CentroidImpl {
 
   /** 1-based index of the max-cosine centroid (ties → lowest index).
     * Same left-fold double accumulation and zero-norm→0.0 guard as the
-    * `array_position(scores, array_max(scores))` HOF fallback, so the
-    * adaptive switch can never change bucket assignments. That parity
+    * `array_position(scores, array_max(scores))` HOF reference
+    * (VectorFunctions.nearestCentroidHof, pinned by AnnSpec). That parity
     * extends to NaN scores: Spark orders NaN greater than any double
     * (array_max returns the first NaN), so a NaN score beats every
     * non-NaN best and the FIRST NaN wins — mirrored here explicitly,

@@ -3,10 +3,11 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector math over `array<float>` embedding columns, expressed with
-  * higher-order array functions (zip_with / aggregate) so the whole
-  * computation stays inside Catalyst — no UDF, no serialization
-  * boundary, safe to broadcast.
+/** Vector math over `array<float>` embedding columns, through the
+  * native GraftExtensions kernels (`dot_f`, `norm_f`,
+  * `nearest_centroid`, `hyperplane_bucket`) so the whole computation
+  * stays inside Catalyst codegen — no UDF, no serialization boundary,
+  * safe to broadcast.
   *
   * All arithmetic is promoted to double element-wise (matching the
   * DuckDB oracle's CAST(x AS DOUBLE) accumulation) so sums agree
@@ -14,24 +15,11 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  private def hasNative(name: String): Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists(name))
+  /** Σ aᵢ·bᵢ in double. */
+  def dot(a: Column, b: Column): Column = call_function("dot_f", a, b)
 
-  /** Σ aᵢ·bᵢ in double (native kernel when GraftExtensions is
-    * installed — bit-identical accumulation either way). */
-  def dot(a: Column, b: Column): Column =
-    if (hasNative("dot_f")) call_function("dot_f", a, b)
-    else aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** ‖a‖₂ in double (native kernel when available). */
-  def norm(a: Column): Column =
-    if (hasNative("norm_f")) call_function("norm_f", a)
-    else sqrt(aggregate(
-      transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
+  /** ‖a‖₂ in double. */
+  def norm(a: Column): Column = call_function("norm_f", a)
 
   /** Cosine similarity; null-safe for zero vectors (returns 0). */
   def cosine(a: Column, b: Column): Column = {
@@ -49,19 +37,15 @@ object VectorFunctions {
 
   /** 1-based index of the max-cosine centroid row (ties → lowest index)
     * for a driver-materialised centroid matrix. A pure projection — the
-    * matrix ships as a foldable literal (native kernel) so bucket
-    * assignment never shuffles the corpus. The HOF fallback computes
-    * bit-identical double-accumulated scores, so the adaptive switch can
-    * never change an assignment. */
+    * matrix ships as a foldable literal so bucket assignment never
+    * shuffles the corpus. */
   def nearestCentroid(vec: Column, matrix: Seq[Seq[Float]]): Column = {
     require(matrix.nonEmpty, "nearestCentroid: empty centroid matrix")
-    if (hasNative("nearest_centroid"))
-      call_function("nearest_centroid", vec, typedlit(matrix))
-    else nearestCentroidHof(vec, matrix)
+    call_function("nearest_centroid", vec, typedlit(matrix))
   }
 
-  /** HOF form of [[nearestCentroid]] — kept callable so tests can pin
-    * the native kernel to it value-for-value. */
+  /** HOF form of [[nearestCentroid]] — the reference AnnSpec pins the
+    * native kernel to value-for-value. */
   private[graft] def nearestCentroidHof(
       vec: Column, matrix: Seq[Seq[Float]]): Column = {
     val scores = transform(typedlit(matrix), c => cosine(vec, c))
@@ -75,21 +59,24 @@ object VectorFunctions {
     */
   def hyperplaneBucket(vec: Column, dim: Int, numPlanes: Int): Column = {
     require(numPlanes <= 62, "bucket packs into a long")
-    if (hasNative("hyperplane_bucket"))
-      call_function("hyperplane_bucket", vec, lit(dim), lit(numPlanes))
-    else {
-      val bits = (0 until numPlanes).map { p =>
-        // component weights: hash of the flat (plane, dim) index scaled
-        // to [-1, 1] — reproducible, no stored model
-        val proj = aggregate(
-          zip_with(vec, sequence(lit(0), lit(dim - 1)), (x, i) => {
-            val h = pmod(xxhash64(i + lit(p * dim)), lit(2000003L))
-            x.cast("double") * (h.cast("double") / 1000001.5 - 1.0)
-          }),
-          lit(0.0), (acc, v) => acc + v)
-        when(proj > 0.0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-      }
-      bits.reduce((a, b) => a.bitwiseOR(b))
+    call_function("hyperplane_bucket", vec, lit(dim), lit(numPlanes))
+  }
+
+  /** Builtin-expression form of [[hyperplaneBucket]] — the reference
+    * AnnSpec pins the native kernel to bit-for-bit. */
+  private[graft] def hyperplaneBucketHof(
+      vec: Column, dim: Int, numPlanes: Int): Column = {
+    val bits = (0 until numPlanes).map { p =>
+      // component weights: hash of the flat (plane, dim) index scaled
+      // to [-1, 1] — reproducible, no stored model
+      val proj = aggregate(
+        zip_with(vec, sequence(lit(0), lit(dim - 1)), (x, i) => {
+          val h = pmod(xxhash64(i + lit(p * dim)), lit(2000003L))
+          x.cast("double") * (h.cast("double") / 1000001.5 - 1.0)
+        }),
+        lit(0.0), (acc, v) => acc + v)
+      when(proj > 0.0, shiftleft(lit(1L), p)).otherwise(lit(0L))
     }
+    bits.reduce((a, b) => a.bitwiseOR(b))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.plans.GraftExtensions
 
 /** Approximate nearest neighbour search over an `array<float>` embedding
   * column.
@@ -119,7 +120,6 @@ object Ann {
     require(cents.iterator.map(_.size.toLong).sum <= MaxCentroidFloats,
       s"trainCentroids: centroid matrix exceeds $MaxCentroidFloats " +
         "floats — use a broadcast-join assignment instead")
-    val nativeSum = spark.catalog.functionExists("vector_sum_f")
     for (_ <- 1 to iters) {
       // same assignment expression as assignBuckets over the same
       // matrix (row index = centroid id), so buckets are identical
@@ -127,33 +127,20 @@ object Ann {
         .cast("int") - 1).as("centroid_id")
       // per-dimension mean, arithmetic unchanged from the DataFrame
       // form: double sums / long count, divided as doubles, cast to
-      // float — the native kernel's ONE ObjectHashAggregate, or the
-      // posexplode per-dimension avg fallback. Empty clusters keep
-      // their previous centroid (missing group id = no update).
+      // float — the native `vector_sum_f` kernel's ONE
+      // ObjectHashAggregate. Empty clusters keep their previous
+      // centroid (missing group id = no update).
       val next = cents.map(identity) // copy: unassigned ids persist
-      if (nativeSum)
-        vecs.groupBy(cid)
-          .agg(call_function("vector_sum_f", col("__v")).as("__sum"),
-            count(col("__v")).as("__n"))
-          .collect()
-          .foreach { r =>
-            val id = r.getInt(0)
-            val s = r.getSeq[Double](1)
-            val n = r.getLong(2)
-            next(id) = s.map(x => (x / n).toFloat)
-          }
-      else {
-        val byId = vecs
-          .select(cid, posexplode(col("__v")).as(Seq("__p", "__x")))
-          .groupBy(col("centroid_id"), col("__p"))
-          .agg(avg(col("__x")).as("__m"))
-          .collect()
-          .groupBy(_.getInt(0))
-        byId.foreach { case (id, rows) =>
-          val m = rows.sortBy(_.getInt(1)).map(_.getDouble(2).toFloat)
-          next(id) = m.toSeq
+      vecs.groupBy(cid)
+        .agg(call_function("vector_sum_f", col("__v")).as("__sum"),
+          count(col("__v")).as("__n"))
+        .collect()
+        .foreach { r =>
+          val id = r.getInt(0)
+          val s = r.getSeq[Double](1)
+          val n = r.getLong(2)
+          next(id) = s.map(x => (x / n).toFloat)
         }
-      }
       cents = next
     }
     import spark.implicits._
@@ -329,7 +316,7 @@ object Ann {
       "trainPqResidual: m > 0, 0 < ksub <= 256, iters >= 0")
     require(maxTrain >= ksub && maxTrain <= MaxPqTrainRows,
       s"trainPqResidual: maxTrain must be in [$ksub, $MaxPqTrainRows]")
-    requirePqKernels(corpus)
+    GraftExtensions.require(corpus.sparkSession)
     val cents = centroids
       .select(col(idCol).as("centroid_id"), col(vecCol).as("__cent"))
     // The hash-ordered limit picks WHICH rows train, but row order is
@@ -414,17 +401,12 @@ object Ann {
     * TRUE row norm so approximate cosine divides by the exact
     * denominator. At scale, persist this as parquet and search against
     * it; the raw corpus is only touched again by the rerank fetch. */
-  private def requirePqKernels(df: DataFrame): Unit =
-    require(df.sparkSession.catalog.functionExists("pq_encode"),
-      "PQ kernels need graft.plans.GraftExtensions installed " +
-        "(spark.sql.extensions=graft.plans.GraftExtensions)")
-
   def buildPqIndex(
       corpus: DataFrame, centroids: DataFrame,
       codebooks: Seq[Seq[Seq[Float]]],
       idCol: String, vecCol: String): DataFrame = {
     import graft.functions.VectorFunctions.norm
-    requirePqKernels(corpus)
+    GraftExtensions.require(corpus.sparkSession)
     // encode is the expensive projection (m·ksub·dsub FLOPs per row —
     // 16k at 16×256×4): guard against a single-split scan serialising
     // it onto one core (measured 6× on a one-file 100k corpus)
@@ -460,7 +442,7 @@ object Ann {
     * persisted as parquet) — the production shape: the corpus is
     * encoded once and every query batch pays only probe + ADC + rerank,
     * never re-encoding (measured 4.7 s e2e → 2.2 s per 50-query batch
-    * against a persisted 100k index, StressR8). `corpus` supplies raw
+    * against a persisted 100k index in r8; SURVEY.md). `corpus` supplies raw
     * vectors for the exact rerank and is untouched when `refine` = 0. */
   def searchPqIndex(
       pqIndex: DataFrame, corpus: DataFrame, queries: DataFrame,
@@ -468,7 +450,7 @@ object Ann {
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       refine: Int = 0, excludeSelf: Boolean = true,
       rerankRotation: Option[Pca.Model] = None): DataFrame = {
-    requirePqKernels(pqIndex)
+    GraftExtensions.require(pqIndex.sparkSession)
     val index = pqIndex.withColumnRenamed(idCol, "neighbor_id")
     val probes = assignProbes(queries, centroids, idCol, vecCol, nprobe)
       .withColumn("__lut",
@@ -532,7 +514,7 @@ object Ann {
       codebooks: Seq[Seq[Seq[Float]]],
       idCol: String, vecCol: String): DataFrame = {
     import graft.functions.VectorFunctions.norm
-    requirePqKernels(corpus)
+    GraftExtensions.require(corpus.sparkSession)
     val cents = centroids
       .select(col(idCol).as("centroid_id"), col(vecCol).as("__cent"))
     assignBuckets(Parallelism.ensure(corpus.select(col(idCol), col(vecCol))),
@@ -583,7 +565,7 @@ object Ann {
       refine: Int = 0, excludeSelf: Boolean = true,
       rerankRotation: Option[Pca.Model] = None): DataFrame = {
     import graft.functions.VectorFunctions._
-    requirePqKernels(pqIndex)
+    GraftExtensions.require(pqIndex.sparkSession)
     val index = pqIndex.withColumnRenamed(idCol, "neighbor_id")
     val cents = centroids
       .select(col(idCol).as("centroid_id"), col(vecCol).as("__cent"))
@@ -916,11 +898,6 @@ object Ann {
     (mins, steps)
   }
 
-  private def requireSq8Kernels(df: DataFrame): Unit =
-    require(df.sparkSession.catalog.functionExists("sq8_encode"),
-      "SQ8 kernels need graft.plans.GraftExtensions installed " +
-        "(spark.sql.extensions=graft.plans.GraftExtensions)")
-
   /** Encode one vector column to SQ8 codes (BINARY — raw uint8 bytes,
     * the true 4x-vs-float32 representation in storage, shuffle and
     * memory): code_i = round((x_i − min_i)/step_i) clamped to [0,255].
@@ -968,7 +945,7 @@ object Ann {
       idCol: String, vecCol: String, k: Int, refine: Int = 4,
       excludeSelf: Boolean = true): DataFrame = {
     require(k > 0 && refine >= 1, "sq8TopK: k > 0, refine >= 1")
-    requireSq8Kernels(corpus)
+    GraftExtensions.require(corpus.sparkSession)
     val (mins, steps) = trainSq8(corpus, vecCol)
     val deq = Parallelism.ensure(
       corpus.filter(col(vecCol).isNotNull)
@@ -1002,7 +979,7 @@ object Ann {
       scales: Option[(Seq[Double], Seq[Double])] = None): DataFrame = {
     require(k > 0 && nprobe > 0 && refine >= 1,
       "sq8IvfTopK: k > 0, nprobe > 0, refine >= 1")
-    requireSq8Kernels(corpus)
+    GraftExtensions.require(corpus.sparkSession)
     // callers that train their own centroids pass pre-trained scales
     // so both models train CONCURRENTLY (guide §2.6) instead of the
     // scales pass serialising behind the k-means here
@@ -1037,7 +1014,7 @@ object Ann {
   def buildSq8Index(corpus: DataFrame, centroids: DataFrame,
       mins: Seq[Double], steps: Seq[Double],
       idCol: String, vecCol: String): DataFrame = {
-    requireSq8Kernels(corpus)
+    GraftExtensions.require(corpus.sparkSession)
     assignBuckets(
         corpus.filter(col(vecCol).isNotNull).select(col(idCol), col(vecCol)),
         centroids, idCol, vecCol)
@@ -1112,7 +1089,7 @@ object Ann {
       excludeSelf: Boolean = true): DataFrame = {
     require(k > 0 && nprobe > 0 && refine >= 1,
       "searchSq8Index: k > 0, nprobe > 0, refine >= 1")
-    requireSq8Kernels(idx.codes)
+    GraftExtensions.require(idx.codes.sparkSession)
     val deq = idx.codes
       .select(col(idx.idCol).as("neighbor_id"), col("centroid_id"),
         col("codes"))
@@ -1164,32 +1141,10 @@ object Ann {
   // incl. NaN-greatest and ±0.0 equality).
   // ------------------------------------------------------------------
 
-  private def hasTopKAny(df: DataFrame): Boolean =
-    !forceWindow.get() && df.sparkSession.catalog.functionExists("topk_any")
-
-  /** Test hook: plans constructed inside `body` (on this thread) take
-    * the window fallback even with the extensions installed, so
-    * AnnSpec can pin the aggregate path row-identical END TO END per
-    * rung, not just at the selection helper. */
-  private[graft] def withWindowSelect[T](body: => T): T = {
-    forceWindow.set(true)
-    try body finally forceWindow.set(false)
-  }
-  private val forceWindow = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
-  }
-
   /** Per-query top-k of a scored candidate table by (`scoreCol` desc,
-    * neighbor_id asc): (query_id, neighbor_id, rank, __score). Uses
-    * the bounded `topk_any` aggregate when the graft extensions are
-    * installed; falls back to the window form otherwise (a session
-    * without GraftExtensions keeps the float-only rungs usable). */
+    * neighbor_id asc): (query_id, neighbor_id, rank, __score), through
+    * the bounded `topk_any` aggregate. */
   private[graft] def topKSelect(
-      scored: DataFrame, scoreCol: String, k: Int): DataFrame =
-    if (hasTopKAny(scored)) topKSelectAgg(scored, scoreCol, k)
-    else topKSelectWindow(scored, scoreCol, k)
-
-  private[graft] def topKSelectAgg(
       scored: DataFrame, scoreCol: String, k: Int): DataFrame =
     scored
       .groupBy(col("query_id"))
@@ -1201,8 +1156,8 @@ object Ann {
         (col("__pos") + 1).cast("int").as("rank"),
         col("__e.ord").as("__score"))
 
-  /** The reference window form — kept as the no-extensions fallback
-    * and the row-identity oracle AnnSpec pins the aggregate against. */
+  /** The reference window form — the row-identity oracle AnnSpec and
+    * RetrievalSpec pin [[topKSelect]] against. */
   private[graft] def topKSelectWindow(
       scored: DataFrame, scoreCol: String, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
@@ -1275,22 +1230,13 @@ object Ann {
       .join(broadcast(c))
       .withColumn("__pcos",
         cosinePrenormed(dot(col("__qv"), col("__ev")), col("__qn"), col("__en")))
-    if (hasTopKAny(queries))
-      scored.groupBy(col("query_id"))
-        .agg(call_function("topk_any",
-          col("__pcos"), col("centroid_id"), lit(nprobe)).as("__top"),
-          first(col("__qv")).as("__qv"), first(col("__qn")).as("__qn"))
-        .select(explode(col("__top")).as("__e"),
-          col("query_id"), col("__qv"), col("__qn"))
-        .select(col("__e.payload").as("centroid_id"), col("query_id"),
-          col("__qv"), col("__qn"))
-    else {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("__pcos").desc, col("centroid_id"))
-      scored
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= nprobe)
-        .select(col("centroid_id"), col("query_id"), col("__qv"), col("__qn"))
-    }
+    scored.groupBy(col("query_id"))
+      .agg(call_function("topk_any",
+        col("__pcos"), col("centroid_id"), lit(nprobe)).as("__top"),
+        first(col("__qv")).as("__qv"), first(col("__qn")).as("__qn"))
+      .select(explode(col("__top")).as("__e"),
+        col("query_id"), col("__qv"), col("__qn"))
+      .select(col("__e.payload").as("centroid_id"), col("query_id"),
+        col("__qv"), col("__qn"))
   }
 }

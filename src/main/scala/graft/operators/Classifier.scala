@@ -144,14 +144,6 @@ object Classifier {
       bias.length == classes.length, "MultiModel: shape mismatch")
   }
 
-  /** Mean-pooled raw score b + (1/|T|) Σ w[id] for one class. */
-  private def rawOfIds(ids: Column, weights: Array[Double],
-      bias: Double): Column = {
-    val w = typedlit(weights.toSeq)
-    aggregate(ids, lit(0.0), (acc, i) => acc + element_at(w, i + 1)) /
-      greatest(size(ids), lit(1)).cast("double") + lit(bias)
-  }
-
   /** Let-binding for Column expressions: evaluates `value` ONCE per
     * row and hands the downstream expression a lambda VARIABLE
     * reference instead of the expression tree. Without it, an
@@ -163,21 +155,14 @@ object Classifier {
       f: Column => Column): Column =
     element_at(transform(array(value), f), 1)
 
-  /** All K mean-pooled raw scores as ONE array column — the native
-    * `pool_scores` kernel (one pass over the id array, weights as a
-    * codegen reference object) when GraftExtensions is installed; the
-    * K bound aggregate-HOF folds otherwise (interpreted — the
-    * portable definition the kernel is pinned against). */
+  /** All K mean-pooled raw scores b + (1/|T|) Σ w[id] as ONE array
+    * column — the native `pool_scores` kernel (one pass over the id
+    * array, weights as a codegen reference object). LangIdSpec pins it
+    * to the same sums computed in Scala. */
   private def rawArrayOfIds(ids: Column, model: MultiModel): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(_.catalog.functionExists("pool_scores")))
-      call_function("pool_scores", ids,
-        typedlit(model.weights.flatten.toSeq),
-        typedlit(model.bias.toSeq))
-    else
-      bind1(ids, idsB =>
-        array(model.classes.indices.map(k =>
-          rawOfIds(idsB, model.weights(k), model.bias(k))): _*))
+    call_function("pool_scores", ids,
+      typedlit(model.weights.flatten.toSeq),
+      typedlit(model.bias.toSeq))
 
   /** Softmax class probabilities for a precomputed id array, as an
     * array column in class order (max-subtracted for stability).

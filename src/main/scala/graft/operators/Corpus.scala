@@ -21,7 +21,7 @@ object Corpus {
   def ngramFreq(
       docs: DataFrame, textCol: String, n: Int, topK: Int): DataFrame =
     Parallelism.ensure(docs.select(col(textCol).as("__t")))
-      .select(explode(Dedup.shingles(col("__t"), n)).as("ngram"))
+      .select(explode(Dedup.shinglesCol(docs, col("__t"), n)).as("ngram"))
       .groupBy("ngram")
       .agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("ngram"))
@@ -332,6 +332,14 @@ object Corpus {
     }
   }
 
+  /** Candidate-count bound for shipping [[heavyHitters]]' exact-count
+    * filter as an In/InSet plan literal; above it the (already
+    * collected) candidates travel as a broadcast LocalRelation
+    * instead — multi-word shingle strings are heavier per entry than
+    * the DriverBudget float model, so this sits well under
+    * [[DriverBudget.TrainRows]]. */
+  private val MaxInSetCandidates = 4096
+
   /** Sketch-first heavy hitters: the 100 TB path for [[ngramFreq]]'s
     * top-k. The exact plan's shuffle carries one row per distinct
     * n-gram per partition — fine while the vocabulary is bounded,
@@ -347,22 +355,21 @@ object Corpus {
     * `maxTracked` ≥ distinct n-grams (the sketch degenerates to exact)
     * and overwhelmingly likely otherwise with the default 4× headroom;
     * CorpusSpec pins equality on a Zipf corpus. Same column contract
-    * as ngramFreq (doc-distinct n-grams, freq-then-text ordering). */
-  /** Candidate-count bound for shipping [[heavyHitters]]' exact-count
-    * filter as an In/InSet plan literal; above it the (already
-    * collected) candidates travel as a broadcast LocalRelation
-    * instead — multi-word shingle strings are heavier per entry than
-    * the DriverBudget float model, so this sits well under
-    * [[DriverBudget.TrainRows]]. */
-  private val MaxInSetCandidates = 4096
-
+    * as ngramFreq (doc-distinct n-grams, freq-then-text ordering).
+    *
+    * EAGER: building the returned DataFrame runs the sketch job (an
+    * aggregate + collect over the whole corpus) before this method
+    * returns, so even `explain` or a plan audit of the result pays one
+    * corpus scan. The exact-count pass runs later, as a separate job
+    * when the result is executed; a source that changes between the
+    * two can yield candidates inconsistent with the counts. */
   def heavyHitters(
       docs: DataFrame, textCol: String, n: Int, topK: Int,
       sketchK: Int = 0, maxTracked: Int = 100000): DataFrame = {
     val sk = if (sketchK > 0) sketchK else 4 * topK
     require(sk >= topK, s"heavyHitters: sketchK $sk < topK $topK")
     def grams = Parallelism.ensure(docs.select(col(textCol).as("__t")))
-      .select(explode(Dedup.shingles(col("__t"), n)).as("ngram"))
+      .select(explode(Dedup.shinglesCol(docs, col("__t"), n)).as("ngram"))
     // Candidates collect ONCE (sk strings — driver-bounded by
     // construction, the sketch's whole point). The exact-count pass
     // then keeps candidate grams via an InSet literal — or, past the
@@ -494,9 +501,9 @@ object Corpus {
       probes: DataFrame, probeTextCol: String, n: Int): DataFrame = {
     val docGrams = Parallelism.ensure(
       docs.select(col(idCol).as("doc_id"), col(textCol).as("__t")))
-      .select(col("doc_id"), explode(Dedup.shingles(col("__t"), n)).as("ngram"))
+      .select(col("doc_id"), explode(Dedup.shinglesCol(docs, col("__t"), n)).as("ngram"))
     val probeGrams = probes
-      .select(explode(Dedup.shingles(col(probeTextCol), n)).as("ngram"))
+      .select(explode(Dedup.shinglesCol(probes, col(probeTextCol), n)).as("ngram"))
       .distinct()
     docGrams
       .join(broadcast(probeGrams), "ngram")
@@ -524,11 +531,11 @@ object Corpus {
     require(fpp > 0 && fpp < 1, s"contaminationBloom: fpp in (0,1), got $fpp")
     val docGrams = Parallelism.ensure(
       docs.select(col(idCol).as("doc_id"), col(textCol).as("__t")))
-      .select(col("doc_id"), explode(Dedup.shingles(col("__t"), n)).as("ngram"))
+      .select(col("doc_id"), explode(Dedup.shinglesCol(docs, col("__t"), n)).as("ngram"))
     // consumed three ways (count for sizing, sketch build, verify
     // join) — localCheckpoint pins it so the probe corpus scans once
     val probeGrams = probes
-      .select(explode(Dedup.shingles(col(probeTextCol), n)).as("ngram"))
+      .select(explode(Dedup.shinglesCol(probes, col(probeTextCol), n)).as("ngram"))
       .distinct()
       .localCheckpoint(false) // lazy — the count materializes it (r19)
     val nProbe = probeGrams.count()
@@ -603,30 +610,36 @@ object Corpus {
     * Pure projection — per-row math only, no shuffle, no join: the
     * canonical shape for a 100 TB quality-scoring pass (the mode count
     * never takes an explode → groupBy round trip). Counting runs in the
-    * native single-pass kernel when GraftExtensions is installed; the
-    * fraction arithmetic is shared, so both paths emit identical
-    * values.
+    * native single-pass `repetition_counts` kernel, which ClusterSpec
+    * pins to [[repetitionCountsPortable]].
     */
   def repetitionStats(
-      docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val cnts =
-      if (docs.sparkSession.catalog.functionExists("repetition_counts"))
-        call_function("repetition_counts", col(textCol))
-      else repetitionCountsPortable(col(textCol))
-    def frac(num: Column, den: Column): Column =
-      when(den > 0, round(num.cast("double") / den.cast("double"), 4))
-        .otherwise(lit(0.0))
-    docs.select(col(idCol), cnts.as("__c"))
+      docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol),
+        call_function("repetition_counts", col(textCol)).as("__c"))
       .select(
         col(idCol),
         col("__c.n_words").as("n_words"),
-        frac(col("__c.n_words") - col("__c.n_distinct_words"),
-          col("__c.n_words")).as("dup_word_frac"),
-        frac(col("__c.n_bigrams") - col("__c.n_distinct_bigrams"),
-          col("__c.n_bigrams")).as("dup_bigram_frac"),
-        frac(col("__c.top_bigram"), col("__c.n_bigrams"))
+        dupWordFrac("__c").as("dup_word_frac"),
+        dupBigramFrac("__c").as("dup_bigram_frac"),
+        repFrac(col("__c.top_bigram"), col("__c.n_bigrams"))
           .as("top_bigram_frac"))
-  }
+
+  /** num/den rounded to 4 dp (the q52 oracle's rounding), 0 for an
+    * empty denominator. */
+  private def repFrac(num: Column, den: Column): Column =
+    when(den > 0, round(num.cast("double") / den.cast("double"), 4))
+      .otherwise(lit(0.0))
+
+  /** Duplicate-word fraction of a `repetition_counts` struct column. */
+  private def dupWordFrac(c: String): Column =
+    repFrac(col(s"$c.n_words") - col(s"$c.n_distinct_words"),
+      col(s"$c.n_words"))
+
+  /** Duplicate-bigram fraction of a `repetition_counts` struct column. */
+  private def dupBigramFrac(c: String): Column =
+    repFrac(col(s"$c.n_bigrams") - col(s"$c.n_distinct_bigrams"),
+      col(s"$c.n_bigrams"))
 
   /** End-to-end corpus curation — the pass a training-data pipeline
     * actually ships, in execution order:
@@ -649,20 +662,11 @@ object Corpus {
       maxDupBigramFrac: Double = 0.08,
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.5): DataFrame = {
-    val cnts =
-      if (docs.sparkSession.catalog.functionExists("repetition_counts"))
-        call_function("repetition_counts", col(textCol))
-      else repetitionCountsPortable(col(textCol))
-    def frac(num: Column, den: Column): Column =
-      when(den > 0, round(num.cast("double") / den.cast("double"), 4))
-        .otherwise(lit(0.0))
     val gated = docs
-      .withColumn("__c", cnts)
+      .withColumn("__c", call_function("repetition_counts", col(textCol)))
       .filter(TextStats.qualityScore(col(textCol)) >= minQuality &&
-        frac(col("__c.n_words") - col("__c.n_distinct_words"),
-          col("__c.n_words")) <= maxDupWordFrac &&
-        frac(col("__c.n_bigrams") - col("__c.n_distinct_bigrams"),
-          col("__c.n_bigrams")) <= maxDupBigramFrac)
+        dupWordFrac("__c") <= maxDupWordFrac &&
+        dupBigramFrac("__c") <= maxDupBigramFrac)
       .drop("__c")
       // dropNearDuplicates runs MULTIPLE actions over its input (the
       // shingle/band pass, the verify fetch, each clustering round, the
@@ -709,13 +713,6 @@ object Corpus {
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.5): (DataFrame, CurationMetrics) = {
     import org.apache.spark.sql.Observation
-    val cnts =
-      if (docs.sparkSession.catalog.functionExists("repetition_counts"))
-        call_function("repetition_counts", col(textCol))
-      else repetitionCountsPortable(col(textCol))
-    def frac(num: Column, den: Column): Column =
-      when(den > 0, round(num.cast("double") / den.cast("double"), 4))
-        .otherwise(lit(0.0))
     val gatesObs = Observation()
     val outObs = Observation()
     val pass = (q: Column, dw: Column, db: Column) => q && dw && db
@@ -728,14 +725,10 @@ object Corpus {
     // would never be published. Replaying the observe over checkpointed
     // flag rows is a cheap boolean scan.
     val flagged = docs
-      .withColumn("__c", cnts)
+      .withColumn("__c", call_function("repetition_counts", col(textCol)))
       .withColumn("__q", TextStats.qualityScore(col(textCol)) >= minQuality)
-      .withColumn("__dw",
-        frac(col("__c.n_words") - col("__c.n_distinct_words"),
-          col("__c.n_words")) <= maxDupWordFrac)
-      .withColumn("__db",
-        frac(col("__c.n_bigrams") - col("__c.n_distinct_bigrams"),
-          col("__c.n_bigrams")) <= maxDupBigramFrac)
+      .withColumn("__dw", dupWordFrac("__c") <= maxDupWordFrac)
+      .withColumn("__db", dupBigramFrac("__c") <= maxDupBigramFrac)
       .drop("__c")
       .localCheckpoint(false)
     val gated = flagged

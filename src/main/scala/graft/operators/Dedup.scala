@@ -26,15 +26,14 @@ import org.apache.spark.sql.functions._
   *   persisted, shard-partitioned corpus indexes so continuous ingest
   *   pays O(batch + candidates), never O(corpus).
   *
-  * Signature math has two interchangeable forms with identical hash
-  * values: pure `functions._` array expressions (portable, no session
-  * requirements) and native Catalyst kernels (minhash_signature /
-  * word_shingles / simhash64 / jaccard_shingles, picked automatically
-  * when GraftExtensions is installed — the higher-order-function forms
-  * evaluate interpreted, the kernels run inside codegen). No UDFs, no
-  * driver-side loops; hash values are reduced below 2^32 before
-  * multiply-add so the arithmetic can never overflow a long even under
-  * ANSI mode.
+  * Signature math runs in the native Catalyst kernels
+  * (minhash_signature / word_shingles / simhash64 / jaccard_longs),
+  * inside codegen. The public `functions._` array-expression forms
+  * ([[shingles]], [[jaccard]], [[minhashSignature]], [[simhash64]])
+  * compute identical values and are what MinHashExprSpec and DedupSpec
+  * pin the kernels to. No UDFs, no driver-side loops; hash values are
+  * reduced below 2^32 before multiply-add so the arithmetic can never
+  * overflow a long even under ANSI mode.
   */
 object Dedup {
 
@@ -106,7 +105,7 @@ object Dedup {
     val b = withSh.select(col(idCol).as("b_id"), col(blockCol).as("__blk2"),
       col("__sh").as("__shb"))
     a.join(b, col("__blk") === col("__blk2") && col("a_id") < col("b_id"))
-      .withColumn("jaccard", round(jaccardLongsCol(docs, col("__sha"), col("__shb")), 4))
+      .withColumn("jaccard", round(jaccardLongs(col("__sha"), col("__shb")), 4))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
   }
@@ -144,34 +143,17 @@ object Dedup {
   def minhashSignature(shingleArr: Column, numHashes: Int): Column =
     minhashSignatureFromHashes(shingleHashes(shingleArr), numHashes)
 
-  /** Prefer the native MinHashSignature expression (codegen'd tight
-    * loop, ~20x) when GraftExtensions is installed; identical hash
-    * values either way, so bucket assignments don't depend on the
-    * path. */
-  private def signatureCol(
-      docs: DataFrame, shingleArr: Column, numHashes: Int): Column =
-    if (docs.sparkSession.catalog.functionExists("minhash_signature"))
-      call_function("minhash_signature", shingleArr, lit(numHashes))
-    else
-      minhashSignature(shingleArr, numHashes)
+  /** The native MinHashSignature expression (codegen'd tight loop,
+    * ~20x the HOF form); hash values identical to [[minhashSignature]]. */
+  private def signatureCol(shingleArr: Column, numHashes: Int): Column =
+    call_function("minhash_signature", shingleArr, lit(numHashes))
 
-  /** Same adaptive choice for shingle construction (identical output
-    * sets either way): the native codegen kernel when GraftExtensions
-    * is installed, the composed-builtin fallback otherwise. Public —
-    * q124's set-similarity join shingles through the same kernel. */
+  /** Word n-gram set through the native `word_shingles` kernel — the
+    * same array as [[shingles]], first occurrences in order (a null
+    * text gives null, where [[shingles]] gives an empty array). `docs`
+    * is unused; it stays so existing callers compile. */
   def shinglesCol(docs: DataFrame, text: Column, n: Int): Column =
-    if (docs.sparkSession.catalog.functionExists("word_shingles"))
-      call_function("word_shingles", text, lit(n))
-    else
-      shingles(text, n)
-
-  /** Adaptive set-Jaccard: native single-pass expression when
-    * registered, array_intersect/array_union otherwise. */
-  private def jaccardCol(docs: DataFrame, a: Column, b: Column): Column =
-    if (docs.sparkSession.catalog.functionExists("jaccard_shingles"))
-      call_function("jaccard_shingles", a, b)
-    else
-      jaccard(a, b)
+    call_function("word_shingles", text, lit(n))
 
   /** Analytic LSH banding plan: the (bands, rowsPerBand) split of
     * `numHashes` whose S-curve threshold (1/b)^(1/r) — the Jaccard
@@ -243,7 +225,7 @@ object Dedup {
     val sig = spread
       .select(col("__id"), shinglesCol(docs, col("__t"), shingleN).as("__sh"))
       .select(col("__id"),
-        signatureCol(docs, col("__sh"), numHashes).as("__sig"))
+        signatureCol(col("__sh"), numHashes).as("__sig"))
     val buckets = sig.select(
       col("__id"),
       explode(bandBucketStructs(col("__sig"), bands, rowsPerBand)).as("__bk"))
@@ -298,18 +280,15 @@ object Dedup {
     cands
       .join(sh.select(col("__id").as("a_id"), col("__sh").as("__sha")), "a_id")
       .join(sh.select(col("__id").as("b_id"), col("__sh").as("__shb")), "b_id")
-      .withColumn("jaccard", round(jaccardLongsCol(docs, col("__sha"), col("__shb")), 4))
+      .withColumn("jaccard", round(jaccardLongs(col("__sha"), col("__shb")), 4))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
   }
 
-  /** Adaptive long-array Jaccard: native sort-merge kernel when
-    * registered, array_intersect/array_union otherwise. */
-  private def jaccardLongsCol(docs: DataFrame, a: Column, b: Column): Column =
-    if (docs.sparkSession.catalog.functionExists("jaccard_longs"))
-      call_function("jaccard_longs", a, b)
-    else
-      jaccard(a, b)
+  /** Long-array Jaccard through the native sort-merge `jaccard_longs`
+    * kernel — the same value as [[jaccard]] on the arrays. */
+  private def jaccardLongs(a: Column, b: Column): Column =
+    call_function("jaccard_longs", a, b)
 
   // ------------------------------------------------------------------
   // Incremental dedup: a new batch against a persisted corpus index
@@ -408,7 +387,7 @@ object Dedup {
       .select(col("id"), shinglesCol(docs, col("__t"), shingleN).as("__shstr"))
       .select(col("id"),
         transform(col("__shstr"), xxhash64(_)).as("shingles"),
-        signatureCol(docs, col("__shstr"), numHashes).as("__sig"))
+        signatureCol(col("__shstr"), numHashes).as("__sig"))
 
   /** Verify-fetch pruning granularity baked into every MinhashIndex —
     * fixed, never a parameter (a build/probe mismatch would silently
@@ -528,7 +507,7 @@ object Dedup {
       .join(maybeB(feat.select(col("id").as("b_id"),
         col("shingles").as("__shb"))), "b_id")
       .withColumn("jaccard",
-        round(jaccardLongsCol(feat, col("__sha"), col("__shb")), 4))
+        round(jaccardLongs(col("__sha"), col("__shb")), 4))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
   }
@@ -545,6 +524,12 @@ object Dedup {
     * Near-duplication is not transitive, so a batch doc whose only link
     * to the corpus runs THROUGH a dropped batch sibling survives — by
     * design: it cleared the similarity bar against everything retained.
+    *
+    * Save or materialize the delta within this session: its lineage
+    * ends at a `localCheckpoint` of the batch features, whose blocks
+    * live only in this session's executors. If they are evicted or
+    * lost before [[MinhashIndex.save]] / [[MinhashIndex.materialize]]
+    * (or a union that is then saved), the delta cannot be recomputed.
     */
   def incrementalDedup(
       batch: DataFrame, index: MinhashIndex, idCol: String, textCol: String,
@@ -585,7 +570,7 @@ object Dedup {
       .join(bfeat.select(col("id").as("b_id"), col("shingles").as("__shb")),
         "b_id")
       .withColumn("jaccard",
-        round(jaccardLongsCol(feat, col("__sha"), col("__shb")), 4))
+        round(jaccardLongs(col("__sha"), col("__shb")), 4))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
     val cc = connectedComponents(pairs, "a_id", "b_id")
@@ -926,7 +911,7 @@ object Dedup {
     // most of the corpus and its pairs serialise through one task.
     // MEASURED at the registered q76 config (k=16, 100k 64-dim
     // vectors, 32 threads): salt=4 is only ~6% faster (7.65 -> 7.18 s
-    // interleaved A/B, StressR13, results verified identical) — at
+    // interleaved A/B in r13, results verified identical; SURVEY.md) — at
     // this scale training + components dominate, not the pair join —
     // so the default stays 1; reach for it when the cluster-size
     // histogram (Corpus.keyProfile on centroid_id) shows real skew.
@@ -1192,14 +1177,11 @@ object Dedup {
   private def simhashFeatures(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int): DataFrame = {
-    val simCol =
-      if (docs.sparkSession.catalog.functionExists("simhash64"))
-        (sh: Column) => call_function("simhash64", sh)
-      else simhash64 _
     Parallelism.ensure(
       docs.select(col(idCol).as("__id"), col(textCol).as("__t")))
       .select(col("__id"),
-        simCol(shinglesCol(docs, col("__t"), shingleN)).as("__sim"))
+        call_function("simhash64", shinglesCol(docs, col("__t"), shingleN))
+          .as("__sim"))
   }
 
   /** SimHash near-dedup with the survivor policy of

@@ -175,7 +175,7 @@ object FuzzyMatch {
     // entering the scorer kernel (every rapidfuzz-family scorer is
     // reflexive there; empty-equal still falls through — w_ratio("","")
     // is 0 by design). MEASURED SLOWER and left OFF by default: on the
-    // q43 fixture at sf0.1, interleaved same-JVM A/B (StressR13) put
+    // q43 fixture at sf0.1, an interleaved same-JVM A/B (r13, SURVEY.md) put
     // the CaseWhen-wrapped plan at 4.23 s vs 1.71 s plain — wrapping
     // all 9 scorer calls in conditionals bloats the generated code
     // past what whole-stage codegen/subexpression elimination handle,

@@ -70,9 +70,9 @@ object Graph {
 
   /** Per-operator driver-path PERFORMANCE ceilings — the measured
     * driver-vs-distributed crossovers from the r16 sf1 replica
-    * experiment (StressR16 `sf1`, 24 GiB JVM, local[32], same inputs
-    * both paths, log-log interpolation between the 1.2M- and
-    * 12M-edge points):
+    * experiment (r16 dev harness, see the git history; sf1, 24 GiB
+    * JVM, local[32], same inputs both paths, log-log interpolation
+    * between the 1.2M- and 12M-edge points):
     *
     *  - triangles: driver 3.1 s / dist 11.7 s at 1.2M edges but
     *    38.0 s / 29.2 s at 12M — crossover ≈8M; ceiling 6M keeps

@@ -43,14 +43,11 @@ object LangId {
   /** The hashed feature-id array: char trigrams + stopword tokens +
     * script-dominance markers, all in one [0, dims) space (tag
     * prefixes keep the families from colliding systematically).
-    * Native `lang_features` kernel when GraftExtensions is installed
-    * (one scan-speed pass; the HOF formulation below is the portable
-    * definition — LangIdSpec pins the two identical). */
+    * The native `lang_features` kernel, one scan-speed pass; the HOF
+    * formulation below is its reference definition — LangIdSpec pins
+    * the two identical. */
   def featureIds(text: Column, dims: Int, seed: Long = 7L): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(_.catalog.functionExists("lang_features")))
-      call_function("lang_features", text, lit(dims), lit(seed))
-    else featureIdsPortable(text, dims, seed)
+    call_function("lang_features", text, lit(dims), lit(seed))
 
   private[graft] def featureIdsPortable(text: Column, dims: Int,
       seed: Long): Column = {

@@ -126,26 +126,33 @@ object RosterQuery {
     * office names resolve to ids through the office reference list
     * (`office_list.get(r["office"])`; names absent from the list drop
     * out, exactly like the reference's `if r["office"] in office_list`
-    * guard, via the inner join), distinct state ids collect directly.
-    * The reference list and the distinct sets are tiny — two small
-    * driver-side pulls that then compile into scan-pushable predicates.
+    * guard), distinct numeric state ids collect directly.
+    *
+    * ONE query over the records: a single global aggregate gathers the
+    * distinct office names and state ids (nulls and non-numeric states
+    * drop out), the names explode against the broadcast reference list,
+    * and one collect returns both. Each distinct name contributes the
+    * id of every list row carrying it; a list row whose id is not
+    * numeric is skipped. The sets are tiny and compile into
+    * scan-pushable predicates.
     */
   def paramsFromRecords(
       records: DataFrame, officeCol: String, stateCol: String,
       officeList: DataFrame, officeNameCol: String, officeIdCol: String,
       electionYears: Seq[Int] = Nil, stages: Seq[String] = Nil): RosterParams = {
-    val officeIds = records
-      .select(col(officeCol).as("__name")).distinct()
-      .join(officeList.select(col(officeNameCol).as("__name"),
-        col(officeIdCol).cast("int").as("__id")), "__name")
-      .select("__id").collect().map(_.getInt(0)).toSeq.sorted
-    val stateIds = records
-      .select(col(stateCol).cast("int").as("__sid"))
-      .filter(col("__sid").isNotNull).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
+    val rows = records
+      .agg(collect_set(col(officeCol)).as("__names"),
+        collect_set(col(stateCol).cast("int")).as("__sids"))
+      .select(explode_outer(col("__names")).as("__name"), col("__sids"))
+      .join(broadcast(officeList.select(col(officeNameCol).as("__name"),
+        col(officeIdCol).cast("int").as("__id"))), Seq("__name"), "left")
+      .select(col("__id"), col("__sids"))
+      .collect()
     RosterParams(
       electionYears = electionYears, stages = stages,
-      officeIds = officeIds, stateIds = stateIds)
+      officeIds = rows.collect { case r if !r.isNullAt(0) => r.getInt(0) }
+        .toSeq.sorted,
+      stateIds = rows.head.getSeq[Int](1).sorted)
   }
 
   /** The candidates-by-year semi-join shape (q05): entities with ≥ 1

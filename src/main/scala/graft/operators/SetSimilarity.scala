@@ -31,15 +31,11 @@ import org.apache.spark.sql.functions._
 object SetSimilarity {
 
   /** |distinct(a) ∩ distinct(b)| for the verify joins — the native
-    * merge-count kernel when GraftExtensions is installed (no boxed
-    * hash set, no result-array allocation per pair; sorted inputs
-    * skip the sort), `size(array_intersect)` otherwise. Values are
-    * identical (MinHashSpec pins the kernel to the builtin). */
+    * `inter_longs` merge-count kernel (no boxed hash set, no
+    * result-array allocation per pair; sorted inputs skip the sort).
+    * MinHashExprSpec pins it to `size(array_intersect)`. */
   private def interCount(a: Column, b: Column): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(_.catalog.functionExists("inter_longs")))
-      call_function("inter_longs", a, b)
-    else size(array_intersect(a, b)).cast("long")
+    call_function("inter_longs", a, b)
 
   /** All pairs (a_id < b_id) whose distinct-token Jaccard is ≥
     * tauNum/tauDen. Output: (a_id, b_id, inter, uni) — integer

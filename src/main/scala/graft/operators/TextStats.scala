@@ -41,14 +41,11 @@ object TextStats {
     octet_length(text).cast("double") /
       call_function("deflate_len", text, lit(level)).cast("double")
 
-  /** Occurrences of any word from `stops` (native kernel when
-    * GraftExtensions is installed — identical counts either way). */
+  /** Occurrences of any word from `stops` — the native
+    * `stopword_hits` kernel, which MinHashExprSpec pins to
+    * `size(filter(words(text), isin(stops)))`. */
   def stopwordHits(text: Column, stops: Seq[String]): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(_.catalog.functionExists("stopword_hits")))
-      call_function("stopword_hits", text, lit(stops.mkString(",")))
-    else
-      size(filter(words(text), w => w.isin(stops: _*)))
+    call_function("stopword_hits", text, lit(stops.mkString(",")))
 
   /** Per-profile hit counts as named columns (c_en, c_de, ...). */
   def profileCounts(text: Column): Seq[(String, Column)] =

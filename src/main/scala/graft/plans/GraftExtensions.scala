@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -10,9 +10,14 @@ import graft.functions._
   * session function registry, so SQL text and `call_function` both
   * resolve them (`SELECT jaro_winkler(a, b)`).
   *
-  * Activate with
+  * graft requires this extension: every kernel operation has exactly
+  * one implementation, the native expression, and there is no builtin
+  * fallback. Build sessions with [[GraftExtensions.builder]], or set
   *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * or `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * on your own builder. A column helper used in a session without it
+  * fails at analysis with an error naming the missing function;
+  * operators that run driver-side work first check
+  * [[GraftExtensions.require]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -232,4 +237,30 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         litStr("html_attr", 4, es(4))),
       "html_attr(html, tag, attrName, attrValue, wantAttr) - attribute of the first matching element"))
   }
+}
+
+object GraftExtensions {
+
+  private val Missing =
+    "graft needs its Spark extension installed " +
+      "(spark.sql.extensions=graft.plans.GraftExtensions)"
+
+  /** Fails fast, naming the setting, when `session` was built without
+    * the extension. */
+  def require(session: SparkSession): Unit =
+    Predef.require(session.catalog.functionExists("pq_encode"), Missing)
+
+  /** The one session configuration Bench, Verify, the specs and the dev
+    * mains share: `local[cpus]` with as many shuffle partitions, UTC,
+    * ANSI off (hash arithmetic and lenient casts rely on it), parquet
+    * nanosecond timestamps read as longs, this extension, UI off. */
+  def builder(cpus: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.ui.enabled", "false")
 }

@@ -315,6 +315,27 @@ class AnnSpec extends SparkSpec {
     assert(both.filter($"native" =!= $"hof").count() === 0)
   }
 
+  test("hyperplane_bucket native kernel matches the builtin formula bit for bit") {
+    // real embeddings plus a zero vector (every projection 0 → no bit
+    // set), at 1, 16 and 62 planes (the widest bucket a long packs)
+    val e = Tables(spark, "/root/testdata/sf0.001").embeddings
+      .select(col("vec_id"), col("embedding")).limit(200)
+    val dim = e.head().getSeq[Float](1).size
+    val all = e.unionByName(
+      Seq((-1L, Seq.fill(dim)(0.0f))).toDF("vec_id", "embedding"))
+    for (planes <- Seq(1, 16, 62)) {
+      val both = all.select(col("vec_id"),
+        VectorFunctions.hyperplaneBucket(col("embedding"), dim, planes),
+        VectorFunctions.hyperplaneBucketHof(col("embedding"), dim, planes))
+        .as[(Long, Long, Long)].collect()
+      both.foreach { case (id, native, hof) =>
+        assert(native === hof, s"vec $id, $planes planes") }
+      assert(both.find(_._1 == -1L).map(_._2) === Some(0L))
+      assert(planes == 1 || both.map(_._2).distinct.length > 8,
+        "the buckets spread")
+    }
+  }
+
   test("assignBucketsJoin (large-model path) agrees with the literal model") {
     val e = Tables(spark, "/root/testdata/sf0.001").embeddings
     val centroids = e.filter($"vec_id" % 50 === 0)
@@ -753,7 +774,7 @@ class AnnSpec extends SparkSpec {
       df.select("query_id", "neighbor_id", "rank", "__score")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
           java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
-    val agg = dump(Ann.topKSelectAgg(scored, "s", 3))
+    val agg = dump(Ann.topKSelect(scored, "s", 3))
     val win = dump(Ann.topKSelectWindow(scored, "s", 3))
     assert(agg === win, "aggregate select diverged from the window form")
     // the crafted orderings actually exercised what they claim:
@@ -771,46 +792,10 @@ class AnnSpec extends SparkSpec {
     def dumpS(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    assert(dumpS(Ann.topKSelectAgg(s2, "s", 2)) ===
+    assert(dumpS(Ann.topKSelect(s2, "s", 2)) ===
       dumpS(Ann.topKSelectWindow(s2, "s", 2)))
-    assert(dumpS(Ann.topKSelectAgg(s2, "s", 2)) ===
+    assert(dumpS(Ann.topKSelect(s2, "s", 2)) ===
       Set((1L, "a", 1), (1L, "b", 2)))
-  }
-
-  test("every rung's bounded select ≡ its window form end to end (sf0.001)") {
-    // belt-and-braces over the per-rung plumbing: run brute force,
-    // IVF, IVF-PQ (refine 0 AND refined), residual PQ and SQ8 with
-    // the aggregate select (extensions installed — the default path),
-    // and pin each against the same rung re-run through the window
-    // fallback. Row-for-row, rank-for-rank.
-    val e = Tables(spark, "/root/testdata/sf0.001").embeddings
-    val q = e.filter(col("vec_id") < 5)
-    val centroids = Ann.trainCentroids(e, "vec_id", "embedding",
-      k = 10, iters = 2).withColumnRenamed("centroid_id", "vec_id")
-    val books = Ann.trainPq(e, "vec_id", "embedding", m = 8, ksub = 32,
-      iters = 3, maxTrain = 2048)
-    def dump(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "neighbor_id", "rank", "cosine")
-        .as[(Long, Long, Int, Double)].collect().toSet
-    val rungs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      ("bruteforce", () =>
-        Ann.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)),
-      ("ivf", () => Ann.ivfTopK(e, q, centroids,
-        "vec_id", "embedding", k = 5, nprobe = 3)),
-      ("ivfpq_adc", () => Ann.ivfPqTopK(e, q, centroids, books,
-        "vec_id", "embedding", k = 5, nprobe = 3, refine = 0)),
-      ("ivfpq_refined", () => Ann.ivfPqTopK(e, q, centroids, books,
-        "vec_id", "embedding", k = 5, nprobe = 3, refine = 4)),
-      ("sq8", () => Ann.sq8TopK(e, q, "vec_id", "embedding",
-        k = 5, refine = 4)),
-      ("sq8_ivf", () => Ann.sq8IvfTopK(e, q, centroids,
-        "vec_id", "embedding", k = 5, nprobe = 3, refine = 4)))
-    for ((name, rung) <- rungs) {
-      val withAgg = dump(rung())
-      val withWindow = Ann.withWindowSelect { dump(rung()) }
-      assert(withAgg === withWindow,
-        s"rung $name: aggregate select diverged from the window form")
-    }
   }
 
   test("IVF-SQ8 on a CLUSTERED corpus: nprobe=3 recall >= 0.9, curve monotone in nprobe") {

@@ -463,6 +463,31 @@ class CorpusSpec extends SparkSpec {
     }
   }
 
+  test("bucket_search quantileBucket matches the array-filter-count formula") {
+    import graft.functions.LayoutFunctions
+    // bounds with a repeated value; values below, between, on, above
+    // every bound, plus NaN, ±infinity and null (both forms put null in
+    // bucket 0)
+    val bounds = Array(-1.5, 0.0, 0.0, 2.0, 10.0)
+    val vals = Seq(Some(-3.0), Some(-1.5), Some(-0.5), Some(0.0), Some(1.0),
+      Some(2.0), Some(9.99), Some(10.0), Some(1e9), Some(Double.NaN),
+      Some(Double.NegativeInfinity), Some(Double.PositiveInfinity), None)
+      .toDF("v")
+    val got = vals.select(
+      LayoutFunctions.quantileBucket(col("v"), bounds),
+      LayoutFunctions.quantileBucketHof(col("v"), bounds))
+      .as[(Long, Long)].collect()
+    got.foreach { case (native, ref) => assert(native === ref) }
+    assert(got.map(_._1).toSeq ===
+      Seq(0L, 1L, 1L, 3L, 3L, 4L, 4L, 5L, 5L, 5L, 0L, 5L, 0L))
+    // integer input casts the same way on both sides
+    val ints = (-3 to 12).toDF("i").select(
+      LayoutFunctions.quantileBucket(col("i"), bounds),
+      LayoutFunctions.quantileBucketHof(col("i"), bounds))
+      .as[(Long, Long)].collect()
+    ints.foreach { case (native, ref) => assert(native === ref) }
+  }
+
   test("prefixSum matches the single-window scan, ties included") {
     // gappy, shuffled ids; duplicate order keys exercise the RANGE-frame
     // tie contract (peers share the inclusive sum)

@@ -84,6 +84,47 @@ class MinHashExprSpec extends SparkSpec {
     assert(nulls.getLong(1) === nulls.getInt(3).toLong) // 0
   }
 
+  test("native word_shingles matches Dedup.shingles, order included") {
+    // repeats (distinct keeps first occurrences), runs of spaces
+    // (empty tokens), fewer words than n, the empty string, unicode
+    val texts = Seq("a b a b a b c", "x  y   z", "one two", "",
+      "über naïve café über naïve café", " lead trail ").toDF("text")
+    for (n <- Seq(1, 2, 3)) {
+      val both = texts.select(
+        Dedup.shingles(col("text"), n).as("hof"),
+        call_function("word_shingles", col("text"), lit(n)).as("native"))
+        .as[(Seq[String], Seq[String])].collect()
+      both.foreach { case (hof, native) => assert(native === hof, s"n=$n") }
+    }
+    assert(Seq("a b a b a b c").toDF("t")
+      .select(call_function("word_shingles", col("t"), lit(2)))
+      .as[Seq[String]].head === Seq("a b", "b a", "b c"))
+    // a null text: the kernel returns null, the formula an empty array
+    // (size(null) is -1 with ANSI off); both explode to no rows
+    val nullText = Seq(Option.empty[String]).toDF("t")
+    assert(nullText.select(call_function("word_shingles", col("t"), lit(2)))
+      .head.isNullAt(0))
+    assert(nullText.select(explode(
+      call_function("word_shingles", col("t"), lit(2)))).count() === 0)
+    assert(nullText.select(explode(Dedup.shingles(col("t"), 2))).count() === 0)
+  }
+
+  test("native jaccard_longs matches Dedup.jaccard on long arrays") {
+    val cases = Seq(
+      (Seq(3L, 1L, 2L), Seq(2L, 3L, 9L)),
+      (Seq(1L, 1L, 2L), Seq(2L, 2L, 5L)),
+      (Seq(1L, 2L), Seq(4L, 5L)),
+      (Seq.empty[Long], Seq(1L)),
+      (Seq.empty[Long], Seq.empty[Long]),
+      (Seq(Long.MinValue, 0L, Long.MaxValue), Seq(Long.MaxValue, 0L)))
+    val got = cases.toDF("a", "b").select(
+      call_function("jaccard_longs", col("a"), col("b")),
+      Dedup.jaccard(col("a"), col("b")))
+      .as[(Double, Double)].collect()
+    got.foreach { case (native, ref) => assert(native === ref) }
+    assert(got.map(_._1).toSeq === Seq(0.5, 1.0 / 3, 0.0, 0.0, 0.0, 2.0 / 3))
+  }
+
   test("empty shingle array yields MaxValue sentinels") {
     val sig = Seq("x").toDF("t")
       .select(call_function("minhash_signature",

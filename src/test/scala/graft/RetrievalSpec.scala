@@ -207,7 +207,7 @@ class RetrievalSpec extends SparkSpec {
     val prev = spark.conf.get(key)
     try {
       spark.conf.set(key, "2")
-      val agg = dump(Ann.topKSelectAgg(scored, "s", 5))
+      val agg = dump(Ann.topKSelect(scored, "s", 5))
       spark.conf.set(key, prev)
       val win = dump(Ann.topKSelectWindow(scored, "s", 5))
       assert(agg === win,

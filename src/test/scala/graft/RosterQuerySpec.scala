@@ -93,6 +93,49 @@ class RosterQuerySpec extends SparkSpec {
       .subsetOf(Set("NATION_3", "NATION_12")))
   }
 
+  test("paramsFromRecords: the one-query form returns the two-query params") {
+    // the earlier form: two separate collects over the records
+    def twoQuery(records: org.apache.spark.sql.DataFrame,
+        list: org.apache.spark.sql.DataFrame): RosterParams = {
+      val officeIds = records
+        .select(col("office").as("__name")).distinct()
+        .join(list.select(col("name").as("__name"),
+          col("id").cast("int").as("__id")), "__name")
+        .select("__id").collect().map(_.getInt(0)).toSeq.sorted
+      val stateIds = records
+        .select(col("state").cast("int").as("__sid"))
+        .filter(col("__sid").isNotNull).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      RosterParams(electionYears = Seq(2020), officeIds = officeIds,
+        stateIds = stateIds)
+    }
+    // "Senate" is shared by two list rows; "Mayor" is not in the list
+    val list = Seq(("Senate", "4"), ("House", "7"), ("Senate", "9"),
+      ("Governor", "2")).toDF("name", "id")
+    val batches = Map(
+      "absent office, null and non-numeric states" -> Seq(
+        ("House", "12"), ("Mayor", "3"), ("House", null), ("Senate", "TX"),
+        (null, "5"), ("House", "12")),
+      "name shared by two list rows" -> Seq(
+        ("Senate", "1"), ("Senate", "1"), ("Governor", "8")),
+      "empty batch" -> Seq.empty[(String, String)])
+    for ((what, rows) <- batches) {
+      val records = rows.toDF("office", "state")
+      val got = RosterQuery.paramsFromRecords(records, "office", "state",
+        list, "name", "id", electionYears = Seq(2020))
+      assert(got == twoQuery(records, list), what)
+    }
+    // the cases exercise what they claim
+    val shared = RosterQuery.paramsFromRecords(
+      batches("name shared by two list rows").toDF("office", "state"),
+      "office", "state", list, "name", "id")
+    assert(shared.officeIds == Seq(2, 4, 9) && shared.stateIds == Seq(1, 8))
+    val empty = RosterQuery.paramsFromRecords(
+      Seq.empty[(String, String)].toDF("office", "state"),
+      "office", "state", list, "name", "id")
+    assert(empty.officeIds.isEmpty && empty.stateIds.isEmpty)
+  }
+
   test("Jdbc.reader builds without a live database; load is the only connect") {
     val cfg = Jdbc.Config(
       url = "jdbc:postgresql://localhost:5432/roster", table = "candidate",
