@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
 
 /** Product-quantization kernels (Jégou, Douze, Schmid: "Product
   * Quantization for Nearest Neighbor Search", TPAMI 2011).
@@ -17,10 +17,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   * subspace dot products is built, and each corpus row's approximate
   * dot is m table lookups — no float math in the scan loop.
   *
-  * The codebook ships as a foldable array<array<array<float>>> literal
-  * (m × ksub × d/m — 16k floats at m=8, ksub=256, d=64) evaluated once
-  * into a [[PqModel]] referenced from generated code, exactly like
-  * [[NearestCentroid]]'s centroid matrix.
+  * The codebooks (m × ksub × d/m floats — 16k at m=8, ksub=256, d=64)
+  * are a [[PqModel]] built once on the driver and held by reference in
+  * `pq_encode`/`pq_lut`: the plan prints only its shape tag
+  * (`pq_lut(__qv, pq[8x256x8])`), compares it by identity, and
+  * generated code reaches it as a reference object. The floats never
+  * become a plan literal, so they are never reflected, rendered or
+  * canonicalized per query.
   */
 final class PqModel(val codebooks: Array[Array[Array[Float]]])
     extends Serializable {
@@ -34,6 +37,18 @@ final class PqModel(val codebooks: Array[Array[Array[Float]]])
     cb.length == ksub && cb.forall(_.length == dsub)),
     "PqModel: ragged codebooks (every subspace needs ksub × dsub floats)")
   val dim: Int = m * dsub
+
+  /** The codebooks as nested Seqs (the `Ann.trainPq` shape). */
+  def toSeq: Seq[Seq[Seq[Float]]] =
+    codebooks.toSeq.map(_.toSeq.map(_.toSeq))
+
+  /** The plan tag: m × ksub × dsub. */
+  override def toString: String = s"pq[${m}x${ksub}x$dsub]"
+}
+
+object PqModel {
+  def apply(codebooks: Seq[Seq[Seq[Float]]]): PqModel =
+    new PqModel(codebooks.map(_.map(_.toArray).toArray).toArray)
 }
 
 object PqImpl {
@@ -135,78 +150,48 @@ object PqImpl {
   }
 }
 
-private object PqExprCheck {
-  val BooksType: DataType = ArrayType(ArrayType(ArrayType(FloatType)))
-
-  def vecAndBooks(name: String, l: DataType, r: Expression): TypeCheckResult =
-    (l, r.dataType) match {
-      case (ArrayType(FloatType, _),
-            ArrayType(ArrayType(ArrayType(FloatType, _), _), _)) if r.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$name requires (array<float>, foldable array<array<array<float>>>), " +
-          s"got (${l.simpleString}, ${r.dataType.simpleString})")
-    }
-}
-
 /** `pq_encode(vec, codebooks)` — m-byte PQ code (binary). */
-case class PqEncode(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class PqEncode(child: Expression, model: PqModel)
+    extends UnaryExpression {
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = left.nullable
+  override def nullable: Boolean = child.nullable
 
   override def checkInputDataTypes(): TypeCheckResult =
-    PqExprCheck.vecAndBooks(prettyName, left.dataType, right)
+    VectorExprCheck.floatArray(prettyName, child.dataType)
 
-  @transient private lazy val model: PqModel = {
-    val arr = right.eval(null)
-    require(arr != null, s"$prettyName: codebooks must not be null")
-    PqImpl.build(arr.asInstanceOf[ArrayData])
-  }
-
-  override protected def nullSafeEval(v: Any, unused: Any): Any =
+  override protected def nullSafeEval(v: Any): Any =
     PqImpl.encode(v.asInstanceOf[ArrayData], model)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("pqModel", model, "graft.functions.PqModel")
-    defineCodeGen(ctx, ev, (v, _) =>
-      s"graft.functions.PqImpl.encode($v, $ref)")
+    defineCodeGen(ctx, ev, v => s"graft.functions.PqImpl.encode($v, $ref)")
   }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 
   override def prettyName: String = "pq_encode"
 }
 
 /** `pq_lut(qvec, codebooks)` — flat m×ksub ADC table (array<double>). */
-case class PqLut(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class PqLut(child: Expression, model: PqModel)
+    extends UnaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = left.nullable
+  override def nullable: Boolean = child.nullable
 
   override def checkInputDataTypes(): TypeCheckResult =
-    PqExprCheck.vecAndBooks(prettyName, left.dataType, right)
+    VectorExprCheck.floatArray(prettyName, child.dataType)
 
-  @transient private lazy val model: PqModel = {
-    val arr = right.eval(null)
-    require(arr != null, s"$prettyName: codebooks must not be null")
-    PqImpl.build(arr.asInstanceOf[ArrayData])
-  }
-
-  override protected def nullSafeEval(v: Any, unused: Any): Any =
+  override protected def nullSafeEval(v: Any): Any =
     PqImpl.lut(v.asInstanceOf[ArrayData], model)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("pqModel", model, "graft.functions.PqModel")
-    defineCodeGen(ctx, ev, (v, _) =>
-      s"graft.functions.PqImpl.lut($v, $ref)")
+    defineCodeGen(ctx, ev, v => s"graft.functions.PqImpl.lut($v, $ref)")
   }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 
   override def prettyName: String = "pq_lut"
 }

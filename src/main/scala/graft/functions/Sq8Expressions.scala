@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType}
@@ -12,6 +12,12 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   * `vec_sub_f` rationale). Codes are raw BYTES (BinaryType): the true
   * 4x-vs-float32 representation in storage, shuffle AND memory, where
   * the first formulation's array<int> held each 8-bit code in 32 bits.
+  *
+  * The per-dimension scales are an [[Sq8Model]], built once (held by
+  * `Ann.PersistedSq8Index`, or once per in-memory search) and held by
+  * reference in each kernel: the plan prints `sq8[dim]`, never the
+  * 2·dim doubles. The SQL forms take two array<double> literals,
+  * converted once when the function is built.
   *
   * Parity contract: [[Sq8Impl.dot]]/[[Sq8Impl.norm]] reconstruct each
   * dimension to FLOAT first — bit-identical to
@@ -37,22 +43,17 @@ final class Sq8Model(val mins: Array[Double], val steps: Array[Double])
   require(mins.length == steps.length && mins.nonEmpty,
     s"Sq8Model: ${mins.length} mins vs ${steps.length} steps")
   val dim: Int = mins.length
+
+  /** The plan tag: the model's dimensionality. */
+  override def toString: String = s"sq8[$dim]"
+}
+
+object Sq8Model {
+  def apply(mins: Seq[Double], steps: Seq[Double]): Sq8Model =
+    new Sq8Model(mins.toArray, steps.toArray)
 }
 
 object Sq8Impl {
-  def build(minsArr: ArrayData, stepsArr: ArrayData): Sq8Model = {
-    val n = minsArr.numElements()
-    val mins = new Array[Double](n)
-    val steps = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      mins(i) = minsArr.getDouble(i)
-      steps(i) = stepsArr.getDouble(i)
-      i += 1
-    }
-    new Sq8Model(mins, steps)
-  }
-
   /** code_i = clamp(round((x_i − min_i)/step_i), 0, 255) as the raw
     * low byte (decode with `& 0xFF`); step 0 (constant dim) → 0. */
   def encode(vec: ArrayData, m: Sq8Model): Array[Byte] = {
@@ -117,157 +118,113 @@ object Sq8Impl {
   }
 }
 
-private object Sq8ExprCheck {
-  /** The scales must be FOLDABLE array<double> literals — they are the
-    * model, evaluated once and shipped as a codegen reference object
-    * (the NearestCentroid discipline). */
-  def scales(name: String, mins: Expression, steps: Expression)
-      : TypeCheckResult =
-    (mins.dataType, steps.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _))
-          if mins.foldable && steps.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$name requires foldable array<double> mins/steps, got " +
-          s"(${mins.dataType.simpleString}, ${steps.dataType.simpleString})")
-    }
-
-  def buildModel(name: String, mins: Expression, steps: Expression)
-      : Sq8Model = {
-    val mv = mins.eval(null); val sv = steps.eval(null)
-    require(mv != null && sv != null, s"$name: scales must not be null")
-    Sq8Impl.build(mv.asInstanceOf[ArrayData], sv.asInstanceOf[ArrayData])
-  }
-}
-
 /** `sq8_encode(vec, mins, steps)` → binary codes. */
-case class Sq8Encode(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+case class Sq8Encode(child: Expression, model: Sq8Model)
+    extends UnaryExpression {
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = first.nullable
+  override def nullable: Boolean = child.nullable
 
   override def checkInputDataTypes(): TypeCheckResult =
-    first.dataType match {
-      case ArrayType(FloatType, _) =>
-        Sq8ExprCheck.scales(prettyName, second, third)
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float> input, got ${dt.simpleString}")
-    }
+    VectorExprCheck.floatArray(prettyName, child.dataType)
 
-  @transient private lazy val model: Sq8Model =
-    Sq8ExprCheck.buildModel(prettyName, second, third)
-
-  override protected def nullSafeEval(v: Any, m: Any, s: Any): Any =
+  override protected def nullSafeEval(v: Any): Any =
     Sq8Impl.encode(v.asInstanceOf[ArrayData], model)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("sq8model", model, "graft.functions.Sq8Model")
-    defineCodeGen(ctx, ev, (v, _, _) =>
-      s"graft.functions.Sq8Impl.encode($v, $ref)")
+    defineCodeGen(ctx, ev, v => s"graft.functions.Sq8Impl.encode($v, $ref)")
   }
 
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 
   override def prettyName: String = "sq8_encode"
 }
 
+/** The code-side SQ8 kernels share one shape: binary codes in, one
+  * model-driven result out. */
+private object Sq8CodesCheck {
+  def apply(name: String, dt: DataType): TypeCheckResult = dt match {
+    case BinaryType => TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      s"$name requires binary codes, got ${dt.simpleString}")
+  }
+}
+
 /** `sq8_dequant(codes, mins, steps)` → array<float> reconstruction. */
-case class Sq8Dequant(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+case class Sq8Dequant(child: Expression, model: Sq8Model)
+    extends UnaryExpression {
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullable: Boolean = first.nullable
+  override def nullable: Boolean = child.nullable
 
   override def checkInputDataTypes(): TypeCheckResult =
-    first.dataType match {
-      case BinaryType => Sq8ExprCheck.scales(prettyName, second, third)
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires binary codes, got ${dt.simpleString}")
-    }
+    Sq8CodesCheck(prettyName, child.dataType)
 
-  @transient private lazy val model: Sq8Model =
-    Sq8ExprCheck.buildModel(prettyName, second, third)
-
-  override protected def nullSafeEval(c: Any, m: Any, s: Any): Any =
+  override protected def nullSafeEval(c: Any): Any =
     Sq8Impl.dequant(c.asInstanceOf[Array[Byte]], model)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("sq8model", model, "graft.functions.Sq8Model")
-    defineCodeGen(ctx, ev, (c, _, _) =>
-      s"graft.functions.Sq8Impl.dequant($c, $ref)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.Sq8Impl.dequant($c, $ref)")
   }
 
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 
   override def prettyName: String = "sq8_dequant"
 }
 
 /** `sq8_norm(codes, mins, steps)` → double reconstruction norm. */
-case class Sq8Norm(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+case class Sq8Norm(child: Expression, model: Sq8Model)
+    extends UnaryExpression {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = first.nullable
+  override def nullable: Boolean = child.nullable
 
   override def checkInputDataTypes(): TypeCheckResult =
-    first.dataType match {
-      case BinaryType => Sq8ExprCheck.scales(prettyName, second, third)
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires binary codes, got ${dt.simpleString}")
-    }
+    Sq8CodesCheck(prettyName, child.dataType)
 
-  @transient private lazy val model: Sq8Model =
-    Sq8ExprCheck.buildModel(prettyName, second, third)
-
-  override protected def nullSafeEval(c: Any, m: Any, s: Any): Any =
+  override protected def nullSafeEval(c: Any): Any =
     Sq8Impl.norm(c.asInstanceOf[Array[Byte]], model)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("sq8model", model, "graft.functions.Sq8Model")
-    defineCodeGen(ctx, ev, (c, _, _) =>
-      s"graft.functions.Sq8Impl.norm($c, $ref)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.Sq8Impl.norm($c, $ref)")
   }
 
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 
   override def prettyName: String = "sq8_norm"
 }
 
 /** `sq8_dot(q, codes, mins, steps)` → double asymmetric dot against the
   * float reconstruction, dequant fused away. */
-case class Sq8Dot(first: Expression, second: Expression,
-    third: Expression, fourth: Expression) extends QuaternaryExpression {
+case class Sq8Dot(left: Expression, right: Expression, model: Sq8Model)
+    extends BinaryExpression {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = first.nullable || second.nullable
+  override def nullable: Boolean = left.nullable || right.nullable
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType) match {
+    (left.dataType, right.dataType) match {
       case (ArrayType(FloatType, _), BinaryType) =>
-        Sq8ExprCheck.scales(prettyName, third, fourth)
+        TypeCheckResult.TypeCheckSuccess
       case (q, c) => TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires (array<float>, binary), got " +
           s"(${q.simpleString}, ${c.simpleString})")
     }
 
-  @transient private lazy val model: Sq8Model =
-    Sq8ExprCheck.buildModel(prettyName, third, fourth)
-
-  override protected def nullSafeEval(q: Any, c: Any, m: Any, s: Any): Any =
+  override protected def nullSafeEval(q: Any, c: Any): Any =
     Sq8Impl.dot(q.asInstanceOf[ArrayData], c.asInstanceOf[Array[Byte]], model)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("sq8model", model, "graft.functions.Sq8Model")
-    defineCodeGen(ctx, ev, (q, c, _, _) =>
+    defineCodeGen(ctx, ev, (q, c) =>
       s"graft.functions.Sq8Impl.dot($q, $c, $ref)")
   }
 
   override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): Expression =
-    copy(first = f, second = s, third = t, fourth = q)
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "sq8_dot"
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.functions._
 
 /** Vector math over `array<float>` embedding columns, through the
   * native GraftExtensions kernels (`dot_f`, `norm_f`,
-  * `nearest_centroid`, `hyperplane_bucket`) so the whole computation
+  * `nearest_centroid`, `ivf_probe`, `mat_vec_f`, `hyperplane_bucket`) so the whole computation
   * stays inside Catalyst codegen — no UDF, no serialization boundary,
   * safe to broadcast.
   *
@@ -35,14 +35,24 @@ object VectorFunctions {
     when(normA === 0.0 || normB === 0.0, lit(0.0))
       .otherwise(dotCol / (normA * normB))
 
-  /** 1-based index of the max-cosine centroid row (ties → lowest index)
-    * for a driver-materialised centroid matrix. A pure projection — the
-    * matrix ships as a foldable literal so bucket assignment never
-    * shuffles the corpus. */
-  def nearestCentroid(vec: Column, matrix: Seq[Seq[Float]]): Column = {
-    require(matrix.nonEmpty, "nearestCentroid: empty centroid matrix")
-    call_function("nearest_centroid", vec, typedlit(matrix))
-  }
+  /** The id of the max-cosine centroid (ties → lowest id), typed as
+    * the set's ids. A pure projection: the [[CentroidSet]] is collected
+    * once on the driver and held by reference in the expression (the
+    * plan prints `nearest_centroid(vec, centroids[k x dim])`), so
+    * bucket assignment never shuffles the corpus and the matrix never
+    * becomes a plan literal. */
+  def nearestCentroid(vec: Column, centroids: CentroidSet): Column =
+    GraftColumn(NearestCentroid(GraftColumn.expr(vec), centroids))
+
+  /** Each query's top-`nprobe` centroids as
+    * array<struct<centroid_id, dot>> (see [[CentroidImpl.probe]]). */
+  def ivfProbe(vec: Column, centroids: CentroidSet, nprobe: Int): Column =
+    GraftColumn(IvfProbe(GraftColumn.expr(vec), centroids, nprobe))
+
+  /** matrix · vec as array<float> (`asFloat`) or array<double> (see
+    * [[MatVecF]]). */
+  def matVec(vec: Column, matrix: FloatMatrix, asFloat: Boolean): Column =
+    GraftColumn(MatVecF(GraftColumn.expr(vec), matrix, asFloat))
 
   /** HOF form of [[nearestCentroid]] — the reference AnnSpec pins the
     * native kernel to value-for-value. */

@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.{CentroidSet, PqEncode, PqLut, PqModel, Sq8Dequant, Sq8Dot, Sq8Encode, Sq8Model, Sq8Norm}
 import graft.functions.VectorFunctions._
 import graft.plans.GraftExtensions
 
@@ -18,9 +22,10 @@ import graft.plans.GraftExtensions
   *   scored pairs). Corpus row norms are computed once in a
   *   projection before the join, not per pair.
   * - `ivfTopK`: IVF-style pruning. A fixed set of centroid rows
-  *   partitions the corpus into buckets (one pass, broadcast centroids,
-  *   argmax-cosine assignment); queries probe only the `nprobe` nearest
-  *   buckets. At full probe (nprobe = #centroids) this is exact.
+  *   partitions the corpus into buckets (one pass, argmax-cosine
+  *   assignment against the driver-collected centroid set); queries
+  *   probe only the `nprobe` nearest buckets, picked by the `ivf_probe`
+  *   projection. At full probe (nprobe = #centroids) this is exact.
   *
   * At 100 TB the corpus never moves: both variants stream it through a
   * broadcast join; the only shuffle is the final per-query top-k, whose
@@ -52,29 +57,12 @@ object Ann {
     finishTopK(scored, "__cos", k)
   }
 
-  /** Assign every corpus row to its nearest centroid (argmax cosine,
-    * ties → lowest centroid id). The centroid set IS the IVF model — a
-    * deliberately small table — so it is materialised on the driver once
-    * (the same data movement as a broadcast join's build side) and the
-    * per-row argmax runs as a pure projection: zero exchanges, the
-    * corpus never moves.
-    *
-    * NOTE: calling this EAGERLY RUNS a Spark job (the centroid
-    * `collect()`) at DataFrame-construction time — acceptable because
-    * the model table is small by construction, but callers composing
-    * lazy pipelines should construct it once and reuse.
-    *
-    * Corpus rows with a null embedding are EXCLUDED from the index
-    * (filtered here, explicitly): a null vector has no bucket, and
-    * letting it fall through as a null centroid_id would silently drop
-    * it later in ivfTopK's bucket join. Filter nulls upstream if they
-    * should be scored some other way. */
   /** Train IVF centroids with distributed Lloyd's k-means (spherical:
     * assignment by cosine via the same zero-exchange `nearest_centroid`
     * projection queries use, means recomputed per dimension).
     *
     * Per iteration: one narrow assignment pass (NO shuffle — the
-    * centroid model ships in the plan) + one aggregation whose shuffle
+    * expression holds the centroid set) + one aggregation whose shuffle
     * carries at most k × dim × partitions partial sums (map-side
     * combine; independent of corpus size). Initialisation is a
     * deterministic content-hash sample — stable across runs and
@@ -86,15 +74,13 @@ object Ann {
       corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int = 3, seed: Long = 42L): DataFrame = {
     require(k > 0 && iters >= 0, "trainCentroids: k > 0, iters >= 0")
-    // the DataFrame-resident loop enforced the plan-literal budget
-    // through assignBuckets -> collectCentroids every iteration; the
-    // driver-resident loop ships the same matrix literal, so it keeps
-    // the same fail-fast caps (k up front, k x dim after init)
+    // the centroid set lives on the driver and reaches every task,
+    // so the loop keeps collectCentroids' fail-fast caps (k up front,
+    // k x dim after init)
     require(k <= MaxCentroidRows,
       s"trainCentroids: k=$k exceeds $MaxCentroidRows — " +
-        "ship the model as a broadcast join, not a plan literal")
+        "use the broadcast-join assignment (assignBucketsJoin)")
     val spark = corpus.sparkSession
-    import graft.functions.VectorFunctions.nearestCentroid
     val vecs = Parallelism.ensure(
       corpus.filter(col(vecCol).isNotNull)
         .select(col(idCol).as("__id"), col(vecCol).as("__v")))
@@ -119,11 +105,11 @@ object Ann {
       .map(_.getSeq[Float](1))
     require(cents.iterator.map(_.size.toLong).sum <= MaxCentroidFloats,
       s"trainCentroids: centroid matrix exceeds $MaxCentroidFloats " +
-        "floats — use a broadcast-join assignment instead")
+        "floats — use the broadcast-join assignment (assignBucketsJoin)")
     for (_ <- 1 to iters) {
       // same assignment expression as assignBuckets over the same
       // matrix (row index = centroid id), so buckets are identical
-      val cid = (nearestCentroid(col("__v"), cents.toSeq.map(_.toSeq))
+      val cid = (nearestCentroid(col("__v"), CentroidSet.indexed(cents.toSeq))
         .cast("int") - 1).as("centroid_id")
       // per-dimension mean, arithmetic unchanged from the DataFrame
       // form: double sums / long count, divided as doubles, cast to
@@ -148,33 +134,53 @@ object Ann {
       .toDF("centroid_id", vecCol)
   }
 
+  /** Assign every corpus row to its nearest centroid (argmax cosine,
+    * ties → lowest centroid id). The centroid set IS the IVF model — a
+    * deliberately small table — so it is collected on the driver once
+    * ([[collectCentroids]]) into a [[CentroidSet]] that the
+    * `nearest_centroid` expression holds by reference: the per-row
+    * argmax runs as a pure projection (zero exchanges, the corpus never
+    * moves), the plan prints only `centroids[k x dim]`, and every task
+    * receives the set as a codegen reference object (the same data
+    * movement as a broadcast join's build side).
+    *
+    * NOTE: calling this EAGERLY RUNS a Spark job (the centroid
+    * `collect()`) at DataFrame-construction time — acceptable because
+    * the model table is small by construction, but callers composing
+    * lazy pipelines should construct it once and reuse.
+    *
+    * Corpus rows with a null embedding are EXCLUDED from the index
+    * (filtered here, explicitly): a null vector has no bucket, and
+    * letting it fall through as a null centroid_id would silently drop
+    * it later in ivfTopK's bucket join. Filter nulls upstream if they
+    * should be scored some other way. */
   def assignBuckets(
       corpus: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String): DataFrame = {
-    val (ids, matrix) = collectCentroids(centroids, idCol, vecCol)
-    corpus.filter(col(vecCol).isNotNull)
-      .withColumn("centroid_id",
-        element_at(ids,
-          nearestCentroid(col(vecCol), matrix).cast("int")))
-  }
+      idCol: String, vecCol: String): DataFrame =
+    bucketed(corpus, collectCentroids(centroids, idCol, vecCol), vecCol)
 
-  /** Driver-side model size cap: beyond this the foldable-literal
-    * shipping strategy bloats plan serialization/analysis — at that
-    * scale use a broadcast-join bucket assignment instead. sqrt(N)
-    * centroids for a 10^9-vector index (~31k rows of 768 floats ≈ 95 MB
-    * of literal) stays within; a 10^5 x 768 matrix does not. Sized by
-    * the shared [[DriverBudget]] model (~8 B per literal float through
-    * analysis; the row cap reuses the training-sample row budget). */
+  /** [[assignBuckets]] against an already-collected set. */
+  private def bucketed(corpus: DataFrame, centroids: CentroidSet,
+      vecCol: String): DataFrame =
+    corpus.filter(col(vecCol).isNotNull)
+      .withColumn("centroid_id", nearestCentroid(col(vecCol), centroids))
+
+  /** Driver-side model size cap: every task receives the whole set, so
+    * beyond this a broadcast-join bucket assignment
+    * ([[assignBucketsJoin]]) is the right shape. sqrt(N) centroids for
+    * a 10^9-vector index (~31k rows of 768 floats ≈ 95 MB) stays
+    * within; a 10^5 x 768 matrix does not. Sized by the shared
+    * [[DriverBudget]] model (the row cap reuses the training-sample
+    * row budget). */
   private val MaxCentroidRows = DriverBudget.TrainRows
   private val MaxCentroidFloats = DriverBudget.LiteralFloats
 
-  /** Centroid model, driver-side: (id lookup literal, matrix) ordered by
-    * ascending centroid id so argmax tie-breaking (lowest matrix index)
-    * means lowest centroid id. Null ids/vectors are rejected, not
-    * NPE'd. */
-  private def collectCentroids(
-      centroids: DataFrame, idCol: String,
-      vecCol: String): (Column, Seq[Seq[Float]]) = {
+  /** The centroid table collected into a [[CentroidSet]], ordered by
+    * ascending centroid id so argmax tie-breaking (lowest index) means
+    * lowest centroid id. Ids may be int, bigint or string. Null
+    * ids/vectors are rejected, not NPE'd. One bounded collect job. */
+  private[graft] def collectCentroids(
+      centroids: DataFrame, idCol: String, vecCol: String): CentroidSet = {
     val rows = centroids.select(col(idCol), col(vecCol))
       .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
       .orderBy(col(idCol)).collect()
@@ -182,23 +188,26 @@ object Ann {
       "assignBuckets: empty centroid set (after dropping null id/vec rows)")
     require(rows.length <= MaxCentroidRows,
       s"assignBuckets: ${rows.length} centroids exceed $MaxCentroidRows — " +
-        "ship the model as a broadcast join, not a plan literal")
-    val matrix = rows.toSeq.map(_.getSeq[Float](1).toSeq)
-    val floats = matrix.iterator.map(_.size.toLong).sum
+        "use the broadcast-join assignment (assignBucketsJoin)")
+    val matrix = rows.map(_.getSeq[Float](1).toArray)
+    val floats = matrix.iterator.map(_.length.toLong).sum
     require(floats <= MaxCentroidFloats,
       s"assignBuckets: centroid matrix of $floats floats exceeds " +
-        s"$MaxCentroidFloats — use a broadcast-join assignment instead")
-    val ids: Column = rows.head.get(0) match {
-      case _: java.lang.Long =>
-        typedLit(rows.toSeq.map(_.getLong(0)))
-      case _: java.lang.Integer =>
-        typedLit(rows.toSeq.map(_.getInt(0)))
-      case _: String =>
-        typedLit(rows.toSeq.map(_.getString(0)))
+        s"$MaxCentroidFloats — use the broadcast-join assignment " +
+        "(assignBucketsJoin)")
+    val ids = rows.map(_.get(0))
+    val idType = ids.head match {
+      case _: java.lang.Long => LongType
+      case _: java.lang.Integer => IntegerType
+      case _: String => StringType
       case other => throw new IllegalArgumentException(
         s"assignBuckets: unsupported centroid id type ${other.getClass}")
     }
-    (ids, matrix)
+    val internal: Array[Any] =
+      if (idType == StringType)
+        ids.map(id => UTF8String.fromString(id.asInstanceOf[String]))
+      else ids
+    new CentroidSet(new GenericArrayData(internal), idType, matrix)
   }
 
   /** Bucket assignment via BROADCAST JOIN — the path for centroid sets
@@ -247,14 +256,15 @@ object Ann {
       corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       excludeSelf: Boolean = true): DataFrame = {
-    val bucketed = assignBuckets(
+    val cents = collectCentroids(centroids, idCol, vecCol)
+    val buckets = bucketed(
         Parallelism.ensure(corpus.select(col(idCol), col(vecCol))),
-        centroids, idCol, vecCol)
+        cents, vecCol)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
         norm(col(vecCol)).as("__cn"), col("centroid_id"))
     // which buckets each query probes
-    val probes = assignProbes(queries, centroids, idCol, vecCol, nprobe)
-    val scored = bucketed
+    val probes = assignProbes(queryRows(queries, idCol, vecCol), cents, nprobe)
+    val scored = buckets
       .join(broadcast(probes), Seq("centroid_id"))
       .filter(if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
       .select(col("query_id"), col("neighbor_id"),
@@ -405,17 +415,44 @@ object Ann {
       corpus: DataFrame, centroids: DataFrame,
       codebooks: Seq[Seq[Seq[Float]]],
       idCol: String, vecCol: String): DataFrame = {
-    import graft.functions.VectorFunctions.norm
     GraftExtensions.require(corpus.sparkSession)
+    encodePq(corpus, centroids, collectCentroids(centroids, idCol, vecCol),
+      PqModel(codebooks), idCol, vecCol, residual = false)
+  }
+
+  /** `pq_encode` / `pq_lut` over a held [[PqModel]] (the plan prints
+    * `pq[m x ksub x dsub]`, never the codebook floats). */
+  private def pqEncode(vec: Column, pq: PqModel): Column =
+    GraftColumn(PqEncode(GraftColumn.expr(vec), pq))
+  private def pqLut(vec: Column, pq: PqModel): Column =
+    GraftColumn(PqLut(GraftColumn.expr(vec), pq))
+
+  /** The encode projection behind [[buildPqIndex]] and
+    * [[buildPqIndexResidual]], under models already built: bucket by
+    * the held centroid set, then quantize the vector (plain) or
+    * vec − centroid (residual, the centroid vectors joining in
+    * broadcast from `centroids`). */
+  private def encodePq(
+      corpus: DataFrame, centroids: DataFrame, cents: CentroidSet,
+      pq: PqModel, idCol: String, vecCol: String,
+      residual: Boolean): DataFrame = {
     // encode is the expensive projection (m·ksub·dsub FLOPs per row —
     // 16k at 16×256×4): guard against a single-split scan serialising
     // it onto one core (measured 6× on a one-file 100k corpus)
-    assignBuckets(Parallelism.ensure(corpus.select(col(idCol), col(vecCol))),
-        centroids, idCol, vecCol)
-      .select(col(idCol), col("centroid_id"),
-        call_function("pq_encode", col(vecCol), typedlit(codebooks))
-          .as("codes"),
-        norm(col(vecCol)).as("vec_norm"))
+    val b = bucketed(
+      Parallelism.ensure(corpus.select(col(idCol), col(vecCol))),
+      cents, vecCol)
+    val encoded =
+      if (!residual) pqEncode(col(vecCol), pq)
+      else pqEncode(
+        call_function("vec_sub_f", col(vecCol), col("__cent")), pq)
+    val withCents =
+      if (!residual) b
+      else b.join(broadcast(centroids.select(
+        col(idCol).as("centroid_id"), col(vecCol).as("__cent"))),
+        Seq("centroid_id"))
+    withCents.select(col(idCol), col("centroid_id"), encoded.as("codes"),
+      norm(col(vecCol)).as("vec_norm"))
   }
 
   /** IVF-PQ search: queries probe their `nprobe` nearest buckets and
@@ -426,24 +463,44 @@ object Ann {
     * to the raw vectors — candidates only, never the corpus); at full
     * probe with a wide enough refine the result is byte-identical to
     * [[bruteForceTopK]]. refine=0 returns pure-ADC ranks with the
-    * approximate cosine in `cosine`.
+    * approximate cosine in `cosine`. The centroid table is collected
+    * once for both the encode and the search.
     */
   def ivfPqTopK(
       corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       codebooks: Seq[Seq[Seq[Float]]],
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       refine: Int = 0, excludeSelf: Boolean = true): DataFrame =
-    searchPqIndex(
-      buildPqIndex(corpus, centroids, codebooks, idCol, vecCol),
-      corpus, queries, centroids, codebooks, idCol, vecCol, k, nprobe,
-      refine, excludeSelf)
+    pqEndToEnd(corpus, queries, centroids, codebooks, idCol, vecCol, k,
+      nprobe, refine, excludeSelf, residual = false)
+
+  /** Encode + search under ONE collected centroid set and one
+    * [[PqModel]] — [[ivfPqTopK]] and [[ivfPqResidualTopK]]. */
+  private def pqEndToEnd(
+      corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
+      codebooks: Seq[Seq[Seq[Float]]], idCol: String, vecCol: String,
+      k: Int, nprobe: Int, refine: Int, excludeSelf: Boolean,
+      residual: Boolean): DataFrame = {
+    GraftExtensions.require(corpus.sparkSession)
+    val cents = collectCentroids(centroids, idCol, vecCol)
+    val pq = PqModel(codebooks)
+    searchPq(
+      encodePq(corpus, centroids, cents, pq, idCol, vecCol, residual),
+      corpus, queries, cents, pq, idCol, vecCol, k, nprobe, refine,
+      excludeSelf, None, residual)
+  }
 
   /** Search a PREBUILT PQ index (the [[buildPqIndex]] output, typically
     * persisted as parquet) — the production shape: the corpus is
     * encoded once and every query batch pays only probe + ADC + rerank,
     * never re-encoding (measured 4.7 s e2e → 2.2 s per 50-query batch
     * against a persisted 100k index in r8; SURVEY.md). `corpus` supplies raw
-    * vectors for the exact rerank and is untouched when `refine` = 0. */
+    * vectors for the exact rerank and is untouched when `refine` = 0.
+    *
+    * NOTE: building the DataFrame EAGERLY collects the (bounded)
+    * centroid table, one small job — probing is a projection over the
+    * query rows against the collected set. A loaded index
+    * ([[searchOpqIndex]]) collected it once at load instead. */
   def searchPqIndex(
       pqIndex: DataFrame, corpus: DataFrame, queries: DataFrame,
       centroids: DataFrame, codebooks: Seq[Seq[Seq[Float]]],
@@ -451,19 +508,35 @@ object Ann {
       refine: Int = 0, excludeSelf: Boolean = true,
       rerankRotation: Option[Pca.Model] = None): DataFrame = {
     GraftExtensions.require(pqIndex.sparkSession)
+    searchPq(pqIndex, corpus, queries,
+      collectCentroids(centroids, idCol, vecCol), PqModel(codebooks),
+      idCol, vecCol, k, nprobe, refine, excludeSelf, rerankRotation,
+      residual = false)
+  }
+
+  /** The PQ search spine under held models, plain or residual. Plain
+    * ADC scores ⟨q, x⟩ by the m table lookups; residual ADC scores
+    * ⟨q, c⟩ + ⟨q, r⟩, where ⟨q, c⟩ is exact — the `dot` the probe
+    * already computed for its (query, centroid) pair — and only the
+    * residual term goes through the lookups. */
+  private def searchPq(
+      pqIndex: DataFrame, corpus: DataFrame, queries: DataFrame,
+      cents: CentroidSet, pq: PqModel, idCol: String, vecCol: String,
+      k: Int, nprobe: Int, refine: Int, excludeSelf: Boolean,
+      rerankRotation: Option[Pca.Model], residual: Boolean): DataFrame = {
     val index = pqIndex.withColumnRenamed(idCol, "neighbor_id")
-    val probes = assignProbes(queries, centroids, idCol, vecCol, nprobe)
-      .withColumn("__lut",
-        call_function("pq_lut", col("__qv"), typedlit(codebooks)))
+    val q = queryRows(queries, idCol, vecCol)
+    val probes = assignProbes(q, cents, nprobe)
+      .withColumn("__lut", pqLut(col("__qv"), pq))
+    val adc = call_function("pq_adc", col("codes"), col("__lut"))
     // probeSearch scores then PRUNES to (ids, score) before the
     // bounded top-k select: the LUT (m·ksub doubles — 32 KB at
     // 16×256) and query vector exist only to compute the ADC score;
     // letting them ride into the selection would multiply its
     // payload ~1000× (32 KB vs ~30 B per candidate row), exactly the
     // column-pruning miss the plan audit exists to catch
-    probeSearch(index, corpus, probes,
-      graft.functions.VectorFunctions.cosinePrenormed(
-        call_function("pq_adc", col("codes"), col("__lut")),
+    probeSearch(index, corpus, q, probes,
+      cosinePrenormed(if (residual) col("__qc") + adc else adc,
         col("__qn"), col("vec_norm")),
       idCol, vecCol, k, refine, excludeSelf, rerankRotation)
   }
@@ -513,18 +586,9 @@ object Ann {
       corpus: DataFrame, centroids: DataFrame,
       codebooks: Seq[Seq[Seq[Float]]],
       idCol: String, vecCol: String): DataFrame = {
-    import graft.functions.VectorFunctions.norm
     GraftExtensions.require(corpus.sparkSession)
-    val cents = centroids
-      .select(col(idCol).as("centroid_id"), col(vecCol).as("__cent"))
-    assignBuckets(Parallelism.ensure(corpus.select(col(idCol), col(vecCol))),
-        centroids, idCol, vecCol)
-      .join(broadcast(cents), Seq("centroid_id"))
-      .select(col(idCol), col("centroid_id"),
-        call_function("pq_encode",
-          call_function("vec_sub_f", col(vecCol), col("__cent")),
-          typedlit(codebooks)).as("codes"),
-        norm(col(vecCol)).as("vec_norm"))
+    encodePq(corpus, centroids, collectCentroids(centroids, idCol, vecCol),
+      PqModel(codebooks), idCol, vecCol, residual = true)
   }
 
   /** Append a new batch to a prebuilt PQ index under the FROZEN
@@ -552,10 +616,10 @@ object Ann {
   }
 
   /** Search a residual PQ index: ADC scores approximate
-    * ⟨q, x⟩ = ⟨q, c⟩ + ⟨q, r⟩ — the ⟨q, c⟩ term is exact (one dot per
-    * (query, probed centroid), computed on the broadcast probe
-    * table), and only the residual term goes through the m table
-    * lookups. Same probe/prune/refine discipline as
+    * ⟨q, x⟩ = ⟨q, c⟩ + ⟨q, r⟩ — the ⟨q, c⟩ term is exact (the probe's
+    * own dot per (query, probed centroid)), and only the residual term
+    * goes through the m table lookups. Same probe/prune/refine
+    * discipline, and the same eager centroid collect, as
     * [[searchPqIndex]]; at full probe with wide refine the result is
     * byte-identical to [[bruteForceTopK]]. */
   def searchPqIndexResidual(
@@ -564,22 +628,11 @@ object Ann {
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       refine: Int = 0, excludeSelf: Boolean = true,
       rerankRotation: Option[Pca.Model] = None): DataFrame = {
-    import graft.functions.VectorFunctions._
     GraftExtensions.require(pqIndex.sparkSession)
-    val index = pqIndex.withColumnRenamed(idCol, "neighbor_id")
-    val cents = centroids
-      .select(col(idCol).as("centroid_id"), col(vecCol).as("__cent"))
-    val probes = assignProbes(queries, centroids, idCol, vecCol, nprobe)
-      .join(broadcast(cents), Seq("centroid_id"))
-      .withColumn("__qc", dot(col("__qv"), col("__cent")))
-      .withColumn("__lut",
-        call_function("pq_lut", col("__qv"), typedlit(codebooks)))
-      .drop("__cent")
-    probeSearch(index, corpus, probes,
-      cosinePrenormed(
-        col("__qc") + call_function("pq_adc", col("codes"), col("__lut")),
-        col("__qn"), col("vec_norm")),
-      idCol, vecCol, k, refine, excludeSelf, rerankRotation)
+    searchPq(pqIndex, corpus, queries,
+      collectCentroids(centroids, idCol, vecCol), PqModel(codebooks),
+      idCol, vecCol, k, nprobe, refine, excludeSelf, rerankRotation,
+      residual = true)
   }
 
   /** Residual IVF-PQ end to end: encode + search (the q165 shape). */
@@ -588,10 +641,8 @@ object Ann {
       codebooks: Seq[Seq[Seq[Float]]],
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       refine: Int = 0, excludeSelf: Boolean = true): DataFrame =
-    searchPqIndexResidual(
-      buildPqIndexResidual(corpus, centroids, codebooks, idCol, vecCol),
-      corpus, queries, centroids, codebooks, idCol, vecCol, k, nprobe,
-      refine, excludeSelf)
+    pqEndToEnd(corpus, queries, centroids, codebooks, idCol, vecCol, k,
+      nprobe, refine, excludeSelf, residual = true)
 
   // ------------------------------------------------------------------
   // Persisted index artifacts — FAISS's write_index/read_index shape:
@@ -601,13 +652,19 @@ object Ann {
   // ------------------------------------------------------------------
 
   /** A loaded index directory: the encoded corpus plus every model
-    * artifact search needs. `rotation` present means corpus AND
-    * queries must rotate through it before probe/ADC — [[
+    * artifact search needs, built once at load — the collected
+    * centroid set `cents` (its table stays as `centroids` for the
+    * residual encode join and for saves) and the [[PqModel]] `pq`.
+    * Searches and appends through this object reuse them, so no
+    * request re-reads or re-renders a model. `rotation` present means
+    * corpus AND queries must rotate through it before probe/ADC — [[
     * searchOpqIndex]] does both, so callers hand it RAW vectors. */
   case class PersistedPqIndex(
-      pqIndex: DataFrame, centroids: DataFrame,
-      codebooks: Seq[Seq[Seq[Float]]], rotation: Option[Pca.Model],
-      residual: Boolean, idCol: String, vecCol: String)
+      pqIndex: DataFrame, centroids: DataFrame, cents: CentroidSet,
+      pq: PqModel, rotation: Option[Pca.Model],
+      residual: Boolean, idCol: String, vecCol: String) {
+    def codebooks: Seq[Seq[Seq[Float]]] = pq.toSeq
+  }
 
   /** Persist a built PQ index with its full model closure: the
     * encoded corpus (`dir/index`), the IVF centroids
@@ -672,16 +729,19 @@ object Ann {
   def loadOpqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): PersistedPqIndex = {
     IndexMaintenance.healUnreadable(spark, dir, Seq("index"))
-    // meta and codebooks live in disjoint files — read both model
-    // artifacts concurrently (guide §2.6)
-    val (meta, books) = Parallelism.join2(
+    // meta, codebooks and centroids live in disjoint files — read the
+    // model artifacts concurrently (guide §2.6)
+    val (meta, (books, cents)) = Parallelism.join2(
       spark.read.parquet(s"$dir/meta")
         .select("residual", "rotated", "id_col", "vec_col").head,
-      spark.read.parquet(s"$dir/codebooks")
-        .select("sub", "code", "vec").orderBy(col("sub"), col("code"))
-        .collect()
-        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-        .map(_._2.toSeq.map(_.getSeq[Float](2).toSeq)))
+      Parallelism.join2(
+        spark.read.parquet(s"$dir/codebooks")
+          .select("sub", "code", "vec").orderBy(col("sub"), col("code"))
+          .collect()
+          .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+          .map(_._2.toSeq.map(_.getSeq[Float](2).toSeq)),
+        collectCentroids(spark.read.parquet(s"$dir/centroids"),
+          "id", "vec")))
     val (residual, rotated) = (meta.getBoolean(0), meta.getBoolean(1))
     val (idCol, vecCol) = (meta.getString(2), meta.getString(3))
     val deltas = deltaRoots(spark, dir)
@@ -696,7 +756,7 @@ object Ann {
       IndexMaintenance.dropTombstoned(encoded, spark, dir, idCol),
       spark.read.parquet(s"$dir/centroids")
         .select(col("id").as(idCol), col("vec").as(vecCol)),
-      books,
+      cents, PqModel(books),
       if (rotated) Some(Pca.load(spark, s"$dir/rotation")) else None,
       residual, idCol, vecCol)
   }
@@ -811,12 +871,8 @@ object Ann {
       case Some(r) => Pca.rotate(batch, idx.idCol, idx.vecCol, r)
       case None => batch.select(col(idx.idCol), col(idx.vecCol))
     }
-    val delta =
-      if (idx.residual) buildPqIndexResidual(
-        b, idx.centroids, idx.codebooks, idx.idCol, idx.vecCol)
-      else buildPqIndex(b, idx.centroids, idx.codebooks, idx.idCol, idx.vecCol)
-    delta.select(col(idx.idCol), col("centroid_id"), col("codes"),
-      col("vec_norm"))
+    encodePq(b, idx.centroids, idx.cents, idx.pq, idx.idCol, idx.vecCol,
+      idx.residual)
   }
 
   /** Streaming-ingest delta roots under `dir/index_delta` — one
@@ -837,9 +893,10 @@ object Ann {
       .map(_.getPath.toString).sorted
   }
 
-  /** Search a loaded index against RAW corpus/query vectors: when the
-    * index was built over a rotated space, the QUERIES rotate through
-    * the stored model up front (a batch-sized projection), while the
+  /** Search a loaded index against RAW corpus/query vectors, under the
+    * models the load built (no collect while the DataFrame is built):
+    * when the index was built over a rotated space, the QUERIES rotate
+    * through the stored model up front (a batch-sized projection), while the
     * corpus stays raw — its rotation happens inside the exact-rerank
     * AFTER the candidate join, so only the ~k·refine·|queries|
     * surviving rows pay the dim×dim projection instead of the whole
@@ -852,15 +909,10 @@ object Ann {
       case Some(r) => Pca.rotate(queries, idx.idCol, idx.vecCol, r)
       case None => queries.select(col(idx.idCol), col(idx.vecCol))
     }
-    val rawCorpus = corpus.select(col(idx.idCol), col(idx.vecCol))
-    if (idx.residual)
-      searchPqIndexResidual(idx.pqIndex, rawCorpus, rotQ,
-        idx.centroids, idx.codebooks, idx.idCol, idx.vecCol, k, nprobe,
-        refine, excludeSelf, rerankRotation = idx.rotation)
-    else
-      searchPqIndex(idx.pqIndex, rawCorpus, rotQ,
-        idx.centroids, idx.codebooks, idx.idCol, idx.vecCol, k, nprobe,
-        refine, excludeSelf, rerankRotation = idx.rotation)
+    GraftExtensions.require(idx.pqIndex.sparkSession)
+    searchPq(idx.pqIndex, corpus.select(col(idx.idCol), col(idx.vecCol)),
+      rotQ, idx.cents, idx.pq, idx.idCol, idx.vecCol, k, nprobe, refine,
+      excludeSelf, idx.rotation, idx.residual)
   }
 
   // ------------------------------------------------------------------
@@ -877,8 +929,9 @@ object Ann {
     * (max_i − min_i)/255). ONE scan — posexplode + hash aggregate,
     * whose partial aggregation reduces the exchange to partitions × dim
     * rows (corpus rows never move). The model is dim-sized and lives
-    * on the driver (same budget class as an IVF centroid table); it
-    * ships into encode/dequant projections as plan literals. Constant
+    * on the driver (same budget class as an IVF centroid table); the
+    * encode/score projections hold it by reference as an [[Sq8Model]]
+    * built once per index or search. Constant
     * dimensions get step 0 and encode to code 0 (dequant returns the
     * constant). */
   def trainSq8(corpus: DataFrame, vecCol: String)
@@ -903,33 +956,29 @@ object Ann {
     * memory): code_i = round((x_i − min_i)/step_i) clamped to [0,255].
     * A pure codegen'd projection (native `sq8_encode` kernel — the
     * per-row encode hot path, where Spark's `transform` HOF is
-    * interpreted); the model rides as foldable literals, no join, no
-    * shuffle. */
-  def sq8EncodeCol(vec: Column, mins: Seq[Double], steps: Seq[Double])
-      : Column =
-    call_function("sq8_encode", vec, typedLit(mins), typedLit(steps))
+    * interpreted); the scales are an [[Sq8Model]] held by reference
+    * (the plan prints `sq8[dim]`), no join, no shuffle. */
+  def sq8EncodeCol(vec: Column, sq8: Sq8Model): Column =
+    GraftColumn(Sq8Encode(GraftColumn.expr(vec), sq8))
 
   /** Dequantize SQ8 codes back to array<float>: min_i + code_i·step_i
     * (native kernel). The scoring paths never materialise this — they
     * use the fused [[sq8DotCol]]/[[sq8NormCol]] — but tests and
     * downstream consumers reconstruct through it. */
-  def sq8DequantCol(codes: Column, mins: Seq[Double], steps: Seq[Double])
-      : Column =
-    call_function("sq8_dequant", codes, typedLit(mins), typedLit(steps))
+  def sq8DequantCol(codes: Column, sq8: Sq8Model): Column =
+    GraftColumn(Sq8Dequant(GraftColumn.expr(codes), sq8))
 
   /** Σ qᵢ·reconstructionᵢ with the dequant FUSED into the loop —
     * bit-identical to `dot(q, sq8DequantCol(codes))` (each dimension
     * reconstructs to float first; Sq8ExprSpec pins the equality), one
     * pass over the bytes, no intermediate array per pair. */
-  def sq8DotCol(q: Column, codes: Column,
-      mins: Seq[Double], steps: Seq[Double]): Column =
-    call_function("sq8_dot", q, codes, typedLit(mins), typedLit(steps))
+  def sq8DotCol(q: Column, codes: Column, sq8: Sq8Model): Column =
+    GraftColumn(Sq8Dot(GraftColumn.expr(q), GraftColumn.expr(codes), sq8))
 
   /** ‖reconstruction‖₂ straight off the codes (fused like
     * [[sq8DotCol]]). */
-  def sq8NormCol(codes: Column,
-      mins: Seq[Double], steps: Seq[Double]): Column =
-    call_function("sq8_norm", codes, typedLit(mins), typedLit(steps))
+  def sq8NormCol(codes: Column, sq8: Sq8Model): Column =
+    GraftColumn(Sq8Norm(GraftColumn.expr(codes), sq8))
 
   /** Brute-force SQ8 top-k: approximate-score every (query, code) pair
     * on the dequantized reconstruction, keep the top k·refine
@@ -947,11 +996,12 @@ object Ann {
     require(k > 0 && refine >= 1, "sq8TopK: k > 0, refine >= 1")
     GraftExtensions.require(corpus.sparkSession)
     val (mins, steps) = trainSq8(corpus, vecCol)
+    val sq8 = Sq8Model(mins, steps)
     val deq = Parallelism.ensure(
       corpus.filter(col(vecCol).isNotNull)
         .select(col(idCol).as("neighbor_id"),
-          sq8EncodeCol(col(vecCol), mins, steps).as("__codes")))
-      .withColumn("__dn", sq8NormCol(col("__codes"), mins, steps))
+          sq8EncodeCol(col(vecCol), sq8).as("__codes")))
+      .withColumn("__dn", sq8NormCol(col("__codes"), sq8))
     val q = broadcast(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("__qv"), norm(col(vecCol)).as("__qn")))
     val cond =
@@ -959,7 +1009,7 @@ object Ann {
     val scored = deq.join(q, cond)
       .select(col("query_id"), col("neighbor_id"),
         cosinePrenormed(
-          sq8DotCol(col("__qv"), col("__codes"), mins, steps),
+          sq8DotCol(col("__qv"), col("__codes"), sq8),
           col("__qn"), col("__dn")).as("__approx"))
     selectAndRerank(scored,
       q.select(col("query_id"), col("__qv"), col("__qn")),
@@ -984,43 +1034,58 @@ object Ann {
     // so both models train CONCURRENTLY (guide §2.6) instead of the
     // scales pass serialising behind the k-means here
     val (mins, steps) = scales.getOrElse(trainSq8(corpus, vecCol))
-    val deq = assignBuckets(
+    val sq8 = Sq8Model(mins, steps)
+    val cents = collectCentroids(centroids, idCol, vecCol)
+    val deq = encodeSq8(
         Parallelism.ensure(corpus.select(col(idCol), col(vecCol))),
-        centroids, idCol, vecCol)
+        cents, sq8, idCol, vecCol)
       .select(col(idCol).as("neighbor_id"), col("centroid_id"),
-        sq8EncodeCol(col(vecCol), mins, steps).as("__codes"))
-      .withColumn("__dn", sq8NormCol(col("__codes"), mins, steps))
-    val probes = assignProbes(queries, centroids, idCol, vecCol, nprobe)
-    probeSearch(deq, corpus, probes,
-      cosinePrenormed(
-        sq8DotCol(col("__qv"), col("__codes"), mins, steps),
+        col("codes"), sq8NormCol(col("codes"), sq8).as("__dn"))
+    val q = queryRows(queries, idCol, vecCol)
+    probeSearch(deq, corpus, q, assignProbes(q, cents, nprobe),
+      cosinePrenormed(sq8DotCol(col("__qv"), col("codes"), sq8),
         col("__qn"), col("__dn")),
       idCol, vecCol, k, refine, excludeSelf, None)
   }
 
   /** A [[saveSq8Index]] directory restored: `codes` is a LAZY parquet
     * scan (base ∪ committed delta roots, id-deduped, tombstones
-    * dropped — the [[loadOpqIndex]] discipline); scales and centroids
-    * are the bounded model artifacts. */
+    * dropped — the [[loadOpqIndex]] discipline); the scales (`sq8`)
+    * and the collected centroid set (`cents`) are the bounded model
+    * artifacts, built once at load and reused by every search and
+    * append through this object. */
   final case class PersistedSq8Index(
-      codes: DataFrame, centroids: DataFrame,
-      mins: Seq[Double], steps: Seq[Double],
-      idCol: String, vecCol: String)
+      codes: DataFrame, centroids: DataFrame, cents: CentroidSet,
+      sq8: Sq8Model, idCol: String, vecCol: String) {
+    def mins: Seq[Double] = sq8.mins.toSeq
+    def steps: Seq[Double] = sq8.steps.toSeq
+  }
 
   /** Encode the corpus into (id, centroid_id, codes) SQ8 index rows
     * under frozen scales + centroids — the shared projection behind
-    * [[saveSq8Index]] and [[appendSq8Index]]. Pure projection over a
-    * broadcast-centroid assignment: no shuffle. */
+    * [[saveSq8Index]] and [[appendSq8Index]]. Pure projection over the
+    * collected centroid set: no shuffle. */
   def buildSq8Index(corpus: DataFrame, centroids: DataFrame,
       mins: Seq[Double], steps: Seq[Double],
       idCol: String, vecCol: String): DataFrame = {
     GraftExtensions.require(corpus.sparkSession)
-    assignBuckets(
-        corpus.filter(col(vecCol).isNotNull).select(col(idCol), col(vecCol)),
-        centroids, idCol, vecCol)
-      .select(col(idCol), col("centroid_id"),
-        sq8EncodeCol(col(vecCol), mins, steps).as("codes"))
+    encodeSq8(corpus, collectCentroids(centroids, idCol, vecCol),
+      Sq8Model(mins, steps), idCol, vecCol)
   }
+
+  /** [[buildSq8Index]] under models already built. */
+  private def encodeSq8(corpus: DataFrame, cents: CentroidSet,
+      sq8: Sq8Model, idCol: String, vecCol: String): DataFrame =
+    bucketed(corpus.select(col(idCol), col(vecCol)), cents, vecCol)
+      .select(col(idCol), col("centroid_id"),
+        sq8EncodeCol(col(vecCol), sq8).as("codes"))
+
+  /** Encode a RAW batch into a persisted SQ8 index's rows under its
+    * frozen models — [[appendSq8Index]] and the streaming ingest
+    * ([[graft.streaming.StreamAnn.sq8IngestWriter]]). */
+  private[graft] def encodeForIndex(idx: PersistedSq8Index,
+      batch: DataFrame): DataFrame =
+    encodeSq8(batch, idx.cents, idx.sq8, idx.idCol, idx.vecCol)
 
   /** Persist an SQ8 index directory: the encoded corpus (`index`, the
     * only corpus-sized piece — keeps its partitioning), IVF centroids,
@@ -1056,12 +1121,16 @@ object Ann {
   def loadSq8Index(spark: org.apache.spark.sql.SparkSession,
       dir: String): PersistedSq8Index = {
     IndexMaintenance.healUnreadable(spark, dir, Seq("index"))
-    // meta and scales are disjoint model files — read concurrently
-    val (meta, scales) = Parallelism.join2(
+    // meta, scales and centroids are disjoint model files — read
+    // concurrently
+    val (meta, (scales, cents)) = Parallelism.join2(
       spark.read.parquet(s"$dir/meta")
         .select("id_col", "vec_col").head,
-      spark.read.parquet(s"$dir/scales")
-        .select("i", "min", "step").collect().sortBy(_.getInt(0)))
+      Parallelism.join2(
+        spark.read.parquet(s"$dir/scales")
+          .select("i", "min", "step").collect().sortBy(_.getInt(0)),
+        collectCentroids(spark.read.parquet(s"$dir/centroids"),
+          "id", "vec")))
     val (idCol, vecCol) = (meta.getString(0), meta.getString(1))
     val deltas = deltaRoots(spark, dir)
     val codes = {
@@ -1075,7 +1144,8 @@ object Ann {
       IndexMaintenance.dropTombstoned(codes, spark, dir, idCol),
       spark.read.parquet(s"$dir/centroids")
         .select(col("id").as(idCol), col("vec").as(vecCol)),
-      scales.map(_.getDouble(1)).toSeq, scales.map(_.getDouble(2)).toSeq,
+      cents,
+      new Sq8Model(scales.map(_.getDouble(1)), scales.map(_.getDouble(2))),
       idCol, vecCol)
   }
 
@@ -1092,13 +1162,10 @@ object Ann {
     GraftExtensions.require(idx.codes.sparkSession)
     val deq = idx.codes
       .select(col(idx.idCol).as("neighbor_id"), col("centroid_id"),
-        col("codes"))
-      .withColumn("__dn", sq8NormCol(col("codes"), idx.mins, idx.steps))
-    val probes = assignProbes(queries, idx.centroids, idx.idCol,
-      idx.vecCol, nprobe)
-    probeSearch(deq, corpus, probes,
-      cosinePrenormed(
-        sq8DotCol(col("__qv"), col("codes"), idx.mins, idx.steps),
+        col("codes"), sq8NormCol(col("codes"), idx.sq8).as("__dn"))
+    val q = queryRows(queries, idx.idCol, idx.vecCol)
+    probeSearch(deq, corpus, q, assignProbes(q, idx.cents, nprobe),
+      cosinePrenormed(sq8DotCol(col("__qv"), col("codes"), idx.sq8),
         col("__qn"), col("__dn")),
       idx.idCol, idx.vecCol, k, refine, excludeSelf, None)
   }
@@ -1120,9 +1187,7 @@ object Ann {
       val fs = committed.getFileSystem(
         spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(committed))
-        buildSq8Index(batch, idx.centroids, idx.mins, idx.steps,
-          idx.idCol, idx.vecCol)
-          .write.mode("overwrite").parquet(dest)
+        encodeForIndex(idx, batch).write.mode("overwrite").parquet(dest)
     }
   }
 
@@ -1198,9 +1263,10 @@ object Ann {
     * encoded index to its probed buckets, score each candidate with
     * the rung's `score` column, then either emit the top-k directly
     * (refine <= 0 — the score IS the reported cosine) or bounded-cut
-    * k·refine candidates and exact-rerank them. */
+    * k·refine candidates and exact-rerank them against the query rows
+    * `q` ([[queryRows]]). */
   private def probeSearch(
-      index: DataFrame, corpus: DataFrame, probes: DataFrame,
+      index: DataFrame, corpus: DataFrame, q: DataFrame, probes: DataFrame,
       score: Column, idCol: String, vecCol: String, k: Int, refine: Int,
       excludeSelf: Boolean, rerankRotation: Option[Pca.Model]): DataFrame = {
     val scored = index
@@ -1209,34 +1275,27 @@ object Ann {
               else lit(true))
       .select(col("query_id"), col("neighbor_id"), score.as("__approx"))
     if (refine <= 0) finishTopK(scored, "__approx", k)
-    else selectAndRerank(scored,
-      probes.select(col("query_id"), col("__qv"), col("__qn")).distinct(),
-      corpus, idCol, vecCol, k, refine, rerankRotation)
+    else selectAndRerank(scored, q, corpus, idCol, vecCol, k, refine,
+      rerankRotation)
   }
 
-  /** Top-`nprobe` centroids per query (broadcast-size output). The
-    * query row's vector and norm ride through the same aggregate
-    * (first() within the query_id group — constant per group), so the
-    * probe table needs no second join. */
-  private def assignProbes(
-      queries: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String, nprobe: Int): DataFrame = {
-    val c = centroids.select(
-      col(idCol).as("centroid_id"), col(vecCol).as("__ev"),
-      norm(col(vecCol)).as("__en"))
-    val scored = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-        norm(col(vecCol)).as("__qn"))
-      .join(broadcast(c))
-      .withColumn("__pcos",
-        cosinePrenormed(dot(col("__qv"), col("__ev")), col("__qn"), col("__en")))
-    scored.groupBy(col("query_id"))
-      .agg(call_function("topk_any",
-        col("__pcos"), col("centroid_id"), lit(nprobe)).as("__top"),
-        first(col("__qv")).as("__qv"), first(col("__qn")).as("__qn"))
-      .select(explode(col("__top")).as("__e"),
-        col("query_id"), col("__qv"), col("__qn"))
-      .select(col("__e.payload").as("centroid_id"), col("query_id"),
-        col("__qv"), col("__qn"))
-  }
+  /** (query_id, __qv, __qn): the query rows a search probes with and
+    * reranks against. Query ids are keys — each row probes on its own. */
+  private def queryRows(queries: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
+      norm(col(vecCol)).as("__qn"))
+
+  /** Top-`nprobe` centroids per query (broadcast-size output): one
+    * `ivf_probe` projection over the [[queryRows]] against the held
+    * [[CentroidSet]], exploded to (centroid_id, query_id, __qv, __qn,
+    * __qc) — `__qc` is the exact ⟨q, c⟩ residual ADC adds back. No
+    * centroid broadcast, cross join or aggregate; a null query vector
+    * probes nothing. */
+  private def assignProbes(q: DataFrame, cents: CentroidSet,
+      nprobe: Int): DataFrame =
+    q.select(col("query_id"), col("__qv"), col("__qn"),
+        explode(ivfProbe(col("__qv"), cents, nprobe)).as("__e"))
+      .select(col("__e.centroid_id").as("centroid_id"), col("query_id"),
+        col("__qv"), col("__qn"), col("__e.dot").as("__qc"))
 }

@@ -29,11 +29,12 @@ package graft.operators
   *    state while resolving (boxed keys/values + hash-table slack)
   *    ≈512 B → 524,288 edges. Consumer:
   *    Dedup.connectedComponents.
-  *  - [[LiteralFloats]]: a float shipped as a plan LITERAL costs ~8 B
-  *    through analysis/serialization (the literal tree, not a raw
-  *    array) → 32M floats (the k-means/PQ codebook ceiling — a
-  *    31k×768 centroid table for a 10^9-vector IVF fits). Consumer:
-  *    Ann.collectCentroids.
+  *  - [[LiteralFloats]]: the collected centroid-set ceiling, sized at
+  *    ~8 B per float (what a float cost when the set shipped as a plan
+  *    literal; the driver-held set every task receives is smaller, and
+  *    the cap stays) → 32M floats (a 31k×768 centroid table for a
+  *    10^9-vector IVF fits). Consumers: Ann.collectCentroids,
+  *    Ann.trainCentroids.
   *  - [[TrainRows]]: one collected training-sample row at ≤1024
   *    float dims ≈4 KB boxed → 65,536 rows. Consumers: Pca.train,
   *    Ann.trainPq/trainPqResidual (their `maxTrain` ceilings).

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
+
+import graft.functions.FloatMatrix
+import graft.functions.VectorFunctions.matVec
 
 /** PCA training + whitening projection for embedding columns — the
   * standard retrieval-quality preprocessing (center, rotate to the
@@ -21,10 +25,12 @@ import org.apache.spark.sql.functions._
   *   its largest-|magnitude| entry is positive — the model is
   *   bit-reproducible.
   * - APPLY is a pure projection: each whitened coordinate is
-  *   ((x·v_k) − μ·v_k) / sqrt(λ_k + ε), i.e. one codegen'd `dot_f`
-  *   against a frozen component literal, one subtract, one multiply
-  *   — no shuffle, no UDF, and the centering never materializes
-  *   x − μ (the scalar μ·v_k is precomputed).
+  *   ((x·v_k) − μ·v_k) / sqrt(λ_k + ε), i.e. the k dots of one
+  *   codegen'd `mat_vec_f` call against the model's component matrix,
+  *   one subtract, one multiply — no shuffle, no UDF, and the
+  *   centering never materializes x − μ (the scalar μ·v_k is
+  *   precomputed). The matrix is built once per model and held by
+  *   reference in the expression, never shipped as a plan literal.
   */
 object Pca {
 
@@ -32,7 +38,10 @@ object Pca {
     * whitening scale), components in descending-eigenvalue order. */
   final case class Model(
       components: Seq[Seq[Float]], offsets: Seq[Double],
-      scales: Seq[Double], eigenvalues: Seq[Double])
+      scales: Seq[Double], eigenvalues: Seq[Double]) {
+    /** The components as one matrix, built once per model. */
+    lazy val matrix: FloatMatrix = FloatMatrix(components)
+  }
 
   // training-sample ceiling from the shared DriverBudget model
   private val MaxTrainRows = DriverBudget.TrainRows
@@ -254,16 +263,21 @@ object Pca {
     * no whitening scale, so with k = dim (orthonormal full basis)
     * dot products, norms and cosines are preserved EXACTLY and the
     * rotated corpus is a drop-in input for the PQ/ANN stack. A pure
-    * projection: one codegen'd dot_f per coordinate. */
+    * projection: one `mat_vec_f` call per row, each coordinate
+    * bit-identical to `dot_f(x, v_j).cast("float")`. A null vector
+    * rotates to null. */
   def rotateCol(vec: Column, model: Model): Column =
-    array(model.components.map(c =>
-      call_function("dot_f", vec, typedlit(c)).cast("float")): _*)
+    matVec(vec, model.matrix, asFloat = true)
 
-  /** (id, rotated vector) under a trained model — see [[rotateCol]]. */
+  /** (id, rotated vector) under a trained model — see [[rotateCol]].
+    * Null vectors are filtered first, so the rotated column is declared
+    * non-null: what is derived from it (PQ codes, norms) stays a
+    * required parquet column. */
   def rotate(df: DataFrame, idCol: String, vecCol: String,
       model: Model): DataFrame =
     df.filter(col(vecCol).isNotNull)
-      .select(col(idCol), rotateCol(col(vecCol), model).as(vecCol))
+      .select(col(idCol), GraftColumn(KnownNotNull(GraftColumn.expr(
+        rotateCol(col(vecCol), model)))).as(vecCol))
 
   /** Parametric-OPQ dimension allocation (Ge et al. 2013 §4, the
     * Gaussian-optimal closed form): order the rotated dimensions into
@@ -316,22 +330,19 @@ object Pca {
       model: Model, m: Int): DataFrame =
     rotate(df, idCol, vecCol, opqModel(model, m))
 
-  /** One whitened coordinate: ((x·v_k) − offset_k) · scale_k. */
-  def whitenCol(vec: Column, component: Seq[Float], offset: Double,
-      scale: Double): Column =
-    (call_function("dot_f", vec, typedlit(component)) - lit(offset)) *
-      lit(scale)
-
   /** (id, w1..wk) whitened coordinates under a trained model —
-    * pure projection, every coordinate a codegen'd dot_f. */
+    * pure projection: the k dots of one `mat_vec_f` call, then each
+    * coordinate ((x·v_k) − offset_k) · scale_k. */
   def whiten(df: DataFrame, idCol: String, vecCol: String,
       model: Model, round4: Boolean = true): DataFrame = {
     val cols = model.components.indices.map { j =>
-      val w = whitenCol(col(vecCol), model.components(j),
-        model.offsets(j), model.scales(j))
+      val w = (col("__dots")(j) - lit(model.offsets(j))) *
+        lit(model.scales(j))
       (if (round4) round(w, 4) else w).as(s"w${j + 1}")
     }
     df.filter(col(vecCol).isNotNull)
+      .select(col(idCol),
+        matVec(col(vecCol), model.matrix, asFloat = false).as("__dots"))
       .select((col(idCol) +: cols): _*)
   }
 }

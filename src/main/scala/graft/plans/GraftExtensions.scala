@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 import graft.functions._
 
@@ -55,6 +57,30 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         s"$fnName: argument ${pos + 1} must be an integer literal (got $other)")
     }
 
+  /** A model argument: a non-null literal of `depth` nested arrays of
+    * `leaf`, converted once here into the object its kernel holds by
+    * reference (the kernel then never sees the literal). */
+  private def litModel[M](fnName: String, pos: Int, e: Expression,
+      depth: Int, leaf: DataType)(build: ArrayData => M): M = {
+    def nested(dt: DataType, d: Int): Boolean = dt match {
+      case ArrayType(inner, _) if d > 0 => nested(inner, d - 1)
+      case other => d == 0 && other == leaf
+    }
+    if (!nested(e.dataType, depth))
+      throw new IllegalArgumentException(
+        s"$fnName: argument ${pos + 1} must be a " +
+          ("array<" * depth) + leaf.simpleString + (">" * depth) +
+          s" literal (got ${e.dataType.simpleString})")
+    build(litArg(fnName, pos, e).asInstanceOf[ArrayData])
+  }
+
+  private def sq8Scales(fnName: String, es: Seq[Expression], pos: Int)
+      : Sq8Model = {
+    def scales(p: Int) =
+      litModel(fnName, p, es(p), 1, DoubleType)(_.toDoubleArray())
+    new Sq8Model(scales(pos), scales(pos + 1))
+  }
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => LevenshteinThresholdRule)
     ext.injectFunction(fn("jaro_winkler",
@@ -104,16 +130,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       es => NormF(es.head),
       "norm_f(a) - L2 norm of an array<float> in double"))
     ext.injectFunction(fn("sq8_encode",
-      es => Sq8Encode(es.head, es(1), es(2)),
+      es => Sq8Encode(es.head, sq8Scales("sq8_encode", es, 1)),
       "sq8_encode(vec, mins, steps) - per-dimension affine uint8 codes as binary"))
     ext.injectFunction(fn("sq8_dequant",
-      es => Sq8Dequant(es.head, es(1), es(2)),
+      es => Sq8Dequant(es.head, sq8Scales("sq8_dequant", es, 1)),
       "sq8_dequant(codes, mins, steps) - float reconstruction of SQ8 codes"))
     ext.injectFunction(fn("sq8_dot",
-      es => Sq8Dot(es.head, es(1), es(2), es(3)),
+      es => Sq8Dot(es.head, es(1), sq8Scales("sq8_dot", es, 2)),
       "sq8_dot(q, codes, mins, steps) - dot against the SQ8 reconstruction, dequant fused"))
     ext.injectFunction(fn("sq8_norm",
-      es => Sq8Norm(es.head, es(1), es(2)),
+      es => Sq8Norm(es.head, sq8Scales("sq8_norm", es, 1)),
       "sq8_norm(codes, mins, steps) - L2 norm of the SQ8 reconstruction"))
     ext.injectFunction(fn("simhash64",
       es => SimHash64(es.head),
@@ -131,7 +157,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       es => MinHashSignature(es.head, litInt("minhash_signature", 1, es(1))),
       "minhash_signature(shingles, numHashes) - MinHash signature as array<bigint>"))
     ext.injectFunction(fn("nearest_centroid",
-      es => NearestCentroid(es.head, es(1)),
+      es => NearestCentroid(es.head, litModel("nearest_centroid", 1, es(1),
+        2, FloatType)(CentroidSet.fromLiteral)),
       "nearest_centroid(vec, matrix) - 1-based index of the max-cosine centroid row"))
     ext.injectFunction(fn("second_max",
       es => SecondMax(es.head),
@@ -153,10 +180,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       es => VectorSumF(es.head),
       "vector_sum_f(vec) - element-wise sum of array<float> as array<double>"))
     ext.injectFunction(fn("pq_encode",
-      es => PqEncode(es.head, es(1)),
+      es => PqEncode(es.head,
+        litModel("pq_encode", 1, es(1), 3, FloatType)(PqImpl.build)),
       "pq_encode(vec, codebooks) - m-byte product-quantization code"))
     ext.injectFunction(fn("pq_lut",
-      es => PqLut(es.head, es(1)),
+      es => PqLut(es.head,
+        litModel("pq_lut", 1, es(1), 3, FloatType)(PqImpl.build)),
       "pq_lut(qvec, codebooks) - flat m*ksub ADC dot-product table"))
     ext.injectFunction(fn("pq_adc",
       es => PqAdc(es.head, es(1)),

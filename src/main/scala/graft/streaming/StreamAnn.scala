@@ -85,7 +85,7 @@ object StreamAnn {
   /** [[ingestWriter]] for a persisted SQ8 directory ([[Ann
     * .saveSq8Index]]) — identical batch-id-keyed delta-root
     * discipline; each micro-batch encodes under the FROZEN scales +
-    * centroids via [[Ann.buildSq8Index]]. Same compaction rule:
+    * centroids the load built ([[Ann.encodeForIndex]]). Same compaction rule:
     * [[graft.operators.IndexMaintenance.compactSq8Index]] only while
     * the stream is stopped. */
   def sq8IngestWriter(stream: DataFrame, idx: Ann.PersistedSq8Index,
@@ -96,8 +96,7 @@ object StreamAnn {
       val fs = committed.getFileSystem(
         batch.sparkSession.sparkContext.hadoopConfiguration)
       if (!fs.exists(committed) && batch.take(1).nonEmpty)
-        Ann.buildSq8Index(batch, idx.centroids, idx.mins, idx.steps,
-          idx.idCol, idx.vecCol)
+        Ann.encodeForIndex(idx, batch)
           .write.mode("overwrite").parquet(dest)
     }
     stream.writeStream.outputMode("append").foreachBatch(exportBatch)

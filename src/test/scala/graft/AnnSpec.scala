@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
+import graft.functions.{CentroidSet, Sq8Model, VectorFunctions}
 import graft.operators.Ann
 
 class AnnSpec extends SparkSpec {
@@ -310,7 +310,7 @@ class AnnSpec extends SparkSpec {
     val matrix = e.filter($"vec_id" % 50 === 0).orderBy("vec_id")
       .select("embedding").collect().map(_.getSeq[Float](0).toSeq).toSeq
     val both = e.select(
-      VectorFunctions.nearestCentroid(col("embedding"), matrix).as("native"),
+      VectorFunctions.nearestCentroid(col("embedding"), CentroidSet.indexed(matrix)).as("native"),
       VectorFunctions.nearestCentroidHof(col("embedding"), matrix).as("hof"))
     assert(both.filter($"native" =!= $"hof").count() === 0)
   }
@@ -355,7 +355,7 @@ class AnnSpec extends SparkSpec {
     val nanVec = Seq((0L, Array(Float.NaN, 1.0f, 0.0f))).toDF("vec_id", "embedding")
     val matrix = Seq(Seq(1.0f, 0.0f, 0.0f), Seq(0.0f, 1.0f, 0.0f))
     val r = nanVec.select(
-      VectorFunctions.nearestCentroid(col("embedding"), matrix).as("native"),
+      VectorFunctions.nearestCentroid(col("embedding"), CentroidSet.indexed(matrix)).as("native"),
       VectorFunctions.nearestCentroidHof(col("embedding"), matrix).as("hof"))
       .head
     assert(r.getLong(0) === 1L && r.getLong(1) === 1L)
@@ -365,12 +365,12 @@ class AnnSpec extends SparkSpec {
     val bad = Seq((0L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding") // dim 2
     val matrix = Seq(Seq(1.0f, 0.0f, 0.0f)) // dim 3
     val e = intercept[Exception] {
-      bad.select(VectorFunctions.nearestCentroid(col("embedding"), matrix)).head
+      bad.select(VectorFunctions.nearestCentroid(col("embedding"), CentroidSet.indexed(matrix))).head
     }
     assert(e.getMessage.contains("dim") ||
       e.getCause != null && e.getCause.getMessage.contains("dim"))
     intercept[IllegalArgumentException] {
-      new graft.functions.CentroidModel(
+      CentroidSet.indexed(
         Array(Array(1.0f, 0.0f), Array(1.0f, 0.0f, 0.0f)))
     }
   }
@@ -599,11 +599,11 @@ class AnnSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val (mins, steps) = Ann.trainSq8(e, "embedding")
     assert(mins.size === steps.size && steps.forall(_ >= 0.0))
+    val sq8 = Sq8Model(mins, steps)
     val rows = e.select(col("embedding"),
-      Ann.sq8EncodeCol(col("embedding"), mins, steps).as("codes"),
+      Ann.sq8EncodeCol(col("embedding"), sq8).as("codes"),
       Ann.sq8DequantCol(
-        Ann.sq8EncodeCol(col("embedding"), mins, steps),
-        mins, steps).as("deq"))
+        Ann.sq8EncodeCol(col("embedding"), sq8), sq8).as("deq"))
       .as[(Array[Float], Array[Byte], Array[Float])].collect()
     rows.foreach { case (v, c, d) =>
       // BINARY codes: exactly one byte per dimension — the true 4x
@@ -626,20 +626,20 @@ class AnnSpec extends SparkSpec {
     // EXACT equality, not a tolerance
     val e = Tables(spark, "/root/testdata/sf0.001").embeddings
       .select(col("vec_id"), col("embedding"))
-    val (mins, steps) = Ann.trainSq8(e, "embedding")
+    val sq8 = (Sq8Model.apply _).tupled(Ann.trainSq8(e, "embedding"))
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("qv"))
     val paired = e.crossJoin(broadcast(q))
       .select(
-        Ann.sq8EncodeCol(col("embedding"), mins, steps).as("codes"),
+        Ann.sq8EncodeCol(col("embedding"), sq8).as("codes"),
         col("qv"))
     val rows = paired.select(
-      Ann.sq8DotCol(col("qv"), col("codes"), mins, steps).as("fd"),
+      Ann.sq8DotCol(col("qv"), col("codes"), sq8).as("fd"),
       graft.functions.VectorFunctions.dot(col("qv"),
-        Ann.sq8DequantCol(col("codes"), mins, steps)).as("ud"),
-      Ann.sq8NormCol(col("codes"), mins, steps).as("fn"),
+        Ann.sq8DequantCol(col("codes"), sq8)).as("ud"),
+      Ann.sq8NormCol(col("codes"), sq8).as("fn"),
       graft.functions.VectorFunctions.norm(
-        Ann.sq8DequantCol(col("codes"), mins, steps)).as("un"))
+        Ann.sq8DequantCol(col("codes"), sq8)).as("un"))
       .as[(Double, Double, Double, Double)].collect()
     rows.foreach { case (fd, ud, fn, un) =>
       assert(fd === ud, s"fused dot $fd != unfused $ud")

@@ -95,4 +95,19 @@ class GraftExtensionsSpec extends SparkSpec {
       .find(_.trim.startsWith("def ")).getOrElse("")
     assert(enclosing.trim.startsWith("def require("), enclosing)
   }
+
+  test("ANN and PCA models never ship as plan literals") {
+    // the kernels hold trained state by reference; a typed literal in
+    // these files would put a codebook, centroid set or rotation back
+    // into every plan (reflected, rendered and canonicalized per query)
+    val hits = for {
+      name <- Seq("Ann.scala", "Pca.scala")
+      path = s"src/main/scala/graft/operators/$name"
+      src = scala.io.Source.fromFile(path, "UTF-8")
+      lines = try src.getLines().toVector finally src.close()
+      (line, i) <- lines.zipWithIndex
+      if "typed[lL]it".r.findFirstIn(line).nonEmpty
+    } yield s"$path:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("; "))
+  }
 }
