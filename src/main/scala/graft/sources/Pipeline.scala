@@ -4,6 +4,8 @@ import java.time.Instant
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Parallelism
+
 /** Stage orchestration: the reference's driver loop as one callable
   * pipeline (ref: votervoice/__main__.py:33-214 — the no-flag flow runs
   * EXTRACT → TRANSFORM → MATCH saving each stage; `-e`/`-t`/`-m` run a
@@ -20,7 +22,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the stage boundary a real checkpoint — downstream failures resume
   * from the durable artifact rather than recomputing the whole lineage
   * (exactly the reference's file handoff, and the reason its `-t`/`-m`
-  * flows exist), and no stage's plan grows past its own operators.
+  * flows exist), and no stage's plan grows past its own operators. The
+  * hand-off itself adds no job: a parquet export is read back under
+  * the schema of the frame just written, which is the schema its
+  * footers hold, so Spark runs no footer-inference job; a CSV export is
+  * read back by its header, every column a string.
+  *
+  * The match stage's two exports are independent writes to disjoint
+  * folders, so they run concurrently through
+  * [[graft.operators.Parallelism.join2]]: MATCHED on the caller's
+  * thread, QUERY on a second one. Both writes always finish before the
+  * call returns. If either fails, its error propagates only after the
+  * other export has finished; if both fail, MATCHED's error wins.
   */
 object Pipeline {
 
@@ -56,9 +69,10 @@ object Pipeline {
       baseDir: String, session: String, at: Instant,
       names: Names = Names(), format: String = "parquet",
       coalesceTo: Option[Int] = None): Exports = {
-    val ePath = StageSink.save(extract(), baseDir, "EXTRACT_FILES",
+    val extracted = extract()
+    val ePath = StageSink.save(extracted, baseDir, "EXTRACT_FILES",
       names.extract, at, Seq(session), format, coalesceTo)
-    val rest = runFromExtracted(spark, read(spark, ePath, format),
+    val rest = runFromExtracted(spark, read(spark, extracted, ePath, format),
       transform, matcher, baseDir, session, at, names, format, coalesceTo)
     rest.copy(extract = Some(ePath))
   }
@@ -73,10 +87,11 @@ object Pipeline {
       baseDir: String, session: String, at: Instant,
       names: Names = Names(), format: String = "parquet",
       coalesceTo: Option[Int] = None): Exports = {
-    val tPath = StageSink.save(transform(extracted), baseDir,
-      "TRANSFORMED_FILES", names.transformed, at, Seq(session), format,
-      coalesceTo)
-    val rest = runFromTransformed(spark, read(spark, tPath, format),
+    val transformed = transform(extracted)
+    val tPath = StageSink.save(transformed, baseDir, "TRANSFORMED_FILES",
+      names.transformed, at, Seq(session), format, coalesceTo)
+    val rest = runFromTransformed(spark,
+      read(spark, transformed, tPath, format),
       matcher, baseDir, session, at, names, format, coalesceTo)
     rest.copy(transformed = Some(tPath))
   }
@@ -91,10 +106,11 @@ object Pipeline {
       names: Names = Names(), format: String = "parquet",
       coalesceTo: Option[Int] = None): Exports = {
     val (matched, query) = matcher(transformed)
-    val mPath = StageSink.save(matched, baseDir, "MATCHED_FILES",
-      names.matched, at, Seq(session), format, coalesceTo)
-    val qPath = StageSink.save(query, baseDir, "QUERY_FILES",
-      names.query, at, Seq(session), format, coalesceTo)
+    val (mPath, qPath) = Parallelism.join2(
+      StageSink.save(matched, baseDir, "MATCHED_FILES", names.matched, at,
+        Seq(session), format, coalesceTo),
+      StageSink.save(query, baseDir, "QUERY_FILES", names.query, at,
+        Seq(session), format, coalesceTo))
     Exports(matched = Some(mPath), query = Some(qPath))
   }
 
@@ -107,12 +123,13 @@ object Pipeline {
       format: String = "parquet"): DataFrame =
     StageSink.loadLatest(spark, baseDir, stage, name, format)
 
-  private def read(
-      spark: SparkSession, path: String, format: String): DataFrame = {
-    val reader = format match {
-      case "csv" => spark.read.option("header", "true")
-      case _ => spark.read
-    }
-    reader.format(format).load(path)
+  /** Reads back the export of `written` at `path`. Parquet takes the
+    * written schema instead of inferring it from the footers, which
+    * would cost a job per hand-off. */
+  private def read(spark: SparkSession, written: DataFrame, path: String,
+      format: String): DataFrame = {
+    val reader = StageSink.reader(spark, format)
+    (if (format == "parquet") reader.schema(written.schema) else reader)
+      .load(path)
   }
 }

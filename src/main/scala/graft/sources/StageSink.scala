@@ -3,7 +3,8 @@ package graft.sources
 import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 
 /** Timestamped, stage-foldered export sink + source (ref: votervoice/
   * __main__.py:12-30 save_records — EXTRACT_FILES/TRANSFORMED_FILES/
@@ -22,8 +23,11 @@ object StageSink {
   val Stages = Seq("EXTRACT_FILES", "TRANSFORMED_FILES", "MATCHED_FILES",
     "QUERY_FILES")
 
-  // reference: datetime.strftime(..., "%Y-%m-%d-%H%M%S-%f")
-  private val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd-HHmmss-SSSSSS")
+  // reference: datetime.strftime(..., "%Y-%m-%d-%H%M%S-%f"); every
+  // field is fixed-width, so each stamp is exactly StampWidth chars
+  private val StampPattern = "yyyy-MM-dd-HHmmss-SSSSSS"
+  private val StampWidth = StampPattern.length
+  private val fmt = DateTimeFormatter.ofPattern(StampPattern)
     .withZone(ZoneOffset.UTC)
 
   def stamp(at: Instant): String = fmt.format(at)
@@ -87,43 +91,63 @@ object StageSink {
       suffix.tail.forall(_.isDigit)) Some(suffix.tail.toLong) else None
   }
 
-  /** Loads the newest export matching `<name>_*` under the stage
-    * folder. Batch-keyed exports (`name_b<10-digit id>`) compare by
-    * NUMERIC batch id; timestamped exports compare lexicographically
-    * (the reference's `%Y-%m-%d-%H%M%S-%f` format sorts correctly as a
-    * string). The two kinds carry incomparable keys (a batch counter vs
-    * a wall clock), so a (stage, name) must hold only one kind — mixing
-    * them fails loudly here rather than silently returning whichever
-    * sorts last.
+  /** Loads the newest committed export matching `<name>_*` under the
+    * stage folder. Only a folder holding `_SUCCESS` is loaded: a write
+    * that failed or is still running leaves its folder without the
+    * marker, and reading it would fail or see partial data.
+    * Batch-keyed exports (`name_b<10-digit id>`) compare by NUMERIC
+    * batch id; timestamped exports compare by their fixed-width
+    * trailing stamp (the reference's `%Y-%m-%d-%H%M%S-%f` format sorts
+    * correctly as a string), so the session infix does not decide
+    * which is newest. The two kinds carry incomparable keys (a batch
+    * counter vs a wall clock), so a (stage, name) must hold only one
+    * kind — mixing them fails loudly here rather than silently
+    * returning whichever sorts last. The folder is listed through the
+    * Hadoop `FileSystem` of its path, so any base directory `save`
+    * writes to (`file:`, HDFS, …) reads back.
     *
     * Concurrency caveat: a batch-keyed replay rewrites its folder with
-    * `mode("overwrite")`, which deletes before rewriting — a reader
-    * that picked that folder as newest during the retry window can fail
-    * or see partial data. Acceptable for the stage-handoff cadence
-    * (reader and writer are phases of one pipeline, not concurrent
-    * services); for stronger guarantees write to a temp folder and
-    * atomically rename over the target. */
+    * `mode("overwrite")`, which deletes before rewriting. A reader that
+    * lists during the retry window skips that folder (no `_SUCCESS`
+    * yet) and loads the previous committed export; one that listed it
+    * just before the delete can still fail or see partial data.
+    * Acceptable for the stage-handoff cadence (reader and writer are
+    * phases of one pipeline, not concurrent services); for stronger
+    * guarantees write to a temp folder and atomically rename over the
+    * target. */
   def loadLatest(
       spark: SparkSession, baseDir: String, stage: String, name: String,
       format: String = "parquet"): DataFrame = {
-    val dir = new java.io.File(s"$baseDir/$stage")
-    val candidates = Option(dir.listFiles()).getOrElse(Array.empty)
+    val dir = new Path(s"$baseDir/$stage")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed = if (fs.exists(dir)) fs.listStatus(dir).toSeq else Nil
+    val candidates = listed.filter(_.isDirectory).map(_.getPath)
       .filter(_.getName.startsWith(s"${name}_"))
-    require(candidates.nonEmpty, s"no $name export under $dir")
     val (batchKeyed, stamped) =
-      candidates.partition(f => batchIdOf(name, f.getName).isDefined)
+      candidates.partition(p => batchIdOf(name, p.getName).isDefined)
     require(batchKeyed.isEmpty || stamped.isEmpty,
       s"(stage=$stage, name=$name) mixes batch-keyed and timestamped " +
         s"exports — their orderings are incomparable; use distinct names. " +
-        s"Found: ${candidates.map(_.getName).sorted.toSeq}")
-    val latest =
+        s"Found: ${candidates.map(_.getName).sorted}")
+    val newestFirst =
       if (batchKeyed.nonEmpty)
-        batchKeyed.maxBy(f => batchIdOf(name, f.getName).get)
-      else stamped.maxBy(_.getName)
-    val reader = format match {
+        batchKeyed.sortBy(p => batchIdOf(name, p.getName).get)(
+          Ordering[Long].reverse)
+      else stamped.sortBy(p => (p.getName.takeRight(StampWidth), p.getName))(
+        Ordering[(String, String)].reverse)
+    // newest first, so the usual case checks a single marker
+    val latest = newestFirst.find(p => fs.exists(new Path(p, "_SUCCESS")))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no committed $name export under $dir"))
+    reader(spark, format).load(latest.toString)
+  }
+
+  /** Reader for an export written in `format`: a CSV export carries a
+    * header row. */
+  private[sources] def reader(
+      spark: SparkSession, format: String): DataFrameReader =
+    (format match {
       case "csv" => spark.read.option("header", "true")
       case _ => spark.read
-    }
-    reader.format(format).load(latest.getAbsolutePath)
-  }
+    }).format(format)
 }

@@ -181,4 +181,133 @@ class PipelineSpec extends SparkSpec {
       "Ratings-Matched")
     assert(latestMatch.count() === matched.count())
   }
+
+  // an export folder whose write committed
+  private def committed(path: String): Boolean =
+    new java.io.File(path, "_SUCCESS").isFile
+
+  test("parquet read-back ≡ spark.read.parquet: nested, typed, metadata") {
+    import org.apache.spark.sql.types.MetadataBuilder
+    val base = Files.createTempDirectory("graft_pipeline_schema").toString
+    val tag = new MetadataBuilder().putString("comment", "kept").build()
+    val rich = Seq(
+      (1L, "a", Seq(1, 2), Map("k" -> 1.5), BigDecimal("12.345"),
+        java.sql.Date.valueOf("2024-02-29"),
+        java.sql.Timestamp.valueOf("2024-05-06 07:08:09.123456"),
+        Array[Byte](0, 1, -1)),
+      (2L, null, Seq.empty[Int], Map.empty[String, Double], null, null,
+        null, null))
+      .toDF("id", "name", "xs", "m", "amount", "day", "at", "blob")
+      .select(col("id"),
+        struct(col("name"), struct(col("xs"), col("m")).as("inner"))
+          .as("nested"),
+        col("amount").cast("decimal(12,3)").as("amount"), col("day"),
+        col("at"), col("blob"), col("name").as("tagged", tag))
+    var extractBack: DataFrame = null
+    var transformBack: DataFrame = null
+    val exports = Pipeline.run(spark,
+      extract = () => rich,
+      transform = df => { extractBack = df; df },
+      matcher = df => { transformBack = df; (df, df.select("id")) },
+      baseDir = base, session = "s", at = Instant.parse("2024-05-06T00:00:00Z"))
+    for ((back, path) <- Seq(extractBack -> exports.extract.get,
+        transformBack -> exports.transformed.get)) {
+      val inferred = spark.read.parquet(path)
+      assert(back.schema === inferred.schema)
+      // a file source reads every column back as nullable
+      assert(back.schema.fields.forall(_.nullable))
+      assert(back.schema("tagged").metadata.getString("comment") === "kept")
+      assert(back.orderBy("id").collect().toSeq ===
+        inferred.orderBy("id").collect().toSeq)
+    }
+    val rows = extractBack.orderBy("id").collect()
+    assert(rows(0).getAs[Array[Byte]]("blob").toSeq === Seq[Byte](0, 1, -1))
+    assert(rows(0).getAs[java.math.BigDecimal]("amount") ===
+      new java.math.BigDecimal("12.345"))
+  }
+
+  test("csv read-back keeps the header names and all-string columns") {
+    val base = Files.createTempDirectory("graft_pipeline_csv").toString
+    var extractBack: DataFrame = null
+    val exports = Pipeline.run(spark,
+      extract = () => Seq((1, "a", 2.5), (2, "b", 3.0)).toDF("id", "v", "x"),
+      transform = df => { extractBack = df; df },
+      matcher = df => (df, df.select("id")),
+      baseDir = base, session = "s", at = Instant.parse("2024-05-06T00:00:00Z"),
+      format = "csv")
+    val inferred = spark.read.option("header", "true")
+      .csv(exports.extract.get)
+    assert(extractBack.columns.toSeq === Seq("id", "v", "x"))
+    assert(extractBack.schema.map(_.dataType).distinct ===
+      Seq(org.apache.spark.sql.types.StringType))
+    assert(extractBack.schema === inferred.schema)
+    assert(extractBack.orderBy("id").collect().map(_.toSeq).toSeq ===
+      Seq(Seq("1", "a", "2.5"), Seq("2", "b", "3.0")))
+  }
+
+  test("Pipeline.run starts no job outside a SQL execution; both match exports") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = Files.createTempDirectory("graft_pipeline_jobs").toString
+    val marker = "graft.pipelineSpec.marker"
+    val stray = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        if (props.exists(_.getProperty(marker) != null)) markerSeen.countDown()
+        else if (props.forall(_.getProperty("spark.sql.execution.id") == null))
+          stray.add(js.jobId)
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val exports = try {
+      val ex = Pipeline.run(
+        spark,
+        extract = () => HtmlTable.toRecords(
+          Seq((1L, page)).toDF("page_id", "page"), "page", Seq("page_id"))
+          .select(col("page_id"), col("row_idx"),
+            col("record")("info").as("info"),
+            col("record")("office").as("office"),
+            col("record")("sig_rating").as("sig_rating")),
+        transform = transformStage,
+        matcher = matchStage,
+        baseDir = base, session = "2023-2024",
+        at = Instant.parse("2024-05-06T07:08:09.000001Z"))
+      // the listener bus delivers in order: once the marker job's start
+      // arrives, every job start of the run has arrived before it
+      spark.sparkContext.setLocalProperty(marker, "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      ex
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(stray.isEmpty, s"jobs outside a SQL execution: $stray")
+    Seq(exports.extract, exports.transformed, exports.matched,
+      exports.query).foreach(p => assert(committed(p.get), p))
+  }
+
+  test("a failing MATCHED write surfaces after the QUERY export commits") {
+    val base = Files.createTempDirectory("graft_pipeline_fail").toString
+    val at = Instant.parse("2024-05-06T07:08:09.000001Z")
+    val boom = udf { (id: Long) =>
+      if (id > 0) throw new IllegalStateException("matched write fails"); id }
+    val slow = udf { (id: Long) => Thread.sleep(200); id }
+    // a range, not a local relation: the projections run in the jobs
+    val transformed = spark.range(1, 4).toDF("s_id")
+    val ex = intercept[Exception] {
+      Pipeline.runFromTransformed(spark, transformed,
+        df => (df.select(col("s_id"), boom(col("s_id")).as("best_id")),
+          df.select(slow(col("s_id")).as("candidate_id")).coalesce(1)),
+        base, "2023-2024", at)
+    }
+    val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(e => String.valueOf(e.getMessage)
+      .contains("matched write fails")), ex)
+    val stamp = StageSink.stamp(at)
+    assert(committed(s"$base/QUERY_FILES/VSDB-Candidates_2023-2024-$stamp"))
+    assert(!committed(s"$base/MATCHED_FILES/Ratings-Matched_2023-2024-$stamp"))
+    assert(spark.read.parquet(
+      s"$base/QUERY_FILES/VSDB-Candidates_2023-2024-$stamp").count() === 3)
+  }
 }

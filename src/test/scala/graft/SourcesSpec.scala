@@ -224,6 +224,58 @@ class SourcesSpec extends SparkSpec {
     assert(latest.head.getInt(0) === 9)
   }
 
+  test("loadLatest orders timestamped exports by stamp, not by session tag") {
+    val base = Files.createTempDirectory("graft_sink_sessions").toString
+    // the older export carries the session tag that sorts LAST as a name
+    StageSink.save(Seq((1, "older")).toDF("id", "v"), base, "MATCHED_FILES",
+      "Ratings-Matched", Instant.parse("2024-01-01T00:00:00.000001Z"),
+      additionalInfo = Seq("2025-2026"))
+    StageSink.save(Seq((2, "newer")).toDF("id", "v"), base, "MATCHED_FILES",
+      "Ratings-Matched", Instant.parse("2024-06-01T00:00:00.000001Z"),
+      additionalInfo = Seq("2023-2024"))
+    val latest = StageSink.loadLatest(spark, base, "MATCHED_FILES",
+      "Ratings-Matched")
+    assert(latest.select("v").as[String].collect().toSeq === Seq("newer"))
+  }
+
+  test("loadLatest skips a newer export that never committed") {
+    val base = Files.createTempDirectory("graft_sink_uncommitted").toString
+    StageSink.save(Seq((1, "committed")).toDF("id", "v"), base,
+      "EXTRACT_FILES", "x", Instant.parse("2024-03-04T05:06:07.000001Z"))
+    val at = Instant.parse("2024-03-05T00:00:00.000001Z")
+    // a write whose task fails leaves its folder behind (a range, not a
+    // local relation, so the failing projection runs in the job)
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("export fails"); "v" }
+    def failedSave(name: String): Unit = intercept[Exception] {
+      StageSink.save(spark.range(2).select(col("id"), boom(col("id")).as("v")),
+        base, "EXTRACT_FILES", name, at)
+    }
+    failedSave("x")
+    val leftover = new java.io.File(
+      s"$base/EXTRACT_FILES/x_${StageSink.stamp(at)}")
+    assert(leftover.isDirectory)
+    assert(!new java.io.File(leftover, "_SUCCESS").exists())
+    val latest = StageSink.loadLatest(spark, base, "EXTRACT_FILES", "x")
+    assert(latest.select("v").as[String].collect().toSeq === Seq("committed"))
+    // a name with only a leftover folder has nothing to load
+    failedSave("y")
+    val ex = intercept[IllegalArgumentException] {
+      StageSink.loadLatest(spark, base, "EXTRACT_FILES", "y")
+    }
+    assert(ex.getMessage.contains("no committed y export"))
+  }
+
+  test("loadLatest reads back from a file: URI base directory") {
+    val base = "file:" + Files.createTempDirectory("graft_sink_uri").toString
+    val at = Instant.parse("2024-03-04T05:06:07.000001Z")
+    val path = StageSink.save(Seq((7, "uri")).toDF("id", "v"), base,
+      "QUERY_FILES", "q", at)
+    assert(path.startsWith("file:"))
+    val latest = StageSink.loadLatest(spark, base, "QUERY_FILES", "q")
+    assert(latest.select("v").as[String].collect().toSeq === Seq("uri"))
+  }
+
   test("Excel round-trips a real table through xlsx, all cells as strings") {
     // the reference's one xlsx input (national/_2155: pandas
     // read_excel(dtype=str)) — header row + string-typed cells
