@@ -868,7 +868,7 @@ object SparkEntry {
     val docs = Tables(s, dir).documents
     Corpus.mixSources(docs, "doc_id", "source",
       Corpus.temperatureTargets(docs, "source", alpha = 0.5),
-      maxRepeat = 3, replayableUniform = true)
+      maxRepeat = 3)
       .select(col("doc_id"), col("source"), col("copy").cast("long")
         .as("copy"))
   }
@@ -1109,8 +1109,7 @@ object SparkEntry {
     * ORACLE-CHECKED hash-exact instead of rows-only; CorpusSpec still
     * pins determinism, coverage and proportions. */
   private def q50(s: SparkSession, dir: String): DataFrame =
-    Corpus.splitAssign(Tables(s, dir).documents, "doc_id",
-      replayableUniform = true)
+    Corpus.splitAssign(Tables(s, dir).documents, "doc_id")
       .select(col("doc_id"), col("split"))
 
   /** q68: training-corpus source mixing — re-weight three sources to
@@ -1124,8 +1123,7 @@ object SparkEntry {
     * numbering. */
   private def q68(s: SparkSession, dir: String): DataFrame =
     Corpus.mixSources(Tables(s, dir).documents, "doc_id", "source",
-      Map("src0" -> 0.4, "src1" -> 0.4, "src2" -> 0.2),
-      replayableUniform = true)
+      Map("src0" -> 0.4, "src1" -> 0.4, "src2" -> 0.2))
       .select(col("doc_id"), col("source"),
         col("copy").cast("long").as("copy"))
 
@@ -1313,8 +1311,7 @@ object SparkEntry {
   private def q40(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir).documents.select(
       col("doc_id"),
-      TextStats.fingerprint(col("text"), replayableWordHash = true)
-        .as("fingerprint"))
+      TextStats.fingerprint(col("text")).as("fingerprint"))
 
   /** q41: embedding near-dup via random-hyperplane LSH buckets + exact
     * cosine verify, MULTI-PROBE (Lv et al. 2007): each vector also
@@ -1479,10 +1476,10 @@ object SparkEntry {
     // the config lowercases BOTH sides of every comparison — projected
     // ONCE per side here (|rows| lowercase allocations) instead of
     // wrapped around each of the 9 per-pair scorer calls (|pairs|×18);
-    // identical scores. The pre-lowering alone is the win here:
-    // FuzzyMatch.link's equal-fast scorer short-circuit exists but is
-    // OPT-IN and off (its CaseWhen wrapping measured 2.5x SLOWER than
-    // the plain kernel — the scorer memo already absorbs repeats)
+    // identical scores. The scorers are called plainly: wrapping them
+    // in an equal-operand CaseWhen short-circuit measured 2.5x SLOWER
+    // than the plain kernel, since the scorer memo already absorbs
+    // repeated pairs
     val scoredCols = Seq("firstname", "middlename", "lastname",
       "suffix", "office", "district", "party")
     val scraped = scraped0.select(col("s_id") +: col("state_name") +:

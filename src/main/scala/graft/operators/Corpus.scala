@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Md5Uniform
+
 /** Corpus-level operations for training-data curation: n-gram frequency
   * tables, benchmark-contamination flagging, deterministic dataset
   * splits. All are single-shuffle shapes (explode → partial-agg →
@@ -874,10 +876,10 @@ object Corpus {
     * sample — each doc repeats floor(epochs_s) times plus one more
     * with probability frac(epochs_s), so expected sampled tokens per
     * source equal the allocation exactly. The uniform comes from the
-    * id's seed-salted md5 ([[weightedSample]]'s esKey construction —
-    * never rand(), stable across runs/layouts and REPLAYABLE in the
-    * SQL oracle, unlike mixSources' xxhash64 which keeps q68
-    * rows-only). Rates join back broadcast (#sources rows); the mix
+    * id's seed-salted md5 ([[Md5Uniform.uniform]], the draw
+    * [[mixSources]] and [[weightedSample]] use too — never rand(),
+    * stable across runs/layouts and REPLAYABLE in the SQL oracle).
+    * Rates join back broadcast (#sources rows); the mix
     * itself is a pure projection + explode — no corpus shuffle.
     * Returns (idCol, sourceCol, copy) with copy 0-based. */
   def unimaxMix(
@@ -888,9 +890,7 @@ object Corpus {
       budgetFraction)
       .select(col("source").as("__src"),
         (col("__alloc") / col("n_tokens")).as("__rate"))
-    val u = (conv(substring(
-      md5(concat(col(idCol).cast("string"), lit(seed))), 1, 8), 16, 10)
-      .cast("long") + lit(0.5)) / lit(4294967296.0)
+    val u = Md5Uniform.uniform(col(idCol), seed)
     val copies = (floor(col("__rate")).cast("int") +
       when(u < col("__rate") - floor(col("__rate")), 1).otherwise(0))
     // empty-sequence guard (the mixSources lesson: sequence(0, -1)
@@ -901,24 +901,6 @@ object Corpus {
       .select(col(idCol), col(sourceCol), explode(idx).as("copy"))
   }
 
-  /** Re-weight a multi-source corpus to target proportions (training-
-    * data mixing: N raw sources → one corpus at chosen weights) by
-    * DETERMINISTIC hash sampling — stable across runs, cluster layouts
-    * and partitionings (xxhash64 of the id, never rand()).
-    *
-    * Given per-source counts n_s and normalized target weights t_s, the
-    * output total T is the largest satisfying rate_s = t_s·T/n_s ≤
-    * `maxRepeat` for every weighted source, so expected output per
-    * source is EXACTLY t_s·T. With `maxRepeat` = 1 this is pure
-    * downsampling (a hash filter — no explode, no shuffle); > 1 allows
-    * upsampling scarce sources by row duplication, each copy numbered
-    * in `copy` (0-based). Sources absent from `targets` are dropped.
-    *
-    * Scale: per-source counts are one tiny aggregate collected to the
-    * driver (rows = #sources — the same model-on-driver pattern as
-    * Ann's centroids); the mix itself is a pure projection/filter.
-    * Mix AFTER dedup: upsampled copies are intentional exact dups.
-    */
   /** TEMPERATURE (α) SAMPLING targets — the third published mixing
     * recipe beside [[mixSources]]' fixed targets and [[unimaxMix]]'s
     * epoch-capped waterfilling (Conneau & Lample 2019 §3.1; the
@@ -950,10 +932,30 @@ object Corpus {
     pows.map { case (s, w) => s -> w / z }.toMap
   }
 
+  /** Re-weight a multi-source corpus to target proportions (training-
+    * data mixing: N raw sources → one corpus at chosen weights) by
+    * DETERMINISTIC hash sampling — stable across runs, cluster layouts
+    * and partitionings, and replayable in SQL (the id's md5 uniform
+    * salted with `seed.toString`, [[Md5Uniform.uniform]]; never
+    * rand()).
+    *
+    * Given per-source counts n_s and normalized target weights t_s, the
+    * output total T is the largest satisfying rate_s = t_s·T/n_s ≤
+    * `maxRepeat` for every weighted source, so expected output per
+    * source is EXACTLY t_s·T. With `maxRepeat` = 1 this is pure
+    * downsampling (a hash filter — no explode, no shuffle); > 1 allows
+    * upsampling scarce sources by row duplication, each copy numbered
+    * in `copy` (0-based). Sources absent from `targets` are dropped.
+    *
+    * Scale: per-source counts are one tiny aggregate collected to the
+    * driver (rows = #sources — the same model-on-driver pattern as
+    * Ann's centroids); the mix itself is a pure projection/filter.
+    * Mix AFTER dedup: upsampled copies are intentional exact dups.
+    */
   def mixSources(
       docs: DataFrame, idCol: String, sourceCol: String,
       targets: Map[String, Double], seed: Long = 0L,
-      maxRepeat: Int = 1, replayableUniform: Boolean = false): DataFrame = {
+      maxRepeat: Int = 1): DataFrame = {
     require(targets.nonEmpty && targets.values.forall(_ >= 0) &&
       targets.values.sum > 0, "mixSources: need nonnegative weights, sum > 0")
     require(maxRepeat >= 1, "mixSources: maxRepeat >= 1")
@@ -979,17 +981,7 @@ object Corpus {
       .toMap
     val rate = coalesce(
       element_at(typedlit(rates), col(sourceCol)), lit(0.0))
-    // the md5-seeded uniform (weightedSample's esKey construction) is
-    // SQL-replayable — what upgrades the q68 mix from rows-only to
-    // hash-exact; the xxhash64 default is kept for existing callers
-    // (cheaper per row, same distribution)
-    val u =
-      if (replayableUniform)
-        (conv(substring(md5(concat(col(idCol).cast("string"),
-          lit(seed.toString))), 1, 8), 16, 10)
-          .cast("long") + lit(0.5)) / lit(4294967296.0)
-      else pmod(xxhash64(col(idCol), lit(seed)), lit(1000000L))
-        .cast("double") / 1000000.0
+    val u = Md5Uniform.uniform(col(idCol), seed.toString)
     if (maxRepeat == 1)
       docs.filter(u < rate).withColumn("copy", lit(0))
     else {
@@ -1507,25 +1499,19 @@ object Corpus {
   }
 
   /** Deterministic train/val/test assignment by content-independent id
-    * hash: stable across runs and cluster layouts (xxhash64 of the id,
-    * never Math.random or row position), pure projection, no shuffle.
+    * hash: stable across runs and cluster layouts (the md5 prefix of the
+    * id salted with `seed.toString`, mod 100 — never Math.random or row
+    * position, and replayable in SQL), pure projection, no shuffle.
     * Weights are percentages summing to ≤ 100 (remainder → last split).
     */
   def splitAssign(
       docs: DataFrame, idCol: String,
       splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
-      seed: Long = 0L, replayableUniform: Boolean = false): DataFrame = {
+      seed: Long = 0L): DataFrame = {
     require(splits.nonEmpty && splits.map(_._2).sum <= 100,
       "split weights must sum to <= 100")
-    // the md5-prefix bucket is SQL-replayable (the mixSources/q110
-    // construction) — what upgrades q50 from rows-only to hash-exact;
-    // xxhash64 stays the default for existing callers
-    val bucket =
-      if (replayableUniform)
-        pmod(conv(substring(md5(concat(col(idCol).cast("string"),
-          lit(seed.toString))), 1, 8), 16, 10).cast("long"), lit(100))
-          .cast("int")
-      else pmod(xxhash64(col(idCol), lit(seed)), lit(100)).cast("int")
+    val bucket = pmod(Md5Uniform.saltedPrefix32(col(idCol), seed.toString),
+      lit(100)).cast("int")
     val bounds = splits.scanLeft(0) { case (acc, (_, w)) => acc + w }.tail
     val assign = splits.zip(bounds).foldRight(lit(splits.last._1): Column) {
       case (((name, _), hi), acc) => when(bucket < hi, lit(name)).otherwise(acc)
@@ -1590,9 +1576,7 @@ object Corpus {
       temperature: Double = 1.0, seed: String = ""): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(temperature > 0, "gumbelTopK: temperature > 0")
-    val u = (conv(substring(
-      md5(concat(col(idCol).cast("string"), lit(seed))), 1, 8), 16, 10)
-      .cast("long") + lit(0.5)) / lit(4294967296.0)
+    val u = Md5Uniform.uniform(col(idCol), seed)
     df.select(col(idCol), col(logWeightCol),
         (col(logWeightCol).cast("double") / lit(temperature) -
           log(-log(u))).as("__key"))
@@ -1606,12 +1590,9 @@ object Corpus {
   /** The Efraimidis–Spirakis key u^(1/w) with u drawn from the id's
     * (seed-salted) md5 — shared by [[weightedSample]] and
     * [[weightedSamplePerStratum]] so the two draws agree. */
-  private def esKey(idCol: String, weightCol: String, seed: String) = {
-    val u = (conv(substring(
-      md5(concat(col(idCol).cast("string"), lit(seed))), 1, 8), 16, 10)
-      .cast("long") + lit(0.5)) / lit(4294967296.0)
-    pow(u, lit(1.0) / col(weightCol).cast("double"))
-  }
+  private def esKey(idCol: String, weightCol: String, seed: String) =
+    pow(Md5Uniform.uniform(col(idCol), seed),
+      lit(1.0) / col(weightCol).cast("double"))
 
   /** [[weightedSample]] stratified: an independent k-row E-S weighted
     * draw per stratum (per-source corpus mixing with length/quality

@@ -446,20 +446,17 @@ object Dedup {
     * localCheckpointed, then BROADCAST against the index's band table —
     * the corpus never shuffles. Verify fetches corpus shingles for
     * candidate ids only (semi-join), so the per-batch cost is
-    * O(batch + candidates), independent of corpus size. Set
-    * `broadcastBatch = false` for a batch too big to broadcast — the
-    * joins fall back to shuffles on (band, bucket) and id. */
+    * O(batch + candidates), independent of corpus size. */
   def incrementalNearDup(
       batch: DataFrame, index: MinhashIndex, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, broadcastBatch: Boolean = true): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     // tiny relative to the corpus; consumed by the band join AND the
     // verify join — materialise once
     val feat = minhashFeatures(batch, idCol, textCol, shingleN, numHashes)
       .localCheckpoint(false)
-    incrementalNearDupFeat(feat, index, numHashes, bands, threshold,
-      broadcastBatch)
+    incrementalNearDupFeat(feat, index, numHashes, bands, threshold)
   }
 
   /** [[incrementalNearDup]] over an already-materialized batch feature
@@ -468,16 +465,14 @@ object Dedup {
     * dedup and the delta index instead of three times. */
   private def incrementalNearDupFeat(
       feat: DataFrame, index: MinhashIndex,
-      numHashes: Int, bands: Int,
-      threshold: Double, broadcastBatch: Boolean): DataFrame = {
-    def maybeB(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
+      numHashes: Int, bands: Int, threshold: Double): DataFrame = {
     val batchBands = feat.select(col("id").as("b_id"),
       explode(bandBucketStructs(col("__sig"), bands, numHashes / bands))
         .as("__bk"))
       .select(col("b_id"), col("__bk.band").as("band"),
         col("__bk.bucket").as("bucket"))
     val cands = index.bands
-      .join(maybeB(batchBands), Seq("band", "bucket"))
+      .join(broadcast(batchBands), Seq("band", "bucket"))
       .select(col("id").as("a_id"), col("b_id"))
       .distinct()
       .localCheckpoint(false)
@@ -504,7 +499,7 @@ object Dedup {
       .select(col("id").as("a_id"), col("shingles").as("__sha"))
     cands
       .join(corpusSh, "a_id")
-      .join(maybeB(feat.select(col("id").as("b_id"),
+      .join(broadcast(feat.select(col("id").as("b_id"),
         col("shingles").as("__shb"))), "b_id")
       .withColumn("jaccard",
         round(jaccardLongs(col("__sha"), col("__shb")), 4))
@@ -534,7 +529,7 @@ object Dedup {
   def incrementalDedup(
       batch: DataFrame, index: MinhashIndex, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, broadcastBatch: Boolean = true): (DataFrame, MinhashIndex) = {
+      threshold: Double = 0.5): (DataFrame, MinhashIndex) = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     // The batch is shingled + signed ONCE; the corpus probe, the
     // within-batch dedup and the returned delta index all read this
@@ -545,7 +540,7 @@ object Dedup {
     val feat = minhashFeatures(batch, idCol, textCol, shingleN, numHashes)
       .localCheckpoint(false)
     val vsCorpus = incrementalNearDupFeat(feat, index, numHashes, bands,
-      threshold, broadcastBatch)
+      threshold)
       .select(col("b_id").as(idCol))
     val inBatch = batch.join(vsCorpus, Seq(idCol), "left_anti")
     // within-batch near-dup over the surviving rows' SAME features —
@@ -872,13 +867,13 @@ object Dedup {
   def semanticDedup(
       vecs: DataFrame, idCol: String, vecCol: String, k: Int,
       threshold: Double = 0.95, iters: Int = 3,
-      seed: Long = 42L, saltBuckets: Int = 1): DataFrame = {
+      seed: Long = 42L): DataFrame = {
     require(k > 0, "semanticDedup: k > 0")
     semanticDedupWith(vecs,
       Ann.trainCentroids(
         vecs.select(col(idCol), col(vecCol)), idCol, vecCol, k, iters,
         seed),
-      idCol, vecCol, threshold, saltBuckets)
+      idCol, vecCol, threshold)
   }
 
   /** [[semanticDedup]] against PRETRAINED centroids ((centroid_id,
@@ -888,12 +883,10 @@ object Dedup {
     * assignment + within-cluster pairing. */
   def semanticDedupWith(
       vecs: DataFrame, centroids: DataFrame, idCol: String,
-      vecCol: String, threshold: Double = 0.95,
-      saltBuckets: Int = 1): DataFrame = {
+      vecCol: String, threshold: Double = 0.95): DataFrame = {
     import graft.functions.VectorFunctions._
     require(threshold > 0 && threshold <= 1,
       "semanticDedup: threshold in (0, 1]")
-    require(saltBuckets >= 1, "semanticDedup: saltBuckets >= 1")
     val assigned = Ann.assignBuckets(
       Parallelism.ensure(vecs.select(col(idCol), col(vecCol))),
       centroids.select(col("centroid_id").as(idCol), col(vecCol)),
@@ -902,34 +895,13 @@ object Dedup {
         norm(col(vecCol)).as("__n"), col("centroid_id"))
       .repartition(col("centroid_id"))
       .localCheckpoint(false)
-    // saltBuckets > 1 splits the per-cluster quadratic work the way
-    // FuzzyMatch.link splits hot blocks: the left side takes ONE
-    // deterministic salt per row, the right side replicates across
-    // every salt, so the pair set (and the result) is identical but a
-    // cluster's scoring spreads over saltBuckets times more tasks —
-    // the escape hatch for a skewed clustering where one cluster holds
-    // most of the corpus and its pairs serialise through one task.
-    // MEASURED at the registered q76 config (k=16, 100k 64-dim
-    // vectors, 32 threads): salt=4 is only ~6% faster (7.65 -> 7.18 s
-    // interleaved A/B in r13, results verified identical; SURVEY.md) — at
-    // this scale training + components dominate, not the pair join —
-    // so the default stays 1; reach for it when the cluster-size
-    // histogram (Corpus.keyProfile on centroid_id) shows real skew.
-    val a0 = assigned.select(col("centroid_id"), col("__id").as("a_id"),
+    val a = assigned.select(col("centroid_id"), col("__id").as("a_id"),
       col("__v").as("__va"), col("__n").as("__na"))
-    val a =
-      if (saltBuckets <= 1) a0.withColumn("__salt", lit(0))
-      else a0.withColumn("__salt",
-        pmod(xxhash64(col("a_id")), lit(saltBuckets)).cast("int"))
-    val b0 = assigned.select(col("centroid_id").as("__c2"),
+    val b = assigned.select(col("centroid_id").as("__c2"),
       col("__id").as("b_id"), col("__v").as("__vb"), col("__n").as("__nb"))
-    val b =
-      if (saltBuckets <= 1) b0.withColumn("__salt2", lit(0))
-      else b0.withColumn("__salt2",
-        explode(sequence(lit(0), lit(saltBuckets - 1))))
     val edges = a
       .join(b, col("centroid_id") === col("__c2") &&
-        col("__salt") === col("__salt2") && col("a_id") < col("b_id"))
+        col("a_id") < col("b_id"))
       .filter(cosinePrenormed(dot(col("__va"), col("__vb")),
         col("__na"), col("__nb")) >= threshold)
       .select("a_id", "b_id")
@@ -1010,8 +982,8 @@ object Dedup {
 
   /** Near-dup pairs between a new embedding batch and the indexed
     * corpus: (corpus a_id, batch b_id, cosine ≥ threshold). Batch side
-    * bucketed once and broadcast (`broadcastBatch = false` for shuffle
-    * joins); the corpus index never moves beyond the bucket equi-join.
+    * bucketed once and broadcast; the corpus index never moves beyond
+    * the bucket equi-join.
     *
     * `probeFlips` > 0 is [[embeddingNearDup]]'s MULTI-PROBE on the
     * incremental path: the BATCH (the small side — exactly where
@@ -1024,8 +996,7 @@ object Dedup {
   def incrementalEmbeddingNearDup(
       batch: DataFrame, index: EmbeddingIndex, idCol: String,
       vecCol: String, dim: Int, numPlanes: Int = 8,
-      threshold: Double = 0.8, broadcastBatch: Boolean = true,
-      probeFlips: Int = 0): DataFrame = {
+      threshold: Double = 0.8, probeFlips: Int = 0): DataFrame = {
     import graft.functions.VectorFunctions._
     require(probeFlips >= 0 && probeFlips <= 2,
       "incrementalEmbeddingNearDup: probeFlips in 0..2")
@@ -1057,15 +1028,15 @@ object Dedup {
     // oversized broadcast.
     val replication = probeCols.size
     val MaxBroadcastReplication = 128
-    val doBroadcast = broadcastBatch &&
-      (replication <= MaxBroadcastReplication || {
+    val b =
+      if (replication <= MaxBroadcastReplication) broadcast(b0)
+      else {
         log.warn(s"incrementalEmbeddingNearDup: probe replication " +
           s"$replication > $MaxBroadcastReplication " +
           s"(numPlanes=$numPlanes, probeFlips=$probeFlips) - " +
           "falling back to a shuffle join for the probe side")
-        false
-      })
-    val b = if (doBroadcast) broadcast(b0) else b0
+        b0
+      }
     // on a SAVED index, the batch's sign-buckets determine the shards
     // it can possibly match — a tiny driver-collected set that prunes
     // the (vector-sized) corpus scan to the batch's partitions; an
@@ -1093,10 +1064,9 @@ object Dedup {
   def incrementalEmbeddingDedup(
       batch: DataFrame, index: EmbeddingIndex, idCol: String,
       vecCol: String, dim: Int, numPlanes: Int = 8,
-      threshold: Double = 0.8, broadcastBatch: Boolean = true,
-      probeFlips: Int = 0): (DataFrame, EmbeddingIndex) = {
+      threshold: Double = 0.8, probeFlips: Int = 0): (DataFrame, EmbeddingIndex) = {
     val hits = incrementalEmbeddingNearDup(batch, index, idCol, vecCol,
-      dim, numPlanes, threshold, broadcastBatch, probeFlips)
+      dim, numPlanes, threshold, probeFlips)
       .select(col("b_id").as(idCol))
     val survivors = dropEmbeddingNearDuplicates(
       batch.join(hits, Seq(idCol), "left_anti"), idCol, vecCol, dim,
@@ -1235,20 +1205,19 @@ object Dedup {
     * never shuffles beyond the band equi-join. */
   def incrementalSimhashNearDup(
       batch: DataFrame, index: SimhashIndex, idCol: String,
-      textCol: String, shingleN: Int = 2, maxHamming: Int = 3,
-      broadcastBatch: Boolean = true): DataFrame = {
+      textCol: String, shingleN: Int = 2,
+      maxHamming: Int = 3): DataFrame = {
     val feat = simhashFeatures(batch, idCol, textCol, shingleN)
       .localCheckpoint(false)
     val b0 = feat.select(col("__id").as("b_id"), col("__sim").as("__simb"),
       explode(simhashBandStructs(col("__sim"), maxHamming)).as("__bk"))
       .select(col("b_id"), col("__simb"),
         col("__bk.band"), col("__bk.bucket"))
-    val b = if (broadcastBatch) broadcast(b0) else b0
     index.entries
       .select(col("id").as("a_id"), col("sim").as("__sima"),
         explode(simhashBandStructs(col("sim"), maxHamming)).as("__bk"))
       .select(col("a_id"), col("__sima"), col("__bk.band"), col("__bk.bucket"))
-      .join(b, Seq("band", "bucket"))
+      .join(broadcast(b0), Seq("band", "bucket"))
       .select(col("a_id"), col("b_id"),
         bit_count(col("__sima").bitwiseXOR(col("__simb"))).as("hamming"))
       .distinct()
@@ -1261,10 +1230,10 @@ object Dedup {
     * family (exact/Bloom = q63/q67, MinHash = q64, embedding = q65). */
   def incrementalSimhashDedup(
       batch: DataFrame, index: SimhashIndex, idCol: String,
-      textCol: String, shingleN: Int = 2, maxHamming: Int = 3,
-      broadcastBatch: Boolean = true): (DataFrame, SimhashIndex) = {
+      textCol: String, shingleN: Int = 2,
+      maxHamming: Int = 3): (DataFrame, SimhashIndex) = {
     val hits = incrementalSimhashNearDup(batch, index, idCol, textCol,
-      shingleN, maxHamming, broadcastBatch)
+      shingleN, maxHamming)
       .select(col("b_id").as(idCol))
     val survivors = dropSimhashDuplicates(
       batch.join(hits, Seq(idCol), "left_anti"), idCol, textCol,

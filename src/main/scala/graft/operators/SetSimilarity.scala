@@ -320,11 +320,9 @@ object SetSimilarity {
     * same integer verify as [[jaccardJoin]].
     */
   def probeIndex(index: SetSimIndex, batch: DataFrame, idCol: String,
-      tokensCol: Column, tauNum: Int, tauDen: Int,
-      broadcastBatch: Boolean = true): DataFrame = {
+      tokensCol: Column, tauNum: Int, tauDen: Int): DataFrame = {
     require(tauNum > 0 && tauDen >= tauNum,
       s"probeIndex: need 0 < tau <= 1, got $tauNum/$tauDen")
-    def maybeB(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     val bsets = batch
       .select(col(idCol).as("b_id"),
         array_sort(array_distinct(
@@ -356,7 +354,7 @@ object SetSimilarity {
       (lit(1) + least(col("__na") - col("__ia") - 1,
         col("__bn") - col("__ib") - 1)) * (tauNum + tauDen) >=
         (col("__na") + col("__bn")) * tauNum
-    val cand = apre.join(maybeB(bpre), "t")
+    val cand = apre.join(broadcast(bpre), "t")
       .filter(col("__bn") * tauDen >= col("__na") * tauNum &&
         col("__na") * tauDen >= col("__bn") * tauNum && posBound)
       .select(col("a_id"), col("b_id")).distinct()
@@ -374,7 +372,7 @@ object SetSimilarity {
     val fa = pruned.select(col("id").as("a_id"),
       array_sort(col("ord")).as("__ta"), col("n").as("__na"))
     cand.join(fa, "a_id")
-      .join(maybeB(bsets.select(col("b_id"), col("__bts").as("__tb"))),
+      .join(broadcast(bsets.select(col("b_id"), col("__bts").as("__tb"))),
         "b_id")
       .withColumn("inter", interCount(col("__ta"), col("__tb")))
       .withColumn("uni",
@@ -423,11 +421,9 @@ object SetSimilarity {
     * instead (no shuffle, one corpus-token pass — the honest floor).
     * Output: (b_id, a_id, inter, n_b, n_a). */
   def probeContainment(index: SetSimIndex, batch: DataFrame, idCol: String,
-      tokensCol: Column, tauNum: Int, tauDen: Int,
-      broadcastBatch: Boolean = true): DataFrame = {
+      tokensCol: Column, tauNum: Int, tauDen: Int): DataFrame = {
     require(tauNum > 0 && tauDen >= tauNum,
       s"probeContainment: need 0 < tau <= 1, got $tauNum/$tauDen")
-    def maybeB(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     val bsets = batch
       .select(col(idCol).as("b_id"),
         array_sort(array_distinct(
@@ -467,7 +463,7 @@ object SetSimilarity {
         .select(col("id").as("a_id"), col("n").as("__na"),
           explode(col("ord")).as("t"))
     }
-    val cand = atok.join(maybeB(bpre), "t")
+    val cand = atok.join(broadcast(bpre), "t")
       .filter(col("__na") * tauDen >= col("__bn") * tauNum &&
         (col("__bn") - col("__ib")) * tauDen >= col("__bn") * tauNum)
       .select(col("a_id"), col("b_id")).distinct()
@@ -483,7 +479,7 @@ object SetSimilarity {
     val fa = pruned.select(col("id").as("a_id"),
       array_sort(col("ord")).as("__ta"), col("n").as("__na"))
     cand.join(fa, "a_id")
-      .join(maybeB(bsets.select(col("b_id"), col("__bts").as("__tb"))),
+      .join(broadcast(bsets.select(col("b_id"), col("__bts").as("__tb"))),
         "b_id")
       .withColumn("inter", interCount(col("__ta"), col("__tb")))
       .withColumn("n_b", size(col("__tb")).cast("long"))

@@ -71,20 +71,16 @@ object Stats {
     * via a null-safe join (they form a group, as the window form's
     * null partition does).
     *
-    * The stats table is one row per DISTINCT key: the default
-    * broadcast hint assumes a categorical/bounded key (the outlier-
-    * diagnostic norm). For a key with billions of distinct values pass
-    * `broadcastStats = false` — the join falls back to a planner-
-    * chosen strategy (shuffling the data once, like the window form,
-    * but still without its per-group single-task funnel).
+    * The stats table is one row per DISTINCT key and is broadcast:
+    * the key is assumed categorical/bounded (the outlier-diagnostic
+    * norm).
     */
   def zscoreOutliersAgg(
-      df: DataFrame, keyCol: String, valCol: Column, z: Double,
-      broadcastStats: Boolean = true): DataFrame = {
+      df: DataFrame, keyCol: String, valCol: Column,
+      z: Double): DataFrame = {
     val stats = df.groupBy(col(keyCol).as("__k"))
       .agg(avg(valCol).as("__avg"), stddev_samp(valCol).as("__sd"))
-    val statsSide = if (broadcastStats) broadcast(stats) else stats
-    df.join(statsSide, col(keyCol) <=> col("__k"))
+    df.join(broadcast(stats), col(keyCol) <=> col("__k"))
       .withColumn("zscore", (valCol - col("__avg")) / col("__sd"))
       .drop("__k", "__avg", "__sd")
       .filter(abs(col("zscore")) > z)

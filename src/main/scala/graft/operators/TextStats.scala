@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.Md5Uniform
+
 /** Text-analysis column functions for training-data pipelines:
   * language ID, quality scoring, token counting, fingerprinting.
   * All pure `functions._` expressions — narrow, codegen'd, shuffle-free;
@@ -102,22 +104,15 @@ object TextStats {
 
   /** Rolling polynomial fingerprint over words mod the largest 32-bit
     * prime: order-sensitive (unlike a bag hash) and overflow-free
-    * (acc < 2^32 so acc*31 + h < 2^38). `replayableWordHash` swaps the
-    * per-word xxhash64 for the md5-prefix value the sampling family
-    * already uses — same mixing quality, but a SQL oracle can replay
-    * the whole polynomial (what upgrades q40 from rows-only to
-    * hash-exact); xxhash64 stays the default for existing callers
-    * (cheaper per word). */
-  def fingerprint(text: Column,
-      replayableWordHash: Boolean = false): Column = {
+    * (acc < 2^32 so acc*31 + h < 2^38). Each word hashes to its
+    * md5 prefix ([[graft.functions.Md5Uniform.prefix32]], the value
+    * the sampling family uses), so a SQL oracle can replay the whole
+    * polynomial. */
+  def fingerprint(text: Column): Column = {
     val P = lit(4294967291L)
-    def wordHash(w: Column): Column =
-      if (replayableWordHash)
-        pmod(conv(substring(md5(w), 1, 8), 16, 10).cast("long"), P)
-      else pmod(xxhash64(w), P)
     aggregate(
       words(text),
       lit(0L),
-      (acc, w) => pmod(acc * 31L + wordHash(w), P))
+      (acc, w) => pmod(acc * 31L + pmod(Md5Uniform.prefix32(w), P), P))
   }
 }

@@ -747,8 +747,7 @@ object Multimodal {
     * to the band equi-join — corpus media bytes never move. On a
     * saved index the kind filter prunes whole partitions first. */
   private[graft] def probeMediaHashes(batchHashes: DataFrame,
-      index: MediaHashIndex, maxHamming: Int,
-      broadcastBatch: Boolean): DataFrame = {
+      index: MediaHashIndex, maxHamming: Int): DataFrame = {
     import graft.operators.Dedup
     val kinds = batchHashes.select(col("kind")).distinct()
       .collect().map(_.getString(0)).toSeq
@@ -757,14 +756,13 @@ object Multimodal {
       explode(Dedup.simhashBandStructs(col("dhash"), maxHamming)).as("__bk"))
       .select(col("b_id"), col("kind"), col("__hb"),
         col("__bk.band"), col("__bk.bucket"))
-    val b = if (broadcastBatch) broadcast(b0) else b0
     index.entries
       .filter(col("kind").isin(kinds: _*))
       .select(col("id").as("a_id"), col("kind"), col("dhash").as("__ha"),
         explode(Dedup.simhashBandStructs(col("dhash"), maxHamming)).as("__bk"))
       .select(col("a_id"), col("kind"), col("__ha"),
         col("__bk.band"), col("__bk.bucket"))
-      .join(b, Seq("kind", "band", "bucket"))
+      .join(broadcast(b0), Seq("kind", "band", "bucket"))
       .select(col("a_id"), col("b_id"), col("kind"),
         bit_count(col("__ha").bitwiseXOR(col("__hb"))).as("hamming"))
       .distinct()
@@ -776,12 +774,12 @@ object Multimodal {
     * side is 8-byte hashes. */
   def incrementalMediaNearDup(batch: DataFrame, index: MediaHashIndex,
       idCol: String, bytesCol: String, kindCol: String,
-      maxHamming: Int = 3, broadcastBatch: Boolean = true): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     val feat = mediaHashes(batch, idCol, bytesCol, kindCol)
       .filter(col("ok"))
       .select(col(idCol).as("b_id"), col("kind"), col("dhash"))
       .localCheckpoint(false)
-    probeMediaHashes(feat, index, maxHamming, broadcastBatch)
+    probeMediaHashes(feat, index, maxHamming)
   }
 
   /** Incremental media near-dedup — [[graft.operators.Dedup
@@ -796,15 +794,13 @@ object Multimodal {
     * reused by the probe, the within-batch pass and the delta). */
   def incrementalMediaDedup(batch: DataFrame, index: MediaHashIndex,
       idCol: String, bytesCol: String, kindCol: String,
-      maxHamming: Int = 3, broadcastBatch: Boolean = true)
-      : (DataFrame, MediaHashIndex) = {
+      maxHamming: Int = 3): (DataFrame, MediaHashIndex) = {
     import graft.operators.Dedup
     val feat = mediaHashes(batch, idCol, bytesCol, kindCol)
       .localCheckpoint(false)
     val okFeat = feat.filter(col("ok"))
       .select(col(idCol).as("b_id"), col("kind"), col("dhash"))
-    val vsCorpus = probeMediaHashes(okFeat, index, maxHamming,
-      broadcastBatch)
+    val vsCorpus = probeMediaHashes(okFeat, index, maxHamming)
       .select(col("b_id").as(idCol)).distinct()
       .localCheckpoint(false)
     val kept = okFeat.select(col("b_id").as("id"), col("kind"),

@@ -67,13 +67,12 @@ object Pipeline {
       transform: DataFrame => DataFrame,
       matcher: DataFrame => (DataFrame, DataFrame),
       baseDir: String, session: String, at: Instant,
-      names: Names = Names(), format: String = "parquet",
-      coalesceTo: Option[Int] = None): Exports = {
+      names: Names = Names(), format: String = "parquet"): Exports = {
     val extracted = extract()
     val ePath = StageSink.save(extracted, baseDir, "EXTRACT_FILES",
-      names.extract, at, Seq(session), format, coalesceTo)
+      names.extract, at, Seq(session), format)
     val rest = runFromExtracted(spark, read(spark, extracted, ePath, format),
-      transform, matcher, baseDir, session, at, names, format, coalesceTo)
+      transform, matcher, baseDir, session, at, names, format)
     rest.copy(extract = Some(ePath))
   }
 
@@ -85,43 +84,34 @@ object Pipeline {
       transform: DataFrame => DataFrame,
       matcher: DataFrame => (DataFrame, DataFrame),
       baseDir: String, session: String, at: Instant,
-      names: Names = Names(), format: String = "parquet",
-      coalesceTo: Option[Int] = None): Exports = {
+      names: Names = Names(), format: String = "parquet"): Exports = {
     val transformed = transform(extracted)
     val tPath = StageSink.save(transformed, baseDir, "TRANSFORMED_FILES",
-      names.transformed, at, Seq(session), format, coalesceTo)
+      names.transformed, at, Seq(session), format)
     val rest = runFromTransformed(spark,
       read(spark, transformed, tPath, format),
-      matcher, baseDir, session, at, names, format, coalesceTo)
+      matcher, baseDir, session, at, names, format)
     rest.copy(transformed = Some(tPath))
   }
 
   /** MATCH only, from a transformed frame (the `-m` flow,
-    * __main__.py:187-214: two exports, matched + query). */
+    * __main__.py:187-214: two exports, matched + query). To resume from
+    * the newest prior export, pass
+    * `StageSink.loadLatest(spark, base, "TRANSFORMED_FILES", names.transformed)`. */
   def runFromTransformed(
       spark: SparkSession,
       transformed: DataFrame,
       matcher: DataFrame => (DataFrame, DataFrame),
       baseDir: String, session: String, at: Instant,
-      names: Names = Names(), format: String = "parquet",
-      coalesceTo: Option[Int] = None): Exports = {
+      names: Names = Names(), format: String = "parquet"): Exports = {
     val (matched, query) = matcher(transformed)
     val (mPath, qPath) = Parallelism.join2(
       StageSink.save(matched, baseDir, "MATCHED_FILES", names.matched, at,
-        Seq(session), format, coalesceTo),
+        Seq(session), format),
       StageSink.save(query, baseDir, "QUERY_FILES", names.query, at,
-        Seq(session), format, coalesceTo))
+        Seq(session), format))
     Exports(matched = Some(mPath), query = Some(qPath))
   }
-
-  /** Resume a stage from its LATEST prior export, like the reference's
-    * `-t`/`-m` flows re-reading the newest stage file: e.g.
-    * `resumeLatest(spark, base, "TRANSFORMED_FILES", names.transformed)`
-    * feeds [[runFromTransformed]]. */
-  def resumeLatest(
-      spark: SparkSession, baseDir: String, stage: String, name: String,
-      format: String = "parquet"): DataFrame =
-    StageSink.loadLatest(spark, baseDir, stage, name, format)
 
   /** Reads back the export of `written` at `path`. Parquet takes the
     * written schema instead of inferring it from the footers, which

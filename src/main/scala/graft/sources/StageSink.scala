@@ -34,18 +34,16 @@ object StageSink {
 
   /** Writes `df` to
     * `<baseDir>/<stage>/<name>_[<info->]<timestamp>` and returns the
-    * path. `coalesceTo` bounds output files for small exports (None =
-    * keep the natural partitioning — the right call at scale).
+    * path. The export keeps the frame's own partitioning: one file per
+    * partition, the right call at scale.
     */
   def save(
       df: DataFrame, baseDir: String, stage: String, name: String,
       at: Instant, additionalInfo: Seq[String] = Nil,
-      format: String = "parquet",
-      coalesceTo: Option[Int] = None): String = {
+      format: String = "parquet"): String = {
     val infix =
       if (additionalInfo.isEmpty) "" else additionalInfo.mkString("-") + "-"
-    writeTo(df, baseDir, stage, s"${name}_$infix${stamp(at)}", format,
-      coalesceTo)
+    writeTo(df, baseDir, stage, s"${name}_$infix${stamp(at)}", format)
   }
 
   /** Batch-id-keyed snapshot: `<baseDir>/<stage>/<name>_b<batchId>`.
@@ -60,19 +58,16 @@ object StageSink {
     * equal to name order. */
   def saveBatch(
       df: DataFrame, baseDir: String, stage: String, name: String,
-      batchId: Long, format: String = "parquet",
-      coalesceTo: Option[Int] = None): String =
+      batchId: Long, format: String = "parquet"): String =
     writeTo(df, baseDir, stage, f"${name}_b$batchId%010d", format,
-      coalesceTo, mode = "overwrite")
+      mode = "overwrite")
 
   private def writeTo(
       df: DataFrame, baseDir: String, stage: String, folder: String,
-      format: String, coalesceTo: Option[Int],
-      mode: String = "error"): String = {
+      format: String, mode: String = "error"): String = {
     require(Stages.contains(stage), s"unknown stage $stage (want $Stages)")
     val path = s"$baseDir/$stage/$folder"
-    val out = coalesceTo.map(df.coalesce).getOrElse(df)
-    val writer = out.write.mode(mode)
+    val writer = df.write.mode(mode)
     (format match {
       case "csv" => writer.option("header", "true")
       case _ => writer

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.Md5Uniform
 import graft.operators.Corpus
 
 /** Streaming UniMax sampling: the FROZEN per-source epoch rates from a
@@ -31,10 +32,6 @@ import graft.operators.Corpus
   */
 object StreamUnimax {
 
-  private def uniform(idCol: String, seed: String) =
-    (conv(substring(md5(concat(col(idCol).cast("string"), lit(seed))),
-      1, 8), 16, 10).cast("long") + lit(0.5)) / lit(4294967296.0)
-
   /** (everything in `stream`, copy) — each doc emitted
     * floor(rate_s) times plus one more with probability frac(rate_s),
     * exactly the batch arithmetic. Unknown sources drop (rate 0). */
@@ -42,7 +39,7 @@ object StreamUnimax {
       rates: Map[String, Double], seed: String = ""): DataFrame = {
     val rate = coalesce(
       element_at(typedlit(rates), col(sourceCol)), lit(0.0))
-    val u = uniform(idCol, seed)
+    val u = Md5Uniform.uniform(col(idCol), seed)
     val copies = (floor(rate).cast("int") +
       when(u < rate - floor(rate), 1).otherwise(0))
     val idx = when(copies > 0, sequence(lit(0), copies - lit(1)))
@@ -284,7 +281,7 @@ object StreamUnimax {
       seed: String = ""): DataFrame = {
     val rate = coalesce(
       element_at(typedlit(rates), col(sourceCol)), lit(0.0))
-    val u = uniform(idCol, seed)
+    val u = Md5Uniform.uniform(col(idCol), seed)
     val copies = (floor(rate).cast("int") +
       when(u < rate - floor(rate), 1).otherwise(0))
     stream

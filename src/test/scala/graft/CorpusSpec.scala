@@ -438,7 +438,7 @@ class CorpusSpec extends SparkSpec {
     // the flattened mix upsamples: rates land on 1.0 (big) and 3.0
     // (small) up to ulps, both safely inside the uniform's granularity
     val mixed = graft.operators.Corpus.mixSources(docs, "doc_id",
-      "source", t5, maxRepeat = 3, replayableUniform = true)
+      "source", t5, maxRepeat = 3)
       .groupBy("source").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(mixed("big") === 90L && mixed("small") === 30L)

@@ -1,6 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
+
 import graft.functions.FuzzyImpl
 import graft.operators.FuzzyMatch
 
@@ -47,41 +56,6 @@ class FuzzyMatchSpec extends SparkSpec {
     assert(out(0).getLong(1) === 100L) // jon smith -> john smith
     assert(out(1).getLong(1) === 200L) // exact
     assert(out(1).getBoolean(3) === true) // ann leigh also within 3
-  }
-
-  test("salting a skewed block leaves results identical") {
-    val scraped = Tables(spark, "/root/testdata/sf0.001").customer
-      .selectExpr("c_custkey AS s_id",
-        "concat('Cust ', CAST(c_custkey AS STRING)) AS s_name",
-        "CAST(1 AS INT) AS s_blk") // everything in ONE block: max skew
-    val roster = Tables(spark, "/root/testdata/sf0.001").customer
-      .selectExpr("c_custkey AS r_id", "c_name AS r_name",
-        "CAST(1 AS INT) AS r_blk")
-    def run(salt: Int) = FuzzyMatch.bestByDistance(
-      scraped, roster, "s_id", "r_id", "s_blk", "r_blk",
-      (a, b) => levenshtein(a, b).cast("long"), "s_name", "r_name",
-      threshold = 12, saltBuckets = salt)
-      .orderBy("s_id").collect().map(_.toSeq).toSeq
-    assert(run(1) === run(8))
-  }
-
-  test("link salting on a skewed shuffle join leaves results identical") {
-    val base = Tables(spark, "/root/testdata/sf0.001").customer.limit(300)
-    val left = base.selectExpr("c_custkey AS l_id",
-      "concat('Cust ', CAST(c_custkey AS STRING)) AS l_first",
-      "c_name AS l_last", "CAST(1 AS INT) AS l_blk") // ONE block: max skew
-    val right = base.selectExpr("c_custkey AS r_id", "c_name AS r_first",
-      "c_name AS r_last", "CAST(1 AS INT) AS r_blk")
-    val rules = Seq(
-      FuzzyMatch.Rule("l_first", "r_first",
-        (a, b) => call_function("jaro_winkler", a, b), threshold = 50),
-      FuzzyMatch.Rule("l_last", "r_last",
-        (a, b) => call_function("jaro_winkler", a, b), threshold = 50))
-    def run(salt: Int) = FuzzyMatch.link(
-      left, right, "l_id", "r_id", "l_blk", "r_blk", rules,
-      requiredOverall = 50, broadcastRight = false, saltBuckets = salt)
-      .orderBy("s_id").collect().map(_.toSeq).toSeq
-    assert(run(1) === run(8))
   }
 
   test("second_max is the exact multiset second-largest, map-side merged") {
@@ -176,5 +150,87 @@ class FuzzyMatchSpec extends SparkSpec {
     val rows = out.collect()
     assert(rows.length === 1)
     assert(rows(0).getLong(0) === 1L && rows(0).getLong(1) === 10L)
+  }
+
+  // ------------------------------------------------------------------
+  // link ≡ a plain-Scala loop over every same-block pair
+  // ------------------------------------------------------------------
+
+  /** FuzzyMatch.levenshteinRatio on the JVM: the same double
+    * arithmetic over the same integer edit distance. */
+  private def ratio(a: String, b: String): Double = {
+    val maxLen = math.max(a.length, b.length)
+    if (maxLen == 0) 100.0
+    else 100.0 * (1.0 - FuzzyImpl.levenshtein(a, b).toDouble / maxLen.toDouble)
+  }
+
+  /** Short names from a small pool, so exact ties, near scores and
+    * empty strings all occur. */
+  private val name = Gen.oneOf("ann", "anne", "an", "bob", "rob",
+    "robert", "", "zoë", "zoe", "lee", "leigh")
+
+  private val linkCase = for {
+    nl <- Gen.choose(1, 12)
+    nr <- Gen.choose(1, 12)
+    left <- Gen.listOfN(nl, Gen.zip(name, name, Gen.choose(0, 2)))
+    right <- Gen.listOfN(nr, Gen.zip(name, name, name, Gen.choose(0, 3)))
+    thA <- Gen.oneOf(0.0, 50.0, 70.0)
+    thB <- Gen.oneOf(0.0, 60.0, 100.0)
+    wB <- Gen.oneOf(1.0, 2.0)
+    required <- Gen.oneOf(0.0, 40.0, 65.0)
+    margin <- Gen.oneOf(0.0, 3.0, 20.0)
+  } yield (left, right, thA, thB, wB, required, margin)
+
+  test("link equals a plain-Scala pair loop: thresholds, argmax, dup flag") {
+    val params = Check.Parameters.default
+      .withMinSuccessfulTests(30)
+      .withInitialSeed(Seed(20261019L))
+      .withWorkers(1)
+    val p = Prop.forAllNoShrink(linkCase) {
+      case (left, right, thA, thB, wB, required, margin) =>
+        val l = left.zipWithIndex.map { case ((a, b, blk), i) =>
+          (i.toLong, a, b, blk) }
+        // roster ids descend against row order, so the id tie-break is
+        // not the input order
+        val r = right.zipWithIndex.map { case ((a, alt, b, blk), i) =>
+          (100L - i, a, alt, b, blk) }
+        val lDf = spark.createDataFrame(l.map(t => Row(t._1, t._2, t._3, t._4))
+          .asJava, StructType(Seq(StructField("l_id", LongType),
+            StructField("l_a", StringType), StructField("l_b", StringType),
+            StructField("l_blk", IntegerType))))
+        val rDf = spark.createDataFrame(r.map(t => Row(t._1, t._2, t._3, t._4, t._5))
+          .asJava, StructType(Seq(StructField("r_id", LongType),
+            StructField("r_a", StringType), StructField("r_alt", StringType),
+            StructField("r_b", StringType), StructField("r_blk", IntegerType))))
+        val rules = Seq(
+          FuzzyMatch.Rule("l_a", Seq("r_a", "r_alt"),
+            FuzzyMatch.levenshteinRatio, thA),
+          FuzzyMatch.Rule("l_b", Seq("r_b"), FuzzyMatch.levenshteinRatio,
+            thB, wB))
+        val got = FuzzyMatch.link(lDf, rDf, "l_id", "r_id", "l_blk", "r_blk",
+          rules, requiredOverall = required, dupMargin = margin)
+          .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2),
+            x.getBoolean(3))).sortBy(_._1).toSeq
+        def keep(s: Double, th: Double) = if (s >= th) s else 0.0
+        val want = l.flatMap { case (lid, la, lb, lblk) =>
+          val cands = r.filter(_._5 == lblk).map { case (rid, ra, ralt, rb, _) =>
+            val sa = keep(math.max(ratio(la, ra), ratio(la, ralt)), thA)
+            val sb = keep(ratio(lb, rb), thB)
+            rid -> (sa * 1.0 + sb * wB) / (1.0 + wB)
+          }.filter(_._2 >= required)
+          if (cands.isEmpty) None
+          else {
+            val (bestId, best) = cands.minBy { case (rid, o) => (-o, rid) }
+            val second = cands.map(_._2).sorted.reverse.lift(1)
+            Some((lid, bestId,
+              BigDecimal(best).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+                .toDouble,
+              second.exists(_ >= best - margin)))
+          }
+        }
+        (got == want) :| s"got $got\nwant $want"
+    }
+    val res = Check.check(params, p)
+    assert(res.passed, Pretty.pretty(res))
   }
 }

@@ -72,21 +72,27 @@ class GraftExtensionsSpec extends SparkSpec {
     GraftExtensions.require(spark) // the full session passes
   }
 
-  test("no extension probe outside GraftExtensions.require") {
+  /** Every `src/main` line matching `pattern`, as (path, 0-based line
+    * index, the file's lines). */
+  private def mainSourceHits(pattern: scala.util.matching.Regex)
+      : Seq[(String, Int, Vector[String])] = {
     val root = new java.io.File("src/main/scala")
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val all = files(root)
     assert(all.size > 50, s"source tree not found under ${root.getAbsolutePath}")
-    val probe = "functionExists|getActiveSession".r
-    val hits = for {
+    for {
       f <- all
       src = scala.io.Source.fromFile(f, "UTF-8")
       lines = try src.getLines().toVector finally src.close()
       (line, i) <- lines.zipWithIndex
-      if probe.findFirstIn(line).nonEmpty
+      if pattern.findFirstIn(line).nonEmpty
     } yield (f.getPath, i, lines)
+  }
+
+  test("no extension probe outside GraftExtensions.require") {
+    val hits = mainSourceHits("functionExists|getActiveSession".r)
     assert(hits.size === 1, "extension probes: " +
       hits.map { case (p, i, ls) => s"$p:${i + 1}: ${ls(i).trim}" }.mkString("; "))
     val (path, i, lines) = hits.head
@@ -108,6 +114,29 @@ class GraftExtensionsSpec extends SparkSpec {
       (line, i) <- lines.zipWithIndex
       if "typed[lL]it".r.findFirstIn(line).nonEmpty
     } yield s"$path:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("; "))
+  }
+
+  test("the md5 prefix is built only in Md5Uniform") {
+    // every replayable draw goes through the one helper; DuckDB oracle
+    // text (stripMargin lines, starting with `|`) replays the same
+    // prefix and is exempt
+    val hits = mainSourceHits("""substring\(md5\(""".r).collect {
+      case (p, i, ls) if !ls(i).trim.startsWith("|") &&
+          !p.endsWith("graft/functions/Md5Uniform.scala") =>
+        s"$p:${i + 1}: ${ls(i).trim}"
+    }
+    assert(hits.isEmpty, hits.mkString("; "))
+  }
+
+  test("the deleted join, sampling and export options stay deleted") {
+    // each had one value every query passed; a second code path behind
+    // a switch no workload sets is untested configuration
+    val gone = ("\\b(replayableUniform|replayableWordHash|equalFast|" +
+      "broadcastRight|saltBuckets|packIds|broadcastBatch|broadcastStats|" +
+      "coalesceTo|resumeLatest|SkewJoin|saltedInner)\\b").r
+    val hits = mainSourceHits(gone).map { case (p, i, ls) =>
+      s"$p:${i + 1}: ${ls(i).trim}" }
     assert(hits.isEmpty, hits.mkString("; "))
   }
 }

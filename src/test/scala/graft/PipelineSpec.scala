@@ -172,7 +172,7 @@ class PipelineSpec extends SparkSpec {
     // -m resume flow: newest transformed export -> match-only rerun
     val resumed = Pipeline.runFromTransformed(
       spark,
-      Pipeline.resumeLatest(spark, base, "TRANSFORMED_FILES",
+      StageSink.loadLatest(spark, base, "TRANSFORMED_FILES",
         "Ratings-Transformed"),
       matchStage, base, "2023-2024",
       Instant.parse("2024-05-07T00:00:00.000001Z"))

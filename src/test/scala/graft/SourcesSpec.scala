@@ -197,7 +197,7 @@ class SourcesSpec extends SparkSpec {
     val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
     val at = Instant.parse("2024-03-04T05:06:07.000123Z")
     val path = StageSink.save(df, base, "TRANSFORMED_FILES", "Ratings-Transformed",
-      at, additionalInfo = Seq("2023-2024"), format = "csv", coalesceTo = Some(1))
+      at, additionalInfo = Seq("2023-2024"), format = "csv")
     assert(path === s"$base/TRANSFORMED_FILES/" +
       "Ratings-Transformed_2023-2024-2024-03-04-050607-000123")
     val back = spark.read.option("header", "true").csv(path)

@@ -67,13 +67,6 @@ class StatsSpec extends SparkSpec {
     }
     assert(Stats.zscoreOutliersAgg(df, "k", col("v"), 100.0).columns
       .toSeq === Seq("k", "id", "v", "zscore"))
-    // broadcastStats=false (the unbounded-key escape) — same rows
-    val noBc = Stats.zscoreOutliersAgg(df, "k", col("v"), 3.0,
-      broadcastStats = false)
-      .select("id").as[Long].collect().toSet
-    val bc = Stats.zscoreOutliersAgg(df, "k", col("v"), 3.0)
-      .select("id").as[Long].collect().toSet
-    assert(noBc === bc)
   }
 
   test("madOutliers: catches the spike a z-score masks") {
