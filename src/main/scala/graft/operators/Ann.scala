@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -649,6 +650,9 @@ object Ann {
   // the index directory carries EVERYTHING a later session needs to
   // search (codes, centroids, codebooks, the optional OPQ rotation),
   // so the corpus encode never re-runs and the models never retrain.
+  // PQ and SQ8 directories share one layout and one lifecycle:
+  // [[saveEncoded]] writes them, [[loadEncoded]] and [[encodedRows]]
+  // read them back, [[appendDelta]] and [[writeDelta]] grow them.
   // ------------------------------------------------------------------
 
   /** A loaded index directory: the encoded corpus plus every model
@@ -672,12 +676,13 @@ object Ann {
     * (`dir/codebooks`), the optional OPQ rotation as a [[Pca.Model]]
     * artifact (`dir/rotation` — pass the PERMUTED model, i.e.
     * [[Pca.opqModel]]'s output, which is what [[Pca.rotateOpq]]
-    * rotated the corpus by), and a one-row `dir/meta`. Searching a
-    * load of this directory is bit-identical to searching the
-    * in-memory build (AnnSpec pins plain, residual and rotated
-    * paths) — FAISS ships OPQ matrices inside the index for the same
-    * reason: an index whose rotation lives only in session memory
-    * cannot outlive the session. */
+    * rotated the corpus by), and a one-row `dir/meta`, in
+    * [[saveEncoded]]'s commit order. Searching a load of this
+    * directory is bit-identical to searching the in-memory build
+    * (AnnSpec pins plain, residual and rotated paths) — FAISS ships
+    * OPQ matrices inside the index for the same reason: an index
+    * whose rotation lives only in session memory cannot outlive the
+    * session. */
   def saveOpqIndex(dir: String, pqIndex: DataFrame,
       centroids: DataFrame, codebooks: Seq[Seq[Seq[Float]]],
       idCol: String, vecCol: String,
@@ -685,40 +690,92 @@ object Ann {
       residual: Boolean = false): Unit = {
     val spark = pqIndex.sparkSession
     import spark.implicits._
-    // the encoded corpus is the only corpus-sized piece — it keeps
-    // its partitioning; everything else coalesces to one file. The
-    // data artifacts land in DISJOINT subdirectories, so their write
-    // jobs are independent — run them concurrently (guide §2.6) so
-    // the tiny model writes back-fill the encode write's tail instead
-    // of each paying its own full job latency in sequence. `meta`
-    // ALONE writes after the rest: its _SUCCESS doubles as the
-    // directory's commit marker (q188/q192's build-once guards key on
-    // it), so it must not become visible while a crash could still
-    // leave the other artifacts half-written.
-    Parallelism.runAll(Seq(
-      () => pqIndex
-        .select(col(idCol), col("centroid_id"), col("codes"),
-          col("vec_norm"))
-        .write.mode("overwrite").parquet(s"$dir/index"),
-      () => centroids.select(col(idCol).as("id"), col(vecCol).as("vec"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"),
-      () => codebooks.zipWithIndex.flatMap { case (book, s) =>
-        book.zipWithIndex.map { case (cv, c) => (s, c, cv) }
-      }.toDF("sub", "code", "vec")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks"),
-      () => rotation.foreach(Pca.save(spark, _, s"$dir/rotation"))))
-    Seq((residual, rotation.isDefined, idCol, vecCol))
-      .toDF("residual", "rotated", "id_col", "vec_col")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    saveEncoded(dir,
+      pqIndex.select(col(idCol), col("centroid_id"), col("codes"),
+        col("vec_norm")),
+      centroids, idCol, vecCol,
+      Seq(
+        () => codebooks.zipWithIndex.flatMap { case (book, s) =>
+          book.zipWithIndex.map { case (cv, c) => (s, c, cv) }
+        }.toDF("sub", "code", "vec")
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks"),
+        () => rotation.foreach(Pca.save(spark, _, s"$dir/rotation"))),
+      Seq((residual, rotation.isDefined, idCol, vecCol))
+        .toDF("residual", "rotated", "id_col", "vec_col"))
   }
 
-  /** Restore a [[saveOpqIndex]] directory. The encoded corpus comes
-    * back as a lazy parquet scan (never collected) — the base table
-    * unioned with any committed streaming-ingest delta roots — minus
-    * any tombstoned ids ([[IndexMaintenance.addTombstones]] — deletion
-    * without re-encoding; [[IndexMaintenance.compactPqIndex]] folds
-    * deltas in and reclaims tombstoned rows); centroids, codebooks
-    * and rotation are the bounded model artifacts.
+  /** The commit-ordered save behind [[saveOpqIndex]] and
+    * [[saveSq8Index]]. The encoded corpus `index` (the only
+    * corpus-sized piece — it keeps its partitioning), the centroids
+    * and the index type's own `models` land in DISJOINT
+    * subdirectories, so their write jobs are independent — they run
+    * concurrently (guide §2.6) and the tiny model writes back-fill
+    * the encode write's tail. `meta` ALONE writes after the rest: its
+    * _SUCCESS doubles as the directory's commit marker (q188/q192's
+    * build-once guards key on it), so it must not become visible
+    * while a crash could still leave the other artifacts
+    * half-written. */
+  private def saveEncoded(dir: String, index: DataFrame,
+      centroids: DataFrame, idCol: String, vecCol: String,
+      models: Seq[() => Unit], meta: DataFrame): Unit = {
+    Parallelism.runAll(Seq(
+      () => index.write.mode("overwrite").parquet(s"$dir/index"),
+      () => centroids.select(col(idCol).as("id"), col(vecCol).as("vec"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"))
+      ++ models)
+    meta.coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+  }
+
+  /** Restore a [[saveOpqIndex]] directory through [[loadEncoded]]:
+    * the encoded corpus is [[encodedRows]]' lazy scan (never
+    * collected); centroids, codebooks and rotation are the bounded
+    * model artifacts. */
+  def loadOpqIndex(spark: SparkSession, dir: String): PersistedPqIndex = {
+    val (d, books) = loadEncoded(spark, dir) {
+      spark.read.parquet(s"$dir/codebooks")
+        .select("sub", "code", "vec").orderBy(col("sub"), col("code"))
+        .collect()
+        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .map(_._2.toSeq.map(_.getSeq[Float](2).toSeq))
+    }
+    PersistedPqIndex(d.rows, d.centroids, d.cents, PqModel(books),
+      if (d.meta.getAs[Boolean]("rotated"))
+        Some(Pca.load(spark, s"$dir/rotation"))
+      else None,
+      d.meta.getAs[Boolean]("residual"), d.idCol, d.vecCol)
+  }
+
+  /** What [[loadEncoded]] restores for either encoded index type. */
+  private final case class EncodedParts(meta: Row, rows: DataFrame,
+      centroids: DataFrame, cents: CentroidSet, idCol: String,
+      vecCol: String)
+
+  /** The load behind [[loadOpqIndex]] and [[loadSq8Index]]: heal an
+    * interrupted compaction that left `index` unreadable, read `meta`,
+    * the index type's `model` and the centroid set CONCURRENTLY
+    * (disjoint files, guide §2.6), and open the encoded corpus as
+    * [[encodedRows]]. */
+  private def loadEncoded[M](spark: SparkSession, dir: String)(
+      model: => M): (EncodedParts, M) = {
+    IndexMaintenance.healUnreadable(spark, dir, Seq("index"))
+    val (meta, (m, cents)) = Parallelism.join2(
+      spark.read.parquet(s"$dir/meta").head,
+      Parallelism.join2(model,
+        collectCentroids(spark.read.parquet(s"$dir/centroids"),
+          "id", "vec")))
+    val (idCol, vecCol) =
+      (meta.getAs[String]("id_col"), meta.getAs[String]("vec_col"))
+    (EncodedParts(meta, encodedRows(spark, dir, idCol),
+      spark.read.parquet(s"$dir/centroids")
+        .select(col("id").as(idCol), col("vec").as(vecCol)),
+      cents, idCol, vecCol), m)
+  }
+
+  /** An encoded directory's corpus as one lazy parquet scan: the base
+    * `index` unioned with every committed delta root ([[deltaRoots]]),
+    * minus the tombstoned ids ([[IndexMaintenance.addTombstones]] —
+    * deletion without re-encoding; [[IndexMaintenance.compactPqIndex]]
+    * folds deltas in and reclaims tombstoned rows).
     *
     * With deltas present the union also DEDUPES on id: a compaction
     * that crashed between swapping its fold in and deleting the
@@ -726,100 +783,90 @@ object Ann {
     * encoding is deterministic under frozen models), and the dedup
     * heals that at one extra exchange until the next compact removes
     * it. Delta-free indexes — the steady state — pay nothing. */
-  def loadOpqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): PersistedPqIndex = {
-    IndexMaintenance.healUnreadable(spark, dir, Seq("index"))
-    // meta, codebooks and centroids live in disjoint files — read the
-    // model artifacts concurrently (guide §2.6)
-    val (meta, (books, cents)) = Parallelism.join2(
-      spark.read.parquet(s"$dir/meta")
-        .select("residual", "rotated", "id_col", "vec_col").head,
-      Parallelism.join2(
-        spark.read.parquet(s"$dir/codebooks")
-          .select("sub", "code", "vec").orderBy(col("sub"), col("code"))
-          .collect()
-          .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-          .map(_._2.toSeq.map(_.getSeq[Float](2).toSeq)),
-        collectCentroids(spark.read.parquet(s"$dir/centroids"),
-          "id", "vec")))
-    val (residual, rotated) = (meta.getBoolean(0), meta.getBoolean(1))
-    val (idCol, vecCol) = (meta.getString(2), meta.getString(3))
+  private def encodedRows(spark: SparkSession, dir: String,
+      idCol: String): DataFrame = {
     val deltas = deltaRoots(spark, dir)
-    val encoded = {
-      val base = spark.read.parquet(s"$dir/index")
+    val base = spark.read.parquet(s"$dir/index")
+    IndexMaintenance.dropTombstoned(
       if (deltas.isEmpty) base
       else (base +: deltas.map(spark.read.parquet(_)))
         .reduce(_ unionByName _)
-        .dropDuplicates(idCol)
-    }
-    PersistedPqIndex(
-      IndexMaintenance.dropTombstoned(encoded, spark, dir, idCol),
-      spark.read.parquet(s"$dir/centroids")
-        .select(col("id").as(idCol), col("vec").as(vecCol)),
-      cents, PqModel(books),
-      if (rotated) Some(Pca.load(spark, s"$dir/rotation")) else None,
-      residual, idCol, vecCol)
+        .dropDuplicates(idCol),
+      spark, dir, idCol)
   }
 
   /** FAISS `add()` for the PERSISTED directory: encode a RAW batch
     * under the stored (frozen) centroids + codebooks — rotating it
-    * first when the index is rotated — and APPEND the codes to
-    * `dir/index`. The existing corpus is never re-read or re-encoded;
-    * encoding is deterministic under frozen models, so the grown
-    * directory searches identically to one saved whole
-    * ([[appendPqIndex]]'s contract carried to disk; AnnSpec pins the
-    * search identity, rotated path included). Same staleness note as
-    * [[appendPqIndex]]: appended vectors quantize against the
+    * first when the index is rotated — and commit the codes as a
+    * delta root ([[appendDelta]]). The existing corpus is never
+    * re-read or re-encoded; encoding is deterministic under frozen
+    * models, so the grown directory searches identically to one saved
+    * whole ([[appendPqIndex]]'s contract carried to disk; AnnSpec pins
+    * the search identity, rotated path included). Same staleness note
+    * as [[appendPqIndex]]: appended vectors quantize against the
     * ORIGINAL training distribution — retrain + rebuild when the
-    * corpus moves.
+    * corpus moves. Run [[IndexMaintenance.compactPqIndex]] on the
+    * usual cadence — it folds delta roots into the base and reclaims
+    * tombstones. */
+  def appendOpqIndex(spark: SparkSession, dir: String,
+      batch: DataFrame): Unit =
+    appendDelta(spark, dir, batch) {
+      val idx = loadOpqIndex(spark, dir)
+      (idx.idCol, idx.vecCol, encodeForIndex(idx, _))
+    }
+
+  /** The append behind [[appendOpqIndex]] and [[appendSq8Index]].
     *
-    * IDEMPOTENT (r16, the r15 ADVICE): the encoded batch lands in its
-    * own batch-keyed DELTA ROOT (`dir/index_delta/append_<key>`, the
-    * streaming-ingest mechanism) instead of `mode("append")` into
-    * `dir/index` — a caller-level retry of a failed/ambiguous append
-    * recomputes the same content key and OVERWRITES its own folder,
-    * where a raw append would duplicate every row (duplicates survive
-    * the delta-free load path and inflate rerank/window results). The
-    * key is order-independent over the batch's CONTENT (three xors
-    * of independently salted per-row hashes over id AND vector, + a
-    * multiplicity-sensitive decimal hash sum + count — one tiny
-    * aggregate action), so a retry that reshuffles
-    * rows still lands on the
-    * same folder, while a later batch reusing ids with DIFFERENT
-    * vectors keys to a new folder instead of being silently skipped
-    * as a retry (note: re-ingesting changed content under a live id
-    * is still the tombstone-then-new-id discipline — the id-dedup on
-    * load picks an arbitrary winner between same-id rows);
-    * `_SUCCESS` commits the folder atomically for concurrent loads.
-    * Run
-    * [[IndexMaintenance.compactPqIndex]] on the usual cadence — it
-    * folds delta roots into the base and reclaims tombstones. */
-  def appendOpqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame): Unit = {
-    // resolve any interrupted compaction BEFORE appending: a stale
-    // completed rewrite swapped in later would silently drop every
-    // row appended after the crash
-    IndexMaintenance.healForWrite(spark, dir, Seq("index"))
-    val idx = loadOpqIndex(spark, dir)
-    val keyOpt = batchContentKey(batch, idx.idCol, idx.vecCol)
-    if (keyOpt.isEmpty) return // empty batch: nothing to do
-    val dest = s"$dir/index_delta/append_${keyOpt.get}"
-    // an ALREADY-COMMITTED retry is a true no-op (the ingestWriter
-    // rule): encoding is deterministic under frozen models, so the
-    // bytes would be identical — and skipping keeps the committed
-    // folder visible to concurrent loads, where the overwrite's
-    // delete-then-rewrite window would transiently break them
-    val committed = new org.apache.hadoop.fs.Path(s"$dest/_SUCCESS")
-    val fs = committed.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(committed))
-      encodeForIndex(idx, batch)
-        .write.mode("overwrite").parquet(dest)
+    * - Heal first: any interrupted compaction is resolved BEFORE
+    *   appending, because a stale completed rewrite swapped in later
+    *   would silently drop every row appended after the crash.
+    * - `load` opens the directory and returns its (idCol, vecCol) and
+    *   its frozen-model encoder.
+    * - IDEMPOTENT: the encoded batch lands in its own content-keyed
+    *   delta root `append_<key>` ([[batchContentKey]]) through
+    *   [[writeDelta]], instead of `mode("append")` into `dir/index`. A
+    *   caller-level retry of a failed or ambiguous append recomputes
+    *   the same key, and an already-committed key is skipped; a raw
+    *   append would duplicate every row (duplicates survive the
+    *   delta-free load path and inflate rerank/window results). A
+    *   later batch reusing ids with DIFFERENT vectors keys to a new
+    *   root instead of being skipped as a retry (re-ingesting changed
+    *   content under a live id is still the tombstone-then-new-id
+    *   discipline — the id-dedup on load picks an arbitrary winner
+    *   between same-id rows).
+    * - An empty batch writes nothing. */
+  private def appendDelta(spark: SparkSession, dir: String,
+      batch: DataFrame)(
+      load: => (String, String, DataFrame => DataFrame)): Unit = {
+    IndexMaintenance.recover(spark, dir, Seq("index"))
+    val (idCol, vecCol, encode) = load
+    batchContentKey(batch, idCol, vecCol).foreach { key =>
+      writeDelta(spark, dir, s"append_$key")(Some(encode(batch)))
+    }
+  }
+
+  /** The one writer of delta roots: commit `rows` as
+    * `dir/index_delta/<name>`, unless that root is already committed.
+    * Delta names are deterministic (a content key for appends, the
+    * batch id for streaming ingest), so an already-committed root is
+    * a replay whose bytes would be identical under the frozen models:
+    * skipping it is a true no-op, and keeps the committed folder
+    * visible to concurrent loads, where an overwrite's
+    * delete-then-rewrite window would transiently break them.
+    * `rows` is only evaluated when the root is not committed; None
+    * writes nothing. `_SUCCESS` commits the folder atomically for
+    * concurrent loads. */
+  private[graft] def writeDelta(spark: SparkSession, dir: String,
+      name: String)(rows: => Option[DataFrame]): Unit = {
+    val dest = new Path(deltaDir(dir), name)
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(new Path(dest, "_SUCCESS")))
+      rows.foreach(_.write.mode("overwrite").parquet(dest.toString))
   }
 
   /** Order-independent append idempotency key over a batch's (id,
-    * vec) CONTENT + count, shared by [[appendOpqIndex]] and
-    * [[appendSq8Index]]. Three xors of INDEPENDENTLY SALTED per-row
+    * vec) CONTENT + count, used by [[appendDelta]]. Three xors of
+    * INDEPENDENTLY SALTED per-row
     * hashes PLUS a multiplicity-sensitive DECIMAL(38,0) sum of the
     * same hashes. The xors alone are GF(2)-linear in row membership,
     * so they are multiplicity-blind mod 2: duplicate rows cancel in
@@ -839,8 +886,8 @@ object Ann {
     * under the r17 3-xor key no longer match keys computed by this
     * code — a cross-version retry of a batch already appended by an
     * r17 build keys to a NEW folder and duplicates the batch's rows.
-    * The duplicates are healed at read time (loadOpqIndex/loadSq8Index
-    * dedupe on id across delta roots) and removed permanently by the
+    * The duplicates are healed at read time ([[encodedRows]] dedupes
+    * on id across delta roots) and removed permanently by the
     * next compaction, but the retry is not the no-op it is within one
     * version. Appending across an engine upgrade: compact first. */
   private[graft] def batchContentKey(batch: DataFrame, idCol: String,
@@ -875,24 +922,23 @@ object Ann {
       idx.residual)
   }
 
-  /** Streaming-ingest delta roots under `dir/index_delta` — one
-    * batch-id-keyed folder per micro-batch ([[graft.streaming
-    * .StreamAnn.ingestWriter]] overwrites its own folder on replay,
-    * which is what makes streaming appends idempotent where
-    * `mode("append")` into `dir/index` is not). Only folders with a
-    * committed `_SUCCESS` count: a folder mid-(re)write is invisible
-    * to concurrent loads and becomes visible atomically. */
-  private[graft] def deltaRoots(spark: org.apache.spark.sql.SparkSession,
+  /** The folder holding an encoded directory's delta roots. */
+  private[graft] def deltaDir(dir: String): Path =
+    new Path(s"$dir/index_delta")
+
+  /** The committed delta roots under [[deltaDir]], as written by
+    * [[writeDelta]]. Only folders with a committed `_SUCCESS` count: a
+    * folder mid-(re)write is invisible to concurrent loads and becomes
+    * visible atomically. */
+  private[graft] def deltaRoots(spark: SparkSession,
       dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/index_delta")
+    val p = deltaDir(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toIndexedSeq
-      .filter(s => s.isDirectory &&
-        fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
+      .filter(s => s.isDirectory && fs.exists(new Path(s.getPath, "_SUCCESS")))
       .map(_.getPath.toString).sorted
   }
-
   /** Search a loaded index against RAW corpus/query vectors, under the
     * models the load built (no collect while the DataFrame is built):
     * when the index was built over a rotated space, the QUERIES rotate
@@ -1048,9 +1094,8 @@ object Ann {
       idCol, vecCol, k, refine, excludeSelf, None)
   }
 
-  /** A [[saveSq8Index]] directory restored: `codes` is a LAZY parquet
-    * scan (base ∪ committed delta roots, id-deduped, tombstones
-    * dropped — the [[loadOpqIndex]] discipline); the scales (`sq8`)
+  /** A [[saveSq8Index]] directory restored: `codes` is
+    * [[encodedRows]]' lazy parquet scan; the scales (`sq8`)
     * and the collected centroid set (`cents`) are the bounded model
     * artifacts, built once at load and reused by every search and
     * append through this object. */
@@ -1087,12 +1132,11 @@ object Ann {
       batch: DataFrame): DataFrame =
     encodeSq8(batch, idx.cents, idx.sq8, idx.idCol, idx.vecCol)
 
-  /** Persist an SQ8 index directory: the encoded corpus (`index`, the
-    * only corpus-sized piece — keeps its partitioning), IVF centroids,
-    * the per-dimension scales and the column metadata. Same directory
-    * discipline as [[saveOpqIndex]], so the generic lifecycle tools
-    * apply unchanged: [[IndexMaintenance.addTombstones]] deletes
-    * without re-encoding, [[appendSq8Index]] grows it through
+  /** Persist an SQ8 index directory: the encoded corpus (`index`), IVF
+    * centroids, the per-dimension scales and the column metadata, in
+    * [[saveEncoded]]'s commit order — the [[saveOpqIndex]] layout, so
+    * the same lifecycle applies: [[IndexMaintenance.addTombstones]]
+    * deletes without re-encoding, [[appendSq8Index]] grows it through
     * content-keyed delta roots, [[IndexMaintenance.compactSq8Index]]
     * folds and reclaims. */
   def saveSq8Index(dir: String, corpus: DataFrame, centroids: DataFrame,
@@ -1100,53 +1144,25 @@ object Ann {
       idCol: String, vecCol: String): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // disjoint artifact directories ⇒ independent write jobs — run
-    // them concurrently (guide §2.6), same as [[saveOpqIndex]]; meta
-    // writes LAST (its _SUCCESS is the directory's commit marker —
-    // see saveOpqIndex)
-    Parallelism.runAll(Seq(
-      () => buildSq8Index(corpus, centroids, mins, steps, idCol, vecCol)
-        .write.mode("overwrite").parquet(s"$dir/index"),
-      () => centroids.select(col(idCol).as("id"), col(vecCol).as("vec"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"),
-      () => mins.indices.map(i => (i, mins(i), steps(i)))
+    saveEncoded(dir,
+      buildSq8Index(corpus, centroids, mins, steps, idCol, vecCol),
+      centroids, idCol, vecCol,
+      Seq(() => mins.indices.map(i => (i, mins(i), steps(i)))
         .toDF("i", "min", "step")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/scales")))
-    Seq((idCol, vecCol)).toDF("id_col", "vec_col")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/scales")),
+      Seq((idCol, vecCol)).toDF("id_col", "vec_col"))
   }
 
-  /** Restore a [[saveSq8Index]] directory (lazy codes scan; see
-    * [[PersistedSq8Index]]). */
-  def loadSq8Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String): PersistedSq8Index = {
-    IndexMaintenance.healUnreadable(spark, dir, Seq("index"))
-    // meta, scales and centroids are disjoint model files — read
-    // concurrently
-    val (meta, (scales, cents)) = Parallelism.join2(
-      spark.read.parquet(s"$dir/meta")
-        .select("id_col", "vec_col").head,
-      Parallelism.join2(
-        spark.read.parquet(s"$dir/scales")
-          .select("i", "min", "step").collect().sortBy(_.getInt(0)),
-        collectCentroids(spark.read.parquet(s"$dir/centroids"),
-          "id", "vec")))
-    val (idCol, vecCol) = (meta.getString(0), meta.getString(1))
-    val deltas = deltaRoots(spark, dir)
-    val codes = {
-      val base = spark.read.parquet(s"$dir/index")
-      if (deltas.isEmpty) base
-      else (base +: deltas.map(spark.read.parquet(_)))
-        .reduce(_ unionByName _)
-        .dropDuplicates(idCol)
+  /** Restore a [[saveSq8Index]] directory through [[loadEncoded]]
+    * (lazy codes scan; see [[PersistedSq8Index]]). */
+  def loadSq8Index(spark: SparkSession, dir: String): PersistedSq8Index = {
+    val (d, scales) = loadEncoded(spark, dir) {
+      spark.read.parquet(s"$dir/scales")
+        .select("i", "min", "step").collect().sortBy(_.getInt(0))
     }
-    PersistedSq8Index(
-      IndexMaintenance.dropTombstoned(codes, spark, dir, idCol),
-      spark.read.parquet(s"$dir/centroids")
-        .select(col("id").as(idCol), col("vec").as(vecCol)),
-      cents,
+    PersistedSq8Index(d.rows, d.centroids, d.cents,
       new Sq8Model(scales.map(_.getDouble(1)), scales.map(_.getDouble(2))),
-      idCol, vecCol)
+      d.idCol, d.vecCol)
   }
 
   /** Search a loaded SQ8 index against RAW corpus/query vectors —
@@ -1171,26 +1187,17 @@ object Ann {
   }
 
   /** Grow a persisted SQ8 directory by one RAW batch under its frozen
-    * scales + centroids — [[appendOpqIndex]]'s contract verbatim:
-    * heal-before-write, the [[batchContentKey]] idempotent delta
-    * root, skip-if-committed. Appended vectors quantize against the
+    * scales + centroids — [[appendOpqIndex]]'s contract, through the
+    * same [[appendDelta]]. Appended vectors quantize against the
     * ORIGINAL [min,max] ranges (values outside them clamp to 0/255) —
     * retrain + rebuild when the distribution moves, the same
     * staleness note as the PQ path. */
-  def appendSq8Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame): Unit = {
-    IndexMaintenance.healForWrite(spark, dir, Seq("index"))
-    val idx = loadSq8Index(spark, dir)
-    batchContentKey(batch, idx.idCol, idx.vecCol).foreach { key =>
-      val dest = s"$dir/index_delta/append_$key"
-      val committed = new org.apache.hadoop.fs.Path(s"$dest/_SUCCESS")
-      val fs = committed.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(committed))
-        encodeForIndex(idx, batch).write.mode("overwrite").parquet(dest)
+  def appendSq8Index(spark: SparkSession, dir: String,
+      batch: DataFrame): Unit =
+    appendDelta(spark, dir, batch) {
+      val idx = loadSq8Index(spark, dir)
+      (idx.idCol, idx.vecCol, encodeForIndex(idx, _))
     }
-  }
-
   // ------------------------------------------------------------------
   // Shared bounded candidate selection (r17 verdict #2/#6): every rung
   // used to cut its top k(·refine) per query with a row_number()

@@ -333,21 +333,12 @@ object Dedup {
     def shingles: DataFrame = entries.select("id", "shard", "shingles")
 
     /** Persist to `<dir>/entries` parquet, partitioned by `shard` so
-      * probes prune the verify fetch — one corpus pass.
-      * `mode = "overwrite"` is for deterministic replays (streaming
-      * delta folders keyed on batch id); the default refuses to clobber
-      * an existing index.
-      *
-      * An EMPTY index (a streaming delta whose batch had no survivors)
-      * writes unpartitioned: partitionBy on empty input emits no files
-      * at all, leaving a folder whose schema cannot be inferred back.
-      * The empty parquet file keeps `shard` as a data column, which
-      * unions cleanly with shard-partitioned reads. */
-    def save(dir: String, mode: String = "error"): Unit = {
-      val w = entries.write.mode(mode)
-      if (entries.isEmpty) w.parquet(s"$dir/entries")
-      else w.partitionBy("shard").parquet(s"$dir/entries")
-    }
+      * probes prune the verify fetch — one corpus pass
+      * ([[IndexMaintenance.saveEntries]]). `mode = "overwrite"` is for
+      * deterministic replays (streaming delta folders keyed on batch
+      * id); the default refuses to clobber an existing index. */
+    def save(dir: String, mode: String = "error"): Unit =
+      IndexMaintenance.saveEntries(entries, dir, "shard", mode)
 
     /** Pin the entries so repeated probes don't recompute the feature
       * lineage (for in-memory use; persisted indexes don't need it). */
@@ -365,14 +356,9 @@ object Dedup {
       * shard backfilled from the id — same values [[save]] would have
       * written, so probes work unchanged (without partition pruning,
       * which those files never had). */
-    def load(spark: org.apache.spark.sql.SparkSession, dir: String): MinhashIndex = {
-      IndexMaintenance.healUnreadable(spark, dir, Seq("entries"))
-      val e = spark.read.parquet(s"$dir/entries")
-      MinhashIndex(IndexMaintenance.dropTombstoned(
-        if (e.columns.contains("shard")) e
-        else e.withColumn("shard", shardOf(col("id"))),
-        spark, dir))
-    }
+    def load(spark: org.apache.spark.sql.SparkSession, dir: String): MinhashIndex =
+      MinhashIndex(IndexMaintenance.loadEntries(spark, dir,
+        prepare = withShard(_, shardOf(col("id")))))
   }
 
   /** Batch feature frame shared by index build and probe:
@@ -935,12 +921,9 @@ object Dedup {
     * embedding twin of MinhashIndex's candidate-shard pruning, and
     * even tighter because the join key itself determines the shard. */
   final case class EmbeddingIndex(entries: DataFrame) {
-    /** Same empty-input guard as [[MinhashIndex.save]]. */
-    def save(dir: String, mode: String = "error"): Unit = {
-      val w = entries.write.mode(mode)
-      if (entries.isEmpty) w.parquet(s"$dir/entries")
-      else w.partitionBy("shard").parquet(s"$dir/entries")
-    }
+    /** [[MinhashIndex.save]]'s layout ([[IndexMaintenance.saveEntries]]). */
+    def save(dir: String, mode: String = "error"): Unit =
+      IndexMaintenance.saveEntries(entries, dir, "shard", mode)
 
     def materialize(): EmbeddingIndex =
       EmbeddingIndex(entries.localCheckpoint(false))
@@ -952,15 +935,16 @@ object Dedup {
   object EmbeddingIndex {
     /** Pre-shard saves load with the shard backfilled from the bucket
       * (same values save() would have written). */
-    def load(spark: org.apache.spark.sql.SparkSession, dir: String): EmbeddingIndex = {
-      IndexMaintenance.healUnreadable(spark, dir, Seq("entries"))
-      val e = spark.read.parquet(s"$dir/entries")
-      EmbeddingIndex(IndexMaintenance.dropTombstoned(
-        if (e.columns.contains("shard")) e
-        else e.withColumn("shard", embeddingShardOf(col("bucket"))),
-        spark, dir))
-    }
+    def load(spark: org.apache.spark.sql.SparkSession, dir: String): EmbeddingIndex =
+      EmbeddingIndex(IndexMaintenance.loadEntries(spark, dir,
+        prepare = withShard(_, embeddingShardOf(col("bucket")))))
   }
+
+  /** `entries` as saved, or with `shard` backfilled when it predates
+    * the shard column. */
+  private def withShard(entries: DataFrame, shard: Column): DataFrame =
+    if (entries.columns.contains("shard")) entries
+    else entries.withColumn("shard", shard)
 
   private def embeddingShardOf(bucket: Column): Column =
     pmod(bucket, lit(IndexShards.toLong)).cast("int")

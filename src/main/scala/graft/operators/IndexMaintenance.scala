@@ -8,45 +8,76 @@ import org.apache.spark.sql.functions._
   * ([[Dedup.MinhashIndex]], [[Dedup.EmbeddingIndex]],
   * [[graft.operators.SetSimilarity.SetSimIndex]],
   * [[graft.sources.Multimodal.MediaHashIndex]], and the
-  * [[Ann.saveOpqIndex]] PQ/OPQ directory): DELETION and
-  * COMPACTION — the two operations continuous ingest needs beyond
-  * build/save/load/probe/append.
+  * [[Ann.saveOpqIndex]] / [[Ann.saveSq8Index]] encoded directories):
+  * the shared save and load of single-root `entries` tables
+  * ([[saveEntries]], [[loadEntries]]), DELETION and COMPACTION.
+  * README "Persisted indexes" describes every layout.
   *
   * Deletion is by TOMBSTONE, the standard LSM/inverted-index recipe:
   * removing a document from a 100 TB corpus index must not rewrite
   * the index (that is a full-corpus job), so [[addTombstones]] appends
   * the ids to a side table (`<dir>/tombstones`, one tiny parquet per
-  * call) and every `load` anti-joins it — a takedown is visible to
-  * the NEXT probe at the cost of one broadcast-sized join, with the
-  * shard-pruned scan underneath untouched (the probe's shard filter
-  * pushes through the anti-join to the file scan; `Dedup.isFileBacked`
-  * recognises the shape). Tombstoned ids stop matching probes
-  * immediately; their bytes are reclaimed by the next compaction.
+  * call) and every `load` anti-joins it ([[dropTombstoned]]) — a
+  * takedown is visible to the NEXT probe at the cost of one
+  * broadcast-sized join, with the shard-pruned scan underneath
+  * untouched (the probe's shard filter pushes through the anti-join to
+  * the file scan; `Dedup.isFileBacked` recognises the shape). Their
+  * bytes are reclaimed by the next compaction.
   *
   * Compaction ([[compactMinhashIndex]] and siblings) rewrites the
-  * index without the tombstoned rows and drops the tombstone table —
-  * bounding probe-side anti-join state and reclaiming storage. It
-  * reuses each index's own `save` (so partition layout, the
-  * empty-input guard, and derived tables like SetSimIndex's postings
-  * are rebuilt by the same code that built them), writes the rewrite
-  * to `<dir>/_compact` FIRST, and only then swaps it in sub-table by
-  * sub-table. Crash discipline (the [[graft.streaming.StreamDedup
-  * .compactRoots]] contract, adapted to an in-place root): every
-  * `_compact` sub-table carries parquet's `_SUCCESS` marker, the swap
-  * runs only when every expected sub-table is complete, and
-  * [[recover]] (called on entry) finishes or discards an interrupted
-  * swap — a crash can leave the old and new data side by side but
-  * never lose the index. Run compaction while the index has no
+  * index without the tombstoned rows through the index's own `save`
+  * ([[compactRoot]]), and swaps it in crash-safely ([[swapIn]],
+  * [[recover]]); loads heal an unreadable interrupted swap
+  * ([[healUnreadable]]) and appends [[recover]] one before writing.
+  * Run compaction while the index has no
   * concurrent writer, like every compacting store.
   *
   * The streaming multi-root layout keeps its tombstones at
-  * `<indexDir>/_tombstones` (the underscore namespace indexRoots
-  * already skips) — see [[graft.streaming.StreamDedup.addTombstones]].
+  * `<indexDir>/_tombstones` and folds its roots with
+  * [[graft.streaming.StreamDedup.compactRoots]].
   */
 object IndexMaintenance {
 
   private def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The one `entries` save of the single-root indexes
+    * ([[Dedup.MinhashIndex]], [[Dedup.EmbeddingIndex]],
+    * [[graft.sources.Multimodal.MediaHashIndex]],
+    * [[SetSimilarity.SetSimIndex]]): `<dir>/entries` parquet,
+    * partitioned by `partCol` so probes prune their fetch. An EMPTY
+    * table (a streaming delta whose batch had no survivors) writes
+    * unpartitioned: partitionBy on empty input emits no files at all,
+    * leaving a folder whose schema cannot be inferred back; the empty
+    * parquet file keeps `partCol` as a data column, which unions
+    * cleanly with partitioned reads. Returns whether the table was
+    * empty, so a table derived from the same rows (SetSimIndex's
+    * postings) takes the same layout without a second emptiness job. */
+  private[graft] def saveEntries(entries: DataFrame, dir: String,
+      partCol: String, mode: String): Boolean = {
+    val empty = entries.isEmpty
+    saveTable(entries, s"$dir/entries", partCol, mode, empty)
+    empty
+  }
+
+  /** [[saveEntries]]' layout rule for any table path. */
+  private[graft] def saveTable(df: DataFrame, path: String,
+      partCol: String, mode: String, empty: Boolean): Unit = {
+    val w = df.write.mode(mode)
+    if (empty) w.parquet(path) else w.partitionBy(partCol).parquet(path)
+  }
+
+  /** The one `entries` load of the single-root indexes: heal an
+    * interrupted compaction of `subs` ([[healUnreadable]]), read
+    * `<dir>/entries`, let `prepare` project or backfill columns (an
+    * index saved before its partition column existed gets it
+    * recomputed), and drop the tombstoned ids ([[dropTombstoned]]). */
+  private[graft] def loadEntries(spark: SparkSession, dir: String,
+      subs: Seq[String] = Seq("entries"),
+      prepare: DataFrame => DataFrame = identity): DataFrame = {
+    healUnreadable(spark, dir, subs)
+    dropTombstoned(prepare(spark.read.parquet(s"$dir/entries")), spark, dir)
+  }
 
   /** Mark ids as deleted: append them to `<dir>/tombstones`. `ids`
     * must be a single column of the SAME TYPE as the index's id (a
@@ -178,7 +209,7 @@ object IndexMaintenance {
     foldedDeltas
       .filter(d => fs.exists(new Path(s"$d/_SUCCESS")))
       .foreach(d => fs.delete(new Path(d), true))
-    val deltaDir = new Path(s"$dir/index_delta")
+    val deltaDir = Ann.deltaDir(dir)
     if (fs.exists(deltaDir) && fs.listStatus(deltaDir).isEmpty)
       fs.delete(deltaDir, true)
   }
@@ -188,7 +219,15 @@ object IndexMaintenance {
     * `<dir>/_compact`, swap each sub-table in, delete the old data
     * and the tombstone table. `write` receives the tmp root and must
     * produce every name in `subs` (a missing OPTIONAL sub — e.g. a
-    * pre-postings SetSimIndex — is skipped by the swap). */
+    * pre-postings SetSimIndex — is skipped by the swap). It reuses
+    * the index's own `save`, so partition layout, the empty-input
+    * guard, and derived tables like SetSimIndex's postings are rebuilt
+    * by the same code that built them. Crash discipline: every
+    * `_compact` sub-table carries parquet's `_SUCCESS` marker, the
+    * swap runs only when every expected sub-table is complete, and
+    * [[recover]] (called on entry) finishes or discards an interrupted
+    * swap — a crash can leave the old and new data side by side but
+    * never lose the index. */
   private def compactRoot(spark: SparkSession, dir: String,
       subs: Seq[String])(write: String => Unit): Unit = {
     val fs = fsOf(spark, dir)
@@ -315,20 +354,14 @@ object IndexMaintenance {
       recover(spark, dir, subs)
   }
 
-  /** Writer-side healing for disk-mutating entry points outside this
-    * object (e.g. [[Ann.appendOpqIndex]]): resolve any interrupted
-    * compaction BEFORE mutating, so a stale completed rewrite can
-    * never later leapfrog rows appended after the crash. */
-  private[graft] def healForWrite(spark: SparkSession, dir: String,
-      subs: Seq[String]): Unit = recover(spark, dir, subs)
-
   /** Finish or discard an interrupted compaction. If every sub-table
     * the interrupted run wrote is complete, the swap is REDONE in
     * full (the rewrite already has the tombstones folded in, so
     * finishing it is always safe); otherwise the partial rewrite is
     * discarded, any sub-table caught mid-rename is restored from its
     * trash copy, and the tombstones are kept (they were never
-    * applied). Idempotent; called by every compact entry. */
+    * applied). Idempotent; called by every compact entry and by
+    * every append before it writes. */
   private[graft] def recover(spark: SparkSession, dir: String,
       subs: Seq[String]): Unit = {
     val fs = fsOf(spark, dir)

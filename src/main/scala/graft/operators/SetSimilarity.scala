@@ -229,25 +229,21 @@ object SetSimilarity {
     */
   final case class SetSimIndex(entries: DataFrame, dfreq: DataFrame,
       postings: Option[DataFrame] = None) {
-    /** Persist under `dir` — entries shard-partitioned (empty-input
-      * guard as MinhashIndex.save: partitionBy on empty input writes
-      * nothing readable back). Also writes the TOKEN-KEYED posting
+    /** Persist under `dir` — entries shard-partitioned
+      * ([[IndexMaintenance.saveEntries]]). Also writes the TOKEN-KEYED posting
       * projection (a_id, n, t) partitioned by `tshard` =
       * pmod(t, 64): [[probeContainment]]'s corpus side prunes to the
       * batch's prefix-token shards via partition pruning instead of
       * scanning every posting — the sublinear probe path. */
     def save(dir: String, mode: String = "error"): Unit = {
-      val w = entries.write.mode(mode)
-      if (entries.isEmpty) w.parquet(s"$dir/entries")
-      else w.partitionBy("shard").parquet(s"$dir/entries")
+      val empty = IndexMaintenance.saveEntries(entries, dir, "shard", mode)
       dfreq.write.mode(mode).parquet(s"$dir/dfreq")
       val posts = entries
         .select(col("id").as("a_id"), col("n"), explode(col("ord")).as("t"))
         .withColumn("tshard",
           pmod(col("t"), lit(Dedup.IndexShards.toLong)).cast("int"))
-      val wp = posts.write.mode(mode)
-      if (entries.isEmpty) wp.parquet(s"$dir/postings")
-      else wp.partitionBy("tshard").parquet(s"$dir/postings")
+      IndexMaintenance.saveTable(posts, s"$dir/postings", "tshard",
+        mode, empty)
     }
 
     /** Pin the join-side frames for repeated in-memory probes.
@@ -262,9 +258,13 @@ object SetSimilarity {
     def load(spark: org.apache.spark.sql.SparkSession,
         dir: String): SetSimIndex = {
       // dfreq/postings heal too — on a pre-postings index the check
-      // is a no-op (recover only acts on _compact/_trash leftovers)
-      IndexMaintenance.healUnreadable(spark, dir,
-        Seq("entries", "dfreq", "postings"))
+      // is a no-op (recover only acts on _compact/_trash leftovers).
+      // Tombstones: entries filtering alone is the correctness path —
+      // candidate generation from stale postings is discarded by the
+      // verify join's inner join back to entries; compaction rewrites
+      // the postings too
+      val entries = IndexMaintenance.loadEntries(spark, dir,
+        subs = Seq("entries", "dfreq", "postings"))
       // postings appeared after the first saved indexes — ABSENT is
       // legal (probes fall back to exploding entries). But only true
       // absence may degrade: an existence check, not a blanket
@@ -276,14 +276,7 @@ object SetSimilarity {
       val posts =
         if (fs.exists(pPath)) Some(spark.read.parquet(pPath.toString))
         else None
-      // tombstones (IndexMaintenance): entries filtering alone is the
-      // correctness path — candidate generation from stale postings is
-      // discarded by the verify join's inner join back to entries;
-      // compaction rewrites the postings too
-      SetSimIndex(
-        IndexMaintenance.dropTombstoned(
-          spark.read.parquet(s"$dir/entries"), spark, dir),
-        spark.read.parquet(s"$dir/dfreq"), posts)
+      SetSimIndex(entries, spark.read.parquet(s"$dir/dfreq"), posts)
     }
   }
 

@@ -681,14 +681,10 @@ object Multimodal {
     * maxHamming. [[save]] PARTITIONS by kind: an image-only batch
     * prunes the audio/video partitions at scan time. */
   final case class MediaHashIndex(entries: DataFrame) {
-    /** Persist to `<dir>/entries` parquet. An EMPTY index writes
-      * unpartitioned (partitionBy on empty emits no recoverable
-      * files — same note as MinhashIndex.save). */
-    def save(dir: String, mode: String = "error"): Unit = {
-      val w = entries.write.mode(mode)
-      if (entries.isEmpty) w.parquet(s"$dir/entries")
-      else w.partitionBy("kind").parquet(s"$dir/entries")
-    }
+    /** Persist to `<dir>/entries` parquet, partitioned by `kind`
+      * ([[graft.operators.IndexMaintenance.saveEntries]]). */
+    def save(dir: String, mode: String = "error"): Unit =
+      graft.operators.IndexMaintenance.saveEntries(entries, dir, "kind", mode)
 
     def materialize(): MediaHashIndex =
       MediaHashIndex(entries.localCheckpoint(false))
@@ -700,12 +696,9 @@ object Multimodal {
   }
 
   object MediaHashIndex {
-    def load(spark: SparkSession, dir: String): MediaHashIndex = {
-      graft.operators.IndexMaintenance.healUnreadable(spark, dir, Seq("entries"))
-      MediaHashIndex(graft.operators.IndexMaintenance.dropTombstoned(
-        spark.read.parquet(s"$dir/entries")
-          .select("id", "kind", "dhash"), spark, dir))
-    }
+    def load(spark: SparkSession, dir: String): MediaHashIndex =
+      MediaHashIndex(graft.operators.IndexMaintenance.loadEntries(spark, dir,
+        prepare = _.select("id", "kind", "dhash")))
   }
 
   /** Build the perceptual-hash index for a (deduped) media corpus —

@@ -22,43 +22,38 @@ import graft.operators.Ann
   * stream start (the load is the freeze point) — same re-freeze
   * cadence as every other frozen model.
   *
-  * INGEST ([[ingestWriter]]) follows the StreamDedup delta-root
-  * discipline instead of `mode("append")` (which is NOT idempotent
-  * under foreachBatch's at-least-once replay): each micro-batch
-  * encodes under the frozen models and OVERWRITES its own
-  * batch-id-keyed folder under `<dir>/index_delta`, so a replay
-  * rewrites identical bytes instead of doubling rows, and a folder
-  * becomes visible to loads atomically via its `_SUCCESS` marker.
-  * [[graft.operators.IndexMaintenance.compactPqIndex]] folds the
-  * accumulated deltas into the base on the usual cadence. The
-  * models stay frozen for the stream's lifetime — FAISS add()
-  * semantics: new vectors quantize against the ORIGINAL training
-  * distribution; retrain + rebuild when the corpus moves.
+  * INGEST ([[ingestWriter]], [[sq8IngestWriter]]) commits each
+  * micro-batch as its own batch-id-keyed delta root through
+  * [[graft.operators.Ann.writeDelta]], the writer `appendOpqIndex`
+  * uses, instead of `mode("append")` (which is NOT idempotent under
+  * foreachBatch's at-least-once replay). The models stay frozen for
+  * the stream's lifetime — FAISS add() semantics: new vectors
+  * quantize against the ORIGINAL training distribution; retrain +
+  * rebuild when the corpus moves.
   */
 object StreamAnn {
 
   /** foreachBatch ingest: encode each micro-batch of raw vectors
-    * under `idx`'s frozen models and commit it as the batch's own
-    * delta root under `indexDir/index_delta`. Empty batches write
-    * nothing. A replay of an ALREADY-COMMITTED batch is a true no-op
-    * (encoding is deterministic under frozen models, so the bytes
-    * would be identical — and skipping keeps the committed folder
-    * visible to concurrent loads, where an overwrite would delete it
-    * before rewriting). Callers pick the trigger and start; searches
+    * under `idx`'s frozen models into the batch's delta root
+    * ([[deltaIngest]]). Callers pick the trigger and start; searches
     * pick the grown corpus up at their next [[Ann.loadOpqIndex]].
     * Run [[graft.operators.IndexMaintenance.compactPqIndex]] only
     * while the stream is STOPPED (between restarts) — the fold is
     * not atomic against a concurrent ingest. */
   def ingestWriter(stream: DataFrame, idx: Ann.PersistedPqIndex,
-      indexDir: String): DataStreamWriter[Row] = {
+      indexDir: String): DataStreamWriter[Row] =
+    deltaIngest(stream, indexDir)(Ann.encodeForIndex(idx, _))
+
+  /** The one batch-keyed delta writer behind both ingest faces: each
+    * micro-batch's `encode`d rows become `index_delta/b<batchId>`
+    * through [[Ann.writeDelta]]. Empty batches write nothing, and a
+    * replay of an ALREADY-COMMITTED batch is a true no-op (see
+    * `writeDelta`). */
+  private def deltaIngest(stream: DataFrame, indexDir: String)(
+      encode: DataFrame => DataFrame): DataStreamWriter[Row] = {
     val exportBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
-      val dest = f"$indexDir/index_delta/b$batchId%010d"
-      val committed = new org.apache.hadoop.fs.Path(s"$dest/_SUCCESS")
-      val fs = committed.getFileSystem(
-        batch.sparkSession.sparkContext.hadoopConfiguration)
-      if (!fs.exists(committed) && batch.take(1).nonEmpty)
-        Ann.encodeForIndex(idx, batch)
-          .write.mode("overwrite").parquet(dest)
+      Ann.writeDelta(batch.sparkSession, indexDir, f"b$batchId%010d")(
+        if (batch.take(1).isEmpty) None else Some(encode(batch)))
     }
     stream.writeStream.outputMode("append").foreachBatch(exportBatch)
   }
@@ -83,24 +78,13 @@ object StreamAnn {
   }
 
   /** [[ingestWriter]] for a persisted SQ8 directory ([[Ann
-    * .saveSq8Index]]) — identical batch-id-keyed delta-root
-    * discipline; each micro-batch encodes under the FROZEN scales +
-    * centroids the load built ([[Ann.encodeForIndex]]). Same compaction rule:
+    * .saveSq8Index]]): each micro-batch encodes under the FROZEN
+    * scales + centroids the load built. Same compaction rule:
     * [[graft.operators.IndexMaintenance.compactSq8Index]] only while
     * the stream is stopped. */
   def sq8IngestWriter(stream: DataFrame, idx: Ann.PersistedSq8Index,
-      indexDir: String): DataStreamWriter[Row] = {
-    val exportBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
-      val dest = f"$indexDir/index_delta/b$batchId%010d"
-      val committed = new org.apache.hadoop.fs.Path(s"$dest/_SUCCESS")
-      val fs = committed.getFileSystem(
-        batch.sparkSession.sparkContext.hadoopConfiguration)
-      if (!fs.exists(committed) && batch.take(1).nonEmpty)
-        Ann.encodeForIndex(idx, batch)
-          .write.mode("overwrite").parquet(dest)
-    }
-    stream.writeStream.outputMode("append").foreachBatch(exportBatch)
-  }
+      indexDir: String): DataStreamWriter[Row] =
+    deltaIngest(stream, indexDir)(Ann.encodeForIndex(idx, _))
 
   /** [[searchWriter]] against a frozen persisted SQ8 index. `refine`
     * defaults to 4 (not 0): SQ8 scoring is candidate SELECTION by

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.storage.StorageLevel
 
@@ -19,35 +20,36 @@ import graft.sources.StageSink
   * it: parquet. foreachBatch gives each micro-batch full batch-engine
   * semantics for the probe joins.
   *
-  * Index layout: `<indexDir>/delta_b<batchId>/entries` — one delta
-  * folder per micro-batch, each read as its own shard-partitioned
-  * parquet root and unioned for the next batch's probe (the shard
-  * filter pushes into every scan). A pre-seeded corpus index can be
-  * placed at `<indexDir>/seed/entries` ([[Dedup.MinhashIndex.save]]
-  * into `<indexDir>/seed`).
-  *
-  * Replay discipline (foreachBatch is at-least-once): both outputs are
-  * keyed on the batch id and overwritten on retry — survivors via
-  * [[StageSink.saveBatch]], the index delta via its deterministic
-  * folder — and a retry EXCLUDES its own delta folder from the index
-  * it probes, so a batch never dedups against its own partial state.
-  * Long-running streams should [[compact]] periodically to bound root
-  * counts — the scan stays correct either way.
+  * This object also holds the multi-root index protocol the media and
+  * embedding twins ([[StreamMediaDedup]], [[StreamEmbedDedup]]) share:
+  * [[microBatchWriter]] is the one micro-batch body, [[indexRoots]]
+  * the one root listing, [[compactRoots]] / [[compactRootsIfDue]] the
+  * one fold, [[addTombstones]] / [[dropTombstoned]] the one deletion
+  * table. Every file operation goes through the index directory's
+  * Hadoop `FileSystem`, so `indexDir` may be any Hadoop path or URI.
+  * README "Persisted indexes" describes the layout.
   */
 object StreamDedup {
 
+  private def fsOf(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** Index roots under `indexDir` (any folder holding an `entries`
-    * table), minus `exclude`. Underscore-prefixed folders are skipped —
-    * that namespace is reserved for in-flight [[compact]] temp dirs, so
-    * a crashed compaction never gets probed as a (partial) root. */
+    * table), minus `exclude`, listed through the active session's
+    * Hadoop `FileSystem`. Underscore-prefixed folders are skipped —
+    * that namespace is reserved for in-flight [[compact]] temp dirs,
+    * so a crashed compaction never gets probed as a (partial) root. */
   private[graft] def indexRoots(
-      indexDir: String, exclude: String = ""): Seq[java.io.File] =
-    Option(new java.io.File(indexDir).listFiles())
-      .getOrElse(Array.empty).toIndexedSeq
-      .filter(d => d.isDirectory && d.getName != exclude &&
-        !d.getName.startsWith("_") &&
-        new java.io.File(d, "entries").exists())
-      .sortBy(_.getName)
+      indexDir: String, exclude: String = ""): Seq[Path] = {
+    val dir = new Path(indexDir)
+    val fs = fsOf(SparkSession.active, indexDir)
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toIndexedSeq
+      .filter(s => s.isDirectory && s.getPath.getName != exclude &&
+        !s.getPath.getName.startsWith("_") &&
+        fs.exists(new Path(s.getPath, "entries")))
+      .map(_.getPath).sortBy(_.getName)
+  }
 
   /** Mark ids as deleted across the WHOLE multi-root index: appended
     * to `<indexDir>/_tombstones` (the underscore namespace
@@ -61,54 +63,45 @@ object StreamDedup {
 
   /** The union's tombstone filter ([[addTombstones]]'s reader). */
   private[graft] def dropTombstoned(
-      entries: DataFrame, spark: org.apache.spark.sql.SparkSession,
+      entries: DataFrame, spark: SparkSession,
       indexDir: String): DataFrame =
     IndexMaintenance.dropTombstonedAt(entries, spark,
       s"$indexDir/_tombstones")
 
   /** Fold every accumulated root (seed + deltas) into one fresh
-    * `seed_b<lastBatch>` root and delete the originals — the
-    * periodic maintenance the scaladoc prescribes: N roots means N
-    * parquet scans per probe, so long streams compact to keep N small.
-    *
-    * Run while the stream is STOPPED (between restarts): the swap is
-    * not atomic against a concurrent batch. Crash discipline: the
-    * compacted root is written and renamed into place BEFORE the
-    * originals are deleted, so a crash can leave duplicate index
-    * entries (both the compacted root and undeleted originals) but
-    * never lose any — duplicates cost probe work, not correctness,
-    * and the next compact folds them away (the union dedups on id).
-    * Returns the new root's name, or None when there was nothing to
-    * fold. */
-  def compact(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[String] =
-    compactRoots(spark, indexDir,
-      (union, path) => Dedup.MinhashIndex(union).save(path, mode = "overwrite"))
+    * `seed_<epoch>` root and delete the originals ([[compactRoots]]):
+    * N roots means N parquet scans per probe, so long streams compact
+    * to keep N small. Run while the stream is STOPPED (between
+    * restarts). Returns the new root's name, or None when there was
+    * nothing to fold. */
+  def compact(spark: SparkSession, indexDir: String): Option[String] =
+    compactRoots(spark, indexDir, minhashSaver)
 
-  /** [[compact]] only when due — the hands-off cadence policy: more
-    * than `maxRoots` roots (every probe pays one parquet scan per
-    * root) or pending tombstones past `maxTombstoneBytes` (every
-    * probe pays their anti-join). The tombstone trigger arms only
-    * when a root exists to fold — with ZERO roots there is nothing a
-    * compact could reclaim (pre-seeded tombstones stay live by the
-    * never-surface-again contract), so firing would loop futilely.
-    * Call between restarts like [[compact]] itself; returns the
-    * folded root's name when it fired. */
-  def compactIfDue(spark: org.apache.spark.sql.SparkSession,
+  /** [[compact]] only when due ([[compactRootsIfDue]]). Call between
+    * restarts like [[compact]] itself; returns the folded root's name
+    * when it fired. */
+  def compactIfDue(spark: SparkSession,
       indexDir: String, maxRoots: Int = 8,
       maxTombstoneBytes: Long = IndexMaintenance.DefaultMaxTombstoneBytes)
       : Option[String] =
     compactRootsIfDue(spark, indexDir, maxRoots, maxTombstoneBytes,
-      (union, path) => Dedup.MinhashIndex(union).save(path, mode = "overwrite"))
+      minhashSaver)
 
-  /** The saver-agnostic due-check + fold behind [[compactIfDue]] and
-    * the media/embed twins — the policy depends on nothing
-    * saver-specific, so all three layouts share it. */
+  private val minhashSaver: (DataFrame, String) => Unit =
+    (union, path) => Dedup.MinhashIndex(union).save(path, mode = "overwrite")
+
+  /** The saver-agnostic due-check + fold behind every `compactIfDue`
+    * — the hands-off cadence policy: more than `maxRoots` roots
+    * (every probe pays one parquet scan per root) or pending
+    * tombstones past `maxTombstoneBytes` (every probe pays their
+    * anti-join). The tombstone trigger arms only when a root exists
+    * to fold — with ZERO roots there is nothing a compact could
+    * reclaim (pre-seeded tombstones stay live by the
+    * never-surface-again contract), so firing would loop futilely. */
   private[streaming] def compactRootsIfDue(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       indexDir: String, maxRoots: Int, maxTombstoneBytes: Long,
-      save: (org.apache.spark.sql.DataFrame, String) => Unit): Option[String] = {
+      save: (DataFrame, String) => Unit): Option[String] = {
     val roots = indexRoots(indexDir)
     if (roots.size > maxRoots ||
         (roots.nonEmpty && IndexMaintenance.tableBytes(
@@ -117,47 +110,49 @@ object StreamDedup {
     else None
   }
 
-  /** The shared compact core ([[compact]]'s scaladoc): fold every
-    * root's entries (deduped on id — a crashed earlier compact leaves
-    * the same entries in two roots, and folding them through would
-    * bake the duplicates into every future seed) into one fresh
-    * `seed_<epoch>` root via `save`, write + rename BEFORE deleting
-    * the originals, and pick a NEW epoch name each time (the old seed
-    * is among the roots being folded). Used by this object and
-    * [[StreamMediaDedup]], which differ only in the index saver. */
+  /** The one fold behind every `compact`: fold every root's entries
+    * (deduped on id — a crashed earlier compact leaves the same
+    * entries in two roots, and folding them through would bake the
+    * duplicates into every future seed), minus the tombstones, into
+    * one fresh `seed_<epoch>` root via `save`, picking a NEW epoch
+    * name each time (the old seed is among the roots being folded).
+    *
+    * Not atomic against a concurrent batch: run while the stream is
+    * stopped. Crash discipline: the compacted root is written and
+    * renamed into place BEFORE the originals are deleted, so a crash
+    * can leave duplicate index entries (both the compacted root and
+    * undeleted originals) but never lose any — duplicates cost probe
+    * work, not correctness, and the next compact folds them away. */
   private[streaming] def compactRoots(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       indexDir: String,
-      save: (org.apache.spark.sql.DataFrame, String) => Unit): Option[String] = {
+      save: (DataFrame, String) => Unit): Option[String] = {
     val roots = indexRoots(indexDir)
-    // a single root still compacts when tombstones are pending —
-    // that rewrite is what reclaims their entries' bytes
-    val tombstonesPending = IndexMaintenance
-      .readTombstonesAt(spark, s"$indexDir/_tombstones").isDefined
-    if (roots.isEmpty || (roots.length == 1 && !tombstonesPending))
-      return None
-    val seedEpochs = roots.map(_.getName)
-      .filter(_.startsWith("seed_"))
-      .flatMap(n => n.stripPrefix("seed_").toLongOption)
-    val target = s"seed_${seedEpochs.maxOption.getOrElse(-1L) + 1L}"
     // snapshot the tombstone FILES before the fold reads them: a
     // takedown appended while the fold runs lands as a new file the
     // cleanup below must keep (it was never anti-joined)
     val folded = IndexMaintenance.tombstoneFilesAt(
       spark, s"$indexDir/_tombstones")
+    // a single root still compacts when tombstones are pending —
+    // that rewrite is what reclaims their entries' bytes
+    if (roots.isEmpty || (roots.length == 1 && folded.isEmpty))
+      return None
+    val seedEpochs = roots.map(_.getName)
+      .filter(_.startsWith("seed_"))
+      .flatMap(n => n.stripPrefix("seed_").toLongOption)
+    val target = s"seed_${seedEpochs.maxOption.getOrElse(-1L) + 1L}"
     val union = dropTombstoned(
       roots
-        .map(d => spark.read.parquet(s"${d.getPath}/entries"))
+        .map(d => spark.read.parquet(s"$d/entries"))
         .reduce(_ unionByName _)
         .dropDuplicates("id"),
       spark, indexDir)
-    val tmp = new java.io.File(indexDir, s"_compact_$target")
-    save(union, tmp.getPath)
-    val dest = new java.io.File(indexDir, target)
-    require(tmp.renameTo(dest),
-      s"compact: rename ${tmp.getPath} -> ${dest.getPath} failed")
-    roots.filter(_.getName != target)
-      .foreach(d => deleteRecursively(d))
+    val fs = fsOf(spark, indexDir)
+    val tmp = new Path(indexDir, s"_compact_$target")
+    save(union, tmp.toString)
+    val dest = new Path(indexDir, target)
+    require(fs.rename(tmp, dest), s"compact: rename $tmp -> $dest failed")
+    roots.filter(_.getName != target).foreach(fs.delete(_, true))
     // only the tombstone files the fold actually applied rewrite away
     // (same ordering as the roots: after the new root is in place);
     // files appended since the snapshot stay live
@@ -166,57 +161,49 @@ object StreamDedup {
     Some(target)
   }
 
-  private[streaming] def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty)
-      .foreach(deleteRecursively)
-    f.delete()
-  }
-
-  /** foreachBatch writer: near-dedup each micro-batch against the
-    * accumulated index, export survivors as a batch-keyed snapshot
-    * under `<baseDir>/<stage>/<name>_b<batchId>`, append the
-    * survivors' delta to the index. Callers pick the trigger and
-    * start. */
-  def incrementalWriter(
-      stream: DataFrame, idCol: String, textCol: String,
-      baseDir: String, stage: String, name: String, indexDir: String,
-      shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5): DataStreamWriter[Row] = {
+  /** The one micro-batch body of the three streaming dedup writers.
+    * Per non-empty micro-batch:
+    *
+    * - list the prior roots, EXCLUDING the batch's own
+    *   `delta_b<batchId>` folder, so a replayed batch never dedups
+    *   against its own partial state;
+    * - pin the batch once on disk (it feeds the probe, the within-batch
+    *   dedup and the survivor export; a batch can be arbitrarily large);
+    * - read each root's `entries` with `readRoot` — one read per root,
+    *   because partitioned roots reject a single multi-path read; the
+    *   probe's partition filter pushes into every scan of the union —
+    *   and drop the `_tombstones` ids from their union;
+    * - `dedup` the pinned batch against that union (None when no root
+    *   exists yet), returning the survivors and a saver for their
+    *   delta index;
+    * - export the survivors through [[StageSink.saveBatch]] under
+    *   `<baseDir>/<stage>/<name>_b<batchId>`, then save the delta as
+    *   `<indexDir>/delta_b<batchId>`.
+    *
+    * foreachBatch is at-least-once: both outputs are keyed on the batch
+    * id and overwritten on retry. Callers pick the trigger and start. */
+  private[streaming] def microBatchWriter(
+      stream: DataFrame, baseDir: String, stage: String, name: String,
+      indexDir: String, readRoot: (SparkSession, String) => DataFrame)(
+      dedup: (DataFrame, Option[DataFrame]) => (DataFrame, String => Unit))
+      : DataStreamWriter[Row] = {
     val exportBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       if (batch.take(1).nonEmpty) {
         val spark = batch.sparkSession
         val own = f"delta_b$batchId%010d"
-        val priorEntries = indexRoots(indexDir, exclude = own)
-          .map(d => s"${d.getPath}/entries")
-        // the batch feeds the probe AND the within-batch dedup AND the
-        // delta build — pin it once (DISK_ONLY: correctness cache, a
-        // batch can be arbitrarily large)
+        val prior = indexRoots(indexDir, exclude = own)
+          .map(d => readRoot(spark, s"$d/entries"))
         val pinned = batch.persist(StorageLevel.DISK_ONLY)
         try {
-          val fresh =
-            if (priorEntries.isEmpty) pinned
-            else {
-              // one read per delta root: the entries are PARTITIONED by
-              // shard, and partition discovery rejects multiple
-              // partitioned roots in a single read; the probe's shard
-              // filter pushes down into every scan of the union
-              val index = Dedup.MinhashIndex(dropTombstoned(
-                priorEntries.toIndexedSeq.map(spark.read.parquet(_))
-                  .reduce(_ unionByName _), spark, indexDir))
-              val hits = Dedup.incrementalNearDup(pinned, index, idCol,
-                textCol, shingleN, numHashes, bands, threshold)
-                .select(org.apache.spark.sql.functions.col("b_id").as(idCol))
-              pinned.join(hits, Seq(idCol), "left_anti")
-            }
-          val survivors = Dedup.dropNearDuplicates(fresh, idCol, textCol,
-            shingleN, numHashes, bands, threshold)
-            .persist(StorageLevel.DISK_ONLY)
+          val (survivors, saveDelta) = dedup(pinned,
+            if (prior.isEmpty) None
+            else Some(dropTombstoned(prior.reduce(_ unionByName _),
+              spark, indexDir)))
+          val kept = survivors.persist(StorageLevel.DISK_ONLY)
           try {
-            StageSink.saveBatch(survivors, baseDir, stage, name, batchId)
-            Dedup.buildMinhashIndex(survivors, idCol, textCol,
-              shingleN, numHashes, bands)
-              .save(s"$indexDir/$own", mode = "overwrite")
-          } finally survivors.unpersist()
+            StageSink.saveBatch(kept, baseDir, stage, name, batchId)
+            saveDelta(s"$indexDir/$own")
+          } finally kept.unpersist()
         } finally pinned.unpersist()
       }
     }
@@ -224,4 +211,25 @@ object StreamDedup {
       .outputMode("append")
       .foreachBatch(exportBatch)
   }
+
+  /** foreachBatch writer ([[microBatchWriter]]): near-dedup each
+    * micro-batch against the accumulated MinHash index with
+    * [[Dedup.incrementalDedup]], which featurizes the batch once for
+    * the probe, the within-batch dedup and the delta. A pre-seeded
+    * corpus index can be placed at `<indexDir>/seed/entries`
+    * ([[Dedup.MinhashIndex.save]] into `<indexDir>/seed`). */
+  def incrementalWriter(
+      stream: DataFrame, idCol: String, textCol: String,
+      baseDir: String, stage: String, name: String, indexDir: String,
+      shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
+      threshold: Double = 0.5): DataStreamWriter[Row] =
+    microBatchWriter(stream, baseDir, stage, name, indexDir,
+      _.read.parquet(_)) { (batch, prior) =>
+      val index = Dedup.MinhashIndex(prior.getOrElse(
+        Dedup.buildMinhashIndex(batch.limit(0), idCol, textCol,
+          shingleN, numHashes, bands).entries))
+      val (survivors, delta) = Dedup.incrementalDedup(batch, index,
+        idCol, textCol, shingleN, numHashes, bands, threshold)
+      (survivors, delta.save(_, mode = "overwrite"))
+    }
 }

@@ -2,10 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Dedup
-import graft.sources.StageSink
 
 /** Streaming incremental EMBEDDING near-dedup — the third face of the
   * [[StreamDedup]] contract, probing the persisted sign-bucket index
@@ -18,21 +16,21 @@ import graft.sources.StageSink
   * media perceptual hashes ([[StreamMediaDedup]]), embeddings (this).
   *
   * Index layout, replay discipline and maintenance are StreamDedup's
-  * exactly: `delta_b<batchId>/entries` roots (shard-partitioned
-  * parquet — a probing batch prunes to its own sign-buckets' shards),
-  * batch-keyed overwritten outputs for at-least-once retries, a retry
-  * excluding its own delta, an optional `seed/entries` corpus, and
-  * [[compact]] between restarts. The same (dim, numPlanes) MUST be
+  * shared helpers ([[StreamDedup.microBatchWriter]],
+  * [[StreamDedup.compactRoots]]) over shard-partitioned roots (a
+  * probing batch prunes to its own sign-buckets' shards); an optional
+  * pre-seeded corpus goes at `<indexDir>/seed/entries`. The same
+  * (dim, numPlanes) MUST be
   * used for every batch of one index — bucket hashes from different
   * parameters never match (the [[Dedup.buildEmbeddingIndex]]
   * contract).
   */
 object StreamEmbedDedup {
 
-  /** Fold every accumulated root into one fresh `seed_<epoch>` root —
-    * [[StreamDedup.compactRoots]]'s crash discipline over the
-    * embedding index's (id, vec, shard, bucket, norm) schema. Run
-    * while the stream is stopped. */
+  /** Fold every accumulated root into one fresh `seed_<epoch>` root
+    * ([[StreamDedup.compactRoots]]) over the embedding index's (id,
+    * vec, shard, bucket, norm) schema. Run while the stream is
+    * stopped. */
   def compact(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Option[String] =
@@ -53,47 +51,21 @@ object StreamEmbedDedup {
     (union, path) =>
       Dedup.EmbeddingIndex(union).save(path, mode = "overwrite")
 
-  /** foreachBatch writer: near-dedup each micro-batch of embedding
-    * rows against the accumulated sign-bucket index, export survivors
-    * as a batch-keyed snapshot under
-    * `<baseDir>/<stage>/<name>_b<batchId>`, append the survivors'
-    * delta to the index. Callers pick the trigger and start. */
+  /** foreachBatch writer ([[StreamDedup.microBatchWriter]]):
+    * near-dedup each micro-batch of embedding rows against the
+    * accumulated sign-bucket index with
+    * [[Dedup.incrementalEmbeddingDedup]]. */
   def incrementalWriter(
       stream: DataFrame, idCol: String, vecCol: String, dim: Int,
       baseDir: String, stage: String, name: String, indexDir: String,
-      numPlanes: Int = 8, threshold: Double = 0.8): DataStreamWriter[Row] = {
-    val exportBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
-      if (batch.take(1).nonEmpty) {
-        val spark = batch.sparkSession
-        val own = f"delta_b$batchId%010d"
-        val priorEntries = StreamDedup.indexRoots(indexDir, exclude = own)
-          .map(d => s"${d.getPath}/entries")
-        val pinned = batch.persist(StorageLevel.DISK_ONLY)
-        try {
-          // one read per root: shard-partitioned roots reject a single
-          // multi-path read; the probe's shard filter pushes down into
-          // every scan of the union
-          val index = Dedup.EmbeddingIndex(
-            if (priorEntries.isEmpty)
-              Dedup.buildEmbeddingIndex(
-                pinned.limit(0), idCol, vecCol, dim, numPlanes).entries
-            else
-              StreamDedup.dropTombstoned(
-                priorEntries.toIndexedSeq
-                  .map(spark.read.parquet(_))
-                  .reduce(_ unionByName _), spark, indexDir))
-          val (survivors, delta) = Dedup.incrementalEmbeddingDedup(
-            pinned, index, idCol, vecCol, dim, numPlanes, threshold)
-          val pinnedSurv = survivors.persist(StorageLevel.DISK_ONLY)
-          try {
-            StageSink.saveBatch(pinnedSurv, baseDir, stage, name, batchId)
-            delta.save(s"$indexDir/$own", mode = "overwrite")
-          } finally pinnedSurv.unpersist()
-        } finally pinned.unpersist()
-      }
+      numPlanes: Int = 8, threshold: Double = 0.8): DataStreamWriter[Row] =
+    StreamDedup.microBatchWriter(stream, baseDir, stage, name, indexDir,
+      _.read.parquet(_)) { (batch, prior) =>
+      val index = Dedup.EmbeddingIndex(prior.getOrElse(
+        Dedup.buildEmbeddingIndex(
+          batch.limit(0), idCol, vecCol, dim, numPlanes).entries))
+      val (survivors, delta) = Dedup.incrementalEmbeddingDedup(
+        batch, index, idCol, vecCol, dim, numPlanes, threshold)
+      (survivors, delta.save(_, mode = "overwrite"))
     }
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch(exportBatch)
-  }
 }

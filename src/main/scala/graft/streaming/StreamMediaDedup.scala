@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.storage.StorageLevel
 
-import graft.sources.{Multimodal, StageSink}
+import graft.sources.Multimodal
 
 /** Streaming incremental MEDIA near-dedup — [[StreamDedup]]'s
   * continuous-ingest contract for binary media columns, probing the
@@ -17,22 +16,18 @@ import graft.sources.{Multimodal, StageSink}
   * survivors without ever entering the index.
   *
   * Index layout, replay discipline and maintenance are StreamDedup's
-  * exactly: one `delta_b<batchId>/entries` root per micro-batch
-  * (kind-partitioned parquet), batch-keyed overwritten outputs so
-  * at-least-once foreachBatch retries are safe, a retry excluding its
-  * own delta from the probe, an optional pre-seeded corpus at
-  * `<indexDir>/seed/entries`, and [[compact]] folding roots between
-  * restarts. State per corpus asset is 8 bytes + id + kind — the
+  * shared helpers ([[StreamDedup.microBatchWriter]],
+  * [[StreamDedup.compactRoots]]) over kind-partitioned roots; an
+  * optional pre-seeded corpus goes at `<indexDir>/seed/entries`.
+  * State per corpus asset is 8 bytes + id + kind — the
   * lightest of the incremental indexes, and the reason this CAN run
   * forever: the media bytes themselves are never re-read.
   */
 object StreamMediaDedup {
 
-  /** Fold every accumulated root into one fresh `seed_<epoch>` root —
-    * [[StreamDedup.compact]]'s crash discipline (write + rename before
-    * delete; duplicate entries cost probe work, never correctness)
-    * over the media index's (id, kind, dhash) schema. Run while the
-    * stream is stopped. */
+  /** Fold every accumulated root into one fresh `seed_<epoch>` root
+    * ([[StreamDedup.compactRoots]]) over the media index's (id, kind,
+    * dhash) schema. Run while the stream is stopped. */
   def compact(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Option[String] =
@@ -53,52 +48,21 @@ object StreamMediaDedup {
     (union, path) => Multimodal.MediaHashIndex(
       union.select("id", "kind", "dhash")).save(path, mode = "overwrite")
 
-  /** foreachBatch writer: near-dedup each micro-batch of media rows
-    * against the accumulated perceptual-hash index, export survivors
-    * as a batch-keyed snapshot under
-    * `<baseDir>/<stage>/<name>_b<batchId>`, append the survivors'
-    * delta to the index. Callers pick the trigger and start. */
+  /** foreachBatch writer ([[StreamDedup.microBatchWriter]]):
+    * near-dedup each micro-batch of media rows against the accumulated
+    * perceptual-hash index with [[Multimodal.incrementalMediaDedup]],
+    * which pins the decoded hash frame internally. */
   def incrementalWriter(
       stream: DataFrame, idCol: String, bytesCol: String,
       kindCol: String, baseDir: String, stage: String, name: String,
-      indexDir: String, maxHamming: Int = 3): DataStreamWriter[Row] = {
-    val exportBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
-      if (batch.take(1).nonEmpty) {
-        val spark = batch.sparkSession
-        val own = f"delta_b$batchId%010d"
-        val priorEntries = StreamDedup.indexRoots(indexDir, exclude = own)
-          .map(d => s"${d.getPath}/entries")
-        // the batch feeds the probe AND the within-batch dedup AND the
-        // delta build; incrementalMediaDedup pins the decoded HASH
-        // frame internally, but the raw media rows are consumed twice
-        // (hashing + survivor export) — pin them once, on disk (media
-        // payloads are MBs per row)
-        val pinned = batch.persist(StorageLevel.DISK_ONLY)
-        try {
-          // one read per root: kind-partitioned parquet roots reject a
-          // single multi-path read; the probe's kind filter pushes
-          // down into every scan of the union
-          val index = Multimodal.MediaHashIndex(
-            if (priorEntries.isEmpty)
-              Multimodal.buildMediaHashIndex(
-                pinned.limit(0), idCol, bytesCol, kindCol).entries
-            else
-              StreamDedup.dropTombstoned(
-                priorEntries.toIndexedSeq
-                  .map(spark.read.parquet(_).select("id", "kind", "dhash"))
-                  .reduce(_ unionByName _), spark, indexDir))
-          val (survivors, delta) = Multimodal.incrementalMediaDedup(
-            pinned, index, idCol, bytesCol, kindCol, maxHamming)
-          val pinnedSurv = survivors.persist(StorageLevel.DISK_ONLY)
-          try {
-            StageSink.saveBatch(pinnedSurv, baseDir, stage, name, batchId)
-            delta.save(s"$indexDir/$own", mode = "overwrite")
-          } finally pinnedSurv.unpersist()
-        } finally pinned.unpersist()
-      }
+      indexDir: String, maxHamming: Int = 3): DataStreamWriter[Row] =
+    StreamDedup.microBatchWriter(stream, baseDir, stage, name, indexDir,
+      _.read.parquet(_).select("id", "kind", "dhash")) { (batch, prior) =>
+      val index = Multimodal.MediaHashIndex(prior.getOrElse(
+        Multimodal.buildMediaHashIndex(
+          batch.limit(0), idCol, bytesCol, kindCol).entries))
+      val (survivors, delta) = Multimodal.incrementalMediaDedup(
+        batch, index, idCol, bytesCol, kindCol, maxHamming)
+      (survivors, delta.save(_, mode = "overwrite"))
     }
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch(exportBatch)
-  }
 }

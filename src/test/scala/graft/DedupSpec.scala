@@ -1,6 +1,14 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
+
 import graft.operators.Dedup
 
 class DedupSpec extends SparkSpec {
@@ -110,6 +118,94 @@ class DedupSpec extends SparkSpec {
       "doc_id", "text", shingleN = 2, numHashes = 48, bands = 16,
       threshold = 0.5)
     assert(nextSurvivors.isEmpty)
+  }
+
+  // ------------------------------------------------------------------
+  // incrementalDedup ≡ the chained form: incrementalNearDup → left-anti
+  // → dropNearDuplicates → buildMinhashIndex of the survivors
+  // ------------------------------------------------------------------
+
+  private val diffParams = Check.Parameters.default
+    .withMinSuccessfulTests(25)
+    .withInitialSeed(Seed(20261020L))
+    .withWorkers(1)
+
+  private val vocab = Vector("alpha", "bravo", "charlie", "delta", "echo",
+    "foxtrot", "golf", "hotel", "india", "juliet", "kilo", "lima", "mike",
+    "november", "oscar", "papa", "quebec", "romeo", "sierra", "tango",
+    "ünïcode", "日本語")
+
+  private val freshText: Gen[String] =
+    Gen.choose(4, 10).flatMap(Gen.listOfN(_, Gen.oneOf(vocab)))
+      .map(_.mkString(" "))
+
+  /** `t` with one word replaced: a near copy (or, when the draw
+    * repeats the word, an exact one). */
+  private def nearCopy(t: String): Gen[String] = {
+    val ws = t.split(" ")
+    for {
+      i <- Gen.choose(0, ws.length - 1)
+      w <- Gen.oneOf(vocab)
+    } yield ws.updated(i, w).mkString(" ")
+  }
+
+  /** (index texts, batch texts): the batch plants exact and near copies
+    * of index docs and of earlier batch siblings, null and empty texts;
+    * either side may be empty. */
+  private val incrementalCase: Gen[(Seq[String], Seq[Option[String]])] =
+    for {
+      nIndex <- Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 5))
+      index <- Gen.listOfN(nIndex, freshText)
+      nBatch <- Gen.frequency(1 -> Gen.const(0), 6 -> Gen.choose(1, 8))
+      batch <- (0 until nBatch).foldLeft(
+          Gen.const(Vector.empty[Option[String]])) { (acc, _) =>
+        acc.flatMap { prev =>
+          val seen = index ++ prev.flatten
+          val copies =
+            if (seen.isEmpty) Nil
+            else Seq(3 -> Gen.oneOf(seen).map(Option(_)),
+              3 -> Gen.oneOf(seen).flatMap(nearCopy).map(Option(_)))
+          Gen.frequency(Seq(
+            3 -> freshText.map(Option(_)),
+            1 -> Gen.const(None),
+            1 -> Gen.const(Some(""))) ++ copies: _*).map(prev :+ _)
+        }
+      }
+    } yield (index, batch)
+
+  test("incrementalDedup ≡ incrementalNearDup → left-anti → dropNearDuplicates → buildMinhashIndex") {
+    val root = Files.createTempDirectory("graft_incr_diff").toString
+    val (n, h, b, tau) = (2, 48, 16, 0.5)
+    // rows in a column-name and row order both sides agree on
+    def rows(df: DataFrame): Seq[String] =
+      df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect()
+        .map(_.toSeq.mkString("|")).toSeq.sorted
+    var cases = 0
+    val r = Check.check(diffParams,
+      Prop.forAllNoShrink(incrementalCase) { case (indexTexts, batchTexts) =>
+        cases += 1
+        val dir = s"$root/case$cases"
+        Dedup.buildMinhashIndex(
+          indexTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+            .toDF("doc_id", "text"), "doc_id", "text", n, h, b).save(dir)
+        val index = Dedup.MinhashIndex.load(spark, dir)
+        val batch = batchTexts.zipWithIndex
+          .map { case (t, i) => (100L + i, t.orNull) }.toDF("doc_id", "text")
+        val (survivors, delta) = Dedup.incrementalDedup(batch, index,
+          "doc_id", "text", n, h, b, tau)
+        val hits = Dedup.incrementalNearDup(batch, index, "doc_id", "text",
+          n, h, b, tau).select(col("b_id").as("doc_id"))
+        val refSurvivors = Dedup.dropNearDuplicates(
+          batch.join(hits, Seq("doc_id"), "left_anti"), "doc_id", "text",
+          n, h, b, tau)
+        val refDelta = Dedup.buildMinhashIndex(refSurvivors, "doc_id",
+          "text", n, h, b)
+        val (gotS, wantS) = (rows(survivors), rows(refSurvivors))
+        val (gotD, wantD) = (rows(delta.entries), rows(refDelta.entries))
+        (gotS == wantS && gotD == wantD) :|
+          s"survivors $gotS vs $wantS; delta $gotD vs $wantD"
+      })
+    assert(r.passed, Pretty.pretty(r))
   }
 
   test("exactIncremental anti-joins corpus hashes then keeps min id per content") {

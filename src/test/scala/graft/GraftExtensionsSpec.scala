@@ -139,4 +139,28 @@ class GraftExtensionsSpec extends SparkSpec {
       s"$p:${i + 1}: ${ls(i).trim}" }
     assert(hits.isEmpty, hits.mkString("; "))
   }
+
+  test("index files go through Hadoop paths; delta folder names are built once") {
+    // java.io.File cannot list a file: URI or any other Hadoop path: a
+    // root listing through it finds nothing, silently
+    val fileHits = mainSourceHits("""java\.io\.File\b""".r).collect {
+      case (p, i, ls) if p.contains("graft/streaming/") ||
+          p.contains("graft/operators/") =>
+        s"$p:${i + 1}: ${ls(i).trim}"
+    }
+    assert(fileHits.isEmpty, fileHits.mkString("; "))
+    // the encoded-index delta folder and the streaming delta root each
+    // have one writer; a second spelling could drift from its readers
+    def isComment(line: String) = {
+      val t = line.trim
+      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+    }
+    for (name <- Seq("index_delta", "delta_b")) {
+      val hits = mainSourceHits(name.r).collect {
+        case (p, i, ls) if !isComment(ls(i)) => s"$p:${i + 1}: ${ls(i).trim}"
+      }
+      assert(hits.size === 1, s"$name built in ${hits.size} places: " +
+        hits.mkString("; "))
+    }
+  }
 }

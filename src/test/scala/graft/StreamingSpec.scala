@@ -1085,6 +1085,48 @@ class StreamingSpec extends SparkSpec {
     assert(StreamDedup.compact(spark, indexDir) === None)
   }
 
+  test("streaming near-dedup finds and compacts its roots under a file: URI index dir") {
+    import java.nio.file.Files
+    import graft.streaming.StreamDedup
+
+    implicit val sqlCtx = spark.sqlContext
+    val base = Files.createTempDirectory("graft_sdedup_uri").toString
+    val indexDir =
+      "file:" + Files.createTempDirectory("graft_sdedup_uri_idx").toString
+
+    val input = MemoryStream[(Long, String)]
+    val query = StreamDedup.incrementalWriter(
+      input.toDF().toDF("doc_id", "text"), "doc_id", "text", base,
+      "TRANSFORMED_FILES", "Docs-Deduped", indexDir,
+      shingleN = 2, numHashes = 48, bands = 16, threshold = 0.5)
+      .start()
+    try {
+      input.addData(
+        (1L, "the quick brown fox jumps over the lazy dog"),
+        (2L, "completely different words entirely here now"))
+      query.processAllAvailable()
+      // a near copy of doc 1: only the probe of batch 0's root drops it
+      input.addData(
+        (10L, "the quick brown fox jumps over the lazy cat"),
+        (11L, "grand unified theories of modern physics explained simply"))
+      query.processAllAvailable()
+    } finally query.stop()
+
+    def survivorsOf(b: Int): Seq[Long] =
+      spark.read.parquet(
+        f"$base/TRANSFORMED_FILES/Docs-Deduped_b$b%010d")
+        .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(survivorsOf(0) === Seq(1L, 2L))
+    assert(survivorsOf(1) === Seq(11L))
+    assert(StreamDedup.indexRoots(indexDir).map(_.getName) ===
+      Seq("delta_b0000000000", "delta_b0000000001"))
+    assert(StreamDedup.compact(spark, indexDir) === Some("seed_0"))
+    assert(StreamDedup.indexRoots(indexDir).map(_.getName) === Seq("seed_0"))
+    assert(graft.operators.Dedup.MinhashIndex.load(spark, s"$indexDir/seed_0")
+      .shingles.select("id").as[Long].collect().sorted.toSeq ===
+      Seq(1L, 2L, 11L))
+  }
+
   test("loadLatest orders batch-keyed exports numerically, rejects mixes") {
     import java.nio.file.Files
     import graft.sources.StageSink
