@@ -26,6 +26,12 @@ import org.apache.spark.sql.functions._
   *   persisted, shard-partitioned corpus indexes so continuous ingest
   *   pays O(batch + candidates), never O(corpus).
   *
+  * The near-dup families (MinHash, SimHash, embeddings, and media's
+  * perceptual hashes in `Multimodal`) share one core: [[pairJoin]],
+  * [[probeJoin]], [[clusterDrop]] and [[incrementalBody]]. A family
+  * supplies its featurizer, its keys, its verify and its index
+  * entries projection.
+  *
   * Signature math runs in the native Catalyst kernels
   * (minhash_signature / word_shingles / simhash64 / jaccard_longs),
   * inside codegen. The public `functions._` array-expression forms
@@ -211,37 +217,20 @@ object Dedup {
   /** LSH banding: split the signature into `bands` bands and emit
     * (band_id, band_hash) bucket keys. Docs sharing any bucket become
     * candidate pairs via an equi-join on the bucket key — a plain shuffle
-    * hash join on a well-distributed key, never a cross join.
+    * hash join on a well-distributed key, never a cross join
+    * ([[pairJoin]]).
     */
   def minhashCandidates(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    // repartition the raw text BEFORE the expensive stages so signature
-    // work spreads across all cores even from a one-split scan
-    val spread = Parallelism.ensure(
-      docs.select(col(idCol).as("__id"), col(textCol).as("__t")))
-    val sig = spread
-      .select(col("__id"), shinglesCol(docs, col("__t"), shingleN).as("__sh"))
-      .select(col("__id"),
-        signatureCol(col("__sh"), numHashes).as("__sig"))
-    val buckets = sig.select(
-      col("__id"),
-      explode(bandBucketStructs(col("__sig"), bands, rowsPerBand)).as("__bk"))
-      .select(col("__id"), col("__bk.band"), col("__bk.bucket"))
-    // repartition on the join key BEFORE the self-join: both sides then
-    // share one identical exchange subtree, so ReuseExchange computes
-    // the signatures once and the join is co-partitioned (no further
-    // shuffle)
-    val keyed = buckets.repartition(col("band"), col("bucket"))
-    val l = keyed.select(col("__id").as("a_id"), col("band"), col("bucket"))
-    val r = keyed.select(col("__id").as("b_id"), col("band").as("band2"),
-      col("bucket").as("bucket2"))
-    l.join(r, col("band") === col("band2") && col("bucket") === col("bucket2") &&
-        col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
+    pairJoin(minhashFeatures(docs, idCol, textCol, shingleN, numHashes),
+      minhashKeys(numHashes, bands))
   }
+
+  /** The band keys of a MinHash feature frame's `__sig`. */
+  private def minhashKeys(numHashes: Int, bands: Int): Column =
+    bandBucketStructs(col("__sig"), bands, numHashes / bands)
 
   /** Full MinHash near-dup: LSH candidates verified by exact n-gram
     * Jaccard ≥ threshold. */
@@ -264,7 +253,7 @@ object Dedup {
     // Single explode pass, not a two-branch union (a union would
     // evaluate `cands` once per branch).
     val candIds = cands
-      .select(explode(array(col("a_id"), col("b_id"))).as("__id"))
+      .select(explode(array(col("a_id"), col("b_id"))).as("id"))
       .distinct()
     // Shingles travel to the pair join as RAW 64-bit hashes, not
     // strings: set Jaccard is preserved exactly unless two distinct
@@ -273,17 +262,25 @@ object Dedup {
     // shrinks to 8 bytes per shingle and the per-pair kernel becomes a
     // primitive sort-merge instead of string hash sets.
     val sh = Parallelism.ensure(
-      docs.select(col(idCol).as("__id"), col(textCol).as("__t"))
-        .join(candIds, Seq("__id"), "left_semi"))
-      .select(col("__id"),
-        transform(shinglesCol(docs, col("__t"), shingleN), xxhash64(_)).as("__sh"))
-    cands
-      .join(sh.select(col("__id").as("a_id"), col("__sh").as("__sha")), "a_id")
-      .join(sh.select(col("__id").as("b_id"), col("__sh").as("__shb")), "b_id")
+      docs.select(col(idCol).as("id"), col(textCol).as("__t"))
+        .join(candIds, Seq("id"), "left_semi"))
+      .select(col("id"),
+        transform(shinglesCol(docs, col("__t"), shingleN), xxhash64(_))
+          .as("shingles"))
+    jaccardVerify(cands, sh, sh, threshold)
+  }
+
+  /** The MinHash verify: (a_id, b_id) pairs joined to the (id,
+    * shingles) rows of `a` and `b`, kept at rounded exact Jaccard ≥
+    * `threshold`. */
+  private def jaccardVerify(pairs: DataFrame, a: DataFrame, b: DataFrame,
+      threshold: Double): DataFrame =
+    pairs
+      .join(a.select(col("id").as("a_id"), col("shingles").as("__sha")), "a_id")
+      .join(b.select(col("id").as("b_id"), col("shingles").as("__shb")), "b_id")
       .withColumn("jaccard", round(jaccardLongs(col("__sha"), col("__shb")), 4))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
-  }
 
   /** Long-array Jaccard through the native sort-merge `jaccard_longs`
     * kernel — the same value as [[jaccard]] on the arrays. */
@@ -410,6 +407,16 @@ object Dedup {
     scanOnly(entries.queryExecution.optimizedPlan)
   }
 
+  /** `entries` filtered to the `partition` values in the one-column
+    * `values` — the partition filter of every index probe. Only a
+    * file-backed index ([[isFileBacked]]) gets it: the values cost a
+    * driver collect, and an in-memory index has nothing to prune. */
+  private[graft] def prunePartitions(entries: DataFrame, partition: String,
+      values: DataFrame): DataFrame =
+    if (!isFileBacked(entries)) entries
+    else entries.filter(col(partition).isin(
+      values.distinct().collect().map(_.get(0)).toSeq: _*))
+
   /** Build the MinHash index for a (deduped) corpus. The same
     * (shingleN, numHashes, bands) MUST be used for every later probe —
     * bucket hashes from different parameters never match. */
@@ -417,12 +424,16 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8): MinhashIndex = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    MinhashIndex(
-      minhashFeatures(docs, idCol, textCol, shingleN, numHashes)
-        .select(col("id"), shardOf(col("id")).as("shard"), col("shingles"),
-          bandBucketStructs(col("__sig"), bands, numHashes / bands)
-            .as("bands")))
+    MinhashIndex(minhashEntries(
+      minhashFeatures(docs, idCol, textCol, shingleN, numHashes),
+      numHashes, bands))
   }
+
+  /** MinhashIndex entries of a feature frame. */
+  private def minhashEntries(feat: DataFrame, numHashes: Int,
+      bands: Int): DataFrame =
+    feat.select(col("id"), shardOf(col("id")).as("shard"), col("shingles"),
+      minhashKeys(numHashes, bands).as("bands"))
 
   /** Near-dup pairs between a new batch and the indexed corpus:
     * (corpus_id, batch_id, jaccard) with jaccard ≥ threshold.
@@ -452,49 +463,25 @@ object Dedup {
   private def incrementalNearDupFeat(
       feat: DataFrame, index: MinhashIndex,
       numHashes: Int, bands: Int, threshold: Double): DataFrame = {
-    val batchBands = feat.select(col("id").as("b_id"),
-      explode(bandBucketStructs(col("__sig"), bands, numHashes / bands))
-        .as("__bk"))
-      .select(col("b_id"), col("__bk.band").as("band"),
-        col("__bk.bucket").as("bucket"))
-    val cands = index.bands
-      .join(broadcast(batchBands), Seq("band", "bucket"))
+    val cands = probeJoin(index.bands, feat, Seq(col("id").as("b_id")),
+        minhashKeys(numHashes, bands), bands)
       .select(col("id").as("a_id"), col("b_id"))
       .distinct()
       .localCheckpoint(false)
     // corpus shingles for candidate corpus docs ONLY. On a SAVED index
-    // a shard filter comes first: the candidate ids' shards are a tiny
-    // driver-collected set (≤ IndexShards ints — cands is already
-    // materialised), and `shard` is the parquet partition column, so a
-    // small batch READS only the candidate-bearing fraction of the
-    // corpus-text-sized shingles column instead of scanning it whole
-    // (1-doc probe floor 3.7 → 1.4 s vs a 150k-doc index); the
-    // semi-join then picks exact rows within those shards. An
-    // in-memory index skips the filter — nothing to prune, and the
-    // shard collect would cost an extra synchronous job.
-    val pruned =
-      if (!isFileBacked(index.entries)) index.shingles
-      else {
-        val candShards = cands
-          .select(shardOf(col("a_id")).as("s")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        index.shingles.filter(col("shard").isin(candShards: _*))
-      }
-    val corpusSh = pruned
+    // a shard filter comes first (`shard` is the parquet partition
+    // column), so a small batch READS only the candidate-bearing
+    // fraction of the corpus-text-sized shingles column instead of
+    // scanning it whole (1-doc probe floor 3.7 → 1.4 s vs a 150k-doc
+    // index); the semi-join then picks exact rows within those shards.
+    val corpusSh = prunePartitions(index.shingles, "shard",
+        cands.select(shardOf(col("a_id"))))
       .join(cands.select(col("a_id").as("id")).distinct(), Seq("id"), "left_semi")
-      .select(col("id").as("a_id"), col("shingles").as("__sha"))
-    cands
-      .join(corpusSh, "a_id")
-      .join(broadcast(feat.select(col("id").as("b_id"),
-        col("shingles").as("__shb"))), "b_id")
-      .withColumn("jaccard",
-        round(jaccardLongs(col("__sha"), col("__shb")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
+    jaccardVerify(cands, corpusSh, broadcast(feat), threshold)
   }
 
-  /** Incremental near-dedup of a batch against an indexed corpus.
-    * Returns (survivors, delta-index):
+  /** Incremental near-dedup of a batch against an indexed corpus
+    * ([[incrementalBody]]). Returns (survivors, delta-index):
     * - a batch doc near-duplicating ANY corpus doc is dropped (the
     *   corpus copy is already in the training set);
     * - among the rest, within-batch near-dup clusters keep their
@@ -517,53 +504,13 @@ object Dedup {
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.5): (DataFrame, MinhashIndex) = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    // The batch is shingled + signed ONCE; the corpus probe, the
-    // within-batch dedup and the returned delta index all read this
-    // materialized frame. (It used to be featurized three times: by
-    // incrementalNearDup, by dropNearDuplicates' fresh
-    // minhashNearDup, and by the delta buildMinhashIndex — same
-    // deterministic hashes each time, guide §1.2 step 1.)
-    val feat = minhashFeatures(batch, idCol, textCol, shingleN, numHashes)
-      .localCheckpoint(false)
-    val vsCorpus = incrementalNearDupFeat(feat, index, numHashes, bands,
-      threshold)
-      .select(col("b_id").as(idCol))
-    val inBatch = batch.join(vsCorpus, Seq(idCol), "left_anti")
-    // within-batch near-dup over the surviving rows' SAME features —
-    // identical band keys / shingles as a fresh minhashNearDup of
-    // inBatch (the featurization is a pure deterministic projection)
-    val bfeat = feat.join(vsCorpus.select(col(idCol).as("id")),
-      Seq("id"), "left_anti")
-    val rowsPerBand = numHashes / bands
-    val buckets = bfeat.select(col("id").as("__id"),
-      explode(bandBucketStructs(col("__sig"), bands, rowsPerBand)).as("__bk"))
-      .select(col("__id"), col("__bk.band"), col("__bk.bucket"))
-    val keyed = buckets.repartition(col("band"), col("bucket"))
-    val l = keyed.select(col("__id").as("a_id"), col("band"), col("bucket"))
-    val r = keyed.select(col("__id").as("b_id"), col("band").as("band2"),
-      col("bucket").as("bucket2"))
-    val pairs = l.join(r,
-        col("band") === col("band2") && col("bucket") === col("bucket2") &&
-          col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-      .join(bfeat.select(col("id").as("a_id"), col("shingles").as("__sha")),
-        "a_id")
-      .join(bfeat.select(col("id").as("b_id"), col("shingles").as("__shb")),
-        "b_id")
-      .withColumn("jaccard",
-        round(jaccardLongs(col("__sha"), col("__shb")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
-    val cc = connectedComponents(pairs, "a_id", "b_id")
-    val losers = cc.filter(col("component") =!= col("id"))
-      .select(col("id").as(idCol))
-    val survivors = inBatch.join(losers, Seq(idCol), "left_anti")
-    val sfeat = bfeat.join(losers.select(col(idCol).as("id")),
-      Seq("id"), "left_anti")
-    (survivors,
-      MinhashIndex(sfeat.select(col("id"), shardOf(col("id")).as("shard"),
-        col("shingles"),
-        bandBucketStructs(col("__sig"), bands, rowsPerBand).as("bands"))))
+    val (survivors, entries) = incrementalBody(batch, idCol,
+      minhashFeatures(batch, idCol, textCol, shingleN, numHashes),
+      incrementalNearDupFeat(_, index, numHashes, bands, threshold),
+      f => jaccardVerify(pairJoin(f, minhashKeys(numHashes, bands)), f, f,
+        threshold),
+      minhashEntries(_, numHashes, bands))
+    (survivors, MinhashIndex(entries))
   }
 
   /** Exact incremental dedup: drop batch rows whose content already
@@ -766,48 +713,73 @@ object Dedup {
     * verify stay unchanged, and each true pair still arrives at the
     * verify exactly once (probe buckets are distinct, so a given
     * (a, b) meets on exactly one probe) — no dedup pass needed.
-    * `probeFlips = 0` is the original single-bucket behavior. */
+    * `probeFlips = 0` is the original single-bucket behavior.
+    *
+    * The pair join is embedding's own, not [[pairJoin]]: a bucket is
+    * one key per vector and each pair meets on exactly one probe, so
+    * the shared join's distinct would add an aggregate for nothing. */
   def embeddingNearDup(
       vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
       numPlanes: Int = 8, threshold: Double = 0.8,
       probeFlips: Int = 0): DataFrame = {
-    import graft.functions.VectorFunctions._
     require(probeFlips >= 0 && probeFlips <= 2,
       "embeddingNearDup: probeFlips in 0..2 (3+ flips probes most of " +
         "the hypercube — lower numPlanes instead)")
-    val bucketed = Parallelism.ensure(
-      vecs.select(col(idCol).as("__id"), col(vecCol).as("__v")))
-      .select(col("__id"), col("__v"),
-        hyperplaneBucket(col("__v"), dim, numPlanes).as("__bkt"),
-        norm(col("__v")).as("__n"))
-    // probe bucket set: own bucket + all ≤ probeFlips bit-flips
-    // (distinct by construction — each is a distinct XOR mask)
-    val probeCols: Seq[org.apache.spark.sql.Column] =
-      col("__bkt") +:
-        ((if (probeFlips >= 1)
-          (0 until numPlanes).map(p =>
-            col("__bkt").bitwiseXOR(lit(1L << p)))
-        else Seq.empty) ++
-          (if (probeFlips >= 2)
-            for { p <- 0 until numPlanes; q <- (p + 1) until numPlanes }
-              yield col("__bkt").bitwiseXOR(lit((1L << p) | (1L << q)))
-          else Seq.empty))
-    val keyed = bucketed.repartition(col("__bkt"))
+    embeddingPairs(embeddingFeatures(vecs, idCol, vecCol, dim, numPlanes),
+      numPlanes, threshold, probeFlips)
+  }
+
+  /** (id, vec, bucket, nrm) feature frame shared by the pair join, the
+    * index build and the incremental probe. */
+  private def embeddingFeatures(vecs: DataFrame, idCol: String,
+      vecCol: String, dim: Int, numPlanes: Int): DataFrame = {
+    import graft.functions.VectorFunctions._
+    Parallelism.ensure(vecs.select(col(idCol).as("id"), col(vecCol).as("vec")))
+      .select(col("id"), col("vec"),
+        hyperplaneBucket(col("vec"), dim, numPlanes).as("bucket"),
+        norm(col("vec")).as("nrm"))
+  }
+
+  /** The multi-probe bucket set of `bucket`: itself and every bucket
+    * within `probeFlips` sign flips of it — distinct XOR masks, so
+    * distinct buckets. */
+  private def flipProbes(bucket: Column, numPlanes: Int,
+      probeFlips: Int): Seq[Column] = {
+    val singles = if (probeFlips >= 1) (0 until numPlanes).map(1L << _) else Nil
+    val doubles =
+      if (probeFlips >= 2)
+        for { p <- 0 until numPlanes; q <- (p + 1) until numPlanes }
+          yield (1L << p) | (1L << q)
+      else Nil
+    bucket +: (singles ++ doubles).map(m => bucket.bitwiseXOR(lit(m)))
+  }
+
+  /** Rounded exact cosine, the embedding verify. */
+  private def cosine(va: Column, vb: Column, na: Column, nb: Column): Column = {
+    import graft.functions.VectorFunctions._
+    round(cosinePrenormed(dot(va, vb), na, nb), 4)
+  }
+
+  /** [[embeddingNearDup]]'s pairs over a feature frame. */
+  private def embeddingPairs(feat: DataFrame, numPlanes: Int,
+      threshold: Double, probeFlips: Int): DataFrame = {
+    val keyed = feat.repartition(col("bucket"))
     val a =
       if (probeFlips == 0)
-        keyed.select(col("__id").as("a_id"), col("__v").as("__va"),
-          col("__bkt").as("__pb"), col("__n").as("__na"))
+        keyed.select(col("id").as("a_id"), col("vec").as("__va"),
+          col("bucket").as("__pb"), col("nrm").as("__na"))
       else
-        bucketed
-          .select(col("__id").as("a_id"), col("__v").as("__va"),
-            explode(array(probeCols: _*)).as("__pb"),
-            col("__n").as("__na"))
+        feat
+          .select(col("id").as("a_id"), col("vec").as("__va"),
+            explode(array(flipProbes(col("bucket"), numPlanes,
+              probeFlips): _*)).as("__pb"),
+            col("nrm").as("__na"))
           .repartition(col("__pb"))
-    val b = keyed.select(col("__id").as("b_id"), col("__v").as("__vb"),
-      col("__bkt").as("__bkt2"), col("__n").as("__nb"))
+    val b = keyed.select(col("id").as("b_id"), col("vec").as("__vb"),
+      col("bucket").as("__bkt2"), col("nrm").as("__nb"))
     a.join(b, col("__pb") === col("__bkt2") && col("a_id") < col("b_id"))
-      .withColumn("cosine", round(
-        cosinePrenormed(dot(col("__va"), col("__vb")), col("__na"), col("__nb")), 4))
+      .withColumn("cosine",
+        cosine(col("__va"), col("__vb"), col("__na"), col("__nb")))
       .filter(col("cosine") >= threshold)
       .select("a_id", "b_id", "cosine")
   }
@@ -819,14 +791,9 @@ object Dedup {
   def dropEmbeddingNearDuplicates(
       vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
       numPlanes: Int = 8, threshold: Double = 0.8,
-      probeFlips: Int = 0): DataFrame = {
-    val pairs = embeddingNearDup(vecs, idCol, vecCol, dim, numPlanes,
-      threshold, probeFlips)
-    val losers = connectedComponents(pairs, "a_id", "b_id")
-      .filter(col("component") =!= col("id"))
-      .select(col("id").as(idCol))
-    vecs.join(losers, Seq(idCol), "left_anti")
-  }
+      probeFlips: Int = 0): DataFrame =
+    clusterDrop(embeddingNearDup(vecs, idCol, vecCol, dim, numPlanes,
+      threshold, probeFlips))(vecs, idCol)
 
   /** Semantic dedup over an embedding corpus — the SemDeDup recipe
     * (Abbas et al., "SemDeDup: Data-efficient learning at web-scale
@@ -844,7 +811,8 @@ object Dedup {
     * split risk.
     *
     * Plan shape: centroid training + assignment are Ann's
-    * zero-exchange projections (model ships in the plan); the pair
+    * zero-exchange projections (the trained centroids are a
+    * `CentroidSet` the assignment kernel holds by reference); the pair
     * join is an equi-join on centroid_id over repartitioned bounded
     * blocks — quadratic WITHIN a cluster, so pick k ≈ n/(target
     * cluster size) exactly as with any blocked pairing; groups resolve
@@ -953,16 +921,14 @@ object Dedup {
     * (dim, numPlanes) MUST be used for every later probe. */
   def buildEmbeddingIndex(
       vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
-      numPlanes: Int = 8): EmbeddingIndex = {
-    import graft.functions.VectorFunctions._
-    EmbeddingIndex(Parallelism.ensure(
-      vecs.select(col(idCol).as("id"), col(vecCol).as("vec")))
-      .select(col("id"), col("vec"),
-        hyperplaneBucket(col("vec"), dim, numPlanes).as("bucket"))
-      .select(col("id"), col("vec"),
-        embeddingShardOf(col("bucket")).as("shard"), col("bucket"),
-        norm(col("vec")).as("nrm")))
-  }
+      numPlanes: Int = 8): EmbeddingIndex =
+    EmbeddingIndex(embeddingEntries(
+      embeddingFeatures(vecs, idCol, vecCol, dim, numPlanes)))
+
+  /** EmbeddingIndex entries of a feature frame. */
+  private def embeddingEntries(feat: DataFrame): DataFrame =
+    feat.select(col("id"), col("vec"),
+      embeddingShardOf(col("bucket")).as("shard"), col("bucket"), col("nrm"))
 
   /** Near-dup pairs between a new embedding batch and the indexed
     * corpus: (corpus a_id, batch b_id, cosine ≥ threshold). Batch side
@@ -980,63 +946,27 @@ object Dedup {
   def incrementalEmbeddingNearDup(
       batch: DataFrame, index: EmbeddingIndex, idCol: String,
       vecCol: String, dim: Int, numPlanes: Int = 8,
-      threshold: Double = 0.8, probeFlips: Int = 0): DataFrame = {
-    import graft.functions.VectorFunctions._
+      threshold: Double = 0.8, probeFlips: Int = 0): DataFrame =
+    embeddingProbe(
+      embeddingFeatures(batch, idCol, vecCol, dim, numPlanes)
+        .localCheckpoint(false),
+      index, numPlanes, threshold, probeFlips)
+
+  /** [[incrementalEmbeddingNearDup]] over a pinned feature frame. */
+  private def embeddingProbe(feat: DataFrame, index: EmbeddingIndex,
+      numPlanes: Int, threshold: Double, probeFlips: Int): DataFrame = {
     require(probeFlips >= 0 && probeFlips <= 2,
       "incrementalEmbeddingNearDup: probeFlips in 0..2")
-    val b1 = batch
-      .select(col(idCol).as("b_id"), col(vecCol).as("__vb"),
-        hyperplaneBucket(col(vecCol), dim, numPlanes).as("bucket"),
-        norm(col(vecCol)).as("__nb"))
-    val probeCols: Seq[org.apache.spark.sql.Column] =
-      col("bucket") +:
-        ((if (probeFlips >= 1)
-          (0 until numPlanes).map(p =>
-            col("bucket").bitwiseXOR(lit(1L << p)))
-        else Seq.empty) ++
-          (if (probeFlips >= 2)
-            for { p <- 0 until numPlanes; q <- (p + 1) until numPlanes }
-              yield col("bucket").bitwiseXOR(lit((1L << p) | (1L << q)))
-          else Seq.empty))
-    val b0 =
-      (if (probeFlips == 0) b1
-       else b1.select(col("b_id"), col("__vb"), col("__nb"),
-         explode(array(probeCols: _*)).as("bucket")))
-        .localCheckpoint(false)
-    // multi-probe REPLICATES the batch 1 + planes [+ C(planes,2)]
-    // times before the broadcast — ~37x at the default 8 planes but
-    // ~2000x at 62 planes with probeFlips=2, which can push an
-    // innocent-looking batch past the broadcast threshold (r14
-    // ADVICE). Above the replication bound the probe join falls back
-    // to a shuffle join: same result, the exchange instead of an
-    // oversized broadcast.
-    val replication = probeCols.size
-    val MaxBroadcastReplication = 128
-    val b =
-      if (replication <= MaxBroadcastReplication) broadcast(b0)
-      else {
-        log.warn(s"incrementalEmbeddingNearDup: probe replication " +
-          s"$replication > $MaxBroadcastReplication " +
-          s"(numPlanes=$numPlanes, probeFlips=$probeFlips) - " +
-          "falling back to a shuffle join for the probe side")
-        b0
-      }
-    // on a SAVED index, the batch's sign-buckets determine the shards
-    // it can possibly match — a tiny driver-collected set that prunes
-    // the (vector-sized) corpus scan to the batch's partitions; an
-    // in-memory index has nothing to prune, skip the extra job
-    val entries =
-      if (!isFileBacked(index.entries)) index.entries
-      else {
-        val batchShards = b0
-          .select(embeddingShardOf(col("bucket")).as("s")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        index.entries.filter(col("shard").isin(batchShards: _*))
-      }
-    entries
-      .join(b, Seq("bucket"))
-      .withColumn("cosine", round(
-        cosinePrenormed(dot(col("vec"), col("__vb")), col("nrm"), col("__nb")), 4))
+    val probes = flipProbes(col("bucket"), numPlanes, probeFlips)
+    // on a SAVED index, the batch's probe buckets determine the shards
+    // it can possibly match
+    val entries = prunePartitions(index.entries, "shard",
+      feat.select(explode(array(probes.map(embeddingShardOf): _*))))
+    probeJoin(entries, feat,
+        Seq(col("id").as("b_id"), col("vec").as("__vb"), col("nrm").as("__nb")),
+        array(probes.map(p => struct(p.as("bucket"))): _*), probes.size)
+      .withColumn("cosine",
+        cosine(col("vec"), col("__vb"), col("nrm"), col("__nb")))
       .filter(col("cosine") >= threshold)
       .select(col("id").as("a_id"), col("b_id"), col("cosine"))
   }
@@ -1044,19 +974,17 @@ object Dedup {
   /** Incremental embedding near-dedup: drop batch vectors
     * near-duplicating the indexed corpus, dedup the remainder within
     * the batch, return (survivors, delta-index) — the embedding twin of
-    * [[incrementalDedup]]. */
+    * [[incrementalDedup]] ([[incrementalBody]]). */
   def incrementalEmbeddingDedup(
       batch: DataFrame, index: EmbeddingIndex, idCol: String,
       vecCol: String, dim: Int, numPlanes: Int = 8,
       threshold: Double = 0.8, probeFlips: Int = 0): (DataFrame, EmbeddingIndex) = {
-    val hits = incrementalEmbeddingNearDup(batch, index, idCol, vecCol,
-      dim, numPlanes, threshold, probeFlips)
-      .select(col("b_id").as(idCol))
-    val survivors = dropEmbeddingNearDuplicates(
-      batch.join(hits, Seq(idCol), "left_anti"), idCol, vecCol, dim,
-      numPlanes, threshold, probeFlips)
-    (survivors,
-      buildEmbeddingIndex(survivors, idCol, vecCol, dim, numPlanes))
+    val (survivors, entries) = incrementalBody(batch, idCol,
+      embeddingFeatures(batch, idCol, vecCol, dim, numPlanes),
+      embeddingProbe(_, index, numPlanes, threshold, probeFlips),
+      embeddingPairs(_, numPlanes, threshold, probeFlips),
+      embeddingEntries)
+    (survivors, EmbeddingIndex(entries))
   }
 
   // ------------------------------------------------------------------
@@ -1123,33 +1051,27 @@ object Dedup {
   def simhashCandidates(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 2, maxHamming: Int = 3): DataFrame =
-    simhashBandPairs(
-      simhashFeatures(docs, idCol, textCol, shingleN), maxHamming)
+    simhashPairs(simhashFeatures(docs, idCol, textCol, shingleN), maxHamming)
 
-  /** (\_\_id, __sim) SimHash frame shared by candidate generation, the
-    * index build and the incremental probe. */
+  /** (id, sim) SimHash frame shared by candidate generation, the index
+    * build (it IS the index's entries) and the incremental probe. */
   private def simhashFeatures(
       docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int): DataFrame = {
+      shingleN: Int): DataFrame =
     Parallelism.ensure(
-      docs.select(col(idCol).as("__id"), col(textCol).as("__t")))
-      .select(col("__id"),
+      docs.select(col(idCol).as("id"), col(textCol).as("__t")))
+      .select(col("id"),
         call_function("simhash64", shinglesCol(docs, col("__t"), shingleN))
-          .as("__sim"))
-  }
+          .as("sim"))
 
   /** SimHash near-dedup with the survivor policy of
     * [[dropNearDuplicates]]: banded candidates, exact-hamming verify,
     * transitive clusters, keep the minimum-id doc per cluster. */
   def dropSimhashDuplicates(
       docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 2, maxHamming: Int = 3): DataFrame = {
-    val pairs = simhashCandidates(docs, idCol, textCol, shingleN, maxHamming)
-    val losers = connectedComponents(pairs, "a_id", "b_id")
-      .filter(col("component") =!= col("id"))
-      .select(col("id").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
-  }
+      shingleN: Int = 2, maxHamming: Int = 3): DataFrame =
+    clusterDrop(simhashCandidates(docs, idCol, textCol, shingleN,
+      maxHamming))(docs, idCol)
 
   /** Persisted SimHash state of a corpus: ONE table of (id, sim) — at
     * 8 bytes of state per document this is the LIGHTEST of the three
@@ -1157,7 +1079,8 @@ object Dedup {
     * embeddings store the vectors). Bands are pure bit math recomputed
     * at probe time from the radius, so one index serves ANY maxHamming
     * — unlike [[MinhashIndex]], whose band buckets bake in the banding
-    * parameters. */
+    * parameters. Saved unpartitioned: a probe reads every row's 8
+    * bytes anyway, so there is no fetch to prune. */
   final case class SimhashIndex(entries: DataFrame) {
     def save(dir: String, mode: String = "error"): Unit =
       entries.write.mode(mode).parquet(s"$dir/entries")
@@ -1170,8 +1093,9 @@ object Dedup {
   }
 
   object SimhashIndex {
+    /** [[IndexMaintenance.loadEntries]]: tombstoned ids are dropped. */
     def load(spark: org.apache.spark.sql.SparkSession, dir: String): SimhashIndex =
-      SimhashIndex(spark.read.parquet(s"$dir/entries"))
+      SimhashIndex(IndexMaintenance.loadEntries(spark, dir))
   }
 
   /** Build the SimHash index for a (deduped) corpus. The same
@@ -1180,8 +1104,7 @@ object Dedup {
   def buildSimhashIndex(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 2): SimhashIndex =
-    SimhashIndex(simhashFeatures(docs, idCol, textCol, shingleN)
-      .select(col("__id").as("id"), col("__sim").as("sim")))
+    SimhashIndex(simhashFeatures(docs, idCol, textCol, shingleN))
 
   /** Near-dup pairs between a new batch and the SimHash-indexed corpus:
     * (corpus a_id, batch b_id, hamming ≤ maxHamming). Batch is signed
@@ -1190,40 +1113,88 @@ object Dedup {
   def incrementalSimhashNearDup(
       batch: DataFrame, index: SimhashIndex, idCol: String,
       textCol: String, shingleN: Int = 2,
-      maxHamming: Int = 3): DataFrame = {
-    val feat = simhashFeatures(batch, idCol, textCol, shingleN)
-      .localCheckpoint(false)
-    val b0 = feat.select(col("__id").as("b_id"), col("__sim").as("__simb"),
-      explode(simhashBandStructs(col("__sim"), maxHamming)).as("__bk"))
-      .select(col("b_id"), col("__simb"),
-        col("__bk.band"), col("__bk.bucket"))
-    index.entries
-      .select(col("id").as("a_id"), col("sim").as("__sima"),
-        explode(simhashBandStructs(col("sim"), maxHamming)).as("__bk"))
-      .select(col("a_id"), col("__sima"), col("__bk.band"), col("__bk.bucket"))
-      .join(broadcast(b0), Seq("band", "bucket"))
-      .select(col("a_id"), col("b_id"),
-        bit_count(col("__sima").bitwiseXOR(col("__simb"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+      maxHamming: Int = 3): DataFrame =
+    simhashProbe(
+      simhashFeatures(batch, idCol, textCol, shingleN).localCheckpoint(false),
+      index, maxHamming)
+
+  private def simhashProbe(feat: DataFrame, index: SimhashIndex,
+      maxHamming: Int): DataFrame =
+    hammingProbe(index.entries, feat, "sim",
+      simhashBandStructs(col("sim"), maxHamming), maxHamming)
 
   /** Incremental SimHash near-dedup: drop batch docs within `maxHamming`
     * of the indexed corpus, dedup the remainder within the batch,
     * return (survivors, delta-index) — completing the incremental
-    * family (exact/Bloom = q63/q67, MinHash = q64, embedding = q65). */
+    * family (exact/Bloom = q63/q67, MinHash = q64, embedding = q65)
+    * through the shared [[incrementalBody]]. */
   def incrementalSimhashDedup(
       batch: DataFrame, index: SimhashIndex, idCol: String,
       textCol: String, shingleN: Int = 2,
       maxHamming: Int = 3): (DataFrame, SimhashIndex) = {
-    val hits = incrementalSimhashNearDup(batch, index, idCol, textCol,
-      shingleN, maxHamming)
-      .select(col("b_id").as(idCol))
-    val survivors = dropSimhashDuplicates(
-      batch.join(hits, Seq(idCol), "left_anti"), idCol, textCol,
-      shingleN, maxHamming)
-    (survivors, buildSimhashIndex(survivors, idCol, textCol, shingleN))
+    val (survivors, entries) = incrementalBody(batch, idCol,
+      simhashFeatures(batch, idCol, textCol, shingleN),
+      simhashProbe(_, index, maxHamming),
+      simhashPairs(_, maxHamming),
+      identity)
+    (survivors, SimhashIndex(entries))
   }
+
+  /** Array of (band, bucket) structs for a sim column at a given
+    * radius — shared by whole-corpus banding and the incremental probe
+    * (both sides MUST band identically or buckets never match). `band`
+    * labels band `i`; media folds its kind into the label. */
+  private[graft] def simhashBandStructs(sim: Column, maxHamming: Int,
+      band: Int => Column = lit(_)): Column =
+    array(simhashBands(maxHamming).zipWithIndex.map {
+      case ((shift, width), i) =>
+        val mask = if (width == 64) -1L else (1L << width) - 1L
+        struct(band(i).as("band"),
+          call_function("shiftright", sim, lit(shift))
+            .bitwiseAND(lit(mask)).as("bucket"))
+    }: _*)
+
+  /** SimHash pairs within an (id, sim) frame, hamming ≤ maxHamming. */
+  private def simhashPairs(feat: DataFrame, maxHamming: Int): DataFrame =
+    hammingPairs(feat, "sim", simhashBandStructs(col("sim"), maxHamming),
+      maxHamming)
+
+  /** [[simhashPairs]] over a precomputed (\_\_id, __sim) frame — the
+    * form recall tests plant exact signatures in, and the media
+    * near-dup pairs use. Emits (a_id, b_id, hamming). */
+  private[graft] def simhashBandPairs(
+      sh: DataFrame, maxHamming: Int): DataFrame =
+    simhashPairs(sh.select(col("__id").as("id"), col("__sim").as("sim")),
+      maxHamming)
+
+  /** Hamming distance of two 64-bit hashes. */
+  private def hamming(a: Column, b: Column): Column =
+    bit_count(a.bitwiseXOR(b))
+
+  /** Banded 64-bit-hash pairs within `feat` (id, `hash`, `carry`...):
+    * (a_id, b_id, carry..., hamming ≤ maxHamming). The carried columns
+    * come from the a side; they must be equal on both sides, as keys
+    * that embed them make them. */
+  private[graft] def hammingPairs(feat: DataFrame, hash: String,
+      keys: Column, maxHamming: Int, carry: Seq[String] = Nil): DataFrame =
+    pairJoin(feat, keys, hash +: carry,
+      carry.map(c => col(s"a_$c").as(c)) :+
+        hamming(col(s"a_$hash"), col(s"b_$hash")).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+
+  /** Banded 64-bit-hash probe of a batch frame (id, `hash`,
+    * `carry`...) against an index frame of the same shape: (corpus
+    * a_id, batch b_id, carry..., hamming ≤ maxHamming). */
+  private[graft] def hammingProbe(index: DataFrame, batch: DataFrame,
+      hash: String, keys: Column, maxHamming: Int,
+      carry: Seq[String] = Nil): DataFrame =
+    probeJoin(keyed(index, Seq(col("id").as("a_id"), col(hash).as("__ha")), keys),
+        batch, Seq(col("id").as("b_id"), col(hash).as("__hb")) ++ carry.map(col),
+        keys, maxHamming + 1)
+      .select(col("a_id") +: col("b_id") +: carry.map(col) :+
+        hamming(col("__ha"), col("__hb")).as("hamming"): _*)
+      .distinct()
+      .filter(col("hamming") <= maxHamming)
 
   // ------------------------------------------------------------------
   // Near-dup clustering (connected components) + survivor selection
@@ -1417,47 +1388,103 @@ object Dedup {
   def dropNearDuplicates(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5): DataFrame = {
-    val pairs = minhashNearDup(docs, idCol, textCol, shingleN, numHashes,
-      bands, threshold)
-    val cc = connectedComponents(pairs, "a_id", "b_id")
-    val losers = cc.filter(col("component") =!= col("id"))
-      .select(col("id").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+      threshold: Double = 0.5): DataFrame =
+    clusterDrop(minhashNearDup(docs, idCol, textCol, shingleN, numHashes,
+      bands, threshold))(docs, idCol)
+
+  // ------------------------------------------------------------------
+  // The near-dup core, shared by every signature family
+  // ------------------------------------------------------------------
+
+  /** `frame` once per element of `keys` (an array of key structs): the
+    * `carry` columns, then the key struct's fields as columns. */
+  private def keyed(frame: DataFrame, carry: Seq[Column],
+      keys: Column): DataFrame = {
+    val exploded = frame.select(carry :+ explode(keys).as("__bk"): _*)
+    exploded.select(
+      exploded.columns.filterNot(_ == "__bk").map(col) :+ col("__bk.*"): _*)
   }
 
-  /** Banding + bucket self-join over a precomputed (__id, __sim) frame —
-    * split out so recall tests can plant exact signatures. Emits
-    * (a_id, b_id, hamming) with hamming ≤ maxHamming. */
-  /** array<struct<band,bucket>> for a sim column at a given radius —
-    * shared by whole-corpus banding and the incremental probe (both
-    * sides MUST band identically or buckets never match). */
-  private[graft] def simhashBandStructs(sim: Column, maxHamming: Int): Column =
-    array(simhashBands(maxHamming).zipWithIndex.map {
-      case ((shift, width), i) =>
-        val mask = if (width == 64) -1L else (1L << width) - 1L
-        struct(lit(i).as("band"),
-          call_function("shiftright", sim, lit(shift))
-            .bitwiseAND(lit(mask)).as("bucket"))
-    }: _*)
-
-  private[graft] def simhashBandPairs(
-      sh: DataFrame, maxHamming: Int): DataFrame = {
-    val banded = sh.select(
-      col("__id"), col("__sim"),
-      explode(simhashBandStructs(col("__sim"), maxHamming)).as("__bk"))
-      .select(col("__id"), col("__sim"), col("__bk.band"), col("__bk.bucket"))
+  /** (1) Pair join within a feature frame (id, `payload`...) whose rows
+    * share a (band, bucket) key of `keys`. The keys repartition BEFORE
+    * the self-join, so both sides share one exchange (ReuseExchange
+    * computes the features once) and the join is co-partitioned. Each
+    * side carries its payload as `a_<p>` / `b_<p>` to the `verify`
+    * columns; output is distinct (a_id, b_id, verify...) with a_id <
+    * b_id, since a pair can share several keys. */
+  private[graft] def pairJoin(feat: DataFrame, keys: Column,
+      payload: Seq[String] = Nil, verify: Seq[Column] = Nil): DataFrame = {
+    val k = keyed(feat, col("id").as("__id") +: payload.map(col), keys)
       .repartition(col("band"), col("bucket"))
-    val l = banded.select(col("__id").as("a_id"), col("__sim").as("sim_a"),
-      col("band"), col("bucket"))
-    val r = banded.select(col("__id").as("b_id"), col("__sim").as("sim_b"),
-      col("band").as("band2"), col("bucket").as("bucket2"))
+    val l = k.select(col("__id").as("a_id") +:
+      payload.map(p => col(p).as(s"a_$p")) :+ col("band") :+ col("bucket"): _*)
+    val r = k.select(col("__id").as("b_id") +:
+      payload.map(p => col(p).as(s"b_$p")) :+ col("band").as("band2") :+
+      col("bucket").as("bucket2"): _*)
     l.join(r, col("band") === col("band2") && col("bucket") === col("bucket2") &&
         col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
+      .select(col("a_id") +: col("b_id") +: verify: _*)
       .distinct()
-      .filter(col("hamming") <= maxHamming)
+  }
+
+  /** Keys per batch row above which the probe's exploded batch is too
+    * big to broadcast: embedding multi-probe replicates a vector 1 +
+    * planes [+ C(planes, 2)] times — ~37x at 8 planes, ~2000x at 62
+    * planes with two flips. No registered query crosses it. */
+  private val MaxBroadcastReplication = 128
+
+  /** (2) Batch-vs-index probe: `batch` explodes on `keys` (key structs,
+    * `keysPerRow` per row) with the `carry` columns and joins the
+    * index's key view on the key fields. The batch, the small side, is
+    * broadcast so the corpus never shuffles — a shuffle join above
+    * [[MaxBroadcastReplication]] keys per row. */
+  private[graft] def probeJoin(index: DataFrame, batch: DataFrame,
+      carry: Seq[Column], keys: Column, keysPerRow: Int): DataFrame = {
+    val b = keyed(batch, carry, keys)
+    val side =
+      if (keysPerRow <= MaxBroadcastReplication) broadcast(b)
+      else {
+        log.warn(s"probe replication $keysPerRow > " +
+          s"$MaxBroadcastReplication - falling back to a shuffle join " +
+          "for the probe side")
+        b
+      }
+    index.join(side, b.columns.drop(carry.size).toSeq)
+  }
+
+  /** (3) Cluster drop: connected components over verified (a_id, b_id)
+    * `pairs`; every member but its component's minimum id loses.
+    * Returns the left-anti join removing the losers from a frame keyed
+    * on a given id column, so the components resolve once however many
+    * frames the caller drops them from. */
+  private[graft] def clusterDrop(pairs: DataFrame): (DataFrame, String) => DataFrame = {
+    val losers = connectedComponents(pairs, "a_id", "b_id")
+      .filter(col("component") =!= col("id"))
+      .select(col("id"))
+    (rows, idCol) =>
+      rows.join(losers.select(col("id").as(idCol)), Seq(idCol), "left_anti")
+  }
+
+  /** (4) Incremental body: the batch `features` (with `id`) are pinned
+    * ONCE and feed the probe, the within-batch dedup and the delta.
+    * Batch rows `corpusHits` matches are dropped; the verified
+    * `batchPairs` among the rest cluster and keep their minimum id;
+    * `entries` projects the survivors' features into the delta.
+    * Returns (survivor `batch` rows, delta entries). A row linked to
+    * the corpus only through a dropped sibling survives:
+    * near-duplication is not transitive. */
+  private[graft] def incrementalBody(
+      batch: DataFrame, idCol: String, features: DataFrame,
+      corpusHits: DataFrame => DataFrame,
+      batchPairs: DataFrame => DataFrame,
+      entries: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val feat = features.localCheckpoint(false)
+    val vsCorpus = corpusHits(feat).select(col("b_id").as(idCol))
+    val inBatch = batch.join(vsCorpus, Seq(idCol), "left_anti")
+    val bfeat = feat.join(vsCorpus.select(col(idCol).as("id")),
+      Seq("id"), "left_anti")
+    val drop = clusterDrop(batchPairs(bfeat))
+    (drop(inBatch, idCol), entries(drop(bfeat, "id")))
   }
 
   /** Cross-document duplicated-SPAN removal — the substring-level dedup

@@ -352,13 +352,8 @@ object SetSimilarity {
         col("__na") * tauDen >= col("__bn") * tauNum && posBound)
       .select(col("a_id"), col("b_id")).distinct()
       .localCheckpoint(false) // shard collect + verify join both consume
-    val pruned =
-      if (!Dedup.isFileBacked(index.entries)) index.entries
-      else {
-        val shards = cand.select(Dedup.shardOf(col("a_id")).as("s"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        index.entries.filter(col("shard").isin(shards: _*))
-      }
+    val pruned = Dedup.prunePartitions(index.entries, "shard",
+      cand.select(Dedup.shardOf(col("a_id"))))
     // ord (df-ordered, the index format) sorts ONCE per A row below
     // the join, so the verify kernel's merge sees sorted operands on
     // every pair the row participates in
@@ -445,14 +440,12 @@ object SetSimilarity {
     // (partition pruning — the sublinear path); otherwise explode
     // the entries and stream them through the broadcast join.
     val atok = index.postings match {
-      case Some(p) if Dedup.isFileBacked(p) =>
-        val shards = bpre
-          .select(pmod(col("t"), lit(Dedup.IndexShards.toLong))
-            .cast("int").as("s"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        p.filter(col("tshard").isin(shards: _*))
+      case Some(p) =>
+        Dedup.prunePartitions(p, "tshard",
+            bpre.select(pmod(col("t"), lit(Dedup.IndexShards.toLong))
+              .cast("int")))
           .select(col("a_id"), col("n").as("__na"), col("t"))
-      case _ => index.entries
+      case None => index.entries
         .select(col("id").as("a_id"), col("n").as("__na"),
           explode(col("ord")).as("t"))
     }
@@ -461,13 +454,8 @@ object SetSimilarity {
         (col("__bn") - col("__ib")) * tauDen >= col("__bn") * tauNum)
       .select(col("a_id"), col("b_id")).distinct()
       .localCheckpoint(false)
-    val pruned =
-      if (!Dedup.isFileBacked(index.entries)) index.entries
-      else {
-        val shards = cand.select(Dedup.shardOf(col("a_id")).as("s"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        index.entries.filter(col("shard").isin(shards: _*))
-      }
+    val pruned = Dedup.prunePartitions(index.entries, "shard",
+      cand.select(Dedup.shardOf(col("a_id"))))
     // see probeIndex: ord sorts once per A row for the merge kernel
     val fa = pruned.select(col("id").as("a_id"),
       array_sort(col("ord")).as("__ta"), col("n").as("__na"))

@@ -5,7 +5,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: media as opaque `binary` columns with a
@@ -706,35 +706,25 @@ object Multimodal {
     * fingerprint to probe against. */
   def buildMediaHashIndex(media: DataFrame, idCol: String,
       bytesCol: String, kindCol: String): MediaHashIndex =
-    MediaHashIndex(mediaHashes(media, idCol, bytesCol, kindCol)
+    MediaHashIndex(mediaFeatures(media, idCol, bytesCol, kindCol))
+
+  /** (id, kind, dhash) of the decodable rows — the index entries'
+    * shape, and the batch features of the incremental dedup. */
+  private def mediaFeatures(media: DataFrame, idCol: String,
+      bytesCol: String, kindCol: String): DataFrame =
+    mediaHashes(media, idCol, bytesCol, kindCol)
       .filter(col("ok"))
-      .select(col(idCol).as("id"), col("kind"), col("dhash")))
+      .select(col(idCol).as("id"), col("kind"), col("dhash"))
 
-  /** Banded-Hamming candidate pairs WITHIN one hash frame
-    * (id, kind, dhash), kind-segregated: an image dHash and an audio
-    * envelope hash that happen to sit 3 bits apart are NOT a pair. */
-  private def bandedPairsByKind(h: DataFrame, maxHamming: Int): DataFrame = {
-    import graft.operators.Dedup
-    val banded = h.select(col("id"), col("kind"), col("dhash"),
-      explode(Dedup.simhashBandStructs(col("dhash"), maxHamming)).as("__bk"))
-      .select(col("id"), col("kind"), col("dhash"),
-        col("__bk.band"), col("__bk.bucket"))
-      .repartition(col("band"), col("bucket"))
-    val l = banded.select(col("id").as("a_id"), col("kind"),
-      col("dhash").as("__ha"), col("band"), col("bucket"))
-    val r = banded.select(col("id").as("b_id"), col("kind").as("__k2"),
-      col("dhash").as("__hb"), col("band").as("__band2"),
-      col("bucket").as("__bucket2"))
-    l.join(r, col("band") === col("__band2") &&
-        col("bucket") === col("__bucket2") && col("kind") === col("__k2") &&
-        col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), col("kind"),
-        bit_count(col("__ha").bitwiseXOR(col("__hb"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+  /** Band keys of an (id, kind, dhash) frame: the SimHash bands of
+    * `dhash`, each labelled with the row's kind, so an image dHash and
+    * an audio envelope hash that happen to sit 3 bits apart never share
+    * a key — kinds stay apart without a branch. */
+  private def mediaKeys(maxHamming: Int): Column =
+    graft.operators.Dedup.simhashBandStructs(col("dhash"), maxHamming,
+      band = i => struct(col("kind"), lit(i)))
 
-  /** Probe a batch HASH frame (b_id, kind, dhash) against the index:
+  /** Probe a batch HASH frame (id, kind, dhash) against the index:
     * (corpus a_id, batch b_id, kind, hamming ≤ maxHamming). The batch
     * is banded and broadcast; the index contributes its 8-byte hashes
     * to the band equi-join — corpus media bytes never move. On a
@@ -742,24 +732,9 @@ object Multimodal {
   private[graft] def probeMediaHashes(batchHashes: DataFrame,
       index: MediaHashIndex, maxHamming: Int): DataFrame = {
     import graft.operators.Dedup
-    val kinds = batchHashes.select(col("kind")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val b0 = batchHashes.select(col("b_id"), col("kind"),
-      col("dhash").as("__hb"),
-      explode(Dedup.simhashBandStructs(col("dhash"), maxHamming)).as("__bk"))
-      .select(col("b_id"), col("kind"), col("__hb"),
-        col("__bk.band"), col("__bk.bucket"))
-    index.entries
-      .filter(col("kind").isin(kinds: _*))
-      .select(col("id").as("a_id"), col("kind"), col("dhash").as("__ha"),
-        explode(Dedup.simhashBandStructs(col("dhash"), maxHamming)).as("__bk"))
-      .select(col("a_id"), col("kind"), col("__ha"),
-        col("__bk.band"), col("__bk.bucket"))
-      .join(broadcast(b0), Seq("kind", "band", "bucket"))
-      .select(col("a_id"), col("b_id"), col("kind"),
-        bit_count(col("__ha").bitwiseXOR(col("__hb"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    Dedup.hammingProbe(
+      Dedup.prunePartitions(index.entries, "kind", batchHashes.select("kind")),
+      batchHashes, "dhash", mediaKeys(maxHamming), maxHamming, Seq("kind"))
   }
 
   /** Near-dup pairs between a new media batch and the indexed corpus:
@@ -767,16 +742,14 @@ object Multimodal {
     * side is 8-byte hashes. */
   def incrementalMediaNearDup(batch: DataFrame, index: MediaHashIndex,
       idCol: String, bytesCol: String, kindCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    val feat = mediaHashes(batch, idCol, bytesCol, kindCol)
-      .filter(col("ok"))
-      .select(col(idCol).as("b_id"), col("kind"), col("dhash"))
-      .localCheckpoint(false)
-    probeMediaHashes(feat, index, maxHamming)
-  }
+      maxHamming: Int = 3): DataFrame =
+    probeMediaHashes(
+      mediaFeatures(batch, idCol, bytesCol, kindCol).localCheckpoint(false),
+      index, maxHamming)
 
   /** Incremental media near-dedup — [[graft.operators.Dedup
-    * .incrementalDedup]]'s contract for perceptual hashes: a batch
+    * .incrementalDedup]]'s contract for perceptual hashes, through the
+    * shared [[graft.operators.Dedup.incrementalBody]]: a batch
     * asset within `maxHamming` of ANY indexed corpus asset (same
     * kind) is dropped; among the rest, within-batch near-dup clusters
     * keep their minimum id; QUARANTINED rows (undecodable bytes) pass
@@ -789,28 +762,13 @@ object Multimodal {
       idCol: String, bytesCol: String, kindCol: String,
       maxHamming: Int = 3): (DataFrame, MediaHashIndex) = {
     import graft.operators.Dedup
-    val feat = mediaHashes(batch, idCol, bytesCol, kindCol)
-      .localCheckpoint(false)
-    val okFeat = feat.filter(col("ok"))
-      .select(col(idCol).as("b_id"), col("kind"), col("dhash"))
-    val vsCorpus = probeMediaHashes(okFeat, index, maxHamming)
-      .select(col("b_id").as(idCol)).distinct()
-      .localCheckpoint(false)
-    val kept = okFeat.select(col("b_id").as("id"), col("kind"),
-        col("dhash"))
-      .join(vsCorpus.select(col(idCol).as("id")), Seq("id"), "left_anti")
-    val losers = Dedup.connectedComponents(
-      bandedPairsByKind(kept, maxHamming), "a_id", "b_id")
-      .filter(col("component") =!= col("id"))
-      .select(col("id").as(idCol))
-      .localCheckpoint(false)
-    val survivors = batch
-      .join(vsCorpus, Seq(idCol), "left_anti")
-      .join(losers, Seq(idCol), "left_anti")
-    val delta = MediaHashIndex(kept
-      .join(losers.select(col(idCol).as("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("kind"), col("dhash")))
-    (survivors, delta)
+    val (survivors, entries) = Dedup.incrementalBody(batch, idCol,
+      mediaFeatures(batch, idCol, bytesCol, kindCol),
+      probeMediaHashes(_, index, maxHamming),
+      Dedup.hammingPairs(_, "dhash", mediaKeys(maxHamming), maxHamming,
+        Seq("kind")),
+      identity)
+    (survivors, MediaHashIndex(entries))
   }
 
   def mediaRepartition(

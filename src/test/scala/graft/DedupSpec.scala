@@ -173,24 +173,27 @@ class DedupSpec extends SparkSpec {
       }
     } yield (index, batch)
 
+  /** Rows in a column-name and row order both sides agree on. */
+  private def rows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect()
+      .map(_.toSeq.mkString("|")).toSeq.sorted
+
+  private def textFrame(texts: Seq[Option[String]], firstId: Long): DataFrame =
+    texts.zipWithIndex.map { case (t, i) => (firstId + i, t.orNull) }
+      .toDF("doc_id", "text")
+
   test("incrementalDedup ≡ incrementalNearDup → left-anti → dropNearDuplicates → buildMinhashIndex") {
     val root = Files.createTempDirectory("graft_incr_diff").toString
     val (n, h, b, tau) = (2, 48, 16, 0.5)
-    // rows in a column-name and row order both sides agree on
-    def rows(df: DataFrame): Seq[String] =
-      df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect()
-        .map(_.toSeq.mkString("|")).toSeq.sorted
     var cases = 0
     val r = Check.check(diffParams,
       Prop.forAllNoShrink(incrementalCase) { case (indexTexts, batchTexts) =>
         cases += 1
         val dir = s"$root/case$cases"
-        Dedup.buildMinhashIndex(
-          indexTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-            .toDF("doc_id", "text"), "doc_id", "text", n, h, b).save(dir)
+        Dedup.buildMinhashIndex(textFrame(indexTexts.map(Option(_)), 0L),
+          "doc_id", "text", n, h, b).save(dir)
         val index = Dedup.MinhashIndex.load(spark, dir)
-        val batch = batchTexts.zipWithIndex
-          .map { case (t, i) => (100L + i, t.orNull) }.toDF("doc_id", "text")
+        val batch = textFrame(batchTexts, 100L)
         val (survivors, delta) = Dedup.incrementalDedup(batch, index,
           "doc_id", "text", n, h, b, tau)
         val hits = Dedup.incrementalNearDup(batch, index, "doc_id", "text",
@@ -206,6 +209,136 @@ class DedupSpec extends SparkSpec {
           s"survivors $gotS vs $wantS; delta $gotD vs $wantD"
       })
     assert(r.passed, Pretty.pretty(r))
+  }
+
+  test("incrementalSimhashDedup ≡ incrementalSimhashNearDup → left-anti → dropSimhashDuplicates → buildSimhashIndex") {
+    val root = Files.createTempDirectory("graft_simincr_diff").toString
+    // a wide radius, so near copies (one word swapped) cluster too
+    val (n, maxH) = (2, 8)
+    var cases = 0
+    val r = Check.check(diffParams,
+      Prop.forAllNoShrink(incrementalCase) { case (indexTexts, batchTexts) =>
+        cases += 1
+        val dir = s"$root/case$cases"
+        Dedup.buildSimhashIndex(textFrame(indexTexts.map(Option(_)), 0L),
+          "doc_id", "text", n).save(dir)
+        val index = Dedup.SimhashIndex.load(spark, dir)
+        val batch = textFrame(batchTexts, 100L)
+        val (survivors, delta) = Dedup.incrementalSimhashDedup(batch, index,
+          "doc_id", "text", n, maxH)
+        val hits = Dedup.incrementalSimhashNearDup(batch, index, "doc_id",
+          "text", n, maxH).select(col("b_id").as("doc_id"))
+        val refSurvivors = Dedup.dropSimhashDuplicates(
+          batch.join(hits, Seq("doc_id"), "left_anti"), "doc_id", "text",
+          n, maxH)
+        val refDelta = Dedup.buildSimhashIndex(refSurvivors, "doc_id",
+          "text", n)
+        val (gotS, wantS) = (rows(survivors), rows(refSurvivors))
+        val (gotD, wantD) = (rows(delta.entries), rows(refDelta.entries))
+        (gotS == wantS && gotD == wantD) :|
+          s"survivors $gotS vs $wantS; delta $gotD vs $wantD"
+      })
+    assert(r.passed, Pretty.pretty(r))
+  }
+
+  private val freshVec: Gen[Seq[Float]] =
+    Gen.listOfN(4, Gen.choose(-10, 10).map(_ / 10.0f))
+
+  /** `v` nudged on one axis: a near copy (or an exact one at step 0). */
+  private def nearVec(v: Seq[Float]): Gen[Seq[Float]] =
+    for {
+      i <- Gen.choose(0, v.size - 1)
+      d <- Gen.choose(-2, 2)
+    } yield v.updated(i, v(i) + d * 0.05f)
+
+  /** (index vectors, batch vectors): the batch plants exact and near
+    * copies of index vectors and of earlier batch siblings, and zero
+    * vectors; either side may be empty. */
+  private val vectorCase: Gen[(Seq[Seq[Float]], Seq[Seq[Float]])] =
+    for {
+      nIndex <- Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 5))
+      index <- Gen.listOfN(nIndex, freshVec)
+      nBatch <- Gen.frequency(1 -> Gen.const(0), 6 -> Gen.choose(1, 8))
+      batch <- (0 until nBatch).foldLeft(
+          Gen.const(Vector.empty[Seq[Float]])) { (acc, _) =>
+        acc.flatMap { prev =>
+          val seen = index ++ prev
+          val copies =
+            if (seen.isEmpty) Nil
+            else Seq(2 -> Gen.oneOf(seen), 4 -> Gen.oneOf(seen).flatMap(nearVec))
+          Gen.frequency(Seq(
+            3 -> freshVec,
+            1 -> Gen.const(Seq.fill(4)(0.0f))) ++ copies: _*).map(prev :+ _)
+        }
+      }
+    } yield (index, batch)
+
+  test("incrementalEmbeddingDedup ≡ incrementalEmbeddingNearDup → left-anti → dropEmbeddingNearDuplicates → buildEmbeddingIndex") {
+    val root = Files.createTempDirectory("graft_embincr_diff").toString
+    val (dim, planes, tau) = (4, 4, 0.9)
+    def vecFrame(vs: Seq[Seq[Float]], firstId: Long): DataFrame =
+      vs.zipWithIndex.map { case (v, i) => (firstId + i, v) }
+        .toDF("vec_id", "embedding")
+    var cases = 0
+    val r = Check.check(diffParams,
+      Prop.forAllNoShrink(vectorCase) { case (indexVecs, batchVecs) =>
+        cases += 1
+        val dir = s"$root/case$cases"
+        Dedup.buildEmbeddingIndex(vecFrame(indexVecs, 0L), "vec_id",
+          "embedding", dim, planes).save(dir)
+        val index = Dedup.EmbeddingIndex.load(spark, dir)
+        val batch = vecFrame(batchVecs, 100L)
+        val checks = for (flips <- Seq(0, 1)) yield {
+          val (survivors, delta) = Dedup.incrementalEmbeddingDedup(batch,
+            index, "vec_id", "embedding", dim, planes, tau, flips)
+          val hits = Dedup.incrementalEmbeddingNearDup(batch, index,
+            "vec_id", "embedding", dim, planes, tau, flips)
+            .select(col("b_id").as("vec_id"))
+          val refSurvivors = Dedup.dropEmbeddingNearDuplicates(
+            batch.join(hits, Seq("vec_id"), "left_anti"), "vec_id",
+            "embedding", dim, planes, tau, flips)
+          val refDelta = Dedup.buildEmbeddingIndex(refSurvivors, "vec_id",
+            "embedding", dim, planes)
+          val (gotS, wantS) = (rows(survivors), rows(refSurvivors))
+          val (gotD, wantD) = (rows(delta.entries), rows(refDelta.entries))
+          (gotS == wantS && gotD == wantD) :|
+            s"probeFlips $flips: survivors $gotS vs $wantS; " +
+              s"delta $gotD vs $wantD"
+        }
+        checks.reduce(_ && _)
+      })
+    assert(r.passed, Pretty.pretty(r))
+  }
+
+  test("incremental SimHash and embedding dedup featurize the batch once") {
+    // survivors and delta read the pinned batch features; neither plan
+    // computes the signature again
+    def computes(df: DataFrame, kernel: String): Boolean =
+      df.queryExecution.optimizedPlan.toString.contains(kernel)
+    // materialized indexes: their own features are not the batch's
+    val (simS, simD) = Dedup.incrementalSimhashDedup(docs, Dedup
+      .buildSimhashIndex(docs.limit(1), "doc_id", "text").materialize(),
+      "doc_id", "text")
+    assert(!computes(simS, "simhash64") && !computes(simD.entries, "simhash64"))
+    val vecs = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.99f, 0.01f)),
+      (3L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    val (embS, embD) = Dedup.incrementalEmbeddingDedup(vecs, Dedup
+      .buildEmbeddingIndex(vecs.limit(1), "vec_id", "embedding", dim = 2,
+        numPlanes = 4).materialize(), "vec_id", "embedding", dim = 2,
+      numPlanes = 4, threshold = 0.9, probeFlips = 1)
+    assert(!computes(embS, "hyperplane_bucket") &&
+      !computes(embD.entries, "hyperplane_bucket"))
+  }
+
+  test("SimhashIndex.load drops tombstoned ids") {
+    val dir = Files.createTempDirectory("graft_simtomb").toString
+    Dedup.buildSimhashIndex(Seq(
+        (1L, "the quick brown fox jumps over the lazy dog"),
+        (2L, "completely different words entirely here now"))
+      .toDF("doc_id", "text"), "doc_id", "text").save(dir)
+    graft.operators.IndexMaintenance.addTombstones(Seq(1L).toDF("id"), dir)
+    assert(Dedup.SimhashIndex.load(spark, dir).entries.select("id")
+      .as[Long].collect().toSeq === Seq(2L))
   }
 
   test("exactIncremental anti-joins corpus hashes then keeps min id per content") {

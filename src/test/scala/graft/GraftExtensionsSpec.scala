@@ -140,6 +140,30 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(hits.isEmpty, hits.mkString("; "))
   }
 
+  test("each near-dup step is written once") {
+    // the pair join, probe, cluster drop and partition prune live in
+    // Dedup; a family that spelled one out again would drift from the
+    // others (the copies did, before they were folded)
+    def isComment(line: String) = {
+      val t = line.trim
+      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+    }
+    val steps = Seq(
+      "the loser filter" -> """col\("component"\) =!= col\("id"\)""".r,
+      "the banded repartition" ->
+        """repartition\(col\("band"\), col\("bucket"\)\)""".r,
+      "the flip-bucket XOR set" -> """bitwiseXOR\(lit\(""".r,
+      "the partition isin" ->
+        """(shard|kind|partition).*\.isin\(|\.isin\(.*(shard|kind|partition)""".r)
+    for ((what, pattern) <- steps) {
+      val hits = mainSourceHits(pattern).collect {
+        case (p, i, ls) if !isComment(ls(i)) => s"$p:${i + 1}: ${ls(i).trim}"
+      }
+      assert(hits.size === 1, s"$what written ${hits.size} times: " +
+        hits.mkString("; "))
+    }
+  }
+
   test("index files go through Hadoop paths; delta folder names are built once") {
     // java.io.File cannot list a file: URI or any other Hadoop path: a
     // root listing through it finds nothing, silently

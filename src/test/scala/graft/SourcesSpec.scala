@@ -896,6 +896,29 @@ class SourcesSpec extends SparkSpec {
     assert(surv.count() == 2)
   }
 
+  test("media probe prunes kinds only on a saved index") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    val all = Multimodal.syntheticMedia(spark, 12).toDF()
+      .select(col("media_id"), col("bytes"), col("meta.kind").as("kind"))
+    val index = Multimodal.buildMediaHashIndex(
+      all.filter(col("media_id") < 8), "media_id", "bytes", "kind")
+    val batch = all.filter(col("media_id") >= 8)
+    def kindIn(idx: Multimodal.MediaHashIndex): Boolean =
+      Multimodal.incrementalMediaNearDup(batch, idx, "media_id", "bytes",
+          "kind")
+        .queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {
+          case i: In => i.value.references.exists(_.name == "kind")
+          case i: InSet => i.child.references.exists(_.name == "kind")
+          case _ => false
+        }))
+    // in memory: kind is a join key already, so no collect and no filter
+    assert(!kindIn(index.materialize()))
+    // saved: the filter prunes the other kinds' partitions at the scan
+    val dir = java.nio.file.Files.createTempDirectory("media_prune").toString
+    index.save(dir)
+    assert(kindIn(Multimodal.MediaHashIndex.load(spark, dir)))
+  }
+
   test("mediaRepartition sizes partitions by payload bytes — no data pass") {
     implicit val s = spark
     // explicit hint path: exact sizing, zero inspection
