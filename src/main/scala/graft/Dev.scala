@@ -65,41 +65,66 @@ object Dev {
     // warm pass (JIT + codegen + any per-JVM fixture builds)
     run(spark, name, dir)
     spark.catalog.clearCache()
-
-    final case class Job(id: Int, var start: Long = 0L, var end: Long = 0L,
-        var site: String = "", var stages: Int = 0)
-    val jobs = scala.collection.concurrent.TrieMap.empty[Int, Job]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val j = jobs.getOrElseUpdate(e.jobId, Job(e.jobId))
-        j.start = e.time
-        j.site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))
-            .orElse(Option(p.getProperty("spark.job.description"))))
-          .getOrElse("")
-        j.stages = e.stageIds.size
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.get(e.jobId).foreach(_.end = e.time)
-    }
-    spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    run(spark, name, dir)
+    val jobs = recordJobs(spark)(run(spark, name, dir))
     val total = (System.nanoTime() - t0) / 1e9
-    spark.sparkContext.removeSparkListener(listener)
-    Thread.sleep(500) // let the listener bus drain
     println(f"PROFILE $name total $total%.3f s, ${jobs.size} jobs")
-    val ordered = jobs.values.toSeq.sortBy(_.id)
     var prevEnd = 0L
-    ordered.foreach { j =>
-      val dur = (j.end - j.start) / 1e3
+    jobs.foreach { j =>
       val gap = if (prevEnd == 0L) 0.0 else (j.start - prevEnd) / 1e3
-      prevEnd = math.max(prevEnd, j.end)
-      println(f"  job ${j.id}%3d ${dur}%7.3f s  (gap before ${gap}%6.3f s)  ${j.stages}%2d stages  ${j.site}")
+      val dur = j.end.fold("  no end")(e => f"${(e - j.start) / 1e3}%7.3f s")
+      j.end.foreach(e => prevEnd = math.max(prevEnd, e))
+      println(f"  job ${j.id}%3d $dur  (gap before ${gap}%6.3f s)  ${j.stages}%2d stages  ${j.site}")
     }
-    val sumJobs = ordered.map(j => (j.end - j.start) / 1e3).sum
+    val sumJobs = jobs.flatMap(j => j.end.map(e => (e - j.start) / 1e3)).sum
     println(f"  sum of job durations ${sumJobs}%.3f s " +
       f"(driver/plan gaps ${total - sumJobs}%.3f s)")
+  }
+
+  /** One Spark job seen by [[recordJobs]]: listener-bus times in epoch
+    * ms; `end` is None when the job's end was not delivered. */
+  private[graft] final case class Job(id: Int, start: Long, end: Option[Long],
+      site: String, stages: Int)
+
+  private val MarkerProperty = "graft.dev.recordJobs.marker"
+
+  /** The jobs `body` starts, in id order. After the body, a one-task
+    * MARKER job runs, and the listener stays attached until the
+    * marker's end arrives: the listener bus delivers in posting order,
+    * so every job end posted before the marker's is delivered by then.
+    * A job still running at that point is reported with no end. */
+  private[graft] def recordJobs(spark: SparkSession)(body: => Unit): Seq[Job] = {
+    val starts = scala.collection.concurrent.TrieMap.empty[Int, Job]
+    val ends = scala.collection.concurrent.TrieMap.empty[Int, Long]
+    var markerId = -1 // the listener bus thread alone reads and writes it
+    val markerEnded = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty(MarkerProperty) != null))
+          markerId = e.jobId
+        else starts.put(e.jobId, Job(e.jobId, e.time, None,
+          props.flatMap(p => Option(p.getProperty("callSite.short"))
+            .orElse(Option(p.getProperty("spark.job.description"))))
+            .getOrElse(""),
+          e.stageIds.size))
+        ()
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerId) markerEnded.countDown()
+        else ends.put(e.jobId, e.time)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(MarkerProperty, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(MarkerProperty, null)
+      if (!markerEnded.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        System.err.println("recordJobs: listener bus did not drain in 60 s")
+    } finally sc.removeSparkListener(listener)
+    starts.values.toSeq.sortBy(_.id).map(j => j.copy(end = ends.get(j.id)))
   }
 
   private def explain(spark: SparkSession, name: Option[String],

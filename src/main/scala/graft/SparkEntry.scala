@@ -1136,7 +1136,7 @@ object SparkEntry {
     val pairs = Dedup.minhashNearDup(Tables(s, dir).documents,
       "doc_id", "text", shingleN = 3, numHashes = 48, bands = 16,
       threshold = 0.5)
-    Dedup.connectedComponents(pairs, "a_id", "b_id")
+    Graph.connectedComponents(pairs, "a_id", "b_id")
   }
 
   /** q52: Gopher-style per-doc repetition signals (dup-word /
@@ -3727,7 +3727,7 @@ object SparkEntry {
         col("a_id") < col("b_id") &&
         levenshtein(col("a_name"), col("b_name")) <= 1)
       .select(col("a_id"), col("b_id"))
-    val comps = Dedup.connectedComponents(pairs, "a_id", "b_id")
+    val comps = Graph.connectedComponents(pairs, "a_id", "b_id")
     val withEntity = recs
       .join(comps.withColumnRenamed("id", "__cid"),
         col("id") === col("__cid"), "left")

@@ -859,7 +859,7 @@ object Dedup {
       .filter(cosinePrenormed(dot(col("__va"), col("__vb")),
         col("__na"), col("__nb")) >= threshold)
       .select("a_id", "b_id")
-    val cc = connectedComponents(edges, "a_id", "b_id")
+    val cc = Graph.connectedComponents(edges, "a_id", "b_id")
     val cent = centroids.select(col("centroid_id"),
       col(vecCol).as("__cv"), norm(col(vecCol)).as("__cn"))
     val simToCent = assigned.join(broadcast(cent), "centroid_id")
@@ -1154,17 +1154,10 @@ object Dedup {
             .bitwiseAND(lit(mask)).as("bucket"))
     }: _*)
 
-  /** SimHash pairs within an (id, sim) frame, hamming ≤ maxHamming. */
-  private def simhashPairs(feat: DataFrame, maxHamming: Int): DataFrame =
+  /** SimHash pairs within an (id, sim) frame, hamming ≤ maxHamming:
+    * (a_id, b_id, hamming). */
+  private[graft] def simhashPairs(feat: DataFrame, maxHamming: Int): DataFrame =
     hammingPairs(feat, "sim", simhashBandStructs(col("sim"), maxHamming),
-      maxHamming)
-
-  /** [[simhashPairs]] over a precomputed (\_\_id, __sim) frame — the
-    * form recall tests plant exact signatures in, and the media
-    * near-dup pairs use. Emits (a_id, b_id, hamming). */
-  private[graft] def simhashBandPairs(
-      sh: DataFrame, maxHamming: Int): DataFrame =
-    simhashPairs(sh.select(col("__id").as("id"), col("__sim").as("sim")),
       maxHamming)
 
   /** Hamming distance of two 64-bit hashes. */
@@ -1197,183 +1190,8 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
 
   // ------------------------------------------------------------------
-  // Near-dup clustering (connected components) + survivor selection
+  // Survivor selection
   // ------------------------------------------------------------------
-
-  /** Connected components over an undirected pair list, via alternating
-    * large-star / small-star rounds (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14) — the standard
-    * shared-nothing formulation: every round is two key-grouped
-    * aggregations plus two equi-joins on node ids, converging in
-    * O(log² n) rounds regardless of component diameter (plain min-label
-    * propagation needs O(diameter) rounds — a 1M-long chain of near-dups
-    * would take 1M rounds; this takes ~40). No driver-side graph state:
-    * the edge list never leaves the cluster, so the operator holds at
-    * corpus scale where the pair graph itself is distributed.
-    *
-    * Each round's edge list is `localCheckpoint`ed: iterative plans
-    * otherwise stack lineage until planning itself dominates.
-    *
-    * Returns one row per node appearing in `pairs`: (id, component),
-    * where component is the minimum node id in the node's component.
-    * Singleton docs (no near-dup edge) don't appear — they are their
-    * own component trivially.
-    */
-  def connectedComponents(
-      pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 50): DataFrame =
-    connectedComponentsWithRounds(pairs, aCol, bCol, maxIter)._1
-
-  /** [[connectedComponents]] plus the number of rounds it took — the
-    * convergence telemetry an operator at real scale alerts on (rounds
-    * creeping toward maxIter means the pair graph's shape changed, e.g.
-    * a threshold regression chaining the whole corpus together). Also
-    * logged at info. */
-  /** Edge-count bound under which components resolve by a DRIVER
-    * union-find instead of the distributed loop. The deduped edge list
-    * is counted anyway (the loop's own convergence bookkeeping), so
-    * the switch is free; at 500k edges the collect is ~8 MB — the same
-    * bounded-collect discipline as PCA's 64k sample and BPE's 30k
-    * vocab. Why it exists: each distributed round is ~5 shuffles of
-    * fixed scheduling cost, so a SMALL pair graph (the common case —
-    * near-dup pairs are a sliver of any curated corpus) pays seconds
-    * of round overhead for milliseconds of actual work (measured:
-    * 874 edges took ~5 s distributed, <0.1 s on the driver). Above
-    * the bound the shared-nothing large-star/small-star loop runs
-    * exactly as before — the 100 TB path is untouched. Sized by the
-    * shared [[DriverBudget]] model (~512 B/edge transient incl. the
-    * resolve-time map state — r15 unification). */
-  val DriverCcMaxEdges: Long = DriverBudget.CcEdges
-
-  def connectedComponentsWithRounds(
-      pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 50): (DataFrame, Int) =
-    connectedComponentsWithRounds(pairs, aCol, bCol, maxIter,
-      DriverCcMaxEdges)
-
-  /** [[connectedComponentsWithRounds]] with an explicit driver-path
-    * bound (`driverMaxEdges = 0` forces the distributed loop — specs
-    * pin both paths equal). */
-  def connectedComponentsWithRounds(
-      pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int, driverMaxEdges: Long): (DataFrame, Int) = {
-    // canonical directed form: (u, v) with u > v ("child" -> smaller)
-    var edges = pairs
-      .select(greatest(col(aCol), col(bCol)).as("u"),
-        least(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(false)
-    // each round's count CARRIES to the next as its edges.count():
-    // recounting the checkpointed previous round was one whole job per
-    // round of pure waste (measured: the loop's fixed per-round job
-    // cost dominates small graphs end to end)
-    var edgeCount = edges.count()
-    // driver path only for integral ids (the union-find runs on
-    // longs); string/decimal ids take the distributed loop, which is
-    // type-agnostic
-    val integralIds = edges.schema("u").dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    // rounds = 0 is the DRIVER-PATH SENTINEL: the union-find resolves
-    // in one pass, so no distributed round ran — callers reading the
-    // rounds telemetry (convergence alerting) should treat 0 as "took
-    // the driver path", not "converged instantly".
-    if (integralIds && edgeCount > 0L && edgeCount <= driverMaxEdges) {
-      log.info(s"connectedComponents: $edgeCount edges <= " +
-        s"$driverMaxEdges — resolved by driver union-find (rounds=0)")
-      return (driverComponents(edges), 0)
-    }
-    var iter = 0
-    var converged = edgeCount == 0L
-    while (!converged && iter < maxIter) {
-      // LARGE-STAR: for each node u, m = min(N(u) ∪ {u}); connect every
-      // strictly-larger neighbor to m. Operates on the symmetric view.
-      val sym = edges.select(col("u"), col("v"))
-        .union(edges.select(col("v").as("u"), col("u").as("v")))
-      val lsMins = sym.groupBy("u")
-        .agg(min(col("v")).as("__mn"))
-        .select(col("u"), least(col("__mn"), col("u")).as("m"))
-      val ls = sym.join(lsMins, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")) // v > u >= m, so u > v holds
-        .distinct()
-      // SMALL-STAR: edges already point larger -> smaller; for each u,
-      // m = min of its smaller neighbors; connect u and every smaller
-      // neighbor to m.
-      val ssMins = ls.groupBy("u").agg(min(col("v")).as("m"))
-      val next = ls.join(ssMins, "u")
-        .select(col("v").as("node"), col("m"))
-        .union(ssMins.select(col("u").as("node"), col("m")))
-        .filter(col("node") =!= col("m"))
-        .select(col("node").as("u"), col("m").as("v"))
-        .distinct()
-        .localCheckpoint(false)
-      // At the fixpoint both passes leave the star forest unchanged.
-      // The (shuffling) set-compare only runs once counts agree —
-      // counts differ on most non-final rounds, so the common case is
-      // ONE count over the new checkpointed edge list (the previous
-      // round's count carried over).
-      val nextCount = next.count()
-      converged = nextCount == edgeCount && next.except(edges).isEmpty
-      edges = next
-      edgeCount = nextCount
-      iter += 1
-    }
-    if (!converged && edgeCount > 0L)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds")
-    log.info(s"connectedComponents converged in $iter rounds " +
-      s"(maxIter=$maxIter)")
-    // star forest: every non-root points straight at its component min
-    val cc = edges.select(col("u").as("id"), col("v").as("component"))
-      .union(edges.select(col("v").as("id"), col("v").as("component")))
-      .distinct()
-    (cc, iter)
-  }
-
-  /** Driver union-find over a bounded, already-deduped (u, v) edge
-    * list — exact min-label components, identical contract to the
-    * distributed loop's output: one row per node appearing in an edge,
-    * (id, component = min node id of the component), in the INPUT's
-    * id type. Path-halving find + union-by-min keeps the pass
-    * effectively linear. */
-  private def driverComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val idType = edges.schema("u").dataType
-    val pairs = edges.collect().map { r =>
-      (r.getAs[Number](0).longValue(), r.getAs[Number](1).longValue())
-    }
-    // min-label union-find: parent(x) follows to the component's
-    // current minimum; union keeps the smaller root as parent
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) {
-        val nxt = parent(c); parent(c) = r; c = nxt
-      }
-      r
-    }
-    pairs.foreach { case (u, v) =>
-      parent.getOrElseUpdate(u, u)
-      parent.getOrElseUpdate(v, v)
-      val (ru, rv) = (find(u), find(v))
-      if (ru != rv) {
-        if (ru < rv) parent(rv) = ru else parent(ru) = rv
-      }
-    }
-    import spark.implicits._
-    val rows = parent.keys.toSeq.sorted.map(id => (id, find(id)))
-    rows.toDF("id", "component")
-      .select(col("id").cast(idType).as("id"),
-        col("component").cast(idType).as("component"))
-  }
 
   /** End-to-end corpus near-dedup: MinHash-LSH candidate pairs, exact
     * Jaccard verify, connected-component clustering, then keep the
@@ -1458,7 +1276,7 @@ object Dedup {
     * on a given id column, so the components resolve once however many
     * frames the caller drops them from. */
   private[graft] def clusterDrop(pairs: DataFrame): (DataFrame, String) => DataFrame = {
-    val losers = connectedComponents(pairs, "a_id", "b_id")
+    val losers = Graph.connectedComponents(pairs, "a_id", "b_id")
       .filter(col("component") =!= col("id"))
       .select(col("id"))
     (rows, idCol) =>
@@ -1467,7 +1285,9 @@ object Dedup {
 
   /** (4) Incremental body: the batch `features` (with `id`) are pinned
     * ONCE and feed the probe, the within-batch dedup and the delta.
-    * Batch rows `corpusHits` matches are dropped; the verified
+    * Batch rows `corpusHits` matches are dropped; the hit ids are
+    * pinned too (lazily: the components' gate count materializes
+    * them), so the probe runs once for both anti-joins. The verified
     * `batchPairs` among the rest cluster and keep their minimum id;
     * `entries` projects the survivors' features into the delta.
     * Returns (survivor `batch` rows, delta entries). A row linked to
@@ -1480,6 +1300,7 @@ object Dedup {
       entries: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     val feat = features.localCheckpoint(false)
     val vsCorpus = corpusHits(feat).select(col("b_id").as(idCol))
+      .localCheckpoint(false)
     val inBatch = batch.join(vsCorpus, Seq(idCol), "left_anti")
     val bfeat = feat.join(vsCorpus.select(col(idCol).as("id")),
       Seq("id"), "left_anti")

@@ -1,34 +1,34 @@
 package graft.operators
 
 /** THE driver-memory budget model behind every bounded driver-side
-  * collect in the library — the graph fast paths, the dedup
-  * union-find, the k-means/PQ/PCA training samples, and the
+  * collect in the library — the graph driver paths (components,
+  * PageRank, label propagation, triangles), the k-means/PQ/PCA
+  * training samples, and the
   * plan-literal model shipping. One allowance, one accounting rule,
   * instead of the per-operator constants that accreted round by
   * round (r15 unification).
   *
   * The rule: a bounded collect must fit its TRANSIENT peak — not its
   * steady-state footprint — inside [[MaxTransientBytes]]. The
-  * transient peak is what actually OOMs a driver: `collect()` comes
-  * back as an array of boxed rows/tuples before any primitive-array
-  * conversion, so the peak runs 4–8× the steady bytes (a two-long
-  * edge is 16 B steady but ~128 B as a boxed `(Long, Long)` in an
-  * array slot; a 768-dim float vector is 3 KB steady but ~4 KB
+  * transient peak is what actually OOMs a driver: a collect holds the
+  * serialized task results and the decoded rows at once, and row-wise
+  * collects decode into boxed rows before any primitive-array
+  * conversion (a 768-dim float vector is 3 KB steady but ~4 KB
   * through the row). 256 MB leaves a default 1 GiB driver room for
   * the session, the plans, and a second concurrent collect.
   *
   * Per-row transient costs (estimated from JOL-style field layouts,
   * validated by the measured collects of earlier rounds):
   *
-  *  - [[GraphEdges]]: a collected edge through a typed tuple encoder
-  *    ≈128 B transient (two boxed longs + Tuple2 + array slot +
-  *    allocator slack) → 2,097,152 edges (~256 MB peak, 32 MB as
-  *    primitive arrays after conversion). Consumers: Graph.pageRank /
-  *    labelPropagation / triangles.
-  *  - [[CcEdges]]: the union-find additionally holds per-edge map
-  *    state while resolving (boxed keys/values + hash-table slack)
-  *    ≈512 B → 524,288 edges. Consumer:
-  *    Dedup.connectedComponents.
+  *  - [[GraphEdges]]: 128 B per edge, under the heap-adaptive
+  *    allowance. The graph collects are packed per partition into
+  *    primitive arrays (since r19), so an edge costs a few flat 8-16 B
+  *    copies — the serialized task result, the collected chunk, the
+  *    de-interleaved columns and the id-table scratch — and 128 B
+  *    covers them with margin → 524,288 edges at the 64 MB floor,
+  *    2,097,152 on a 1 GiB driver. Consumers: Graph.connectedComponents
+  *    / pageRank / labelPropagation / triangles, each also capped at
+  *    its own performance ceiling.
   *  - [[LiteralFloats]]: the collected centroid-set ceiling, sized at
   *    ~8 B per float (what a float cost when the set shipped as a plan
   *    literal; the driver-held set every task receives is smaller, and
@@ -71,21 +71,18 @@ object DriverBudget {
     * Quarter-heap keeps 4x headroom for the session + plans + a
     * concurrent collect; the 64 MB floor keeps tiny test JVMs on a
     * useful fast path; the 8 GiB ceiling bounds single-allocation GC
-    * pressure on very large heaps (a >8 GiB boxed-tuple array is an
+    * pressure on very large heaps (a >8 GiB collect is an
     * old-gen hump no fast path should force). Pure function of the
     * heap — GraphSpec pins floor, ceiling and the quarter-heap
     * middle. */
   def adaptiveTransientBytes(heapBytes: Long): Long =
     math.max(64L << 20, math.min(heapBytes / 4, 8L << 30))
 
-  /** Graph fast-path edge bound: ~128 B/edge collected, under the
-    * heap-adaptive allowance (results are path-identical, so this
-    * bound sizes PERFORMANCE only — specs pin both sides). */
+  /** Graph driver-path edge bound: 128 B/edge under the heap-adaptive
+    * allowance (results are path-identical, so this bound sizes
+    * PERFORMANCE only — specs pin both sides). */
   val GraphEdges: Long =
     adaptiveTransientBytes(Runtime.getRuntime.maxMemory()) / 128
-
-  /** Union-find edge bound: ~512 B/edge incl. resolve-time map state. */
-  val CcEdges: Long = maxRows(512)
 
   /** Plan-literal float bound: ~8 B/float through analysis. */
   val LiteralFloats: Long = maxRows(8)

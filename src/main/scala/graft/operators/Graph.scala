@@ -1,91 +1,90 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Graph centrality over edge relations — the iterative, shuffle-heavy
-  * workload class (link analysis over a web/citation/purchase graph)
-  * that a corpus-curation warehouse runs beside the one-pass scans:
-  * CommonCrawl-style harmonic/PageRank domain scoring is a standard
-  * quality prior for web training data.
+/** Graph operators over edge relations — connected components,
+  * PageRank, label propagation and triangle counting: the iterative,
+  * shuffle-heavy workload class (link analysis over a web/citation/
+  * purchase graph, near-duplicate clustering) that a corpus-curation
+  * warehouse runs beside the one-pass scans. CommonCrawl-style
+  * harmonic/PageRank domain scoring is a standard quality prior for
+  * web training data; components turn verified near-dup pairs into
+  * clusters.
   *
-  * Scale shape: the degree join happens ONCE, outside the loop — the
-  * weighted adjacency (src, dst, 1/outDeg) is hash-partitioned on
-  * `src` and cached, and every iteration reuses that exchange. An
-  * undirected iteration is then ONE join + ONE map-side-combined
-  * aggregate moving only (id, rank) pairs (16 bytes/row); directed
-  * adds a left join against the cached node set (zero-in-degree nodes)
-  * and keeps the dangling-mass scalar IN-PLAN as a broadcast one-row
-  * aggregate instead of a per-iteration collect. Lineage is truncated
-  * with a localCheckpoint every `checkpointEvery` iterations so plan
-  * depth stays bounded at 1000 iterations as at 10.
+  * Every operator canonicalises its edge list and then takes ONE
+  * driver path ([[gate]], [[local]]): the canonical frame is pinned
+  * and counted once; zero edges return an empty local frame in the
+  * output schema; a bounded graph is collected once, packed, into a
+  * sorted id table with int-indexed edges and resolved by a driver
+  * loop; anything larger runs the operator's distributed plan on the
+  * pinned frame.
+  *
+  * Scale shape of the distributed plans: the degree join happens
+  * ONCE, outside the loop — the weighted adjacency (src, dst, 1/outDeg)
+  * is hash-partitioned on `src` and pinned, and every iteration reuses
+  * that exchange. An undirected iteration is then ONE join + ONE
+  * map-side-combined aggregate moving only (id, rank) pairs (16
+  * bytes/row); directed adds a left join against the pinned node set
+  * (zero-in-degree nodes) and keeps the dangling-mass scalar IN-PLAN
+  * as a broadcast one-row aggregate instead of a per-iteration collect.
+  * Lineage is truncated with a periodic localCheckpoint so plan depth
+  * stays bounded at 1000 iterations as at 10.
   */
 object Graph {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Edge-count bound under which the iterative ops resolve on the
-    * DRIVER instead of the distributed loop — the
-    * [[Dedup.DriverCcMaxEdges]] precedent (the q76 CC stage went
-    * 5.11 → 0.39 s on an 874-edge graph with identical output). Why
-    * it exists: each distributed iteration is a fixed scheduling cost
-    * of 2-5 shuffles, so a bounded graph pays seconds of round
-    * overhead for milliseconds of arithmetic. The bound is 2M edges
-    * (≈32 MB collected as two longs/edge — well under the
-    * bounded-collect ceiling the PCA/PQ trainers already use, whose
-    * 64k×768-float samples run ~200 MB) rather than CC's 500k: the
-    * iteration arrays here are flat primitives (no per-edge HashMap
-    * state), and the measured win extends — q89's sf0.1 purchase
-    * graph (1.17M symmetrised edges) runs 5.8 s distributed vs ~1 s
-    * on the driver. Above the bound the shared-nothing loop runs
-    * untouched — the 100 TB path is unchanged. PageRank's driver path
-    * reproduces the identical formula (same 1/outDeg weights, same
-    * dangling redistribution); per-node contribution sums run in
-    * sorted edge order, so results agree with the distributed loop's
-    * arbitrary-order sums to ULPs (absorbed by q89's round(…,7)
-    * oracle; GraphSpec pins both paths). LPA's vote and the triangle
-    * count are integer arithmetic — those driver paths are
-    * bit-for-bit identical.
+  /** Heap bound on the edges a driver path collects. Why a driver
+    * path exists: each distributed iteration is a fixed scheduling
+    * cost of 2-5 shuffles, so a bounded graph pays seconds of round
+    * overhead for milliseconds of arithmetic (q76's components went
+    * 5.11 → 0.39 s on an 874-edge graph; q89's sf0.1 purchase graph,
+    * 1.17M symmetrised edges, runs 5.8 s distributed vs ~1 s on the
+    * driver). Above the bound the shared-nothing plans run untouched.
     *
-    * Driver-heap honesty (the 32 MB figure of earlier rounds was the
-    * POST-conversion footprint only): the collect comes back as an
-    * Array of boxed edge tuples before the primitive-array
-    * conversion, so the TRANSIENT peak at the bound is ~256 MB
-    * (≈128 B per collected edge tuple) on top of the ~32 MB steady
-    * state — fine on the default 1 GiB driver, and the collects
-    * below go through typed tuple encoders (not Array[Row]) to keep
-    * that constant at the low end. Size `driverMaxEdges` down on
-    * drivers with less headroom. The number comes from the shared
-    * [[DriverBudget]] model (r15 unification), HEAP-ADAPTIVE since
-    * r16 ([[DriverBudget.adaptiveTransientBytes]]): ~2M edges on a
-    * default 1 GiB driver, ~50M on the 24 GiB bench JVM — safe to
-    * adapt because both sides of the bound produce the same result
-    * (GraphSpec pins driver ≡ distributed on every operator).
+    * Driver heap: each task packs its rows into one primitive array,
+    * so the transient peak is a few flat copies of the edge list (the
+    * serialized task results, the collected chunks, the de-interleaved
+    * columns and the id-table scratch, ~16 B/edge each) — the
+    * [[DriverBudget.GraphEdges]] accounting of 128 B/edge covers that
+    * with margin. The bound is HEAP-ADAPTIVE
+    * ([[DriverBudget.adaptiveTransientBytes]]): 524,288 edges at the
+    * 64 MB floor, ~2M on a default 1 GiB driver, ~50M on a 24 GiB JVM —
+    * safe because both sides of the bound produce the same result
+    * (GraphSpec and ClusterSpec pin driver ≡ distributed on every
+    * operator). Size `driverMaxEdges` down on drivers with less
+    * headroom; 0 forces the distributed plan.
     *
     * The heap bound is the SAFETY constraint; each operator also caps
-    * at its measured PERFORMANCE crossover (below), because past a
-    * few million edges the 32-way distributed plan beats the driver
-    * loop even when the heap would admit the collect. */
+    * at its PERFORMANCE ceiling (below), because past a few million
+    * edges the 32-way distributed plan beats the driver loop even when
+    * the heap would admit the collect. */
   val DriverGraphMaxEdges: Long = DriverBudget.GraphEdges
 
   /** Per-operator driver-path PERFORMANCE ceilings — the measured
     * driver-vs-distributed crossovers from the r16 sf1 replica
-    * experiment (r16 dev harness, see the git history; sf1, 24 GiB
-    * JVM, local[32], same inputs both paths, log-log interpolation
-    * between the 1.2M- and 12M-edge points):
+    * experiment (sf1, 24 GiB JVM, local[32], same inputs both paths,
+    * log-log interpolation between the 1.2M- and 12M-edge points):
     *
     *  - triangles: driver 3.1 s / dist 11.7 s at 1.2M edges but
     *    38.0 s / 29.2 s at 12M — crossover ≈8M; ceiling 6M keeps
-    *    margin (the parallel wedge loop scales, the boxed-tuple
-    *    collect + sort does not).
+    *    margin (the parallel wedge loop scales, the collect + sort does
+    *    not).
     *  - pageRank: ~1-3 s / 5.8 s at 1.2M but 28.5 s / 22.1 s at
     *    11.7M — crossover ≈5M; ceiling 4M (the per-iteration edge
     *    walk is single-threaded on the driver).
-    *  - labelPropagation: the per-node HashMap vote is far heavier
-    *    per edge — at 2.4M edges the driver loop measured 29.2 s vs
-    *    the distributed plan's 8.5 s, so the crossover sits BELOW the
-    *    old 2M constant; ceiling stays 2M (the long-validated
-    *    setting: every committed q150 point under it is healthy).
+    *  - labelPropagation: the per-node map vote is far heavier per
+    *    edge — at 2.4M edges the driver loop measured 29.2 s vs the
+    *    distributed plan's 8.5 s, so the crossover sits BELOW 2M;
+    *    ceiling stays 2M (every committed q150 point under it is
+    *    healthy).
+    *  - connectedComponents: 524,288 (2^19), the bound its union-find
+    *    has always run under. It equals the heap bound's floor, so the
+    *    components path is the same on every heap; near-dup pair graphs
+    *    sit far below it.
     *
     * The effective bound is min(driverMaxEdges, ceiling): a small
     * heap shrinks it further, a big heap never pushes an operator
@@ -95,6 +94,281 @@ object Graph {
   val TrianglesDriverCeiling: Long = 6000000L
   val PageRankDriverCeiling: Long = 4000000L
   val LpaDriverCeiling: Long = 2000000L
+  val CcDriverCeiling: Long = 524288L
+
+  /** The driver gate's verdict: the pinned canonical edge frame, its
+    * edge count, the gate aggregate's row (the count first, then the
+    * caller's extra columns) and whether the graph resolves on the
+    * driver. */
+  private final case class Gate(edges: DataFrame, count: Long, agg: Row,
+      onDriver: Boolean)
+
+  /** The one driver gate: pins the canonical edge frame with a LAZY
+    * localCheckpoint (ONE aggregate job materializes the pinned blocks
+    * and counts them — r19), evaluates `extra` in the same aggregate,
+    * and sends the graph to the driver when its edge count is within
+    * min(driverMaxEdges, ceiling). A zero-edge graph always takes the
+    * driver path, which collects nothing and returns an empty local
+    * frame. localCheckpoint, not persist (the q133 lesson): the pinned
+    * frame feeds every iteration of the distributed plans, and under
+    * storage pressure a persist silently degrades to re-deriving it
+    * once per consumer. */
+  private def gate(op: String, edges: DataFrame, driverMaxEdges: Long,
+      ceiling: Long, extra: Column*): Gate = {
+    val e = edges.localCheckpoint(false)
+    val agg = e.agg(count(lit(1)), extra: _*).head
+    val n = agg.getLong(0)
+    val bound = math.min(driverMaxEdges, ceiling)
+    if (n <= bound)
+      log.info(s"$op: $n edges <= $bound — resolving on the driver")
+    Gate(e, n, agg, n <= bound)
+  }
+
+  /** A bounded graph on the driver: the sorted unique node ids, each
+    * edge's endpoints as indices into them (index order IS id order),
+    * and the edge frame's optional third column (LPA's weight), or
+    * null. */
+  private final case class Local(ids: Array[Long], src: Array[Int],
+      dst: Array[Int], w: Array[Long]) {
+    def n: Int = ids.length
+    def m: Int = src.length
+  }
+
+  /** The gated edge frame on the driver: its first two columns are the
+    * endpoints. ONE packed collect of every column (none at all for
+    * zero edges), then the id table. */
+  private def local(g: Gate): Local = {
+    val cols =
+      if (g.count == 0L) Array.fill(g.edges.columns.length)(Array.emptyLongArray)
+      else collectColumns(g.edges)
+    val ids = sortedUniqueIds(cols(0), cols(1))
+    Local(ids, indicesIn(ids, cols(0)), indicesIn(ids, cols(1)),
+      if (cols.length > 2) cols(2) else null)
+  }
+
+  /** Collect every column of a frame (cast to long) as one primitive
+    * array per column: each task packs its rows into one interleaved
+    * `Array[Long]` straight from Spark's internal rows — no per-row
+    * object on either side — so the driver only de-interleaves a few
+    * long arrays (a boxed per-row decode was ~0.3 s of single-threaded
+    * driver time at 1.2M edges, r19 profile). */
+  private def collectColumns(df: DataFrame): Array[Array[Long]] = {
+    val k = df.columns.length
+    val qe = df.select(df.columns.toSeq.map(c => col(c).cast("long")): _*)
+      .queryExecution
+    val chunks = SQLExecution.withNewExecutionId(qe, Some("collectColumns")) {
+      qe.toRdd.mapPartitions { rows =>
+        val buf = scala.collection.mutable.ArrayBuilder.make[Long]
+        rows.foreach { r =>
+          var c = 0
+          while (c < k) { buf += r.getLong(c); c += 1 }
+        }
+        Iterator.single(buf.result())
+      }.collect()
+    }
+    val m = chunks.iterator.map(_.length).sum / k
+    val out = Array.fill(k)(new Array[Long](m))
+    var w = 0
+    chunks.foreach { ch =>
+      var i = 0
+      while (i < ch.length) {
+        var c = 0
+        while (c < k) { out(c)(w) = ch(i + c); c += 1 }
+        i += k; w += 1
+      }
+    }
+    out
+  }
+
+  /** Sorted-unique node id array over both endpoint arrays — the
+    * driver paths' id table, built with primitive sort + in-place
+    * dedup. r19: the SortedSet/zipWithIndex.toMap version of this
+    * (boxed RB-tree inserts + a boxed HashMap per endpoint lookup) was
+    * ~2 s of the q89 driver gap at 1.17M edges; the primitive form is
+    * two arraycopies, one sort and one scan. */
+  private def sortedUniqueIds(
+      srcL: Array[Long], dstL: Array[Long]): Array[Long] = {
+    val m = srcL.length
+    val all = new Array[Long](2 * m)
+    System.arraycopy(srcL, 0, all, 0, m)
+    System.arraycopy(dstL, 0, all, m, m)
+    java.util.Arrays.parallelSort(all)
+    var w = 0
+    var i = 0
+    while (i < all.length) {
+      if (w == 0 || all(w - 1) != all(i)) { all(w) = all(i); w += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(all, w)
+  }
+
+  /** Each id of `xs` as its index in the sorted table `ids`: binary
+    * searches, integer-exact with disjoint writes, so parallel. */
+  private def indicesIn(ids: Array[Long], xs: Array[Long]): Array[Int] = {
+    val out = new Array[Int](xs.length)
+    java.util.stream.IntStream.range(0, xs.length).parallel()
+      .forEach(j => out(j) = java.util.Arrays.binarySearch(ids, xs(j)))
+    out
+  }
+
+  /** Distributed DataFrame over two parallel driver arrays — the
+    * driver paths' RESULT encode. `Seq.toDF` serializes every row to
+    * InternalRow EAGERLY ON THE DRIVER THREAD (~0.4 s single-threaded
+    * at 1.2M nodes, r19 profile); shipping the primitive arrays once
+    * via broadcast and encoding rows inside `defaultParallelism`
+    * range tasks moves that work onto the executor pool. Row VALUES
+    * are identical; row order is not contractual (callers
+    * sort/aggregate or the oracle compare sorts). No rows give an
+    * empty LOCAL frame, which the optimizer folds away. */
+  private def arraysToDF(
+      spark: org.apache.spark.sql.SparkSession,
+      ids: Array[Long], longVals: Array[Long], dblVals: Array[Double],
+      col1: String, col2: String): DataFrame = {
+    import spark.implicits._
+    val n = ids.length
+    if (n == 0)
+      return if (dblVals == null) Seq.empty[(Long, Long)].toDF(col1, col2)
+        else Seq.empty[(Long, Double)].toDF(col1, col2)
+    val sc = spark.sparkContext
+    val slices = math.max(1, math.min(sc.defaultParallelism, n / 8192))
+    val bIds = sc.broadcast(ids)
+    if (dblVals == null) {
+      val bV = sc.broadcast(longVals)
+      sc.range(0L, n.toLong, numSlices = slices)
+        .map(i => (bIds.value(i.toInt), bV.value(i.toInt)))
+        .toDF(col1, col2)
+    } else {
+      val bV = sc.broadcast(dblVals)
+      sc.range(0L, n.toLong, numSlices = slices)
+        .map(i => (bIds.value(i.toInt), bV.value(i.toInt)))
+        .toDF(col1, col2)
+    }
+  }
+
+  // ------------------------------------------------------------------
+  // Connected components
+  // ------------------------------------------------------------------
+
+  /** Round cap of the distributed components loop: it converges in
+    * O(log² n) rounds, ~40 for a 1M-long chain. */
+  private val MaxCcRounds = 50
+
+  /** Connected components over an undirected pair list. Returns one
+    * row per node appearing in `pairs`: (id, component), where
+    * component is the minimum node id in the node's component, both in
+    * the input's id type. Singleton docs (no near-dup edge) don't
+    * appear — they are their own component trivially.
+    *
+    * A bounded graph with integral ids resolves by a driver union-find
+    * and comes back as a LOCAL relation, so a consumer's anti-join
+    * against it (the near-dup cluster drop) plans as a broadcast join.
+    * Otherwise the components come from alternating large-star /
+    * small-star rounds (Kiveris et al., "Connected Components in
+    * MapReduce and Beyond", SoCC'14) — the standard shared-nothing
+    * formulation: every round is two key-grouped aggregations plus two
+    * equi-joins on node ids, converging in O(log² n) rounds regardless
+    * of component diameter (plain min-label propagation needs
+    * O(diameter) rounds). The edge list never leaves the cluster, so
+    * the operator holds at corpus scale. Each round's edge list is
+    * `localCheckpoint`ed: iterative plans otherwise stack lineage until
+    * planning itself dominates. */
+  def connectedComponents(
+      pairs: DataFrame, aCol: String, bCol: String,
+      driverMaxEdges: Long = DriverGraphMaxEdges): DataFrame = {
+    // canonical directed form: (u, v) with u > v ("child" -> smaller)
+    val canon = pairs
+      .select(greatest(col(aCol), col(bCol)).as("u"),
+        least(col(aCol), col(bCol)).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+    // the union-find runs on longs; string/decimal ids take the
+    // type-agnostic distributed loop (or, with no edge, the empty frame)
+    val idType = canon.schema("u").dataType
+    val integral = idType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    val g = gate("connectedComponents", canon, driverMaxEdges,
+      if (integral) CcDriverCeiling else 0L)
+    if (g.onDriver) return driverComponents(g, idType)
+    var edges = g.edges
+    // each round's count CARRIES to the next: recounting the previous
+    // round's checkpoint was one whole job per round of pure waste
+    var edgeCount = g.count
+    var iter = 0
+    var converged = false
+    while (!converged && iter < MaxCcRounds) {
+      // LARGE-STAR: for each node u, m = min(N(u) ∪ {u}); connect every
+      // strictly-larger neighbor to m. Operates on the symmetric view.
+      val sym = edges.select(col("u"), col("v"))
+        .union(edges.select(col("v").as("u"), col("u").as("v")))
+      val lsMins = sym.groupBy("u")
+        .agg(min(col("v")).as("__mn"))
+        .select(col("u"), least(col("__mn"), col("u")).as("m"))
+      val ls = sym.join(lsMins, "u")
+        .filter(col("v") > col("u"))
+        .select(col("v").as("u"), col("m").as("v")) // v > u >= m, so u > v holds
+        .distinct()
+      // SMALL-STAR: edges already point larger -> smaller; for each u,
+      // m = min of its smaller neighbors; connect u and every smaller
+      // neighbor to m.
+      val ssMins = ls.groupBy("u").agg(min(col("v")).as("m"))
+      val next = ls.join(ssMins, "u")
+        .select(col("v").as("node"), col("m"))
+        .union(ssMins.select(col("u").as("node"), col("m")))
+        .filter(col("node") =!= col("m"))
+        .select(col("node").as("u"), col("m").as("v"))
+        .distinct()
+        .localCheckpoint(false)
+      // At the fixpoint both passes leave the star forest unchanged.
+      // The (shuffling) set-compare only runs once counts agree —
+      // counts differ on most non-final rounds, so the common case is
+      // ONE count over the new checkpointed edge list.
+      val nextCount = next.count()
+      converged = nextCount == edgeCount && next.except(edges).isEmpty
+      edges = next
+      edgeCount = nextCount
+      iter += 1
+    }
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $MaxCcRounds rounds")
+    log.info(s"connectedComponents converged in $iter rounds")
+    // star forest: every non-root points straight at its component min
+    edges.select(col("u").as("id"), col("v").as("component"))
+      .union(edges.select(col("v").as("id"), col("v").as("component")))
+      .distinct()
+  }
+
+  /** Driver union-find over the gated (u, v) edge list, on int indices
+    * into the id table — exact min-label components, identical contract
+    * to the distributed loop's output. Index order is id order, so
+    * union-by-min-index keeps each component's minimum id at its root;
+    * path halving keeps the pass effectively linear. The rows come back
+    * as a local relation (`Seq.toDF`), which keeps the size statistics
+    * a broadcast join needs, cast to the input's id type. */
+  private def driverComponents(g: Gate, idType: DataType): DataFrame = {
+    val spark = g.edges.sparkSession
+    import spark.implicits._
+    val l = local(g)
+    val parent = Array.tabulate(l.n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    var k = 0
+    while (k < l.m) {
+      val ru = find(l.src(k))
+      val rv = find(l.dst(k))
+      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
+      k += 1
+    }
+    l.ids.indices.map(i => (l.ids(i), l.ids(find(i))))
+      .toDF("id", "component")
+      .select(col("id").cast(idType).as("id"),
+        col("component").cast(idType).as("component"))
+  }
 
   /** Standard damped PageRank over an edge list.
     *
@@ -114,7 +388,7 @@ object Graph {
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 10, damping: Double = 0.85,
-      undirected: Boolean = false, checkpointEvery: Int = 8,
+      undirected: Boolean = false,
       driverMaxEdges: Long = DriverGraphMaxEdges): DataFrame = {
     require(iterations >= 1, "pageRank: iterations >= 1")
     require(damping > 0 && damping < 1, "pageRank: damping in (0,1)")
@@ -129,6 +403,9 @@ object Graph {
       if (!undirected) dir.distinct()
       else dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
         .distinct()
+    val g = gate("pageRank", und, driverMaxEdges, PageRankDriverCeiling)
+    if (g.onDriver)
+      return driverPageRank(g, iterations, damping, undirected)
     // Weighted adjacency (src, dst, 1/outDeg) is joined ONCE, outside
     // the loop, and partitioned on src for every iteration to reuse.
     // deg/nodes/adj all derive from the same edge scan, so every
@@ -137,26 +414,14 @@ object Graph {
     // (a dataset-column reference like e("dst") trips
     // DetectAmbiguousSelfJoin here).
     // localCheckpoint, not persist (the q133 lesson): adj and nodes
-    // are consumed by EVERY iteration's join, and under storage
-    // pressure a persist silently degrades to re-deriving the whole
-    // adjacency (distinct + degree join) once per iteration.
-    // localCheckpoint pins the blocks and cuts lineage; it also
-    // CAPTURES adj's hash partitioning on `src`, so each iteration's
-    // join still reuses the one exchange done here. Measured price on
-    // a single node: ~2 s/run of disk-backed block writes (q89 3.0 →
-    // 5.2 s, flat GC/alloc — the checkpoint I/O, not compute); the
-    // persist alternative's eviction mode measured 22-64 s on q133.
-    // LAZY checkpoint + count: the count action materializes the
-    // pinned blocks AND gates the driver path in ONE job (the eager
-    // checkpoint ran its own materialization job first — r19)
-    val e = und.localCheckpoint(false)
-    val edgeCount = e.count()
-    val bound = math.min(driverMaxEdges, PageRankDriverCeiling)
-    if (edgeCount > 0L && edgeCount <= bound) {
-      log.info(s"pageRank: $edgeCount edges <= $bound — " +
-        "resolving on the driver (distributed loop skipped)")
-      return driverPageRank(e, iterations, damping, undirected)
-    }
+    // are consumed by EVERY iteration's join. localCheckpoint pins the
+    // blocks and cuts lineage; it also CAPTURES adj's hash
+    // partitioning on `src`, so each iteration's join still reuses the
+    // one exchange done here. Measured price on a single node: ~2
+    // s/run of disk-backed block writes (q89 3.0 → 5.2 s, flat
+    // GC/alloc — the checkpoint I/O, not compute); the persist
+    // alternative's eviction mode measured 22-64 s on q133.
+    val e = g.edges
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
       .withColumnRenamed("src", "__degid")
     val adj = e.join(deg, col("src") === col("__degid"))
@@ -200,119 +465,10 @@ object Graph {
                 (coalesce(col("__contrib"), lit(0.0)) +
                   col("__dmass") / n)).as("rank"))
         }
-      ranks = if (i % checkpointEvery == 0 && i < iterations)
-        next.localCheckpoint() else next
+      ranks = if (i % 8 == 0 && i < iterations) next.localCheckpoint()
+        else next
     }
     ranks
-  }
-
-  /** Distributed DataFrame over two parallel driver arrays — the
-    * driver paths' RESULT encode. `Seq.toDF` serializes every row to
-    * InternalRow EAGERLY ON THE DRIVER THREAD (~0.4 s single-threaded
-    * at 1.2M nodes, r19 profile); shipping the primitive arrays once
-    * via broadcast and encoding rows inside `defaultParallelism`
-    * range tasks moves that work onto the executor pool. Row VALUES
-    * are identical; row order is not contractual (callers
-    * sort/aggregate or the oracle compare sorts). */
-  private def arraysToDF(
-      spark: org.apache.spark.sql.SparkSession,
-      ids: Array[Long], longVals: Array[Long], dblVals: Array[Double],
-      col1: String, col2: String): DataFrame = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val n = ids.length
-    val slices = math.max(1, math.min(sc.defaultParallelism, n / 8192))
-    val bIds = sc.broadcast(ids)
-    if (dblVals == null) {
-      val bV = sc.broadcast(longVals)
-      sc.range(0L, n.toLong, numSlices = slices)
-        .map(i => (bIds.value(i.toInt), bV.value(i.toInt)))
-        .toDF(col1, col2)
-    } else {
-      val bV = sc.broadcast(dblVals)
-      sc.range(0L, n.toLong, numSlices = slices)
-        .map(i => (bIds.value(i.toInt), bV.value(i.toInt)))
-        .toDF(col1, col2)
-    }
-  }
-
-  /** Collect a two-long-column frame as flat primitive arrays: each
-    * task packs its rows into one `Array[Long]` (s,d interleaved), so
-    * row decode runs IN PARALLEL ON THE EXECUTORS and the driver only
-    * concatenates a few long arrays — the boxed per-row tuple decode
-    * of `as[(Long,Long)].collect()` was ~0.3 s of single-threaded
-    * driver time at 1.2M edges (r19 profile). */
-  private def collectPairs(df: DataFrame, c1: String, c2: String)
-      : (Array[Long], Array[Long]) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val chunks = df.select(col(c1).cast("long"), col(c2).cast("long"))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        val buf = scala.collection.mutable.ArrayBuilder.make[Long]
-        it.foreach { p => buf += p._1; buf += p._2 }
-        Iterator.single(buf.result())
-      }.collect()
-    val m = chunks.iterator.map(_.length).sum / 2
-    val a = new Array[Long](m)
-    val b = new Array[Long](m)
-    var w = 0
-    chunks.foreach { ch =>
-      var i = 0
-      while (i < ch.length) { a(w) = ch(i); b(w) = ch(i + 1); i += 2; w += 1 }
-    }
-    (a, b)
-  }
-
-  /** [[collectPairs]] for three long columns (LPA's weighted edges). */
-  private def collectTriples(df: DataFrame, c1: String, c2: String,
-      c3: String): (Array[Long], Array[Long], Array[Long]) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val chunks = df
-      .select(col(c1).cast("long"), col(c2).cast("long"),
-        col(c3).cast("long"))
-      .as[(Long, Long, Long)]
-      .mapPartitions { it =>
-        val buf = scala.collection.mutable.ArrayBuilder.make[Long]
-        it.foreach { p => buf += p._1; buf += p._2; buf += p._3 }
-        Iterator.single(buf.result())
-      }.collect()
-    val m = chunks.iterator.map(_.length).sum / 3
-    val a = new Array[Long](m)
-    val b = new Array[Long](m)
-    val c = new Array[Long](m)
-    var w = 0
-    chunks.foreach { ch =>
-      var i = 0
-      while (i < ch.length) {
-        a(w) = ch(i); b(w) = ch(i + 1); c(w) = ch(i + 2); i += 3; w += 1
-      }
-    }
-    (a, b, c)
-  }
-
-  /** Sorted-unique node id array over both endpoint arrays — the
-    * driver paths' canonical id table, built with primitive sort +
-    * in-place dedup. r19: the SortedSet/zipWithIndex.toMap version of
-    * this (boxed RB-tree inserts + a boxed HashMap per endpoint
-    * lookup) was ~2 s of the q89 driver gap at 1.17M edges; the
-    * primitive form is two arraycopies, one sort and one scan, and
-    * id→index lookups become binarySearch against the result. */
-  private def sortedUniqueIds(
-      srcL: Array[Long], dstL: Array[Long]): Array[Long] = {
-    val m = srcL.length
-    val all = new Array[Long](2 * m)
-    System.arraycopy(srcL, 0, all, 0, m)
-    System.arraycopy(dstL, 0, all, m, m)
-    java.util.Arrays.parallelSort(all)
-    var w = 0
-    var i = 0
-    while (i < all.length) {
-      if (w == 0 || all(w - 1) != all(i)) { all(w) = all(i); w += 1 }
-      i += 1
-    }
-    java.util.Arrays.copyOf(all, w)
   }
 
   /** Driver PageRank over a bounded, already-canonicalised (and, when
@@ -324,29 +480,18 @@ object Graph {
     * distributed aggregate's is arbitrary, so the two paths agree to
     * double-sum ULPs (callers round; q89 rounds at 7 decimals). */
   private def driverPageRank(
-      e: DataFrame, iterations: Int, damping: Double,
+      g: Gate, iterations: Int, damping: Double,
       undirected: Boolean): DataFrame = {
-    val spark = e.sparkSession
-    // per-partition packed collect: executor-parallel row decode, the
-    // transient footprint stays the driver-path bound's real cost
-    val (srcL, dstL) = collectPairs(e, "src", "dst")
-    val m = srcL.length
-    var k = 0
-    val ids = sortedUniqueIds(srcL, dstL)
-    val n = ids.length
+    val l = local(g)
+    val (m, n, ids) = (l.m, l.n, l.ids)
     // deterministic edge order — the accumulation order of the sums.
     // Index order IS id order (ids sorted), so sorting the packed
-    // (srcIdx, dstIdx) longs reproduces the old boxed
-    // `pairs.sortBy(identity)` order exactly; indices fit 31 bits by
-    // the driver-path edge bound.
+    // (srcIdx, dstIdx) longs is the sorted (src, dst) edge order;
+    // indices fit 31 bits by the driver-path edge bound.
     val packed = new Array[Long](m)
-    // id→index mapping is integer-exact and index-disjoint — parallel;
-    // parallelSort yields the identical sorted array, so the float
-    // accumulation order downstream is unchanged
-    java.util.stream.IntStream.range(0, m).parallel().forEach { j =>
-      val si = java.util.Arrays.binarySearch(ids, srcL(j)).toLong
-      val di = java.util.Arrays.binarySearch(ids, dstL(j)).toLong
-      packed(j) = (si << 32) | di
+    var k = 0
+    while (k < m) {
+      packed(k) = (l.src(k).toLong << 32) | l.dst(k).toLong; k += 1
     }
     java.util.Arrays.parallelSort(packed)
     val src = new Array[Int](m)
@@ -383,7 +528,7 @@ object Graph {
       }
       ranks = next
     }
-    arraysToDF(spark, ids, null, ranks, "id", "rank")
+    arraysToDF(g.edges.sparkSession, ids, null, ranks, "id", "rank")
   }
 
   /** Community detection by synchronous LABEL PROPAGATION (Raghavan
@@ -402,7 +547,7 @@ object Graph {
     * label is the window-free min(struct(-count, label)) trick
     * ([[Stats.modePerKey]]): two map-side-combined aggregates, the
     * second over already-reduced (node, label) counts. Lineage is cut
-    * with a localCheckpoint every `checkpointEvery` rounds.
+    * with a localCheckpoint every 4 rounds.
     *
     * With `weightCol` set the vote is WEIGHTED: each neighbour's
     * label counts its undirected edge weight (parallel edges and
@@ -414,8 +559,7 @@ object Graph {
     */
   def labelPropagation(
       edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 5, checkpointEvery: Int = 4,
-      weightCol: Option[String] = None,
+      iterations: Int = 5, weightCol: Option[String] = None,
       driverMaxEdges: Long = DriverGraphMaxEdges): DataFrame = {
     require(iterations >= 1, "labelPropagation: iterations >= 1")
     // weighted vote: each neighbour's label counts its edge weight
@@ -444,20 +588,13 @@ object Graph {
           .distinct()
           .withColumn("__w", lit(1L))
     }
-    // localCheckpoint (q133 discipline, same reason as pageRank's
-    // adj): every round re-joins this frame, and eviction under a
-    // persist would re-run the symmetrise+distinct per round. The
+    // pinned by the gate: every round re-joins this frame, and the
     // captured src-hash partitioning keeps the per-round join
-    // exchange-free on the edge side.
-    // lazy checkpoint + count — one materialization job (see pageRank)
-    val und = und0.repartition(col("src")).localCheckpoint(false)
-    val edgeCount = und.count()
-    val bound = math.min(driverMaxEdges, LpaDriverCeiling)
-    if (edgeCount > 0L && edgeCount <= bound) {
-      log.info(s"labelPropagation: $edgeCount edges <= $bound" +
-        " — resolving on the driver (distributed loop skipped)")
-      return driverLabelPropagation(und, iterations)
-    }
+    // exchange-free on the edge side
+    val g = gate("labelPropagation", und0.repartition(col("src")),
+      driverMaxEdges, LpaDriverCeiling)
+    if (g.onDriver) return driverLabelPropagation(g, iterations)
+    val und = g.edges
     // symmetrised ⇒ the node set is exactly the distinct src side
     var labels = und.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
@@ -469,8 +606,8 @@ object Graph {
         .agg(min(struct((-col("__c")).as("c"), col("label").as("v")))
           .as("__m"))
         .select(col("dst").as("node"), col("__m.v").as("label"))
-      labels = if (i % checkpointEvery == 0 && i < iterations)
-        next.localCheckpoint() else next
+      labels = if (i % 4 == 0 && i < iterations) next.localCheckpoint()
+        else next
     }
     labels.select(col("node").as("node_id"), col("label").as("community"))
   }
@@ -483,27 +620,15 @@ object Graph {
     * Long-integer vote sums make this bit-for-bit the distributed
     * result (GraphSpec pins both paths on every fixture). */
   private def driverLabelPropagation(
-      und: DataFrame, iterations: Int): DataFrame = {
-    val spark = und.sparkSession
-    val (srcL, dstL, wL) = collectTriples(und, "src", "dst", "__w")
-    val m = srcL.length
-    var k = 0
-    val ids = sortedUniqueIds(srcL, dstL)
-    val n = ids.length
+      g: Gate, iterations: Int): DataFrame = {
+    val l = local(g)
+    val (m, n, ids, srcI, dstI, wL) = (l.m, l.n, l.ids, l.src, l.dst, l.w)
     // CSR by RECEIVING node (symmetrised ⇒ incoming = neighbours):
     // per-node vote segments make the round loop parallel over nodes
     // (the driverTriangles discipline) where the old one-HashMap-per-
     // node array was a single-threaded boxed walk of every edge.
     val inDeg = new Array[Int](n)
-    val srcI = new Array[Int](m)
-    val dstI = new Array[Int](m)
-    // parallel integer-exact id→index mapping (disjoint writes);
-    // degree counting stays a cheap sequential pass (write conflicts)
-    java.util.stream.IntStream.range(0, m).parallel().forEach { j =>
-      srcI(j) = java.util.Arrays.binarySearch(ids, srcL(j))
-      dstI(j) = java.util.Arrays.binarySearch(ids, dstL(j))
-    }
-    k = 0
+    var k = 0
     while (k < m) { inDeg(dstI(k)) += 1; k += 1 }
     val off = new Array[Int](n + 1)
     var i = 0
@@ -548,7 +673,8 @@ object Graph {
       }
       labels = next
     }
-    arraysToDF(spark, ids, labels, null, "node_id", "community")
+    arraysToDF(g.edges.sparkSession, ids, labels, null, "node_id",
+      "community")
   }
 
   /** Exact triangle counting by DEGREE ORIENTATION — the classic trick
@@ -579,32 +705,19 @@ object Graph {
     // orientation join, oriented feeds THREE consumers — under cache
     // eviction a persist degrades to re-running the distinct/join
     // lineage once per consumer (measured 9.6 s warm → 64 s cold at
-    // sf0.1), a checkpoint cannot
-    val e = edges.select(
+    // sf0.1), a checkpoint cannot. The gate pins e.
+    val canon = edges.select(
         least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(false)
-    // (lazy: the gate aggregate below materializes the pinned blocks
-    // in the same job — r19)
-    // ONE aggregate action carries BOTH the driver-path gate (count)
-    // and the 31-bit id precondition (max) — r16: the gate used to be
-    // a count() and then a SECOND full pass for the max, and at sf1
-    // (12M edges, both paths distributed past the gate) that extra
-    // pass was most of the registered query's ~40% premium over the
-    // pinned distributed plan. The count is all-integer on both
-    // paths, so the driver fold is bit-for-bit the distributed
-    // result (GraphSpec pins both paths).
-    val gate = e.agg(count(lit(1)).as("__n"),
-      coalesce(max(col("b")), lit(0L)).as("__mx")).head
-    val eCount = gate.getLong(0)
-    val maxId = gate.getLong(1)
-    val bound = math.min(driverMaxEdges, TrianglesDriverCeiling)
-    if (eCount > 0L && eCount <= bound) {
-      log.info(s"triangles: $eCount edges <= $bound — " +
-        "resolving on the driver (distributed wedge join skipped)")
-      return driverTriangles(e)
-    }
-    require(maxId < P,
+      .filter(col("a") =!= col("b")).distinct()
+    // the gate aggregate carries the 31-bit id precondition (max) too
+    // — r16: a SECOND full pass for the max was most of the sf1
+    // query's ~40% premium over the pinned distributed plan
+    val g = gate("triangles", canon, driverMaxEdges, TrianglesDriverCeiling,
+      coalesce(max(col("b")), lit(0L)))
+    if (g.onDriver) return driverTriangles(g)
+    val e = g.edges
+    require(g.agg.getLong(1) < P,
       "triangles: node ids must fit 31 bits — densify ids first " +
         "(the packed (deg,id) orientation key and the bloom-filtered " +
         "closing join key both ride a single long)")
@@ -624,9 +737,6 @@ object Graph {
           .otherwise(col("__da") * P + col("a")).as("vk"))
       .localCheckpoint(false) // lazy — the count materializes it
     val nEdges = oriented.count()
-    if (nEdges == 0)
-      return oriented.select(col("u").as("node_id"),
-        lit(0L).as("tri_n")).limit(0)
     // The wedge set is the algorithm's bulk (Σ outDeg² rows — 41M at
     // sf0.1 for 1.2M edges): bloom-prefilter it against the closing
     // edge keys BEFORE the closing shuffle, so only wedges that might
@@ -669,23 +779,11 @@ object Graph {
     * graph. Unlike the distributed path this one never packs
     * (deg, id) into a long (ranks replace packing), so it accepts
     * full-range node ids. */
-  private def driverTriangles(e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
-    val (aL, bL) = collectPairs(e, "a", "b")
-    val m = aL.length
-    var k = 0
-    val ids = sortedUniqueIds(aL, bL)
-    val n = ids.length
-    def idxOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
-    val ea = new Array[Int](m)
-    val eb = new Array[Int](m)
+  private def driverTriangles(g: Gate): DataFrame = {
+    val l = local(g)
+    val (m, n, ids, ea, eb) = (l.m, l.n, l.ids, l.src, l.dst)
     val deg = new Array[Int](n)
-    // parallel integer-exact id→index mapping (disjoint writes);
-    // degree counting stays a cheap sequential pass (write conflicts)
-    java.util.stream.IntStream.range(0, m).parallel().forEach { j =>
-      ea(j) = idxOf(aL(j)); eb(j) = idxOf(bL(j))
-    }
-    k = 0
+    var k = 0
     while (k < m) { deg(ea(k)) += 1; deg(eb(k)) += 1; k += 1 }
     // rank = position under the (degree, id) total order; idx order
     // IS id order (ids sorted), so packing (deg << 31 | idx) and
@@ -759,6 +857,7 @@ object Graph {
       if (tri(u) > 0) { outIds(w) = ids(u); outTri(w) = tri(u); w += 1 }
       u += 1
     }
-    arraysToDF(spark, outIds, outTri, null, "node_id", "tri_n")
+    arraysToDF(g.edges.sparkSession, outIds, outTri, null, "node_id",
+      "tri_n")
   }
 }

@@ -43,44 +43,39 @@ object Parallelism {
     * over the same input, or the N artifact writes of an index save)
     * were only sequential because the driver called their actions
     * sequentially, each paying its own scheduling/stage-tail latency.
-    * `b` runs on a fresh daemon thread, `a` on the caller's; both
-    * always complete (the join sits in a finally) and either side's
-    * exception propagates. Use ONLY for truly independent work — no
-    * shared mutable state, no result-order dependence. */
+    * [[runAll]] over the two: `a` on the caller's thread, `b` on a
+    * fresh daemon thread; both always complete, and if either fails
+    * the earliest-listed failure propagates (`a`'s when both fail).
+    * Use ONLY for truly independent work — no shared mutable state, no
+    * result-order dependence. */
   def join2[A, B](a: => A, b: => B): (A, B) = {
-    @volatile var rb: Either[Throwable, B] = null
-    val t = new Thread(() => {
-      rb = try Right(b) catch { case e: Throwable => Left(e) }
-    }, "graft-join2")
-    t.setDaemon(true)
-    t.start()
-    val ra =
-      try a
-      finally t.join()
-    rb match {
-      case Right(v) => (ra, v)
-      case Left(e) => throw e
-    }
+    var ra: Option[A] = None
+    var rb: Option[B] = None
+    runAll(Seq(() => ra = Some(a), () => rb = Some(b)))
+    (ra.get, rb.get)
   }
 
   /** Run every thunk concurrently (first on the caller's thread, the
-    * rest on fresh daemon threads), wait for all, rethrow the first
-    * failure — the N-way [[join2]] for independent side-effecting
+    * rest on fresh daemon threads), wait for all, then rethrow the
+    * failure of the EARLIEST-LISTED failing thunk — whichever finished
+    * first, the same error wins. For independent side-effecting
     * actions (e.g. the per-artifact writes of an index save, which
-    * target disjoint directories). */
+    * target disjoint directories). Joining a thread orders its writes
+    * before the caller's reads, so results need no further fence. */
   def runAll(tasks: Seq[() => Unit]): Unit = {
-    if (tasks.isEmpty) return
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val threads = tasks.tail.map { task =>
+    val errs = new Array[Throwable](tasks.size)
+    val threads = tasks.zipWithIndex.drop(1).map { case (task, i) =>
       val th = new Thread(() => {
-        try task() catch { case e: Throwable => errs.add(e) }
+        try task() catch { case e: Throwable => errs(i) = e }
       }, "graft-runAll")
       th.setDaemon(true)
       th.start()
       th
     }
-    try tasks.head() catch { case e: Throwable => errs.add(e) }
+    tasks.headOption.foreach { task =>
+      try task() catch { case e: Throwable => errs(0) = e }
+    }
     threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    errs.find(_ != null).foreach(e => throw e)
   }
 }

@@ -483,41 +483,6 @@ object Multimodal {
     bits
   }
 
-  /** Per-image perceptual hashes with the quarantine discipline of
-    * [[extractFeatures]]: corrupt bytes yield ok=false + err, never
-    * a task failure. One typed map — a pure projection. */
-  def imageHashes(media: DataFrame, idCol: String,
-      bytesCol: String): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast("long"), col(bytesCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, bytes) =>
-        decodeImage(bytes) match {
-          case Right(img) => (id, dHash64(img), true, "")
-          case Left(err) => (id, 0L, false, err.take(200))
-        }
-      }
-      .toDF(idCol, "dhash", "ok", "err")
-  }
-
-  /** Image NEAR-DUPLICATE pairs: dHash fingerprints bucketed by the
-    * SAME banded-Hamming machinery SimHash text dedup uses
-    * (Dedup.simhashBandPairs — maxHamming+1 bands of 64-bit
-    * segments; the pigeonhole guarantees every pair within
-    * `maxHamming` bits shares a band, so recall over the hash is
-    * exact), then verified by exact bit_count. Quarantined decodes
-    * are excluded. The shuffle carries (id, 8-byte hash) — image
-    * BYTES never move; at crawl scale this is the only shape that
-    * survives. Returns (a_id, b_id, hamming). */
-  def imageNearDup(media: DataFrame, idCol: String, bytesCol: String,
-      maxHamming: Int = 3): DataFrame =
-    graft.operators.Dedup.simhashBandPairs(
-      imageHashes(media, idCol, bytesCol)
-        .filter(col("ok"))
-        .select(col(idCol).as("__id"), col("dhash").as("__sim")),
-      maxHamming)
-
   /** 64-bit AUDIO FINGERPRINT — the dHash idea applied to two
     * gain-invariant envelope profiles: 32 bits compare adjacent RMS
     * windows (33-window energy envelope — a global volume change
@@ -551,34 +516,6 @@ object Multimodal {
     bits
   }
 
-  /** Per-clip audio fingerprints with the quarantine discipline. */
-  def audioHashes(media: DataFrame, idCol: String,
-      bytesCol: String): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast("long"), col(bytesCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, bytes) =>
-        decodeAudio(bytes) match {
-          case Right((_, samples)) =>
-            (id, audioFingerprint64(samples), true, "")
-          case Left(err) => (id, 0L, false, err.take(200))
-        }
-      }
-      .toDF(idCol, "dhash", "ok", "err")
-  }
-
-  /** Audio NEAR-DUPLICATE pairs — [[imageNearDup]]'s shape over
-    * [[audioFingerprint64]]: banded-Hamming candidates + exact
-    * bit_count verify, (id, 8-byte hash) shuffle only. */
-  def audioNearDup(media: DataFrame, idCol: String, bytesCol: String,
-      maxHamming: Int = 3): DataFrame =
-    graft.operators.Dedup.simhashBandPairs(
-      audioHashes(media, idCol, bytesCol)
-        .filter(col("ok"))
-        .select(col(idCol).as("__id"), col("dhash").as("__sim")),
-      maxHamming)
-
   /** 64-bit VIDEO FINGERPRINT: [[dHash64]] of the clip's sampled
     * frames MAJORITY-VOTED per bit — frame-accurate enough to pair
     * re-encodes, and the vote makes one corrupt/duplicated frame
@@ -611,32 +548,6 @@ object Multimodal {
         }
       }
     }
-
-  /** Per-clip video fingerprints with the quarantine discipline. */
-  def videoHashes(media: DataFrame, idCol: String,
-      bytesCol: String): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast("long"), col(bytesCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, bytes) =>
-        videoFingerprint64(bytes) match {
-          case Right(h) => (id, h, true, "")
-          case Left(err) => (id, 0L, false, err.take(200))
-        }
-      }
-      .toDF(idCol, "dhash", "ok", "err")
-  }
-
-  /** Video NEAR-DUPLICATE pairs — the image/audio shape over
-    * [[videoFingerprint64]]. */
-  def videoNearDup(media: DataFrame, idCol: String, bytesCol: String,
-      maxHamming: Int = 3): DataFrame =
-    graft.operators.Dedup.simhashBandPairs(
-      videoHashes(media, idCol, bytesCol)
-        .filter(col("ok"))
-        .select(col(idCol).as("__id"), col("dhash").as("__sim")),
-      maxHamming)
 
   // ------------------------------------------------------------------
   // Incremental perceptual-hash index: continuous media ingest
@@ -724,6 +635,26 @@ object Multimodal {
     graft.operators.Dedup.simhashBandStructs(col("dhash"), maxHamming,
       band = i => struct(col("kind"), lit(i)))
 
+  /** Near-duplicate pairs within one (id, kind, dhash) frame: (a_id,
+    * b_id, kind, hamming ≤ maxHamming). */
+  private def mediaPairs(feat: DataFrame, maxHamming: Int): DataFrame =
+    graft.operators.Dedup.hammingPairs(feat, "dhash", mediaKeys(maxHamming),
+      maxHamming, Seq("kind"))
+
+  /** Media NEAR-DUPLICATE pairs within one frame of mixed kinds: each
+    * row's [[mediaHashes]] fingerprint (image [[dHash64]], audio
+    * [[audioFingerprint64]], video [[videoFingerprint64]]) bucketed by
+    * the banded-Hamming machinery SimHash text dedup uses — maxHamming+1
+    * bands of 64-bit segments, so the pigeonhole guarantees every pair
+    * within `maxHamming` bits shares a band and recall over the hash is
+    * exact — then verified by exact bit_count. The bands carry the
+    * kind, so pairs never cross kinds. Quarantined decodes are
+    * excluded. The shuffle carries (id, kind, 8-byte hash) — media
+    * BYTES never move. Returns (a_id, b_id, kind, hamming). */
+  def mediaNearDup(media: DataFrame, idCol: String, bytesCol: String,
+      kindCol: String, maxHamming: Int = 3): DataFrame =
+    mediaPairs(mediaFeatures(media, idCol, bytesCol, kindCol), maxHamming)
+
   /** Probe a batch HASH frame (id, kind, dhash) against the index:
     * (corpus a_id, batch b_id, kind, hamming ≤ maxHamming). The batch
     * is banded and broadcast; the index contributes its 8-byte hashes
@@ -765,8 +696,7 @@ object Multimodal {
     val (survivors, entries) = Dedup.incrementalBody(batch, idCol,
       mediaFeatures(batch, idCol, bytesCol, kindCol),
       probeMediaHashes(_, index, maxHamming),
-      Dedup.hammingPairs(_, "dhash", mediaKeys(maxHamming), maxHamming,
-        Seq("kind")),
+      mediaPairs(_, maxHamming),
       identity)
     (survivors, MediaHashIndex(entries))
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Corpus, Dedup}
+import graft.operators.{Corpus, Dedup, Graph}
 
 import scala.util.Random
 
@@ -37,10 +37,10 @@ class ClusterSpec extends SparkSpec {
     * they agree, so every fixture in this suite pins path equality. */
   private def ccMap(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val df = edges.toDF("a", "b")
-    val driver = Dedup.connectedComponents(df, "a", "b")
+    val driver = Graph.connectedComponents(df, "a", "b")
       .as[(Long, Long)].collect().toMap
-    val distributed = Dedup.connectedComponentsWithRounds(
-      df, "a", "b", maxIter = 50, driverMaxEdges = 0L)._1
+    val distributed = Graph.connectedComponents(df, "a", "b",
+      driverMaxEdges = 0L)
       .as[(Long, Long)].collect().toMap
     assert(driver == distributed,
       "driver union-find diverged from the distributed loop")
@@ -80,6 +80,43 @@ class ClusterSpec extends SparkSpec {
 
   test("empty pair list yields empty components") {
     assert(ccMap(Seq.empty) == Map.empty)
+  }
+
+  test("zero edges: an empty local frame in the input id type, no Exchange") {
+    // self-loops only: the pair list is non-empty, the edge set is not
+    val loops = Seq((3L, 3L), (4L, 4L))
+    for (max <- Seq(Graph.DriverGraphMaxEdges, 0L)) {
+      val byType = Seq(
+        loops.toDF("a", "b"),
+        loops.map { case (a, b) => (a.toInt, b.toInt) }.toDF("a", "b"),
+        loops.map { case (a, b) => (a.toString, b.toString) }.toDF("a", "b"))
+      byType.foreach { df =>
+        val cc = Graph.connectedComponents(df, "a", "b", driverMaxEdges = max)
+        val idType = df.schema("a").dataType
+        assert(cc.schema.map(f => (f.name, f.dataType)) ===
+          Seq("id" -> idType, "component" -> idType))
+        assert(cc.count() === 0L)
+        val plan = cc.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"), s"empty graph shuffles:\n$plan")
+        assert(plan.contains("LocalTableScan"), plan)
+      }
+    }
+    // the cluster drop over no pairs leaves every row
+    val rows = Seq(1L, 2L, 3L).toDF("doc_id")
+    val drop = Dedup.clusterDrop(loops.toDF("a_id", "b_id"))
+    assert(drop(rows, "doc_id").as[Long].collect().sorted.toSeq ===
+      Seq(1L, 2L, 3L))
+  }
+
+  test("driver components are a local relation, so the cluster drop broadcasts") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a_id", "b_id")
+    val rows = (1L to 9L).toDF("doc_id")
+    val kept = Dedup.clusterDrop(pairs)(rows, "doc_id")
+    val plan = kept.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
+      s"cluster drop is not a broadcast anti-join:\n$plan")
+    assert(kept.as[Long].collect().sorted.toSeq ===
+      Seq(1L, 4L, 5L, 6L, 7L, 9L))
   }
 
   test("dropNearDuplicates keeps min id per cluster and all singletons") {

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{DoubleType, LongType}
+
 import graft.operators.Graph
 
 /** PageRank semantics pinned against a scalar reference simulation:
@@ -266,6 +269,38 @@ class GraphSpec extends SparkSpec {
     assert(runLpa(edges, 5) === naive(5))
   }
 
+  test("empty graph: all four operators return an empty local frame in the output schema") {
+    // an empty list, and self-loops only (PageRank keeps a self-loop
+    // as an edge; the other three drop it)
+    val none = Seq.empty[(Long, Long)].toDF("s", "d")
+    val loops = Seq((1L, 1L), (2L, 2L)).toDF("s", "d")
+    for (df <- Seq(none, loops); max <- Seq(Graph.DriverGraphMaxEdges, 0L)) {
+      val wdf = df.withColumn("w", lit(2L))
+      val ranks = if (df eq loops) Nil else Seq(
+        Graph.pageRank(df, "s", "d", driverMaxEdges = max) ->
+          Seq("id" -> LongType, "rank" -> DoubleType),
+        Graph.pageRank(df, "s", "d", undirected = true,
+          driverMaxEdges = max) -> Seq("id" -> LongType, "rank" -> DoubleType))
+      val outs = ranks ++ Seq(
+        Graph.connectedComponents(df, "s", "d", driverMaxEdges = max) ->
+          Seq("id" -> LongType, "component" -> LongType),
+        Graph.labelPropagation(df, "s", "d", driverMaxEdges = max) ->
+          Seq("node_id" -> LongType, "community" -> LongType),
+        Graph.labelPropagation(wdf, "s", "d", weightCol = Some("w"),
+          driverMaxEdges = max) ->
+          Seq("node_id" -> LongType, "community" -> LongType),
+        Graph.triangles(df, "s", "d", driverMaxEdges = max) ->
+          Seq("node_id" -> LongType, "tri_n" -> LongType))
+      outs.foreach { case (out, schema) =>
+        assert(out.schema.map(f => (f.name, f.dataType)) === schema)
+        val plan = out.queryExecution.executedPlan
+        assert(plan.collectLeaves().forall(_.nodeName == "LocalTableScan"),
+          s"empty graph is not a local frame:\n$plan")
+        assert(out.collect().isEmpty)
+      }
+    }
+  }
+
   test("adaptive driver-graph bound: floor, quarter-heap middle, ceiling") {
     import graft.operators.DriverBudget
     // small heaps SHRINK below the old 256 MB constant (a 512 MB
@@ -294,10 +329,18 @@ class GraphSpec extends SparkSpec {
     // driver loop stops beating the distributed plan — and the
     // ceilings order by per-edge driver cost (LPA's HashMap vote >
     // pageRank's array walk > triangles' parallel wedge probes)
+    assert(Graph.CcDriverCeiling === 524288L)
     assert(Graph.LpaDriverCeiling === 2000000L)
     assert(Graph.PageRankDriverCeiling === 4000000L)
     assert(Graph.TrianglesDriverCeiling === 6000000L)
-    assert(Graph.LpaDriverCeiling <= Graph.PageRankDriverCeiling &&
+    assert(Graph.CcDriverCeiling <= Graph.LpaDriverCeiling &&
+      Graph.LpaDriverCeiling <= Graph.PageRankDriverCeiling &&
       Graph.PageRankDriverCeiling <= Graph.TrianglesDriverCeiling)
+    // components resolve on the driver up to the same 524,288 edges on
+    // every heap: the heap bound's floor (64 MB / 128 B) is the ceiling
+    assert(DriverBudget.adaptiveTransientBytes(0L) / 128 ===
+      Graph.CcDriverCeiling)
+    assert(math.min(Graph.DriverGraphMaxEdges, Graph.CcDriverCeiling) ===
+      524288L)
   }
 }

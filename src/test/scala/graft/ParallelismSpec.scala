@@ -33,6 +33,29 @@ class ParallelismSpec extends SparkSpec {
     assert(e2.getMessage === "right")
   }
 
+  test("both sides fail: the earliest-listed failure wins, whichever failed first") {
+    // the second thunk fails at once; the first fails only after it,
+    // with a pause that lets the second's failure be recorded first
+    val secondFailed = new java.util.concurrent.CountDownLatch(1)
+    val e = intercept[IllegalStateException] {
+      Parallelism.join2(
+        { secondFailed.await(); Thread.sleep(100)
+          throw new IllegalStateException("first") },
+        { try throw new IllegalStateException("second")
+          finally secondFailed.countDown() })
+    }
+    assert(e.getMessage === "first")
+    val runAllFailed = new java.util.concurrent.CountDownLatch(1)
+    val e2 = intercept[RuntimeException] {
+      Parallelism.runAll(Seq(
+        () => { runAllFailed.await(); Thread.sleep(100)
+          throw new RuntimeException("one") },
+        () => { try throw new RuntimeException("two")
+          finally runAllFailed.countDown() }))
+    }
+    assert(e2.getMessage === "one")
+  }
+
   test("join2 overlaps Spark actions correctly (independent counts)") {
     val (n1, n2) = Parallelism.join2(
       spark.range(1000).filter(col("id") % 2 === 0).count(),

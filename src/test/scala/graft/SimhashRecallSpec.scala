@@ -46,8 +46,8 @@ class SimhashRecallSpec extends SparkSpec {
       Seq((i.toLong, sig), ((i + n).toLong, adversarialFlip(sig, maxHamming, flips)))
     }
     import spark.implicits._
-    val sh = rows.toDF("__id", "__sim")
-    val pairs = Dedup.simhashBandPairs(sh, maxHamming)
+    val sh = rows.toDF("id", "sim")
+    val pairs = Dedup.simhashPairs(sh, maxHamming)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     val found = (0 until n).count { i =>
       pairs.contains((i.toLong, (i + n).toLong)) ||
@@ -79,7 +79,7 @@ class SimhashRecallSpec extends SparkSpec {
       .foldLeft(sig)((s, b) => s ^ (1L << (bands.head._1 + b)))
     val far = far1 ^ (1L << bands(1)._1) // 1 bit of band 1
     assert(java.lang.Long.bitCount(sig ^ far) == 9)
-    val sh = Seq((1L, sig), (2L, far)).toDF("__id", "__sim")
-    assert(Dedup.simhashBandPairs(sh, 8).count() == 0)
+    val sh = Seq((1L, sig), (2L, far)).toDF("id", "sim")
+    assert(Dedup.simhashPairs(sh, 8).count() == 0)
   }
 }

@@ -715,8 +715,8 @@ class SourcesSpec extends SparkSpec {
       (3L, png(pattern(2))), (4L, jpg(pattern(2))),   // second pair
       (5L, png(pattern(3))),                          // singleton
       (6L, "corrupt bytes".getBytes.clone))           // quarantine
-      .toDF("media_id", "bytes")
-    val pairs = Multimodal.imageNearDup(rows, "media_id", "bytes",
+      .toDF("media_id", "bytes").withColumn("kind", lit("image"))
+    val pairs = Multimodal.mediaNearDup(rows, "media_id", "bytes", "kind",
       maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)), s"planted pair 1-2 missing: $pairs")
@@ -725,15 +725,30 @@ class SourcesSpec extends SparkSpec {
     assert(!pairs.exists { case (a, b) => Set(a, b).contains(5L) })
     assert(!pairs.exists { case (a, b) => Set(a, b).contains(6L) })
     // quarantine row surfaces ok=false with a reason
-    val q = Multimodal.imageHashes(rows, "media_id", "bytes")
+    val q = Multimodal.mediaHashes(rows, "media_id", "bytes", "kind")
       .filter(!col("ok")).select("media_id").as[Long].collect()
     assert(q.toSeq == Seq(6L))
     // hashes are deterministic
-    val h1 = Multimodal.imageHashes(rows, "media_id", "bytes")
-      .orderBy("media_id").collect().map(_.getLong(1)).toSeq
-    val h2 = Multimodal.imageHashes(rows, "media_id", "bytes")
-      .orderBy("media_id").collect().map(_.getLong(1)).toSeq
-    assert(h1 == h2)
+    def hashes = Multimodal.mediaHashes(rows, "media_id", "bytes", "kind")
+      .orderBy("media_id").select("dhash").as[Long].collect().toSeq
+    assert(hashes == hashes)
+  }
+
+  test("media near-dup: pairs never cross kinds") {
+    // a one-frame clip and a still of that very frame hash alike, so
+    // only the kind keeps the image from pairing with the clip
+    val clip = Multimodal.syntheticMjpegAvi(48, 32, 1, 4, 5)
+    val frame = Multimodal.decodeAviFrames(clip).toOption.get._2.head
+    val rows = Seq(
+      (1L, "image", frame), (2L, "image", frame.clone),
+      (3L, "video", clip), (4L, "video", clip.clone))
+      .toDF("media_id", "kind", "bytes")
+    val h = Multimodal.mediaHashes(rows, "media_id", "bytes", "kind")
+      .select("media_id", "dhash").as[(Long, Long)].collect().toMap
+    assert(h(1L) == h(3L), "fixture: the still and the clip hash alike")
+    val pairs = Multimodal.mediaNearDup(rows, "media_id", "bytes", "kind")
+      .select("a_id", "b_id", "kind").as[(Long, Long, String)].collect()
+    assert(pairs.toSet == Set((1L, 2L, "image"), (3L, 4L, "video")))
   }
 
   test("audio near-dup: fingerprint is gain-invariant, separates different clips") {
@@ -760,13 +775,13 @@ class SourcesSpec extends SparkSpec {
     val rows = Seq(
       (1L, wavBytes(1)), (2L, wavBytes(1)),
       (3L, wavBytes(9)), (4L, "not a wav".getBytes.clone))
-      .toDF("media_id", "bytes")
-    val pairs = Multimodal.audioNearDup(rows, "media_id", "bytes")
+      .toDF("media_id", "bytes").withColumn("kind", lit("audio"))
+    val pairs = Multimodal.mediaNearDup(rows, "media_id", "bytes", "kind")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)), s"identical clips missing: $pairs")
     assert(!pairs.exists { case (x, y) => Set(x, y).contains(3L) })
     assert(!pairs.exists { case (x, y) => Set(x, y).contains(4L) })
-    val q = Multimodal.audioHashes(rows, "media_id", "bytes")
+    val q = Multimodal.mediaHashes(rows, "media_id", "bytes", "kind")
       .filter(!col("ok")).select("media_id").as[Long].collect()
     assert(q.toSeq == Seq(4L))
   }
@@ -778,12 +793,12 @@ class SourcesSpec extends SparkSpec {
       (1L, avi(5, 4)), (2L, avi(5, 4)),   // identical clip
       (3L, avi(11, 4)),                   // different content
       (4L, "bogus".getBytes.clone))       // quarantine
-      .toDF("media_id", "bytes")
-    val pairs = Multimodal.videoNearDup(rows, "media_id", "bytes")
+      .toDF("media_id", "bytes").withColumn("kind", lit("video"))
+    val pairs = Multimodal.mediaNearDup(rows, "media_id", "bytes", "kind")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)), s"identical clips missing: $pairs")
     assert(!pairs.exists { case (a, b) => Set(a, b).contains(4L) })
-    val q = Multimodal.videoHashes(rows, "media_id", "bytes")
+    val q = Multimodal.mediaHashes(rows, "media_id", "bytes", "kind")
       .filter(!col("ok")).select("media_id").as[Long].collect()
     assert(q.toSeq == Seq(4L))
     // fingerprint is a per-bit majority over sampled frames:
